@@ -7,8 +7,11 @@ SF      ?= /root/testdata/sf0.1
 SF_TEST ?= /root/testdata/sf0.01
 OUT     ?= /tmp/verify_out
 CONFIG  ?= conf/config.sample.yaml
+REPS    ?= 3
+W       ?= curation
+SEED    ?= 1
 
-.PHONY: all build check test verify bench qbench daemon smoke crossover tripwire e2e-broker help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test help
 
 all: build
 
@@ -32,7 +35,6 @@ bench:
 	SPARK_GRAFT_SF_DIR=$(SF) sbt -batch "runMain graft.Bench"
 
 ## Single-query iteration: make qbench Q=ann_ivf_topk [REPS=6]
-REPS ?= 3
 qbench:
 	sbt -batch "runMain graft.tools.QueryBench $(Q) $(SF) $(REPS)"
 
@@ -64,6 +66,14 @@ tripwire: bench
 ## Live-broker e2e (skips cleanly unless GRAFT_SOURCE_URI/GRAFT_SINK_URI set)
 e2e-broker:
 	sbt -batch "testOnly graft.BrokerIntegrationSpec"
+
+## One benchmark run: make perfbench W=connector|curation [SEED=1]
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 8 --trace 0
+
+## The benchmark harness's own unit tests
+perfbench-test:
+	python3 -m unittest discover -s perfbench -p 'test_*.py'
 
 help:
 	@grep -B1 -E '^[a-z0-9-]+:' Makefile | grep -E '^##|^[a-z0-9-]+:' | sed 's/^## //'

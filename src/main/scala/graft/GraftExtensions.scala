@@ -91,8 +91,7 @@ object GraftExtensions {
     }),
     ("shingle_hashes", classOf[ShingleHashes].getName, children => {
       arity(children, 2, "shingle_hashes(text, k) — k a literal int; md5-based")
-      ShingleHashes(children.head, litInt(children(1), "shingle_hashes", "k"),
-        md5Based = true)
+      ShingleHashes(children.head, litInt(children(1), "shingle_hashes", "k"))
     }),
     ("term_frequencies", classOf[TermFrequencies].getName, children => {
       arity(children, 2, "term_frequencies(text, array('t1', ...)) — literal terms")

@@ -39,13 +39,17 @@ object SparkEntry {
     "dedup_exact_stats"    -> ((s, d) => Dedup.exactStats(s, d)),
     "dedup_normalized"     -> ((s, d) => Dedup.dedupNormalized(s, d)),
     "dedup_minhash"        -> ((s, d) => Dedup.minhashSignature(s, d)),
-    "dedup_minhash_pairs"  -> ((s, d) => Dedup.minhashPairsPortable(s, d)),
-    "dedup_minhash_keep"   -> ((s, d) => Dedup.minhashDedupPortable(s, d)),
+    "dedup_minhash_pairs"  -> ((s, d) =>
+      Dedup.minhashPairs(Tables.documents(s, d)).orderBy("id_a", "id_b")),
+    "dedup_minhash_keep"   -> ((s, d) => Dedup.minhashDedup(Tables.documents(s, d))
+      .select("doc_id", "lang", "source", "n_chars").orderBy("doc_id")),
     "dedup_minhash_bbit"   -> ((s, d) => Dedup.minhashBbitPairs(s, d)),
-    "dedup_simhash"        -> ((s, d) => Dedup.simhashPortable(s, d)),
-    "dedup_simhash_pairs"  -> ((s, d) => Dedup.simhashPairsPortable(s, d)),
+    "dedup_simhash"        -> ((s, d) => Dedup.simhash(Tables.documents(s, d)).orderBy("doc_id")),
+    "dedup_simhash_pairs"  -> ((s, d) =>
+      Dedup.simhashPairs(Tables.documents(s, d)).orderBy("id_a", "id_b")),
     "ngram_jaccard"        -> ((s, d) => Dedup.ngramJaccard(s, d)),
-    "ngram_jaccard_lsh"    -> ((s, d) => Dedup.ngramJaccardLshPortable(s, d)),
+    "ngram_jaccard_lsh"    -> ((s, d) =>
+      Dedup.ngramJaccardLsh(Tables.documents(s, d)).orderBy("id_a", "id_b")),
     "dup_pair_spans"       -> ((s, d) => Dedup.dupPairSpans(s, d)),
     "jaccard_prefix_pairs" -> ((s, d) => Dedup.jaccardPrefixPairs(s, d)),
     "containment_pairs"    -> ((s, d) => Dedup.containmentPrefixPairs(s, d)),
@@ -697,10 +701,10 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (xxhash64-based LSH internals, the mapPartitions decode stub) →
-    * driver records a weaker rows-only check; those are covered by
-    * ScalaTest specs instead.
+    * the same parquet tables. Omitted for ops with no SQL replay (the
+    * mapPartitions decode stub, the JVM-zlib compression score, approximate
+    * sketches, driver-iterative builders) → driver records a weaker
+    * rows-only check; those are covered by ScalaTest specs instead.
     */
   def oracleSql: Map[String, String] = Map(
     "change_events_json" ->

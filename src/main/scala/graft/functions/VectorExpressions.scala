@@ -2,12 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.{shim => sqlshim}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the vector-heavy operators (SURVEY.md §2
@@ -47,17 +46,17 @@ object VectorExpressions {
     sqlshim.column(BitVoteFingerprint(sqlshim.expression(hashes), nbits))
 
   /** Distinct token k-shingles of a text, hashed in one row-level pass:
-    * struct(h24: the 24-bit banding base hash, hv: the wide verify hash —
-    * 60-bit md5 prefix or full xxhash64). See ShingleHashes.
+    * struct(h24: the 24-bit md5-prefix banding base hash, hv: the 60-bit
+    * md5-prefix verify hash). See ShingleHashes.
     */
-  def shingleHashes(text: Column, k: Int, md5Based: Boolean): Column =
-    sqlshim.column(ShingleHashes(sqlshim.expression(text), k, md5Based))
+  def shingleHashes(text: Column, k: Int): Column =
+    sqlshim.column(ShingleHashes(sqlshim.expression(text), k))
 
-  /** Position-aligned (non-deduped) per-start shingle hv hashes.
-    * See PositionalShingleHashes.
+  /** Position-aligned (non-deduped) per-start 60-bit md5-prefix shingle
+    * hashes. See PositionalShingleHashes.
     */
-  def positionalShingleHashes(text: Column, k: Int, md5Based: Boolean): Column =
-    sqlshim.column(PositionalShingleHashes(sqlshim.expression(text), k, md5Based))
+  def positionalShingleHashes(text: Column, k: Int): Column =
+    sqlshim.column(PositionalShingleHashes(sqlshim.expression(text), k))
 
   /** Int8 max-abs quantization summary in one pass: struct(maxabs, ss,
     * q_csv). See QuantizeVector.
@@ -74,8 +73,8 @@ object VectorExpressions {
   /** Per-token hashes (duplicates KEPT — SimHash bit votes are
     * frequency-weighted) in one tokenize pass. See TokenHashes.
     */
-  def tokenHashes(text: Column, md5Based: Boolean): Column =
-    sqlshim.column(TokenHashes(sqlshim.expression(text), md5Based))
+  def tokenHashes(text: Column): Column =
+    sqlshim.column(TokenHashes(sqlshim.expression(text)))
 
   /** Raw-deflate compressed byte length at a fixed zlib level.
     * See DeflatedSize.
@@ -419,18 +418,12 @@ case class ArrayAgreeCount(left: Expression, right: Expression) extends BinaryEx
     copy(left = newLeft, right = newRight)
 }
 
-/** Whitespace tokens hashed in ONE pass per row, duplicates kept (unlike
-  * ShingleHashes, which dedups for set semantics): md5Based=true → 60-bit
-  * md5 prefix (engine-portable, ('0x'||substr(md5(x),1,15))::BIGINT in
-  * DuckDB); false → xxhash64 seed 42 (Spark's builtin). Replaces the
-  * interpreted per-token transform lambda in the SimHash paths.
-  */
 /** The parity-critical md5-prefix bit layout, in ONE place: hash60 = the
   * first 15 hex chars of md5 as a long (7 bytes, then the high nibble of
   * byte 7) — DuckDB's ('0x'||substr(md5(x),1,15))::BIGINT — and hash24 =
   * the first 6 hex chars (3 bytes). TokenHashes, ShingleHashes, and
   * PositionalShingleHashes all fold through here, so the layout the DuckDB
-  * oracle replays cannot drift between hash families. One MessageDigest
+  * oracle replays cannot drift between expressions. One MessageDigest
   * per thread (MD5 instances are not thread-safe).
   */
 private[functions] object Md5Prefix {
@@ -451,7 +444,12 @@ private[functions] object Md5Prefix {
     ((d(0) & 0xffL) << 16) | ((d(1) & 0xffL) << 8) | (d(2) & 0xffL)
 }
 
-case class TokenHashes(child: Expression, md5Based: Boolean)
+/** Whitespace tokens hashed in ONE pass per row, duplicates kept (unlike
+  * ShingleHashes, which dedups for set semantics), each to its 60-bit md5
+  * prefix — ('0x'||substr(md5(x),1,15))::BIGINT in DuckDB. Replaces the
+  * interpreted per-token transform lambda in the SimHash path.
+  */
+case class TokenHashes(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -470,9 +468,7 @@ case class TokenHashes(child: Expression, md5Based: Boolean)
     var i = 0
     while (i < toks.length) {
       val bytes = toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out(i) =
-        if (md5Based) Md5Prefix.hash60(Md5Prefix.digest(bytes))
-        else XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
+      out(i) = Md5Prefix.hash60(Md5Prefix.digest(bytes))
       i += 1
     }
     new GenericArrayData(out)
@@ -1419,13 +1415,9 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
   * tokenize on single spaces (split(text, ' ') semantics, trailing empties
   * kept), emit max(n-k+1, 1) shingles joined by ' ', de-duplicate
   * (first-occurrence order, matching array_distinct / list_distinct), and
-  * hash each shingle once:
-  *
-  *  - md5Based = true  (oracle-portable): h24 = first 6 hex chars of
-  *    md5(shingle) as a number — DuckDB's ('0x'||substr(md5(x),1,6))::BIGINT;
-  *    hv = first 15 hex chars (60 bits) the same way;
-  *  - md5Based = false (production): h24 = xxhash64(shingle, seed 42) &
-  *    0xFFFFFF (the seed Spark's builtin xxhash64 uses); hv = the full hash.
+  * hash each shingle once: h24 = the first 6 hex chars of md5(shingle) as
+  * a number — DuckDB's ('0x'||substr(md5(x),1,6))::BIGINT — and hv = the
+  * first 15 hex chars (60 bits) the same way, both from one digest.
   *
   * The composed builtin formulation (transform over a generated sequence of
   * concat_ws slices, then a second transform applying the hash) evaluates
@@ -1434,7 +1426,7 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
   * per row is noise next to ~10² digests computed inside it, and the
   * surrounding projection stays whole-stage-codegen'd.
   */
-case class ShingleHashes(child: Expression, k: Int, md5Based: Boolean)
+case class ShingleHashes(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = StructType(Seq(
@@ -1469,15 +1461,9 @@ case class ShingleHashes(child: Expression, k: Int, md5Based: Boolean)
     var idx = 0
     while (it.hasNext) {
       val bytes = it.next().getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (md5Based) {
-        val d = Md5Prefix.digest(bytes)
-        h24(idx) = Md5Prefix.hash24(d)
-        hv(idx) = Md5Prefix.hash60(d)
-      } else {
-        val h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
-        h24(idx) = h & 0xFFFFFFL
-        hv(idx) = h
-      }
+      val d = Md5Prefix.digest(bytes)
+      h24(idx) = Md5Prefix.hash24(d)
+      hv(idx) = Md5Prefix.hash60(d)
       idx += 1
     }
     InternalRow(new GenericArrayData(h24), new GenericArrayData(hv))
@@ -1495,9 +1481,9 @@ case class ShingleHashes(child: Expression, k: Int, md5Based: Boolean)
   * needs. A doc shorter than k contributes its whole text as the one
   * element (same clamp as ShingleHashes; DuckDB mirrors it with an
   * inclusive slice that clamps). Identical digest math: first 15 hex
-  * chars of md5 as a 60-bit long (md5Based) or full xxhash64 seed 42.
+  * chars of md5 as a 60-bit long.
   */
-case class PositionalShingleHashes(child: Expression, k: Int, md5Based: Boolean)
+case class PositionalShingleHashes(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -1522,9 +1508,7 @@ case class PositionalShingleHashes(child: Expression, k: Int, md5Based: Boolean)
       var j = i
       while (j < end) { if (j > i) sb.append(' '); sb.append(toks(j)); j += 1 }
       val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      hv(i) =
-        if (md5Based) Md5Prefix.hash60(Md5Prefix.digest(bytes))
-        else XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
+      hv(i) = Md5Prefix.hash60(Md5Prefix.digest(bytes))
       i += 1
     }
     new GenericArrayData(hv)

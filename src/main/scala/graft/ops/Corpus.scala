@@ -222,7 +222,7 @@ object Corpus {
                        maxDf: Long = 2L): DataFrame = {
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        explode(VectorExpressions.shingleHashes(col("text"), n, md5Based = true)
+        explode(VectorExpressions.shingleHashes(col("text"), n)
           .getField("hv")).as("hv"))
     // df via a count window over the gram hash instead of groupBy + join
     // back: the join formulation scans and re-hashes the corpus TWICE (both
@@ -274,8 +274,7 @@ object Corpus {
     (1 to maxN).map { n =>
       Tables.documents(spark, dir)
         .where(size(split(col("text"), " ")) >= n)
-        .select(explode(VectorExpressions.positionalShingleHashes(col("text"), n,
-          md5Based = true)).as("h"))
+        .select(explode(VectorExpressions.positionalShingleHashes(col("text"), n)).as("h"))
         .groupBy(lit(n).as("n"))
         .agg(count(lit(1)).as("total_ngrams"),
           countDistinct(col("h")).as("distinct_ngrams"))
@@ -587,7 +586,7 @@ object Corpus {
     require(divisor >= 2, "divisor must be at least 2 (1 cuts after every token)")
     docs
       .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k, md5Based = true).as("ph"))
+        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
       .withColumn("n", size(col("tok")).cast("long"))
       // cut after token p (1-based) ⇔ the k-gram ENDING at p (= ph index
       // p−k+1) hashes to 0 mod divisor, for p in [k, n−1]. The n > k guard
@@ -750,7 +749,7 @@ object Corpus {
                    trainFrac: Double = 0.9, valFrac: Double = 0.05): DataFrame = {
     val sh = Tables.documents(spark, dir)
       .select(col("doc_id"), splitCol(trainFrac, valFrac).as("split"),
-        explode(VectorExpressions.shingleHashes(col("text"), shingleK, md5Based = true)
+        explode(VectorExpressions.shingleHashes(col("text"), shingleK)
           .getField("hv")).as("h"))
       .persist()
     val viral = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -786,7 +785,7 @@ object Corpus {
   def contamination(spark: SparkSession, dir: String, shingleK: Int = 8,
                     minOverlap: Int = 3): DataFrame = {
     val hashed = Tables.documents(spark, dir).select(col("doc_id"),
-      explode(VectorExpressions.shingleHashes(col("text"), shingleK, md5Based = true)
+      explode(VectorExpressions.shingleHashes(col("text"), shingleK)
         .getField("hv")).as("h"))
       .persist()
     val eval_ = hashed.where(col("doc_id") % 50 === 0)
@@ -831,8 +830,7 @@ object Corpus {
     val st = Tables.documents(spark, dir)
       .where(size(split(col("text"), " ")) >= k)
       .select(col("doc_id"),
-        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k,
-          md5Based = true)).as(Seq("p0", "h")))
+        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
       .persist()
     val eval_ = st.where(col("doc_id") % 50 === 0).select("h").distinct()
@@ -857,8 +855,7 @@ object Corpus {
     val st = Tables.documents(spark, dir)
       .where(size(split(col("text"), " ")) >= k)
       .select(col("doc_id"),
-        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k,
-          md5Based = true)).as(Seq("p0", "h")))
+        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
     spansOver(st, evalGramSet(evalDocs, k), k)
   }
@@ -869,8 +866,7 @@ object Corpus {
   private def evalGramSet(evalDocs: DataFrame, k: Int): DataFrame =
     evalDocs
       .where(size(split(col("text"), " ")) >= k)
-      .select(explode(VectorExpressions.positionalShingleHashes(col("text"), k,
-        md5Based = true)).as("h"))
+      .select(explode(VectorExpressions.positionalShingleHashes(col("text"), k)).as("h"))
       .distinct()
 
   /** The shared B13c island pass: corpus positional-gram starts joined
@@ -918,8 +914,7 @@ object Corpus {
     val k = shingleK
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k,
-          md5Based = true).as("ph"))
+        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
       .withColumn("n", size(col("tok")))
       .persist()
     val ev = base.where(col("doc_id") % 50 === 0 && col("n") >= k)
@@ -939,8 +934,7 @@ object Corpus {
     val k = shingleK
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k,
-          md5Based = true).as("ph"))
+        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
       .withColumn("n", size(col("tok")))
     trimOver(base, evalGramSet(evalDocs, k), k)
   }
@@ -1003,7 +997,7 @@ object Corpus {
                     maxSources: Int = 64): DataFrame = {
     val sh = Tables.documents(spark, dir)
       .select(col("source"),
-        explode(VectorExpressions.shingleHashes(col("text"), shingleK, md5Based = true)
+        explode(VectorExpressions.shingleHashes(col("text"), shingleK)
           .getField("hv")).as("h"))
       .distinct()
       .persist()
@@ -1054,7 +1048,7 @@ object Corpus {
   def noveltyCurve(spark: SparkSession, dir: String, shingleK: Int = 8): DataFrame = {
     val sh = Tables.documents(spark, dir)
       .select(col("source"),
-        explode(VectorExpressions.shingleHashes(col("text"), shingleK, md5Based = true)
+        explode(VectorExpressions.shingleHashes(col("text"), shingleK)
           .getField("hv")).as("h"))
       .distinct()
       .persist()

@@ -63,7 +63,7 @@ object Curation {
     def dupFrac(k: Int): Column = {
       val total = greatest(size(tok) - lit(k - 1), lit(1)).cast("double")
       val distinctGrams = size(
-        VectorExpressions.shingleHashes(col("text"), k, md5Based = true).getField("hv"))
+        VectorExpressions.shingleHashes(col("text"), k).getField("hv"))
         .cast("double")
       round(lit(1.0) - distinctGrams / total, 6)
     }
@@ -88,7 +88,7 @@ object Curation {
     */
   private def docShingleHashes(docs: DataFrame, k: Int): DataFrame =
     docs.select(col("doc_id"),
-      explode(VectorExpressions.shingleHashes(col("text"), k, md5Based = true)
+      explode(VectorExpressions.shingleHashes(col("text"), k)
         .getField("hv")).as("h"))
 
   /** B15a — boilerplate n-gram detection: k-shingles appearing in at least
@@ -239,9 +239,9 @@ object Curation {
         col("doc_id"), col("lang"), col("source"), col("n_chars"),
         size(tok).cast("long").as("n_tok"),
         size(array_distinct(tok)).cast("long").as("n_uniq"),
-        size(VectorExpressions.shingleHashes(col("text"), 2, md5Based = true).getField("hv"))
+        size(VectorExpressions.shingleHashes(col("text"), 2).getField("hv"))
           .cast("long").as("n2_distinct"),
-        VectorExpressions.shingleHashes(col("text"), 3, md5Based = true).as("hs"),
+        VectorExpressions.shingleHashes(col("text"), 3).as("hs"),
         VectorExpressions.gopherStats(col("text"), gopherStops).as("_g"))
       .persist()
     // the selected Gopher rules gate as one more scan-fused predicate —
@@ -285,7 +285,7 @@ object Curation {
       VectorExpressions.minhashFamily(col("hs.h24"),
         Dedup.minhashCoefs(32), Dedup.MinhashP).as("sig"))
     val dups = Dedup.pairsFrom(signed, numHashes = 32, bands = 16,
-        threshold = 0.5, maxBucket = 256, portable = true)
+        threshold = 0.5, maxBucket = 256)
       .select(col("id_b").as("doc_id")).distinct()
     base
       .join(top, Seq("doc_id"))
@@ -497,14 +497,14 @@ object Curation {
     * the count arithmetic is integer-exact and cross_entropy is the same
     * Σ cnt·ln p over identical exact counts, rounded at 6 dp — B35's
     * float budget absorbs partial-aggregation order). The constants are
-    * the component queries' registered defaults: addK = 0.5
-    * (lmPerplexity), minCount = 5 (bigramCoverage).
+    * the component queries' registered defaults: Relevance.DefaultAddK
+    * (lmPerplexity), Relevance.DefaultMinCount (bigramCoverage).
     */
   private[graft] def ensembleSignals(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.ops.TextAnalysis.quality(spark, dir)
       .select(col("doc_id"), col("quality_score"))
-    val addK = 0.5
-    val minCount = 5L
+    val addK = Relevance.DefaultAddK
+    val minCount = Relevance.DefaultMinCount
     // persisted UNEXPLODED per-doc gram arrays, LAZILY filled — see
     // lmPerplexity's measured argument (an eager blocking fill lost at
     // both sf0.1 and 50×). Released by graft.Caches.clear.
@@ -701,7 +701,7 @@ object Curation {
     val tok = toks(col("text"))
     val total2 = greatest(size(tok) - lit(1), lit(1)).cast("double")
     val distinct2 = size(
-      VectorExpressions.shingleHashes(col("text"), 2, md5Based = true).getField("hv"))
+      VectorExpressions.shingleHashes(col("text"), 2).getField("hv"))
       .cast("double")
     round(lit(1.0) - distinct2 / total2, 6)
   }

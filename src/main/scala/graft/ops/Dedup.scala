@@ -18,12 +18,11 @@ import org.apache.spark.sql.functions._
   * so one degenerate key (empty docs, boilerplate text) can never go
   * quadratic.
   *
-  * Two hash families appear throughout:
-  *  - production: xxhash64 (codegen'd, no string churn) — not reproducible
-  *    outside the JVM, covered by behavioral specs;
-  *  - oracle-portable: a 24/60-bit md5-prefix base hash parseable
-  *    identically by Spark's `conv` and DuckDB's '0x' cast, so the driver's
-  *    DuckDB oracle replays the full pipeline bit-for-bit.
+  * One hash family runs throughout: a 24/60-bit md5-prefix base hash,
+  * parseable identically by Spark's `conv` and DuckDB's '0x' cast, so the
+  * DuckDB oracle replays every near-dup pipeline bit-for-bit, and band
+  * keys are the md5 hex string of a signature slice. The one exception is
+  * the Bloom probe in [[bloomNovelty]], which is exact dedup, not LSH.
   * Signature/fingerprint math on top of the base hash runs in the codegen'd
   * MinHashFamily / BitVoteFingerprint expressions (one pass over elements,
   * no interpreted lambda per element per hash).
@@ -178,7 +177,7 @@ object Dedup {
     */
   def corpusDiff(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val near = minhashPairsPortable(spark, dir, threshold = threshold)
+    val near = minhashPairs(docs, threshold = threshold)
       .where((col("id_a") % 2 === 1) =!= (col("id_b") % 2 === 1))
       .select(when(col("id_a") % 2 === 1, col("id_a")).otherwise(col("id_b")).as("doc_id"))
       .distinct()
@@ -346,7 +345,7 @@ object Dedup {
                   k: Int = 5, minDup: Long = 2): DataFrame = {
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k, md5Based = true).as("ph"))
+        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
     // ONE explode carries both the token and the gram hash STARTING at its
     // position: arrays_zip pads the (shorter) hash array with nulls, so
     // tail positions — where no k-gram starts — surface with h = null and
@@ -475,8 +474,7 @@ object Dedup {
     val base = Tables.documents(spark, dir)
       .where(size(split(col("text"), " ")) >= minLen)
       .select(col("doc_id"),
-        VectorExpressions.positionalShingleHashes(col("text"), minLen,
-          md5Based = true).as("ph"))
+        VectorExpressions.positionalShingleHashes(col("text"), minLen).as("ph"))
     // persisted for the same reason as dupSpanTrim's exploded frame: the
     // start positions feed BOTH the dup-set groupBy and the probe join,
     // and at L=20 the positional hashing is O(L) bytes of md5 per token —
@@ -541,24 +539,23 @@ object Dedup {
   /** (doc_id, sig): MinHash signature per doc — shingling, base-hashing and
     * the k-min family each run once per row (ShingleHashes + MinHashFamily).
     */
-  private[graft] def signatures(docs: DataFrame, md5Based: Boolean,
-                                numHashes: Int, shingleK: Int): DataFrame =
+  private[graft] def signatures(docs: DataFrame, numHashes: Int, shingleK: Int): DataFrame =
     docs.select(col("doc_id"),
       VectorExpressions.minhashFamily(
-        VectorExpressions.shingleHashes(col("text"), shingleK, md5Based).getField("h24"),
+        VectorExpressions.shingleHashes(col("text"), shingleK).getField("h24"),
         minhashCoefs(numHashes), MinhashP).as("sig"))
 
-  /** Explode a signature into (id, band, band_key) LSH bucket rows. The
-    * portable key is the md5 string of the band's signature slice (DuckDB:
-    * md5(array_to_string(sig[i:j],'|'))); the production key packs band +
-    * slice through xxhash64.
+  /** The LSH key of 0-based band `band` over a `sig` column in r-component
+    * bands: the md5 hex string of the band's signature slice (DuckDB:
+    * md5(array_to_string(sig[i:j],'|'))).
     */
-  private[graft] def explodedBands(signed: DataFrame, bands: Int, r: Int, portable: Boolean): DataFrame = {
-    val e = signed.withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
-    val bandSlice = concat_ws("|", slice(col("sig"), col("band") * r + 1, lit(r)))
-    val key = if (portable) md5(bandSlice) else xxhash64(col("band"), bandSlice)
-    e.select(col("doc_id").as("id"), col("band"), key.as("band_key"))
-  }
+  private def bandKey(band: Column, r: Int): Column =
+    md5(concat_ws("|", slice(col("sig"), band * r + 1, lit(r))))
+
+  /** Explode a signature into (id, band, band_key) LSH bucket rows. */
+  private[graft] def explodedBands(signed: DataFrame, bands: Int, r: Int): DataFrame =
+    signed.withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
+      .select(col("doc_id").as("id"), col("band"), bandKey(col("band"), r).as("band_key"))
 
   /** Candidate (id_a, id_b) pairs within buckets, with an explosion guard:
     * buckets up to `cap` wide produce all within-bucket pairs (the normal
@@ -612,9 +609,9 @@ object Dedup {
         s"${if (bands > 0) s"${numHashes % bands} trailing signature components would never reach a band key" else "zero bands is meaningless"}")
 
   private def minhashCandidates(signed: DataFrame, numHashes: Int, bands: Int,
-                                maxBucket: Int, portable: Boolean): DataFrame = {
+                                maxBucket: Int): DataFrame = {
     requireBandsTile(numHashes, bands)
-    guardedPairs(explodedBands(signed, bands, numHashes / bands, portable),
+    guardedPairs(explodedBands(signed, bands, numHashes / bands),
       Seq("band", "band_key"), maxBucket).distinct()
   }
 
@@ -630,41 +627,26 @@ object Dedup {
                        numHashes: Int = 16, bands: Int = 4, shingleK: Int = 3): DataFrame = {
     requireBandsTile(numHashes, bands)
     val r = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      md5(concat_ws("|", slice(col("sig"), lit(b * r + 1), lit(r)))).as(s"band_$b")
-    }
+    val bandCols = (0 until bands).map(b => bandKey(lit(b), r).as(s"band_$b"))
     Tables.documents(spark, dir)
-      .withColumn("hashed", VectorExpressions.shingleHashes(col("text"), shingleK, md5Based = true).getField("h24"))
+      .withColumn("hashed", VectorExpressions.shingleHashes(col("text"), shingleK).getField("h24"))
       .withColumn("n_shingles", size(col("hashed")).cast("long"))
       .withColumn("sig", VectorExpressions.minhashFamily(col("hashed"), minhashCoefs(numHashes), MinhashP))
       .select(col("doc_id") +: col("n_shingles") +: bandCols: _*)
       .orderBy("doc_id")
   }
 
-  /** B2 (scale path) — LSH candidate pairs via explode-on-band + self-join
-    * on (band index, band key), then MinHash-estimated Jaccard from
-    * signature agreement. xxhash64-based hash family (codegen'd, no md5
-    * string churn). Never all-pairs: the join key is the band bucket, and
-    * guardedPairs bounds every bucket.
+  /** B2 — LSH candidate pairs via explode-on-band + self-join on (band
+    * index, band key), then MinHash-estimated Jaccard from signature
+    * agreement. Never all-pairs: the join key is the band bucket, and
+    * guardedPairs bounds every bucket. The DuckDB oracle replays candidates
+    * AND estimates end-to-end. Registered (ordered by id_a, id_b, at these
+    * defaults) as `dedup_minhash_pairs`.
     */
-  def minhashPairs(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
+  def minhashPairs(docs: DataFrame, numHashes: Int = 32, bands: Int = 16,
                    shingleK: Int = 3, threshold: Double = 0.5,
-                   maxBucket: Int = 256): DataFrame = {
-    val signed = signatures(docs, md5Based = false, numHashes, shingleK)
-    pairsFrom(signed, numHashes, bands, threshold, maxBucket, portable = false)
-  }
-
-  /** B2 (oracle-portable pairs) — the same pipeline on the md5-prefix hash
-    * family, so the driver's DuckDB oracle replays candidates AND estimates
-    * end-to-end. Registered as `dedup_minhash_pairs`.
-    */
-  def minhashPairsPortable(spark: SparkSession, dir: String, numHashes: Int = 32,
-                           bands: Int = 16, shingleK: Int = 3, threshold: Double = 0.5,
-                           maxBucket: Int = 256): DataFrame = {
-    val signed = signatures(Tables.documents(spark, dir), md5Based = true, numHashes, shingleK)
-    pairsFrom(signed, numHashes, bands, threshold, maxBucket, portable = true)
-      .orderBy("id_a", "id_b")
-  }
+                   maxBucket: Int = 256): DataFrame =
+    pairsFrom(signatures(docs, numHashes, shingleK), numHashes, bands, threshold, maxBucket)
 
   /** B2b — b-BIT MINHASH (Li & König, CACM '11): keep only the lowest `b`
     * bits of every signature component, packed into ONE long per doc, and
@@ -690,9 +672,8 @@ object Dedup {
                        bands: Int = 16, shingleK: Int = 3, b: Int = 2,
                        threshold: Double = 0.5, maxBucket: Int = 256): DataFrame = {
     require(numHashes * b <= 64, s"packed signature must fit one long: $numHashes*$b > 64")
-    val signed = signatures(Tables.documents(spark, dir), md5Based = true,
-      numHashes, shingleK).persist()
-    val cands = minhashCandidates(signed, numHashes, bands, maxBucket, portable = true)
+    val signed = signatures(Tables.documents(spark, dir), numHashes, shingleK).persist()
+    val cands = minhashCandidates(signed, numHashes, bands, maxBucket)
     val mask = (1L << b) - 1
     val packExpr = (0 until numHashes).map { i =>
       shiftleft(element_at(col("sig"), i + 1).bitwiseAND(lit(mask)), b * i)
@@ -715,7 +696,7 @@ object Dedup {
   }
 
   private[ops] def pairsFrom(signed0: DataFrame, numHashes: Int, bands: Int,
-                             threshold: Double, maxBucket: Int, portable: Boolean): DataFrame = {
+                             threshold: Double, maxBucket: Int): DataFrame = {
     // The per-doc signature table fans out to four consumers (bucket stats,
     // band join, and both sides of the signature re-attach). Persisting it
     // makes the expensive pass — shingling + content hashing — run exactly
@@ -723,7 +704,7 @@ object Dedup {
     // Size: ~8 B/hash per doc (k×8 B ≈ 0.5 KB/doc at k=64) — a small
     // fraction of the raw text; MEMORY_AND_DISK spills at cluster scale.
     val signed = signed0.persist()
-    val cands = minhashCandidates(signed, numHashes, bands, maxBucket, portable)
+    val cands = minhashCandidates(signed, numHashes, bands, maxBucket)
     val sa = signed.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
     val sb = signed.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))
     cands.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
@@ -738,7 +719,8 @@ object Dedup {
   }
 
   /** B2c — near-dup dedup decision: drop every doc that matched an earlier
-    * doc in any LSH bucket (keep-first by doc_id).
+    * doc in any LSH bucket (keep-first by doc_id). Registered (doc_id, lang,
+    * source, n_chars, ordered by doc_id) as `dedup_minhash_keep`.
     */
   def minhashDedup(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val dups = minhashPairs(docs, threshold = threshold)
@@ -746,79 +728,33 @@ object Dedup {
     docs.join(dups, Seq("doc_id"), "left_anti")
   }
 
-  /** B2c (oracle-portable) — the dedup decision on the md5-prefix family:
-    * the surviving corpus after keep-first near-dup removal. Registered as
-    * `dedup_minhash_keep`.
-    */
-  def minhashDedupPortable(spark: SparkSession, dir: String, numHashes: Int = 32,
-                           bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val signed = signatures(docs, md5Based = true, numHashes, shingleK = 3)
-    val dups = pairsFrom(signed, numHashes, bands, threshold, maxBucket = 256, portable = true)
-      .select(col("id_b").as("doc_id")).distinct()
-    docs.join(dups, Seq("doc_id"), "left_anti")
-      .select("doc_id", "lang", "source", "n_chars")
-      .orderBy("doc_id")
-  }
-
   // -------------------------------------------------------------- simhash
 
-  /** B3 — SimHash: 64-bit fingerprint from per-token xxhash64 bit votes;
-    * near-dups share a fingerprint chunk (4×16-bit bands) and are verified
-    * by Hamming distance. The bit votes run in the codegen'd
-    * BitVoteFingerprint expression (one pass, not 64 interpreted folds).
+  /** B3 — SimHash: 60-bit fingerprint from per-token bit votes over the
+    * 60-bit md5-prefix token hash (15 hex chars parse identically in Spark
+    * and DuckDB), banded as 4×15-bit chunks. The bit votes run in the
+    * codegen'd BitVoteFingerprint expression (one pass, not 60 interpreted
+    * folds). Registered (ordered by doc_id) as `dedup_simhash`.
     */
-  def simhash(docs: DataFrame): DataFrame = {
-    val fp = docs
-      .withColumn("thashes", VectorExpressions.tokenHashes(col("text"), md5Based = false))
-      .select(col("doc_id"), VectorExpressions.bitVote(col("thashes"), 64).as("simhash"))
-    fp.withColumn("chunk0", col("simhash").bitwiseAND(lit(0xFFFFL)))
-      .withColumn("chunk1", shiftright(col("simhash"), 16).bitwiseAND(lit(0xFFFFL)))
-      .withColumn("chunk2", shiftright(col("simhash"), 32).bitwiseAND(lit(0xFFFFL)))
-      .withColumn("chunk3", shiftright(col("simhash"), 48).bitwiseAND(lit(0xFFFFL)))
-  }
-
-  /** B3 (oracle-portable) — the same bit-vote construction on a 60-bit
-    * md5-prefix token hash (15 hex chars parse identically in Spark and
-    * DuckDB), banded as 4×15-bit chunks. Registered as `dedup_simhash`.
-    */
-  def simhashPortable(spark: SparkSession, dir: String): DataFrame =
-    simhashPortable0(spark, dir).orderBy("doc_id")
-
-  private def simhashPortable0(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("hashed", VectorExpressions.tokenHashes(col("text"), md5Based = true))
+  def simhash(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("hashed", VectorExpressions.tokenHashes(col("text")))
       .select(col("doc_id"), VectorExpressions.bitVote(col("hashed"), 60).as("simhash"))
       .withColumn("chunk0", col("simhash").bitwiseAND(lit(0x7FFFL)))
       .withColumn("chunk1", shiftright(col("simhash"), 15).bitwiseAND(lit(0x7FFFL)))
       .withColumn("chunk2", shiftright(col("simhash"), 30).bitwiseAND(lit(0x7FFFL)))
       .withColumn("chunk3", shiftright(col("simhash"), 45).bitwiseAND(lit(0x7FFFL)))
 
-  /** B3c (oracle-portable pairs) — chunk-banded candidates + exact Hamming
-    * verify on the 60-bit portable fingerprint, end-to-end replayable by
-    * DuckDB. Registered as `dedup_simhash_pairs`.
-    */
-  def simhashPairsPortable(spark: SparkSession, dir: String, maxHamming: Int = 8,
-                           maxBucket: Int = 256): DataFrame =
-    simhashPairsOf(simhashPortable0(spark, dir).persist(), maxHamming, maxBucket)
-      .withColumn("hamming", col("hamming").cast("long"))
-      .orderBy("id_a", "id_b")
-
-  /** B3b — SimHash candidate pairs: equal 16-bit chunk ⇒ candidate (catches
+  /** B3c — SimHash candidate pairs: equal 15-bit chunk ⇒ candidate (catches
     * all pairs within Hamming distance 3 by pigeonhole); verify by exact
-    * Hamming distance on the full fingerprint. Scalar-only candidate dedup;
-    * fingerprints re-attach by key; buckets bounded by guardedPairs.
+    * Hamming distance on the full fingerprint, end-to-end replayable by
+    * DuckDB. Scalar-only candidate dedup; fingerprints re-attach by key;
+    * buckets bounded by guardedPairs. Registered (ordered by id_a, id_b, at
+    * these defaults) as `dedup_simhash_pairs`.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3, maxBucket: Int = 256): DataFrame =
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 8, maxBucket: Int = 256): DataFrame = {
     // one token-hash + bit-vote pass; fingerprints are 5 longs/doc
-    simhashPairsOf(simhash(docs).persist(), maxHamming, maxBucket)
-
-  /** Shared chunk-banding + exact-Hamming verify body for BOTH fingerprint
-    * families (a banding/guard change applies to each exactly once):
-    * explode the four chunks as band keys, bound buckets via guardedPairs,
-    * re-attach fingerprints by id, verify by full-width Hamming.
-    */
-  private def simhashPairsOf(sh: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
+    val sh = simhash(docs).persist()
     val keyed = sh.select(col("doc_id").as("id"),
         explode(array((0 until 4).map(i => struct(lit(i).as("chunk_id"), col(s"chunk$i").as("chunk_val"))): _*)).as("c"))
       .select(col("id"), col("c.chunk_id"), col("c.chunk_val"))
@@ -826,7 +762,7 @@ object Dedup {
     val fa = sh.select(col("doc_id").as("id_a"), col("simhash").as("sim_a"))
     val fb = sh.select(col("doc_id").as("id_b"), col("simhash").as("sim_b"))
     cands.join(fa, Seq("id_a")).join(fb, Seq("id_b"))
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).cast("long"))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }
@@ -868,7 +804,7 @@ object Dedup {
     // stats join introduces is the same partitioning the self-join needs.
     val base = Tables.documents(spark, dir)
       .select(col("doc_id").as("id"), col("source"), expr("n_chars div 100").as("len_bucket"),
-        VectorExpressions.shingleHashes(col("text"), shingleK, md5Based = true).getField("hv").as("sh"))
+        VectorExpressions.shingleHashes(col("text"), shingleK).getField("hv").as("sh"))
     val blockStats = base.groupBy("source", "len_bucket")
       .agg(count(lit(1)).as("bucket_n"), min(col("id")).as("rep_id"))
     val stats = base.join(blockStats, Seq("source", "len_bucket"))
@@ -923,7 +859,7 @@ object Dedup {
   def jaccardPrefixPairs(spark: SparkSession, dir: String, shingleK: Int = 5,
                          minJaccard: Double = 0.5): DataFrame = {
     val t = lit(minJaccard).cast("decimal(9,6)")
-    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK, md5Based = true)
+    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK)
       .select(col("doc_id"), col("hs.hv").as("sh"))
       .where(size(col("sh")) > 0)
       .persist()
@@ -984,7 +920,7 @@ object Dedup {
   def containmentPrefixPairs(spark: SparkSession, dir: String, shingleK: Int = 5,
                              minContain: Double = 0.9): DataFrame = {
     val t = lit(minContain).cast("decimal(9,6)")
-    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK, md5Based = true)
+    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK)
       .select(col("doc_id"), col("hs.hv").as("sh"))
       .where(size(col("sh")) > 0)
       .persist()
@@ -1022,25 +958,36 @@ object Dedup {
   /** B4 (scale path) — exact n-gram Jaccard verify fed by MinHash-LSH
     * candidates: the banded equi-join proposes pairs, the exact intersect
     * confirms them. Linear in data size for bounded buckets — the composed
-    * near-dup pipeline a 100 TB run registers. Production hash family.
+    * near-dup pipeline a 100 TB run registers. Each shingle is md5'd ONCE;
+    * the 24-bit banding base and the 60-bit verify hash are prefixes of
+    * that one digest, so DuckDB replays candidates AND the exact verify.
+    * Registered (ordered by id_a, id_b, at these defaults) as
+    * `ngram_jaccard_lsh`.
+    *
+    * The hashed table is persisted so the one expensive pass — shingling +
+    * content hashing — feeds bucket stats, the band join, and both verify
+    * sides without recomputation; signatures derive from the cached h24 (a
+    * cheap codegen'd fold) and only candidate pairs pay the set-intersect
+    * cost on hv. NOTE the cache is corpus-scale (~8 B per shingle ≈ half
+    * the raw text bytes): the standard materialize-the-signature-table
+    * shape of large dedup runs, with MEMORY_AND_DISK spill; a cluster that
+    * cannot afford it trades the persist for recompute (3 passes) by
+    * dropping it.
     */
   def ngramJaccardLsh(docs: DataFrame, shingleK: Int = 3, minJaccard: Double = 0.5,
-                      numHashes: Int = 64, bands: Int = 32, maxBucket: Int = 256): DataFrame =
-    verifyJaccard(hashedDocs(docs, shingleK, md5Based = false),
-      numHashes, bands, maxBucket, portable = false, minJaccard)
-
-  /** B4 (scale path, oracle-portable) — the same composition on the
-    * md5-prefix families so DuckDB replays candidates AND the exact verify.
-    * Each shingle is md5'd ONCE; the 24-bit banding base and the 60-bit
-    * verify hash are prefixes of that one digest. Registered as
-    * `ngram_jaccard_lsh`.
-    */
-  def ngramJaccardLshPortable(spark: SparkSession, dir: String, shingleK: Int = 3,
-                              minJaccard: Double = 0.5, numHashes: Int = 32,
-                              bands: Int = 16, maxBucket: Int = 256): DataFrame =
-    verifyJaccard(hashedDocs(Tables.documents(spark, dir), shingleK, md5Based = true),
-      numHashes, bands, maxBucket, portable = true, minJaccard)
-      .orderBy("id_a", "id_b")
+                      numHashes: Int = 32, bands: Int = 16, maxBucket: Int = 256): DataFrame = {
+    val hashed = hashedDocs(docs, shingleK).persist()
+    val signed = hashed.select(col("doc_id"),
+      VectorExpressions.minhashFamily(col("hs.h24"), minhashCoefs(numHashes), MinhashP).as("sig"))
+    val cands = minhashCandidates(signed, numHashes, bands, maxBucket)
+    val a = hashed.select(col("doc_id").as("id_a"), col("hs.hv").as("sh_a"))
+    val b = hashed.select(col("doc_id").as("id_b"), col("hs.hv").as("sh_b"))
+    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
+    val union = size(col("sh_a")).cast("double") + size(col("sh_b")).cast("double") - inter
+    cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
+      .select(col("id_a"), col("id_b"), round(inter / union, 6).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
+  }
 
   /** B4b — near-dup pair EXPLANATION: for every verified LSH pair, the
     * disjoint matched-k-gram token ISLANDS in id_a's coordinates — where
@@ -1063,14 +1010,12 @@ object Dedup {
                    shingleK: Int = DefaultShingleK,
                    minJaccard: Double = 0.5): DataFrame = {
     val k = shingleK
-    val pairs = ngramJaccardLshPortable(spark, dir, shingleK = k,
+    val pairs = ngramJaccardLsh(Tables.documents(spark, dir), shingleK = k,
       minJaccard = minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
     val st = Tables.documents(spark, dir)
       .where(size(split(col("text"), " ")) >= k)
       .select(col("doc_id"),
-        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k,
-          md5Based = true)).as(Seq("p0", "h")))
+        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
       .persist() // two consumers: a-side positions + b-side gram sets
     val aSide = pairs.join(st.withColumnRenamed("doc_id", "id_a"), Seq("id_a"))
@@ -1106,17 +1051,16 @@ object Dedup {
   def lshPrecision(spark: SparkSession, dir: String, shingleK: Int = 3,
                    minJaccard: Double = 0.5, numHashes: Int = 32,
                    bands: Int = 16, maxBucket: Int = 256): DataFrame =
-    verifyJaccard(hashedDocs(Tables.documents(spark, dir), shingleK, md5Based = true),
-      numHashes, bands, maxBucket, portable = true, minJaccard = 0.0)
+    ngramJaccardLsh(Tables.documents(spark, dir), shingleK, minJaccard = 0.0,
+      numHashes, bands, maxBucket)
       .agg(count(lit(1)).as("candidates"),
         sum((col("jaccard") >= minJaccard).cast("long")).as("accepted"))
       .select(col("candidates"), col("accepted"),
         round(col("accepted").cast("double") / col("candidates"), 6).as("lsh_precision"))
 
   /** (doc_id, hs struct(h24, hv)): one shingling + hashing pass per doc. */
-  private def hashedDocs(docs: DataFrame, shingleK: Int, md5Based: Boolean): DataFrame =
-    docs.select(col("doc_id"),
-      VectorExpressions.shingleHashes(col("text"), shingleK, md5Based).as("hs"))
+  private def hashedDocs(docs: DataFrame, shingleK: Int): DataFrame =
+    docs.select(col("doc_id"), VectorExpressions.shingleHashes(col("text"), shingleK).as("hs"))
 
   /** B20 (batch analog of the streaming ingest, oracle path) — incremental
     * dedup: the corpus's newer half arrives as a delivery and is deduped
@@ -1196,15 +1140,13 @@ object Dedup {
     */
   private def eagerDupClusters(spark: SparkSession, dir: String, threshold: Double,
                                maxIter: Int, localEdgeCap: Int): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val signed = signatures(docs, md5Based = true, numHashes = 32, shingleK = 3)
     // ONE persisted copy of the undirected pair list. Symmetrizing with
     // unionByName(pairs, flip(pairs)) would plan the whole LSH subtree
     // twice (only the persisted signatures are shared); the distributed
     // loop instead doubles rows with a single explode over the cache, and
     // union-find needs no symmetry at all.
-    val pairs = pairsFrom(signed, numHashes = 32, bands = 16, threshold,
-      maxBucket = 256, portable = true).select("id_a", "id_b").persist()
+    val pairs = minhashPairs(Tables.documents(spark, dir), threshold = threshold)
+      .select("id_a", "id_b").persist()
     val nPairs = pairs.count() // materializes the persisted pair list
     val resolved =
       if (nPairs <= localEdgeCap)
@@ -1459,31 +1401,5 @@ object Dedup {
       .join(e.select(col("src").as("id")).distinct(), Seq("id"), "left_anti")
       .withColumn("lbl", col("id"))
     (labels.unionByName(roots), round)
-  }
-
-  /** LSH candidates + exact-Jaccard verification over a hashed per-doc
-    * table (doc_id, hs(h24, hv)). The hashed table is persisted so the one
-    * expensive pass — shingling + content hashing — feeds bucket stats, the
-    * band join, and both verify sides without recomputation; signatures
-    * derive from the cached h24 (a cheap codegen'd fold) and only candidate
-    * pairs pay the set-intersect cost on hv. NOTE the cache is corpus-scale
-    * (~8 B per shingle ≈ half the raw text bytes): the standard
-    * materialize-the-signature-table shape of large dedup runs, with
-    * MEMORY_AND_DISK spill; a cluster that cannot afford it trades the
-    * persist for recompute (3 passes) by dropping this line.
-    */
-  private def verifyJaccard(hashed0: DataFrame, numHashes: Int, bands: Int,
-                            maxBucket: Int, portable: Boolean, minJaccard: Double): DataFrame = {
-    val hashed = hashed0.persist()
-    val signed = hashed.select(col("doc_id"),
-      VectorExpressions.minhashFamily(col("hs.h24"), minhashCoefs(numHashes), MinhashP).as("sig"))
-    val cands = minhashCandidates(signed, numHashes, bands, maxBucket, portable)
-    val a = hashed.select(col("doc_id").as("id_a"), col("hs.hv").as("sh_a"))
-    val b = hashed.select(col("doc_id").as("id_b"), col("hs.hv").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(col("sh_a")).cast("double") + size(col("sh_b")).cast("double") - inter
-    cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"), round(inter / union, 6).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
   }
 }

@@ -160,10 +160,15 @@ object Embeddings {
     * paths bit-identical, so the switch is a pure execution-strategy
     * choice, never a semantic one.
     */
-  private[graft] def kmeansCollectMax(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.kmeans.collectMaxPartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_KMEANS_COLLECT_MAX"))
-      .map(_.toInt).getOrElse(64)
+  private[graft] def kmeansCollectMax(spark: SparkSession): Int = {
+    val confKey = "spark.graft.kmeans.collectMaxPartitions"
+    val envKey = "SPARK_GRAFT_KMEANS_COLLECT_MAX"
+    spark.conf.getOption(confKey).map(confKey -> _)
+      .orElse(sys.env.get(envKey).map(envKey -> _))
+      .map { case (key, v) => v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer partition count, got '$v'")) }
+      .getOrElse(64)
+  }
 
   /** FUSED multi-learner k-means (r18): learn SEVERAL fixed-iteration
     * cosine k-means models over (slices of) the same embedding frame in
@@ -320,6 +325,9 @@ object Embeddings {
                     accS = new Array[Double](s.length)
                     accN = new Array[Long](n.length)
                   }
+                  assert(s.length == accS.length && n.length == accN.length,
+                    s"k-means partial of learner $j cell $c has ${s.length}/${n.length} " +
+                      s"components, its accumulator ${accS.length}/${accN.length}")
                   var i = 0
                   while (i < s.length) { accS(i) += s(i); accN(i) += n(i); i += 1 }
                 }

@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
   */
 object Relevance {
 
+  /** Add-k smoothing of the registered bigram LM ([[lmPerplexity]]). */
+  val DefaultAddK: Double = 0.5
+
+  /** Corpus bigram count that makes a bigram common ([[bigramCoverage]]). */
+  val DefaultMinCount: Long = 5L
+
   /** B27 — sparse document similarity via an inverted index: cosine over
     * binary rare-token vectors, `|A∩B| / sqrt(|A|·|B|)`.
     *
@@ -70,7 +76,7 @@ object Relevance {
     val tok = Tables.documents(spark, dir)
       .select(col("doc_id"),
         explode(graft.functions.VectorExpressions
-          .shingleHashes(col("text"), shingleN, md5Based = true)
+          .shingleHashes(col("text"), shingleN)
           .getField("hv")).as("token"))
       .persist()
     val rare = tok.groupBy("token").agg(count(lit(1)).as("df"))
@@ -157,7 +163,7 @@ object Relevance {
     * coverage rather than silently vanishing.
     */
   def bigramCoverage(spark: SparkSession, dir: String,
-                     minCount: Long = 5): DataFrame = {
+                     minCount: Long = DefaultMinCount): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // Persisted: feeds BOTH the corpus-count aggregate and the scoring join
     // (different aggregates — no exchange reuse), so the tokenize runs
@@ -228,7 +234,7 @@ object Relevance {
     * rounding edge). Docs with < 2 tokens have no bigrams and keep a row
     * with n_bigrams = 0 and null scores rather than vanishing.
     */
-  def lmPerplexity(spark: SparkSession, dir: String, addK: Double = 0.5): DataFrame = {
+  def lmPerplexity(spark: SparkSession, dir: String, addK: Double = DefaultAddK): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // Persisted: feeds the corpus bigram counts, the vocab scalar, AND the
     // scoring join. Lazily persisted — released by graft.Caches.clear (see
@@ -308,7 +314,7 @@ object Relevance {
     * sketches), broadcasts back, and the assignment is a pure projection.
     * Nothing here adds a shuffle beyond lmPerplexity's own.
     */
-  def pplBuckets(spark: SparkSession, dir: String, addK: Double = 0.5): DataFrame = {
+  def pplBuckets(spark: SparkSession, dir: String, addK: Double = DefaultAddK): DataFrame = {
     val ps = Seq(1.0 / 3, 2.0 / 3)
     // Persisted: the composed perplexity frame feeds BOTH the cutoff
     // aggregate and the final assignment join — without the persist each
@@ -511,7 +517,7 @@ object Relevance {
   private def positionalFrame(docs: DataFrame, k: Int): DataFrame =
     docs.select(col("doc_id"), col("source"),
       posexplode(graft.functions.VectorExpressions
-        .positionalShingleHashes(col("text"), k, md5Based = true)).as(Seq("p0", "h")))
+        .positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
       .select(col("doc_id"), col("source"), (col("p0") + 1).cast("long").as("pos"), col("h"))
 
   /** B53c — HYBRID retrieval: reciprocal-rank fusion of a lexical BM25

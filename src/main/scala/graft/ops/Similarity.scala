@@ -117,7 +117,7 @@ object Similarity {
     * [[bruteTopKRanked]]).
     */
   private def truncatedRerankRanked(spark: SparkSession, dir: String, nQueries: Int,
-                                    k: Int, d: Int = 16, candidates: Int = 50): DataFrame = {
+                                    k: Int, d: Int, candidates: Int): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val queries = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -187,9 +187,9 @@ object Similarity {
     val qVecs = collectQueryVecs(spark, dir, nQueries)
     val methods: Seq[(String, DataFrame)] = Seq(
       "ivf" -> ivfProbePersistedRanked(spark, dir, pqDir, qVecs, k),
-      "lsh" -> lshTopKRanked(spark, dir, nQueries, k),
+      "lsh" -> lshTopKRanked(spark, dir, nQueries, k, planesPerTable = 4, tables = 24, dim = 64),
       "pq" -> ivfPqProbePersistedRanked(spark, dir, pqDir, qVecs, k),
-      "truncated" -> truncatedRerankRanked(spark, dir, nQueries, k))
+      "truncated" -> truncatedRerankRanked(spark, dir, nQueries, k, d = 16, candidates = 50))
     // PER-ARM comparison tails, kept after measuring the alternative (r19):
     // fusing them into one method-tagged union → one semi-join → one
     // groupBy(method) aggregate read 3.72 s at 50× (min of 7) vs 3.46 s
@@ -262,8 +262,7 @@ object Similarity {
 
   /** [[lshTopK]] without the output-contract sort (see [[bruteTopKRanked]]). */
   private def lshTopKRanked(spark: SparkSession, dir: String, nQueries: Int, k: Int,
-                            planesPerTable: Int = 4, tables: Int = 24,
-                            dim: Int = 64): DataFrame = {
+                            planesPerTable: Int, tables: Int, dim: Int): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val withKeys = emb.select(col("vec_id"), col("embedding"),
       tableKeys(col("embedding"), tables, planesPerTable, dim).as("keys"))

@@ -244,7 +244,7 @@ object TextAnalysis {
     */
   def fingerprint(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     val hv = graft.functions.VectorExpressions
-      .shingleHashes(col("text"), k, md5Based = true).getField("hv")
+      .shingleHashes(col("text"), k).getField("hv")
     Tables.documents(spark, dir)
       .withColumn("hv", hv)
       .select(
@@ -316,7 +316,7 @@ object TextAnalysis {
       .where(size(split(col("text"), " ")) >= k + w - 1)
       .select(col("doc_id"),
         posexplode(graft.functions.VectorExpressions.positionalShingleHashes(
-          col("text"), k, md5Based = true)).as(Seq("p0", "h")))
+          col("text"), k)).as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
     val key = concat(lower(lpad(hex(col("h")), 15, "0")),
       format_string("%06d", lit(999999) - col("pos")))

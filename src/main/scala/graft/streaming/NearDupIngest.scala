@@ -27,12 +27,16 @@ import org.apache.spark.sql.types._
   *      contract verbatim (replay overwrites its own partition; the index
   *      read excludes the current epoch).
   *
+  * Signatures and band keys come from the batch operators' md5-prefix
+  * family: a band key is the md5 hex string [[Dedup.minhashSignature]]
+  * emits for the same band.
+  *
   * Scale shape per micro-batch: signature pass is per-row; the probe join
   * is keyed on (band, band_key) with the HISTORY side width-capped per
   * bucket (`probeCap` smallest doc_ids — a viral band bucket is
   * boilerplate whose retained members are themselves near-identical, the
   * [[Dedup.guardedPairs]] degradation applied to an index probe); the
-  * index is ~(numHashes·8 B + bands·16 B) per doc, a small constant
+  * index is ~(numHashes·8 B + bands·40 B) per doc, a small constant
   * fraction of the raw text. Nothing rescans history text, nothing is
   * all-pairs, nothing collects to the driver.
   *
@@ -52,7 +56,7 @@ object NearDupIngest {
     StructField("batch_id", LongType)))
 
   private val bandSchema = StructType(Seq(
-    StructField("band", IntegerType), StructField("band_key", LongType),
+    StructField("band", IntegerType), StructField("band_key", StringType),
     StructField("doc_id", LongType), StructField("batch_id", LongType)))
 
   /** Epoch-excluding index reads with explicit schemas — the same
@@ -92,11 +96,10 @@ object NearDupIngest {
     val inBatchDrops = Dedup.minhashPairs(texted, numHashes, bands, shingleK,
       threshold, maxBucket).select(col("id_b").as("doc_id")).distinct()
     val kept = texted.join(inBatchDrops, Seq("doc_id"), "left_anti")
-    val signed = Dedup.signatures(kept, md5Based = false, numHashes, shingleK)
+    val signed = Dedup.signatures(kept, numHashes, shingleK)
       .persist() // three consumers: probe bands, verify join, survivor index
     try {
-      val r = numHashes / bands
-      val newBands = Dedup.explodedBands(signed, bands, r, portable = false)
+      val newBands = Dedup.explodedBands(signed, bands, numHashes / bands)
       val byBucket = Window.partitionBy(col("band"), col("band_key"))
         .orderBy(col("doc_id"))
       val cappedHist = bandIndex
@@ -153,7 +156,7 @@ object NearDupIngest {
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id").parquet(sigDir)
-          Dedup.explodedBands(indexed, bands, numHashes / bands, portable = false)
+          Dedup.explodedBands(indexed, bands, numHashes / bands)
             .join(indexed.select(col("doc_id").as("id"), col("batch_id")), Seq("id"))
             .select(col("band"), col("band_key"), col("id").as("doc_id"), col("batch_id"))
             .write.mode("overwrite")

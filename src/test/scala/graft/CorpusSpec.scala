@@ -401,7 +401,7 @@ class CorpusSpec extends SparkSpec {
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("split")).toMap
     // structural zero-leakage at the clustering threshold: every pair the
     // registered near-dup machinery emits is same-split by construction
-    val pairs = Dedup.minhashPairsPortable(spark, sf0001).collect()
+    val pairs = Dedup.minhashPairs(Tables.documents(spark, sf0001)).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
     assert(pairs.nonEmpty, "the driver corpus plants near-dups")
     pairs.foreach { case (a, b) =>
@@ -492,7 +492,7 @@ class CorpusSpec extends SparkSpec {
     // (first contributor, totals, rate, cumulative) from the raw universe
     val universe = Tables.documents(spark, sf0001)
       .select(col("source"), explode(graft.functions.VectorExpressions
-        .shingleHashes(col("text"), 8, md5Based = true).getField("hv")).as("h"))
+        .shingleHashes(col("text"), 8).getField("hv")).as("h"))
       .distinct().collect().map(r => (r.getString(0), r.getLong(1)))
     val bySource = universe.groupBy(_._1)
     val first = universe.groupBy(_._2).view.mapValues(_.map(_._1).min).toMap

@@ -473,7 +473,7 @@ class CurationSpec extends SparkSpec {
       .where(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
     val boiler = Curation.boilerplateFraction(spark, sf0001)
       .where(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    val dedup = graft.ops.Dedup.minhashDedupPortable(spark, sf0001)
+    val dedup = graft.ops.Dedup.minhashDedup(Tables.documents(spark, sf0001))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // the r18 gopher stage is one more stage in the intersection — its
     // structural-rule pass set per the standalone battery (the stage-level

@@ -92,16 +92,6 @@ class DedupSpec extends SparkSpec {
       s"all-pairs join in plan:\n$plan")
   }
 
-  test("portable variants match the production shape on real data") {
-    val fast = Dedup.ngramJaccardLsh(Tables.documents(spark, sf0001), minJaccard = 0.8)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val portable = Dedup.ngramJaccardLshPortable(spark, sf0001, minJaccard = 0.8)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // both hash families verify with EXACT jaccard, so high-similarity pairs
-    // agree (LSH recall can differ at the margin; planted dups are j≈1)
-    assert(portable === fast, s"portable=$portable fast=$fast")
-  }
-
   test("corpusDiff classifies planted exact/near/new docs across snapshot parities") {
     val s = spark
     import s.implicits._
@@ -375,7 +365,7 @@ class DedupSpec extends SparkSpec {
   test("b-bit minhash: packed-long estimate equals a component-wise replay; planted dups near 1") {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sf0001)
-    val sigs = Dedup.signatures(docs, md5Based = true, numHashes = 32, shingleK = 3)
+    val sigs = Dedup.signatures(docs, numHashes = 32, shingleK = 3)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Seq[Long]]("sig")).toMap
     def estLocal(a: Long, bId: Long): Double = {
       val coll = sigs(a).zip(sigs(bId)).count { case (x, y) => (x & 3) == (y & 3) }
@@ -448,7 +438,7 @@ class DedupSpec extends SparkSpec {
     val hashed = Tables.documents(spark, sf0001)
       .select(col("doc_id"),
         graft.functions.VectorExpressions
-          .shingleHashes(col("text"), 5, md5Based = true).getField("hv").as("sh"))
+          .shingleHashes(col("text"), 5).getField("hv").as("sh"))
       .where(size(col("sh")) > 0)
     val ex = hashed.select(col("doc_id"), explode(col("sh")).as("h"))
     val cands = ex.select(col("doc_id").as("id_a"), col("h"))
@@ -490,7 +480,7 @@ class DedupSpec extends SparkSpec {
     val hashed = Tables.documents(spark, sf0001)
       .select(col("doc_id"),
         graft.functions.VectorExpressions
-          .shingleHashes(col("text"), 5, md5Based = true).getField("hv").as("sh"))
+          .shingleHashes(col("text"), 5).getField("hv").as("sh"))
       .where(size(col("sh")) > 0)
     val ex = hashed.select(col("doc_id"), explode(col("sh")).as("h"))
     val cands = ex.select(col("doc_id").as("id_a"), col("h"))
@@ -532,7 +522,7 @@ class DedupSpec extends SparkSpec {
       r.getAs[Double]("lsh_precision"))
     // accepted ≡ the registered ngram_jaccard_lsh row count (same bands,
     // same verify, same threshold)
-    val registered = graft.ops.Dedup.ngramJaccardLshPortable(spark, sf0001).count()
+    val registered = Dedup.ngramJaccardLsh(Tables.documents(spark, sf0001)).count()
     assert(acc === registered)
     assert(cands >= acc && cands > 0)
     assert(math.abs(prec - acc.toDouble / cands) < 1e-6)
@@ -568,7 +558,7 @@ class DedupSpec extends SparkSpec {
       assert(y._1 > x._2 + 1, s"overlapping spans: $x then $y")
     }
     // jaccard column matches the registered verify's score for the pair
-    val j = Dedup.ngramJaccardLshPortable(spark, dir).collect()
+    val j = Dedup.ngramJaccardLsh(Tables.documents(spark, dir)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.forall(t => j((t._1, t._2)) === t._3))
   }

@@ -31,18 +31,9 @@ class FunctionsSpec extends SparkSpec {
       sequence(lit(1), greatest(size(split(text, " ")) - lit(k - 1), lit(1))),
       i => concat_ws(" ", slice(split(text, " "), i, lit(k)))))
 
-  test("ShingleHashes(xxhash64) == transform(shingles, xxhash64) element for element") {
-    val df = corpus().select(
-      VectorExpressions.shingleHashes(col("text"), 3, md5Based = false).as("hs"),
-      transform(builtinShingles(col("text"), 3), s => xxhash64(s)).as("expected_hv"),
-      transform(builtinShingles(col("text"), 3), s => xxhash64(s).bitwiseAND(lit(0xFFFFFFL))).as("expected_h24"))
-    val bad = df.where(col("hs.hv") =!= col("expected_hv") || col("hs.h24") =!= col("expected_h24"))
-    assert(bad.count() === 0, bad.collect().take(2).mkString("\n"))
-  }
-
   test("ShingleHashes(md5) == conv(substring(md5(shingle))) prefixes") {
     val df = corpus().select(
-      VectorExpressions.shingleHashes(col("text"), 3, md5Based = true).as("hs"),
+      VectorExpressions.shingleHashes(col("text"), 3).as("hs"),
       transform(builtinShingles(col("text"), 3),
         s => conv(substring(md5(s), 1, 6), 16, 10).cast("long")).as("expected_h24"),
       transform(builtinShingles(col("text"), 3),
@@ -318,11 +309,9 @@ class FunctionsSpec extends SparkSpec {
   test("TokenHashes == the per-token transform lambdas, duplicates kept") {
     val tokens = split(col("text"), " ")
     val df = corpus().select(
-      VectorExpressions.tokenHashes(col("text"), md5Based = true).as("got_md5"),
-      transform(tokens, t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")).as("e_md5"),
-      VectorExpressions.tokenHashes(col("text"), md5Based = false).as("got_xx"),
-      transform(tokens, t => xxhash64(t)).as("e_xx"))
-    val bad = df.where(col("got_md5") =!= col("e_md5") || col("got_xx") =!= col("e_xx"))
+      VectorExpressions.tokenHashes(col("text")).as("got_md5"),
+      transform(tokens, t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")).as("e_md5"))
+    val bad = df.where(col("got_md5") =!= col("e_md5"))
     assert(bad.count() === 0, bad.collect().take(2).mkString("\n"))
   }
 

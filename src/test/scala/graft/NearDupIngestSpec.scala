@@ -82,6 +82,29 @@ class NearDupIngestSpec extends SparkSpec {
         "suppression is against survivors, not against everything ever seen")
   }
 
+  test("band index keys are the batch operator's band columns: one key format at 64/16") {
+    val s = spark
+    import s.implicits._
+    val src = tempDir("ndk-src"); val out = tempDir("ndk-out")
+    val sig = tempDir("ndk-sig") + "/sig"; val band = tempDir("ndk-band") + "/band"
+    val cp = tempDir("ndk-cp"); val dir = tempDir("ndk-docs")
+    val docs = Seq(1L -> words(0, 40), 2L -> (0 until 40).map(i => s"x$i").mkString(" "),
+      3L -> (0 until 25).map(i => s"y$i").mkString(" "))
+    writeBatch(src, "b1", docs)
+    NearDupIngest.start(spark, src, out, sig, band, cp, numHashes = 64, bands = 16,
+      trigger = Trigger.AvailableNow()).awaitTermination()
+    docs.map { case (id, t) => (id, t, "en", "s", t.length) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val expected = graft.ops.Dedup.minhashSignature(spark, dir, numHashes = 64, bands = 16)
+      .collect().flatMap(r => (0 until 16).map(b =>
+        (r.getAs[Long]("doc_id"), b, r.getAs[String](s"band_$b")))).toSet
+    val indexed = spark.read.parquet(band).select("doc_id", "band", "band_key").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    assert(expected.size === 3 * 16)
+    assert(indexed === expected)
+  }
+
   test("null-text rows pass through unexamined and never enter the index") {
     val s = spark
     import s.implicits._
