@@ -34,9 +34,9 @@ verify:
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF) sbt -batch "runMain graft.Bench"
 
-## Single-query iteration: make qbench Q=ann_ivf_topk [REPS=6]
+## Single-query iteration: make qbench Q=ann_ivf_topk [REPS=6] (Q may name several)
 qbench:
-	sbt -batch "runMain graft.tools.QueryBench $(Q) $(SF) $(REPS)"
+	sbt -batch "runMain graft.tools.Profile time $(SF) $(REPS) $(Q)"
 
 ## Long-running daemon: config -> supervised streams -> /health + /metrics
 ## (the reference's `docker compose up` analog, minus the containers)

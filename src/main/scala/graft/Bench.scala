@@ -15,8 +15,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Session conf, warmup, and per-sample cache drops live in BenchHarness,
-    // shared with tools.QueryBench so single-query timings stay comparable.
+    // Session conf, warmup, and the cold-sample recipe live in BenchHarness,
+    // shared with tools.Profile so single-query timings stay comparable.
     val spark = BenchHarness.session(cpus)
     BenchHarness.warmup(spark, sfDir)
     // 3 samples: this host shows occasional external multi-second stalls
@@ -85,13 +85,8 @@ object Bench {
         anchorOn = false
       }
     }
-    // Each sample is a cold, self-contained run: queries that persist
-    // intermediates (LSH paths) must not hand a warm cache to a later
-    // query with an identical sub-plan. clearCache only drops blocks
-    // the cache manager owns; localCheckpoint blocks (dup_clusters'
-    // per-round label tables) live as bare persistent RDDs and kept
-    // inflating every later query 4-9x under block-manager pressure
-    // (VERDICT r3 "What's wrong" #1) — drop those too.
+    // Each sample is a cold, self-contained run (BenchHarness.sample drops
+    // every cache and GCs first; a failed sample never enters the min).
     //
     // Per-query time is the MIN over `reps` samples, and the passes are
     // INTERLEAVED (run the whole suite, then repeat) rather than sampling
@@ -105,35 +100,15 @@ object Bench {
     // sample, so each one does the full scan + shuffle work; the min only
     // removes noise that is not the query's own cost.
     for (_ <- 1 to reps) {
-      for ((name, fn) <- names) {
-        BenchHarness.dropCaches(spark)
-        // Collect the PREVIOUS query's garbage outside the next query's timed
-        // window: r6 showed trivial unchanged projections inflating ~2.5x
-        // alongside real wins — consistent with later queries paying earlier
-        // queries' heap pressure (plus this host's documented stalls, which
-        // the interleaved min already discards). ~50 ms per sample, and a
-        // long-lived cluster job amortizes GC the same way.
-        System.gc()
-        val t0 = System.nanoTime()
-        // A FAILED sample must not enter the min — a query that dies 0.3 s in
-        // would otherwise report 0.3 s as its time and corrupt the anchor.
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val secs = (System.nanoTime() - t0) / 1e9
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), secs)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-      }
+      for ((name, fn) <- names)
+        BenchHarness.sample(spark, name)(BenchHarness.noop(fn(spark, sfDir)))
+          .foreach(secs => best(name) = math.min(best.getOrElse(name, Double.MaxValue), secs))
       // the DuckDB pass runs inside the same wall-clock window as the Spark
       // pass it follows — a host stall taxes both columns, not just one
       anchorPass()
     }
     // A query with zero successful samples surfaces as -1, not a silent gap
     val results = names.map { case (name, _) => name -> best.getOrElse(name, -1.0) }
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jsonMap(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val (qresults, xresults) =
       results.partition { case (k, _) => SparkEntry.queries.contains(k) }
     // The total sums SUCCESSFUL queries only — folding the -1 sentinels in
@@ -172,9 +147,9 @@ object Bench {
       val ratios = qresults.collect {
         case (k, v) if v > 0 && duckBest.get(k).exists(_ > 0) => k -> v / duckBest(k)
       }
-      s""","duckdb":${jsonMap(dd)},"spark_over_duckdb":${jsonMap(ratios)}""" +
-        s""","duckdb_total":${fmt(duckTotal)},"ratio_vs_duckdb":${fmt(aggRatio)}""" +
-        s""","ratio_excess_vs_duckdb":${fmt(excessRatio)}""" +
+      s""","duckdb":${Jsons.nums(dd)},"spark_over_duckdb":${Jsons.nums(ratios)}""" +
+        s""","duckdb_total":${Jsons.num(duckTotal)},"ratio_vs_duckdb":${Jsons.num(aggRatio)}""" +
+        s""","ratio_excess_vs_duckdb":${Jsons.num(excessRatio)}""" +
         s""","anchor":"same-session interleaved duckdb, min of $reps""""
     }
     // --- perf-regression tripwire (VERDICT r8 stretch #8) -----------------
@@ -238,7 +213,7 @@ object Bench {
       if (duckBest.isEmpty) ""
       else s""","regressions":[${regressions.map("\"" + _ + "\"").mkString(",")}]""" +
         s""","anchor_drift":[${anchorDrifts.map("\"" + _ + "\"").mkString(",")}]"""
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonMap(qresults)},"extras":${jsonMap(xresults)}$anchorFields$regrField,"sf":"$sfDir"$failedField}"""
+    val fullLine = s"""{"metric":"total","value":${Jsons.num(total)},"unit":"sec","queries":${Jsons.nums(qresults)},"extras":${Jsons.nums(xresults)}$anchorFields$regrField,"sf":"$sfDir"$failedField}"""
     println(fullLine)
     // The stdout tail is lossy by design; persist the untruncated line where
     // PerfRegressionSpec (and round-over-round tooling) can read it.
@@ -277,7 +252,7 @@ object Bench {
     val compactAnchor = if (duckBest.isEmpty) "" else {
       // same hoisted aggregate as the full line; regression count only —
       // names live in the full line / bench_latest
-      s""","duckdb_total":${fmt2(duckTotal)},"ratio_vs_duckdb":${fmt(aggRatio)},"ratio_excess":${fmt(excessRatio)},"regr":${regressions.size}"""
+      s""","duckdb_total":${fmt2(duckTotal)},"ratio_vs_duckdb":${Jsons.num(aggRatio)},"ratio_excess":${Jsons.num(excessRatio)},"regr":${regressions.size}"""
     }
     def compactLine(foldBelow: Double): String = {
       val (bigQ, smallQ) = qresults.partition { case (_, v) => v >= foldBelow || v < 0 }

@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE bench-session + cold-sample recipe, shared by [[Bench]] (the
-  * driver's full-suite run) and [[graft.tools.QueryBench]] (single-query
-  * iteration). Previously each hand-copied the builder/warmup/cache-drop
-  * blocks with only a "match Bench" comment keeping them aligned — any
-  * tuning that missed one copy silently made single-query timings
-  * non-comparable to BENCH_r{N}.json, the tool's entire purpose.
+import scala.util.control.NonFatal
+
+/** The ONE bench-session + cold-sample recipe, shared by every graft main
+  * that runs a registered query: [[Bench]] (the driver's full-suite run),
+  * [[Verify]], [[graft.tools.EntrySmoke]] and every mode of
+  * [[graft.tools.Profile]]. One copy, because a tuning that missed a
+  * hand-copied builder, warmup or cache drop would silently make
+  * single-query timings non-comparable to BENCH_r{N}.json.
   */
 object BenchHarness {
 
@@ -33,14 +35,27 @@ object BenchHarness {
       // "regression" (1.71 s interleaved vs 0.68 s converged-isolated on an
       // unchanged body; reproduced by shrinking this knob, see README perf
       // notes). Compiled classes are small; a 128 GiB driver holds 16k.
-      // Env-overridable so the eviction mechanism stays falsifiable.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "16384"))
+      // A static conf: re-test the eviction mechanism by editing this
+      // constant, since no running session can change it.
+      .config("spark.sql.codegen.cache.maxEntries", "16384")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A registered query by name: [[SparkEntry.queries]] plus the bench-only
+    * [[SparkEntry.benchExtras]]. An unknown name fails with the known keys.
+    */
+  def query(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name, SparkEntry.benchExtras.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown query '$name' — keys: " +
+        (SparkEntry.queries.keys ++ SparkEntry.benchExtras.keys).toSeq.sorted.mkString(", "))))
+
+  /** Run `df`'s FULL row pipeline into the noop sink — `count()` would let
+    * Spark prune payload columns and measure an unrealistically thin plan.
+    */
+  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** JIT/codegen warmup outside any timed loop, so the first timed query
     * doesn't absorb session warmup cost. NonFatal only (an OOM must abort
@@ -49,16 +64,30 @@ object BenchHarness {
     * quietly absorb the warmup the harness claims to have paid.
     */
   def warmup(spark: SparkSession, sfDir: String): Unit =
-    try SparkEntry.queries("q6_agg")(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case scala.util.control.NonFatal(e) =>
+    try noop(query("q6_agg")(spark, sfDir))
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
     }
 
-  /** Drop every cache a previous sample could hand to this one: the SQL
-    * cache manager's blocks AND bare persistent RDDs (localCheckpoint
-    * blocks are not owned by the cache manager — clearCache alone left them
-    * inflating later queries 4-9x under block-manager pressure). The same
-    * hygiene is exposed to library callers as [[graft.Caches.clear]].
+  /** One cold sample of `body`, in seconds. Every sample is a self-contained
+    * run: [[Caches.clear]] first, so a query that persists intermediates
+    * (LSH paths, localCheckpoint label tables) cannot hand a warm cache to a
+    * later one; then `System.gc()`, so the previous sample's garbage is
+    * collected outside this sample's timed window (r6 showed trivial
+    * unchanged projections inflating ~2.5x from earlier queries' heap
+    * pressure; a long-lived cluster job amortizes GC the same way). A
+    * FAILED sample returns None and is printed — it must not enter a min,
+    * where a query that dies 0.3 s in would report 0.3 s. NonFatal only,
+    * the same policy as [[warmup]].
     */
-  def dropCaches(spark: SparkSession): Unit = Caches.clear(spark)
+  def sample(spark: SparkSession, name: String)(body: => Unit): Option[Double] = {
+    Caches.clear(spark)
+    System.gc()
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
+  }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * lazy DataFrame has no post-action hook to unpersist from. That is the
   * right trade for a job that runs a pipeline and exits — and a leak for a
   * long-lived session running many pipelines. Such sessions call [[clear]]
-  * between pipelines; the bench harness does exactly this between samples
-  * (BenchHarness.dropCaches delegates here).
+  * between pipelines; the bench harness does exactly this before every
+  * sample (BenchHarness.sample), and Verify between queries.
   *
   * Note for plan-only callers: `Similarity.ivfTopKOf` persists the
   * embeddings frame at plan CONSTRUCTION time — merely building the query

@@ -20,4 +20,13 @@ object Jsons {
   /** A flat string→string map as one JSON object. */
   def obj(m: Iterable[(String, String)]): String =
     m.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
+
+  /** A number at 3 dp. Locale.ROOT: an f-interpolator uses the JVM default
+    * locale, and a comma-decimal host would emit invalid JSON.
+    */
+  def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** A flat string→number map as one JSON object, numbers via [[num]]. */
+  def nums(m: Iterable[(String, Double)]): String =
+    m.map { case (k, v) => s"${quote(k)}:${num(v)}" }.mkString("{", ",", "}")
 }

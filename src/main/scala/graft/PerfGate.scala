@@ -58,7 +58,7 @@ object PerfGate {
     */
   val absFloorSec = 0.3
 
-  /** The measured per-query job floor on this host (tools/FloorProbe:
+  /** The measured per-query job floor on this host (`Profile floor`:
     * canonical scan→shuffle→agg at sf0.1 = 0.216 s) — the fixed scheduling
     * cost every query pays regardless of its work. [[Bench]] subtracts it
     * per query for the `ratio_excess_vs_duckdb` summary field, so

@@ -568,7 +568,7 @@ object SparkEntry {
 
   /** The semantic_dedup oracle at an explicit cluster count — the oracleSql
     * entry pins cells=16 (what the derived C floors to at the gate SFs);
-    * CrossoverBench calls this with the derivation's larger C so the
+    * `Profile time` calls this with the derivation's larger C so the
     * crossover's DuckDB pass replays the same configuration Spark ran.
     */
   private[graft] def semanticDedupSql(cells: Int): String = {
@@ -1214,7 +1214,7 @@ object SparkEntry {
     // (Similarity.semanticCells: max(16, n/1000)) floors to at every gate
     // SF (500 vecs at sf0.01, 2k at sf0.1) — the same number by
     // construction, asserted by AnnSpec's derived≡explicit pin. At
-    // crossover scale the derivation grows C and CrossoverBench emits a
+    // crossover scale the derivation grows C and `Profile time` emits a
     // matching-C oracle override, so both engines always run the same C.
     "semantic_dedup" -> semanticDedupSql(cells = 16),
 

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * type rather than assuming one. Nano files additionally need
   * `spark.sql.legacy.parquet.nanosAsLong=true` AT SESSION BUILD or the
   * scan itself rejects them (every entry-point builder in this repo sets
-  * it — Verify/Bench/QueryBench/PlanAudit/GraftDaemon/the test session).
+  * it — BenchHarness.session (Bench/Verify/tools), GraftDaemon, the test
+  * session).
   * It is deliberately NOT set here: flipping session conf inside a reader
   * would silently change other readers on a shared session.
   */

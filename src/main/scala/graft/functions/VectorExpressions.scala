@@ -1077,6 +1077,35 @@ case class TokenEntropyStats(child: Expression)
     copy(child = newChild)
 }
 
+/** The one n-gram counting loop behind [[NgramCounts]] and
+  * [[NgramMultiCounts]]: split(text, ' ') tokens (trailing empties kept),
+  * and for one order n the distinct space-joined grams with their
+  * within-doc counts, in first-occurrence order. Fewer than n tokens give
+  * an empty map.
+  */
+private[functions] object NgramTally {
+  def tokens(input: Any): Array[String] =
+    input.asInstanceOf[UTF8String].toString.split(" ", -1)
+
+  def counts(toks: Array[String], n: Int): java.util.LinkedHashMap[String, Array[Long]] = {
+    val nGrams = toks.length - n + 1
+    val m = new java.util.LinkedHashMap[String, Array[Long]](math.max(nGrams, 0) * 2)
+    var i = 0
+    while (i < nGrams) {
+      val g = if (n == 1) toks(i) else {
+        val sb = new java.lang.StringBuilder(toks(i))
+        var j = 1
+        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
+        sb.toString
+      }
+      val c = m.get(g)
+      if (c == null) m.put(g, Array(1L)) else c(0) += 1L
+      i += 1
+    }
+    m
+  }
+}
+
 /** Per-document DISTINCT space-joined word n-grams with within-doc counts
   * in ONE tokenize pass: array<struct(g: string, c: long)> in
   * first-occurrence order, over split(text, ' ') tokens (trailing empties
@@ -1110,22 +1139,7 @@ case class NgramCounts(child: Expression, n: Int)
     }
 
   override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val nGrams = toks.length - n + 1
-    if (nGrams <= 0) return new GenericArrayData(Array.empty[Any])
-    val m = new java.util.LinkedHashMap[String, Array[Long]](nGrams * 2)
-    var i = 0
-    while (i < nGrams) {
-      val g = if (n == 1) toks(i) else {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        sb.toString
-      }
-      val c = m.get(g)
-      if (c == null) m.put(g, Array(1L)) else c(0) += 1L
-      i += 1
-    }
+    val m = NgramTally.counts(NgramTally.tokens(input), n)
     val out = new Array[Any](m.size)
     val it = m.entrySet().iterator()
     var k = 0
@@ -1176,30 +1190,14 @@ case class NgramMultiCounts(child: Expression, maxN: Int)
     }
 
   override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+    val toks = NgramTally.tokens(input)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var n = 1
     while (n <= maxN) {
-      val nGrams = toks.length - n + 1
-      if (nGrams > 0) {
-        val m = new java.util.LinkedHashMap[String, Array[Long]](nGrams * 2)
-        var i = 0
-        while (i < nGrams) {
-          val g = if (n == 1) toks(i) else {
-            val sb = new java.lang.StringBuilder(toks(i))
-            var j = 1
-            while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-            sb.toString
-          }
-          val c = m.get(g)
-          if (c == null) m.put(g, Array(1L)) else c(0) += 1L
-          i += 1
-        }
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          out += InternalRow(n, UTF8String.fromString(e.getKey), e.getValue()(0))
-        }
+      val it = NgramTally.counts(toks, n).entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        out += InternalRow(n, UTF8String.fromString(e.getKey), e.getValue()(0))
       }
       n += 1
     }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 
 /** Skew-handling join utilities (SURVEY.md §4: "skewed keys → salting or AQE
   * skew-join").
@@ -55,8 +56,8 @@ object Skew {
     * join stage reading both shuffled sides). Measurement harness for the
     * skew evidence in ScaleSpec / CROSSOVER.json; diagnostic-grade like
     * [[keySkew]], not a hot-path helper. Listener delivery is async, so
-    * after the job returns we wait for the bus to go quiet (300 ms, 10 s
-    * cap) before reading the counters.
+    * after the job returns we wait for the listener bus to deliver every
+    * posted event before reading the counters.
     *
     * The measurement is scoped to `job`'s OWN jobs (r15, ADVICE r14): the
     * block runs under a unique job group, and only task metrics from
@@ -74,15 +75,11 @@ object Skew {
     val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val byStage =
       new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-    @volatile var lastEventAt = System.nanoTime()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val g = Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        if (g.contains(groupId)) {
-          j.stageIds.foreach(sid => { myStages.add(sid); () })
-          lastEventAt = System.nanoTime()
-        }
+        if (g.contains(groupId)) j.stageIds.foreach(sid => { myStages.add(sid); () })
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
@@ -90,7 +87,6 @@ object Skew {
           byStage.computeIfAbsent(t.stageId,
             _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
             .add(m.shuffleReadMetrics.recordsRead)
-          lastEventAt = System.nanoTime()
         }
       }
     }
@@ -101,9 +97,8 @@ object Skew {
       val t0 = System.nanoTime()
       try job finally spark.sparkContext.clearJobGroup()
       val wall = (System.nanoTime() - t0) / 1e9
-      val deadline = System.nanoTime() + 10000000000L
-      while (System.nanoTime() < deadline &&
-        System.nanoTime() - lastEventAt < 300000000L) Thread.sleep(50)
+      // every task-end of the job was posted before the action returned
+      GraftSqlBridge.waitUntilEmpty(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val stages = byStage.asScala.map { case (sid, q) =>
         (sid, q.asScala.toSeq)

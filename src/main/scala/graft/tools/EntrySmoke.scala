@@ -1,21 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** The driver's t1 smoke: SparkEntry.entry must return > 0 rows on the
   * sf0.001 testdata. `runMain graft.tools.EntrySmoke` — exits nonzero on an
   * empty result so CI-style use fails loudly.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.BenchHarness.session("4")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"[entry-smoke] rows=$n")
     spark.stop()

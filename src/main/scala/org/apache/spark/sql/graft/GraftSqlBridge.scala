@@ -1,17 +1,25 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** The one `private[sql]` doorway graft uses: wrap a Catalyst LogicalPlan
-  * as a DataFrame. Spark exposes plan-level extension seams (strategies,
-  * rules) publicly but keeps `Dataset.ofRows` package-private, so a library
-  * that contributes its own logical node needs this one-line bridge in an
-  * `org.apache.spark.sql` subpackage — the established pattern among Spark
-  * ecosystem libraries. Nothing else in the repo lives outside `graft.*`.
+/** The `private[spark]` doorways graft uses. Spark exposes plan-level
+  * extension seams (strategies, rules) publicly but keeps
+  * `Dataset.ofRows` and the listener bus package-private, so a library
+  * that contributes its own logical node, or reads its own listener's
+  * totals, needs these one-line bridges in an `org.apache.spark.sql`
+  * subpackage — the established pattern among Spark ecosystem libraries.
+  * Nothing else in the repo lives outside `graft.*`.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until the listener bus has delivered every event posted so far.
+    * Events reach listeners asynchronously, so a listener's totals are
+    * complete for an action only after this returns.
+    */
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -27,7 +27,7 @@ import duckdb
 # The r10 additions (r10 verdict #1): bigram_coverage / split_divergence /
 # label_prototypes / prototype_assign, and semantic_dedup — measurable now
 # that the registered query derives its cluster count from the corpus
-# (C = max(16, n/1000), SemDeDup's own C ∝ n knob); CrossoverBench emits a
+# (C = max(16, n/1000), SemDeDup's own C ∝ n knob); `Profile time` emits a
 # matching-C oracle override so DuckDB replays the same configuration.
 QUERIES = ["ann_ivf_topk", "ann_ivf_persisted", "sparse_sim_pairs", "dup_span_trim",
            "lm_perplexity", "bigram_coverage", "split_divergence",
@@ -330,9 +330,9 @@ def main():
         sys.exit(f"stale {sqlpath} (missing {missing}) — re-run tools/parity.py first")
     print(f"[crossover] spark min-of-{reps} on {outdir}")
     t0 = time.time()
-    out = sbt_run("graft.tools.CrossoverBench", outdir, reps, *(queries + SPARK_ONLY))
-    spark = next(json.loads(l[l.index('{'):])["crossover_spark"]
-                 for l in out.splitlines() if '"crossover_spark"' in l)
+    out = sbt_run("graft.tools.Profile", "time", outdir, reps, *(queries + SPARK_ONLY))
+    spark = next(json.loads(l[l.index('{'):])["walls"]
+                 for l in out.splitlines() if '{"walls":' in l)
     # scale-dependent oracle overrides (semantic_dedup's derived cell count)
     overrides = next((json.loads(l[l.index('{'):]) for l in out.splitlines()
                       if '"oracle_sql_overrides"' in l), {})

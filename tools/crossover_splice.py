@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Splice NEW families into an existing CROSSOVER.json without re-running
-the whole measured set: same corpus (manifest-gated), same CrossoverBench
+the whole measured set: same corpus (manifest-gated), same `Profile time`
 Spark pass, same interleaved min-of-reps DuckDB pass as tools/crossover.py
 — just restricted to the families named on the command line.
 
@@ -56,9 +56,9 @@ def main():
         sys.exit(f"stale {sqlpath} (missing {missing}) — re-run tools/parity.py first")
 
     print(f"[splice] spark min-of-{reps} on {outdir}: {queries + spark_only}")
-    out = cx.sbt_run("graft.tools.CrossoverBench", outdir, reps, *(queries + spark_only))
-    spark = next(json.loads(l[l.index('{'):])["crossover_spark"]
-                 for l in out.splitlines() if '"crossover_spark"' in l)
+    out = cx.sbt_run("graft.tools.Profile", "time", outdir, reps, *(queries + spark_only))
+    spark = next(json.loads(l[l.index('{'):])["walls"]
+                 for l in out.splitlines() if '{"walls":' in l)
     overrides = next((json.loads(l[l.index('{'):]) for l in out.splitlines()
                       if '"oracle_sql_overrides"' in l), {})
     oracle.update(overrides.get("oracle_sql_overrides", {}))
