@@ -10,8 +10,10 @@ CONFIG  ?= conf/config.sample.yaml
 REPS    ?= 3
 W       ?= curation
 SEED    ?= 1
+PAIRS   ?= 10
+BASE    ?= HEAD
 
-.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab help
 
 all: build
 
@@ -70,6 +72,10 @@ e2e-broker:
 ## One benchmark run: make perfbench W=connector|curation [SEED=1]
 perfbench:
 	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 8 --trace 0
+
+## Alternating-pair A/B against a base revision: make perf-ab W=curation PAIRS=10 BASE=<rev> [SEED=1]
+perf-ab:
+	python3 tools/perf_ab.py --workload $(W) --pairs $(PAIRS) --base $(BASE) --seed $(SEED)
 
 ## The benchmark harness's own unit tests
 perfbench-test:

@@ -19,6 +19,17 @@ import org.apache.spark.sql.SparkSession
   * and no blocks fill until the plan executes). That is the documented
   * contract, not a leak: the persist is what lets the one action's
   * several corpus scans share a single pass.
+  *
+  * What [[clear]] leaves alone: memos of METADATA or of deterministic
+  * results rather than data blocks. `Tables`' resolution memo (one
+  * inferred schema, file fingerprint and spread decision per table
+  * version) is checked against the scan's own file listing on every load,
+  * so it can never hand a query stale data, and dropping it would only
+  * put the footer-inference job back into every operator's first load —
+  * a cost a long-lived session pays once per table version, not once per
+  * query. `QualityModel`'s weight memo is the same kind: a deterministic
+  * 48-byte result keyed on that same fingerprint (`Tables.fingerprint`),
+  * so a rewritten corpus misses it with no invalidation call.
   */
 object Caches {
 
@@ -34,11 +45,9 @@ object Caches {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     graft.ops.Similarity.invalidateCentroidCache()
     graft.ops.Versioned.invalidateEpochCache()
-    // QualityModel's weight memo deliberately survives: it caches a
-    // deterministic computation result (48 bytes), not data blocks, and its
-    // key embeds a file-metadata fingerprint of the documents table, so a
-    // rewritten corpus misses the memo with no invalidation call needed —
-    // see its scaladoc. QualityModel.invalidateWeightCache (public) exists
-    // only to force a re-train cost measurement (bench's quality_train).
+    // Tables' resolution memo and QualityModel's weight memo deliberately
+    // survive (see the object doc). QualityModel.invalidateWeightCache
+    // (public) exists only to force a re-train cost measurement (bench's
+    // quality_train).
   }
 }

@@ -53,7 +53,6 @@ object CorpusWriter {
         .option("maxRecordsPerFile", maxRecordsPerFile)
         .partitionBy(partitionCol)
         .parquet(outDir)
-      graft.Tables.invalidateSpread(outDir) // layout changed under any memoized reader
       collected
     } finally df.unpersist()
     val statCols = df.columns.filter(_ != partitionCol)

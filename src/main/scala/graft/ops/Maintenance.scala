@@ -61,7 +61,6 @@ object Maintenance {
     val nOut = filesFor(bytes, targetBytes)
     val df = spark.read.parquet(inDir)
     df.repartition(nOut).write.mode("overwrite").parquet(outDir)
-    graft.Tables.invalidateSpread(outDir) // layout changed under any memoized reader
     val rows = spark.read.parquet(outDir).count()
     val (_, after) = fileCensus(spark, outDir)
     (rows, before, after)
@@ -90,7 +89,6 @@ object Maintenance {
     df.repartitionByRange(math.max(1, nFiles), keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
       .write.mode("overwrite").parquet(outDir)
-    graft.Tables.invalidateSpread(outDir) // layout changed under any memoized reader
   }
 
   /** D20 — Z-order (Morton) layout: interleave the bits of SEVERAL cluster
@@ -146,7 +144,6 @@ object Maintenance {
       .sortWithinPartitions("__graft_z")
       .drop("__graft_z")
       .write.mode("overwrite").parquet(outDir)
-    graft.Tables.invalidateSpread(outDir) // layout changed under any memoized reader
   }
 
   /** D21 — bloom-filtered point-lookup layout: write parquet with a BLOOM
@@ -175,7 +172,6 @@ object Maintenance {
       w.option(s"parquet.bloom.filter.enabled#$k", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$k", expectedNdv.toString)
     }.parquet(outDir)
-    graft.Tables.invalidateSpread(outDir) // layout changed under any memoized reader
   }
 
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
@@ -258,7 +254,6 @@ object Maintenance {
           s"$dir is missing; run recoverCompaction($dir)")
     }
     fs.delete(old, true)
-    graft.Tables.invalidateSpread(dir) // layout changed under any memoized reader
     val (_, after) = fileCensus(spark, dir)
     (rows, before, after)
   }

@@ -147,13 +147,15 @@ object QualityModel {
     * passes per sweep sample is precisely the duplicate work the memo
     * exists to remove (and what a real curation run would never repeat —
     * it trains once, then sweeps/score-filters against the fitted model).
-    * Staleness is impossible by construction: the key includes a metadata
-    * FINGERPRINT of the documents table's data files (recursive leaf
-    * listing, sorted relative-path:length:mtime, hashed —
-    * [[docsFingerprint]]), so ANY rewrite of the corpus
-    * under `dir` misses the memo on the next call with no writer-side
-    * invalidation contract to forget (the r13 ADVICE gap: the old key was
-    * dir+hyperparams only and no mutating path called the invalidator).
+    * Staleness is impossible by construction: the key includes the
+    * metadata FINGERPRINT of the documents table's data files that
+    * [[graft.Tables]] computed for this load (each leaf's path, length and
+    * mtime, from the scan's own listing — [[graft.Tables.fingerprint]]),
+    * so ANY rewrite of the corpus under `dir` misses the memo on the next
+    * call with no writer-side invalidation contract to forget (the r13
+    * ADVICE gap: the old key was dir+hyperparams only and no mutating path
+    * called the invalidator). It shares that fingerprint's known limit: a
+    * rewrite keeping every leaf's path, length and mtime is invisible.
     * [[invalidateWeightCache]] remains public for callers that want to
     * force a re-train cost measurement (the `quality_train` bench extra).
     */
@@ -161,40 +163,6 @@ object QualityModel {
     new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
 
   def invalidateWeightCache(): Unit = weightCache.clear()
-
-  /** Metadata fingerprint of the documents table under `dir`. One
-    * driver-side RECURSIVE leaf-file listing (r15, ADVICE r14: a flat
-    * listStatus fingerprinted the directory entries of a partitioned/
-    * nested layout, and a partition rewrite could keep the top-level
-    * names/mtimes stable) — the cost class query planning already pays
-    * per scan, bounded by file count, never data size. Each leaf
-    * contributes its dir-relative path, length, and mtime. Known limit,
-    * inherent to metadata fingerprints: a rewrite that preserves every
-    * leaf path AND byte length within the store's mtime granularity
-    * (1 s on some local filesystems) is indistinguishable — real writers
-    * (Spark jobs, [[Versioned]] commits) mint fresh part names/tokens,
-    * so the practical hole is an artificial in-place byte-swap.
-    */
-  private def docsFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val listing =
-      if (!fs.exists(p)) "absent"
-      else {
-        val base = fs.makeQualified(p).toString
-        val it = fs.listFiles(p, true)
-        val b = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toString.stripPrefix(base)
-          if (!f.getPath.getName.startsWith("_"))
-            b += s"$rel:${f.getLen}:${f.getModificationTime}"
-        }
-        b.result().sorted.mkString("\n")
-      }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
 
   /** Count of actual GD training runs (memo misses) — the spec's observable
     * for "the sweep must not retrain"; not part of the public surface.
@@ -245,12 +213,13 @@ object QualityModel {
     // One scan-speed projection; feeds the scoring pass and (on a memo
     // miss) the k gradient passes. Only worth block-manager space in the
     // training case — scoring alone reads it exactly once.
-    val feats = Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
+    val feats = docs
       .select(Seq(col("doc_id"), (p1 && p2 && p3).cast("double").as("label")) ++
         featureCols.map { case (n, c) => c.as(n) }: _*)
     val d = featureCols.length + 1 // + bias
     val w = weightCache.computeIfAbsent(
-      s"$dir|${docsFingerprint(spark, dir)}|$iters|$step|$l2", _ =>
+      s"$dir|${Tables.fingerprint(docs)}|$iters|$step|$l2", _ =>
       train(spark, feats, d, iters, step, l2))
     val wx = (lit(w(0)) +: featureCols.zipWithIndex.map { case ((name, _), i) =>
       col(name) * lit(w(i + 1))

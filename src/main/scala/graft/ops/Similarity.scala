@@ -524,7 +524,7 @@ object Similarity {
     // scan prune whole cell=N directories instead of filtering after
     // reading the full index
     val probedCells = probeRows.map(_._3).distinct.sorted
-    val corpus = spark.read.parquet(s"$indexDir/assignments")
+    val corpus = Tables.parquet(spark, s"$indexDir/assignments")
       .where(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       .join(emb, Seq("vec_id"))
     val scored = corpus.join(broadcast(probes), Seq("cell"))
@@ -691,7 +691,7 @@ object Similarity {
     * C-row aggregate, no vectors touched.
     */
   def ivfIndexStatus(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/assignments")
+    Tables.parquet(spark, s"$indexDir/assignments")
       .groupBy(col("cell").cast("int").as("cell"))
       .agg(count(lit(1)).as("n_vecs"),
         round(avg(col("recon_cos")), 6).as("mean_recon_cos"))
@@ -752,7 +752,7 @@ object Similarity {
     val probedCells = probeRows.map(_._3).distinct.sorted
     val normLut: Array[Array[Double]] =
       books.map(_.map(cb => cb.foldLeft(0.0)((a, x) => a + x * x)))
-    val codes = spark.read.parquet(s"$indexDir/assignments")
+    val codes = Tables.parquet(spark, s"$indexDir/assignments")
       .where(col("cell").isin(probedCells.map(Integer.valueOf): _*))
     val adc = codes.join(broadcast(probes), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))

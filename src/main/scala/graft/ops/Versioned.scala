@@ -639,7 +639,6 @@ object Versioned {
           s"replace of $dir lost the v$v manifest publish to a concurrent " +
             "committer in another process; staged files are unreferenced and vacuumable")
     }
-    graft.Tables.invalidateSpread(dir)
     v
   }
 
@@ -681,7 +680,7 @@ object Versioned {
           priorMaxEpoch(spark, dir, prior), prevDvs, op = "append")) Some(v) else None
       }
       published match {
-        case Some(v) => graft.Tables.invalidateSpread(dir); return v
+        case Some(v) => return v
         case None => // another PROCESS claimed the version mid-window; re-resolve
       }
     }
@@ -741,7 +740,6 @@ object Versioned {
           s"checked replace of $dir lost the v$v manifest publish to a concurrent " +
             "committer in another process; staged files are unreferenced and vacuumable")
     }
-    graft.Tables.invalidateSpread(dir)
     v
   }
 
@@ -979,7 +977,7 @@ object Versioned {
         else None
       }
       published match {
-        case Some(v) => graft.Tables.invalidateSpread(dir); return v
+        case Some(v) => return v
         case None =>
       }
     }
@@ -1078,7 +1076,6 @@ object Versioned {
             s"deleteWhere on $dir lost the v$v manifest publish to a concurrent " +
               "committer in another process; retry")
       }
-      graft.Tables.invalidateSpread(dir)
       v
     } finally { matches.unpersist(); () }
   }
@@ -1264,7 +1261,6 @@ object Versioned {
             s"merge into $dir lost the v$v manifest publish to a concurrent " +
               "committer in another process; retry the merge")
       }
-      graft.Tables.invalidateSpread(dir)
       v
     } finally { net.unpersist(); () }
   }
@@ -1330,7 +1326,6 @@ object Versioned {
           throw new ConcurrentWriteException(
             s"optimize of $dir lost the v$v manifest publish; retry")
       }
-      graft.Tables.invalidateSpread(dir)
       return v
     }
     val (small, big) = sized.partition(_._2 < targetBytes)
@@ -1358,7 +1353,6 @@ object Versioned {
         throw new ConcurrentWriteException(
           s"optimize of $dir lost the v$v manifest publish; retry")
     }
-    graft.Tables.invalidateSpread(dir)
     v
   }
 
@@ -1453,7 +1447,6 @@ object Versioned {
           st.getModificationTime <= cutoff
       }
       .map { st => fs.delete(st.getPath, true); st.getPath.getName }
-    graft.Tables.invalidateSpread(dir)
     (deletedData ++ deletedManifests ++ debris).toSeq
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{BenchHarness, Jsons, SparkEntry}
+import graft.{BenchHarness, Jsons, SparkEntry, Tables}
 import graft.BenchHarness.{noop, query, sample}
 import graft.ops.Skew
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
@@ -136,6 +136,9 @@ object Profile {
     * costs are, under the exact bench session recipe. Min over `reps`
     * samples (default 5) of:
     *   plan_only        analyze+optimize+physical-plan a scan+groupBy, no job
+    *   table_load       a warm Tables.documents resolution, no action (the
+    *                    memoized schema and spread decision; compare with
+    *                    plan_only, whose raw spark.read.parquet infers)
     *   job_1task        spark.range(1) noop write — irreducible job launch
     *   job_32task       one 32-partition stage, trivial rows — task dispatch
     *   scan_noop        parquet scan → noop, no shuffle
@@ -163,6 +166,7 @@ object Profile {
         groupbyDf.where(lit(System.nanoTime()) > 0).queryExecution.executedPlan
         ()
       },
+      probe("table_load") { Tables.documents(spark, dir); () },
       probe("job_1task")(noop(spark.range(1).toDF())),
       probe("job_32task")(noop(spark.range(0, 32, 1, 32).toDF())),
       probe("scan_noop")(noop(spark.read.parquet(s"$dir/documents.parquet"))),

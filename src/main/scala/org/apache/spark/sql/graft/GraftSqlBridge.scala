@@ -4,10 +4,12 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.types.StructType
 
 /** The `private[spark]` doorways graft uses. Spark exposes plan-level
   * extension seams (strategies, rules) publicly but keeps
-  * `Dataset.ofRows` and the listener bus package-private, so a library
+  * `Dataset.ofRows`, the listener bus and `StructType.asNullable`
+  * package-private, so a library
   * that contributes its own logical node, or reads its own listener's
   * totals, needs these one-line bridges in an `org.apache.spark.sql`
   * subpackage — the established pattern among Spark ecosystem libraries.
@@ -22,4 +24,9 @@ object GraftSqlBridge {
     * complete for an action only after this returns.
     */
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** `schema` with every field, at every depth, nullable — what a file
+    * source relation declares whatever the files say.
+    */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

@@ -58,10 +58,12 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("in-place compaction invalidates the memoized spread decision for the path") {
-    // Regression: the spread memo keys on the REAL path (".../documents
-    // .parquet"); an earlier draft keyed without the suffix, so the
-    // writers' invalidateSpread(path) prefix-match silently never hit and
-    // a compacted-to-one-file table kept scanning as one task. Observable
+    // Regression: an earlier spread memo keyed without the ".parquet"
+    // suffix, so a writer-side invalidation silently never hit and a
+    // compacted-to-one-file table kept scanning as one task. The memo now
+    // checks each load's file fingerprint instead, so no writer call is
+    // involved: compaction mints a new file, the fingerprint misses and
+    // the reader decides again. Observable
     // contract: read wide (spread memoizes "no repartition needed"),
     // compact to 1 file, re-read — the reader must RE-plan and spread.
     val dir = tempDir("compact-spread")

@@ -187,7 +187,6 @@ class QualityModelSpec extends SparkSpec {
     // rewrite the table under the same dir (different row count → different
     // file lengths, so mtime granularity cannot mask the change)
     src.limit(80).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    graft.Tables.invalidateSpread(s"$dir/documents.parquet")
     src.unpersist()
     score()
     assert(graft.ops.QualityModel.trainRuns.get() === t0 + 2,

@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the events reader's timestamp-encoding dispatch (Tables.events).
+/** Pins the events reader's timestamp-encoding dispatch (Tables.events)
+  * and the resolution memo's contract (Tables.parquet): a warm load starts
+  * no Spark job, and a rewrite or a changed parquet read setting is seen
+  * with no invalidation call.
   *
   * The driver's generated `events.parquet` has shipped `ts` under two
   * physical encodings across rounds — nanosecond INT64 (reads as LongType
@@ -63,5 +66,101 @@ class TablesSpec extends SparkSpec {
     val got = Tables.events(spark, dir)
     assert(got.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
     assert(got.select(unix_micros(col("ts"))).head().getLong(0) === 1704067200000000L)
+  }
+
+  /** Spark jobs `body` launches from this thread. The listener is
+    * session-global and sbt runs suites in parallel, so the count is scoped
+    * to a job group of this test's own, and the bus is drained before and
+    * after so no event is read early or late.
+    */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "TablesSpec job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def writeDocs(dir: String, extra: Boolean = false): Unit = {
+    val base = spark.range(0, 200).selectExpr("id AS doc_id", "'en' AS lang",
+      "concat('doc ', id) AS text")
+    (if (extra) base.selectExpr("*", "length(text) AS n_chars") else base)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  test("a warm documents load starts no Spark job; the first load starts one") {
+    val dir = tempDir("graft_tables_warm")
+    writeDocs(dir)
+    assert(jobsLaunchedBy(Tables.documents(spark, dir)) === 1,
+      "the first load of a table version infers its schema in one job")
+    assert(jobsLaunchedBy(Tables.documents(spark, dir)) === 0,
+      "a warm load must resolve from the memo without a footer-inference job")
+    assert(Tables.documents(spark, dir).count() === 200)
+  }
+
+  test("an overwrite at the same path is seen without any invalidation call") {
+    val dir = tempDir("graft_tables_overwrite")
+    writeDocs(dir)
+    assert(!Tables.documents(spark, dir).columns.contains("n_chars"))
+    writeDocs(dir, extra = true)
+    val reread = Tables.documents(spark, dir)
+    assert(reread.columns.contains("n_chars"),
+      s"stale memo: the rewritten table's new column is missing from ${reread.columns.toSeq}")
+    assert(reread.where("n_chars IS NULL").count() === 0)
+  }
+
+  test("a rewrite re-resolves in one job, re-inferring partition column types") {
+    val dir = tempDir("graft_tables_partitioned")
+    def write(cell: String): Unit = spark.range(0, 40).selectExpr("id AS vec_id", s"$cell AS cell")
+      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/assignments.parquet")
+    write("id % 4")
+    assert(Tables.table(spark, dir, "assignments").schema("cell").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    write("concat('c', id % 4)")
+    var reread: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { reread = Tables.table(spark, dir, "assignments") } === 1,
+      "a rewritten table must infer its schema once, from the listing the load already made")
+    assert(reread.schema("cell").dataType === org.apache.spark.sql.types.StringType,
+      "partition column types must be inferred from the new directories, not the memo")
+    assert(reread.where("cell = 'c1'").count() === 10)
+  }
+
+  test("a changed parquet read setting resolves the schema again") {
+    // a child session: its SQL conf is its own, so toggling it cannot
+    // change what the suites running beside this one read
+    val s = spark.newSession()
+    val dir = tempDir("graft_tables_binary")
+    // written by parquet-hadoop directly: a Spark-written file carries its
+    // Spark schema in the footer, which inference prefers over the parquet
+    // types that binaryAsString reinterprets
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message blobs { required int64 doc_id; required binary payload; }")
+    val hadoopConf = s.sparkContext.hadoopConfiguration
+    val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/blobs.parquet/part-0.parquet"), hadoopConf)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(out)
+      .withType(schema).withConf(hadoopConf).build()
+    val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try (0 until 3).foreach(i =>
+      writer.write(rows.newGroup().append("doc_id", i.toLong).append("payload", s"b$i")))
+    finally writer.close()
+    val asBinary = Tables.table(s, dir, "blobs")
+    assert(asBinary.schema("payload").dataType === org.apache.spark.sql.types.BinaryType)
+    s.conf.set("spark.sql.parquet.binaryAsString", "true")
+    val asString = Tables.table(s, dir, "blobs")
+    assert(asString.schema("payload").dataType === org.apache.spark.sql.types.StringType,
+      "the memo must key on the session's parquet read settings")
+    assert(asString.orderBy("doc_id").collect().map(_.getString(1)).toSeq === Seq("b0", "b1", "b2"))
   }
 }
