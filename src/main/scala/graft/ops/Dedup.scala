@@ -695,7 +695,7 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  private[ops] def pairsFrom(signed0: DataFrame, numHashes: Int, bands: Int,
+  private[graft] def pairsFrom(signed0: DataFrame, numHashes: Int, bands: Int,
                              threshold: Double, maxBucket: Int): DataFrame = {
     // The per-doc signature table fans out to four consumers (bucket stats,
     // band join, and both sides of the signature re-attach). Persisting it

@@ -221,6 +221,9 @@ object MongoEventSource {
   * sink commit and checkpoint commit the epoch is replayed, and replay must
   * replace, not duplicate (the publisher-confirm semantics of
   * mrcon/src/rabbitmq/amqp.rs:95-110, re-expressed as epoch idempotence).
+  * [[Epochs]] is that contract's one implementation for parquet sinks:
+  * [[ParquetQueuePublisher]], the DLQ and every operator stream write
+  * through `Epochs.overwrite`.
   */
 trait QueuePublisher extends Serializable {
   def publish(batch: DataFrame, epochId: Long): Unit
@@ -232,10 +235,24 @@ trait QueuePublisher extends Serializable {
   */
 final case class ParquetQueuePublisher(queueDir: String) extends QueuePublisher {
   override def publish(batch: DataFrame, epochId: Long): Unit =
-    batch.withColumn("epoch", lit(epochId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(queueDir)
+    Epochs.overwrite(batch, epochId, queueDir)
+}
+
+/** A5d×D22g — the MATERIALIZING sink: instead of publishing the change feed
+  * to a queue, maintain a [[graft.ops.Versioned]] table of the current
+  * per-document state — what every CDC consumer ultimately builds, run
+  * INSIDE the connector as one stream. Each micro-batch applies as ONE
+  * keyed merge commit via [[graft.ops.Versioned.epochMergeWriter]]
+  * (O(delta) file rewrites; epoch-guarded so checkpoint replays after a
+  * crash are no-ops), keyed by `document_key`, ordered by `resume_token`
+  * (the feed's total order), deletes dropping the key. Readers time-travel
+  * the materialization like any Versioned table; downstream incremental
+  * consumers (D24/D27) ride its change feed.
+  */
+final case class VersionedMergePublisher(tableDir: String) extends QueuePublisher {
+  private val write = graft.ops.Versioned.epochMergeWriter(
+    tableDir, keyCol = "document_key", orderCol = "resume_token")
+  override def publish(batch: DataFrame, epochId: Long): Unit = write(batch, epochId)
 }
 
 /** Production sink binding: publish each change event to a Kafka topic (the
@@ -680,61 +697,6 @@ object ChangeStreamJob {
         .drop("event_time")
     val envelope = toChangeEvents(deduped, db, coll)
     val shaped = if (preAndPostImages) withBeforeImages(envelope, beforeImageTtlMs) else envelope
-    shaped
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        publisher.publish(batch, batchId)
-        ()
-      }
-      .start()
+    Epochs.start(shaped, checkpointDir, trigger, Some(queryName))(publisher.publish)
   }
-
-  /** A5d×D22g — the MATERIALIZING runner: instead of publishing the change
-    * feed to a queue, maintain a [[graft.ops.Versioned]] table of the
-    * current per-document state — what every CDC consumer ultimately
-    * builds, run INSIDE the connector as one stream. Each micro-batch
-    * applies as ONE keyed merge commit via
-    * [[graft.ops.Versioned.epochMergeWriter]] (O(delta) file rewrites;
-    * epoch-guarded so checkpoint replays after a crash are no-ops), keyed
-    * by `document_key`, ordered by `resume_token` (the feed's total
-    * order), deletes dropping the key. Readers time-travel the
-    * materialization like any Versioned table; downstream incremental
-    * consumers (D24/D27) ride its change feed.
-    */
-  def startMaterialized(spark: SparkSession, source: EventSource, tableDir: String,
-                        checkpointDir: String, db: String = "test",
-                        coll: String = "testcoll",
-                        queryName: String = "connector-materialize",
-                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val envelope = toChangeEvents(source.load(spark), db, coll)
-    val write = graft.ops.Versioned.epochMergeWriter(
-      tableDir, keyCol = "document_key", orderCol = "resume_token")
-    envelope
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        write(batch, batchId)
-        ()
-      }
-      .start()
-  }
-
-  /** Sandbox binding: watch `sourceDir` (json files), publish change-event
-    * JSON to a per-epoch parquet `queueDir`, checkpoint in `checkpointDir`.
-    */
-  def start(spark: SparkSession, sourceDir: String, queueDir: String,
-            checkpointDir: String, db: String = "test", coll: String = "testcoll",
-            queryName: String = "connector",
-            trigger: Trigger = Trigger.AvailableNow(),
-            dedupe: Boolean = false,
-            preAndPostImages: Boolean = false,
-            beforeImageTtlMs: Option[Long] = None): StreamingQuery =
-    startStream(spark, JsonDirSource(sourceDir), ParquetQueuePublisher(queueDir),
-      checkpointDir, db, coll, queryName, trigger, dedupe, preAndPostImages,
-      beforeImageTtlMs)
 }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   ─────────────────────────────────────  ─────────────────────────────────
   *   Connector::from_collection(            Connector.fromCollection(
   *     mongo_uri, rabbitmq_uri, settings)     spark, connections, settings)
-  *   Connector::with_clients(client, conn)  Connector.withSession(spark, ...)
+  *   Connector::with_clients(client, conn)  connector.connectWith(source,
+  *                                            publisher, streamName)
   *   connector.connect(stream_name).await   connector.connect(streamName)
   *
   * `connect` starts the checkpointed stream for this collection and returns
@@ -53,20 +54,23 @@ final class Connector(spark: SparkSession, connections: Connections,
   /** A5d×D22g at the facade level: watch the configured collection and
     * MAINTAIN its per-document materialization as a time-travelable
     * [[graft.ops.Versioned]] table under the sink, instead of (or beside)
-    * publishing to a queue — one keyed merge commit per micro-batch
-    * ([[ChangeStreamJob.startMaterialized]]). The stream name defaults to
-    * `<queue>_table` so a queue stream and a materialization of the SAME
-    * collection keep independent checkpoints and can run side by side.
+    * publishing to a queue — the connector stream with a
+    * [[VersionedMergePublisher]] as its sink, one keyed merge commit per
+    * micro-batch. Before-images are never requested here, so the table
+    * schema is the plain envelope whatever the collection's
+    * `preAndPostImages` says. The stream name defaults to `<queue>_table`
+    * so a queue stream and a materialization of the SAME collection keep
+    * independent checkpoints and can run side by side.
     */
   def materialize(streamName: String = settings.queue.streamName + "_table",
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    ChangeStreamJob.startMaterialized(spark,
+    ChangeStreamJob.startStream(spark,
       JsonDirSource(s"${connections.sourceUri}/${settings.watched.collName}"),
-      tableDir = s"${connections.sinkUri}/$streamName",
+      VersionedMergePublisher(s"${connections.sinkUri}/$streamName"),
       checkpointDir = resumeTokensLocation(streamName),
       db = settings.watched.dbName, coll = settings.watched.collName,
       queryName = s"${settings.watched.dbName}.${settings.watched.collName}.materialize",
-      trigger = trigger)
+      trigger = trigger, preAndPostImages = false)
 
   /** The `with_clients` analog at the binding level (connector.rs:74-90:
     * bring your own clients): run this collection's pipeline over
@@ -89,10 +93,5 @@ object Connector {
   /** connector.rs:50-63 `from_collection`: build everything from URIs. */
   def fromCollection(spark: SparkSession, connections: Connections,
                      settings: CollectionConfig): Connector =
-    new Connector(spark, connections, settings)
-
-  /** connector.rs:76-90 `with_clients`: share an existing session. */
-  def withSession(spark: SparkSession, connections: Connections,
-                  settings: CollectionConfig): Connector =
     new Connector(spark, connections, settings)
 }

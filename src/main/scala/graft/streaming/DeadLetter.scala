@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StringType
@@ -136,30 +136,21 @@ object DeadLetter {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(sourceDir)
       .withColumn("__dlq_reason", reasonCol)
-    raw.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val bad = batch.where(col("__dlq_reason").isNotNull)
-          .select(col("__dlq_reason").as("reason"),
-            coalesce(col(RawCol),
-              to_json(struct(ChangeStreamJob.eventSchema.fieldNames.map(col): _*)))
-              .as("raw"))
-        // Clear the zero-row flat marker a fully-successful [[replay]] may
-        // have left: root-level data files and epoch=N partition dirs must
-        // never coexist (Spark rejects the mixed layout at read). The
-        // marker is empty by construction, so this deletes no data.
-        clearFlatMarker(batch.sparkSession, dlqDir)
-        bad.withColumn("epoch", lit(epochId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch").parquet(dlqDir)
-        val good = batch.where(col("__dlq_reason").isNull)
-          .drop("__dlq_reason", RawCol)
-        publisher.publish(ChangeStreamJob.toChangeEvents(good, db, coll), epochId)
-        ()
-      }
-      .start()
+    Epochs.start(raw, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+      val bad = batch.where(col("__dlq_reason").isNotNull)
+        .select(col("__dlq_reason").as("reason"),
+          coalesce(col(RawCol),
+            to_json(struct(ChangeStreamJob.eventSchema.fieldNames.map(col): _*)))
+            .as("raw"))
+      // Clear the zero-row flat marker a fully-successful [[replay]] may
+      // have left: root-level data files and epoch=N partition dirs must
+      // never coexist (Spark rejects the mixed layout at read). The
+      // marker is empty by construction, so this deletes no data.
+      clearFlatMarker(batch.sparkSession, dlqDir)
+      Epochs.overwrite(bad, epochId, dlqDir)
+      val good = batch.where(col("__dlq_reason").isNull)
+        .drop("__dlq_reason", RawCol)
+      publisher.publish(ChangeStreamJob.toChangeEvents(good, db, coll), epochId)
+    }
   }
 }

@@ -25,7 +25,8 @@ import org.apache.spark.sql.types._
   * per epoch, same contract as ParquetQueuePublisher. A crash between sink
   * and checkpoint commit replays the epoch into the same partitions.
   * The index read excludes the current epoch's partition (a replayed
-  * epoch must not see its own previous half-write as "history").
+  * epoch must not see its own previous half-write as "history") and
+  * carries an explicit schema ([[Epochs.history]]).
   */
 object DedupIngest {
 
@@ -38,29 +39,6 @@ object DedupIngest {
 
   private val indexSchema = StructType(Seq(
     StructField("text_hash", StringType), StructField("batch_id", LongType)))
-
-  /** The hash index accumulated so far, excluding `excludeEpoch`'s partition
-    * (empty DataFrame when the index does not exist yet).
-    *
-    * The read carries an EXPLICIT schema: a crash mid-write of the very
-    * first epoch can leave indexDir holding only a `_temporary` subtree —
-    * the directory exists but schema inference finds no footers and every
-    * replay would die with AnalysisException, permanently wedging the
-    * stream. With the schema supplied, a footerless directory reads as
-    * empty and the documented replay contract holds.
-    */
-  def readIndex(spark: SparkSession, indexDir: String, excludeEpoch: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        indexSchema)
-    } else {
-      spark.read.schema(indexSchema)
-        .option("basePath", indexDir).parquet(indexDir)
-        .where(col("batch_id") =!= excludeEpoch)
-    }
-  }
 
   /** One epoch of incremental dedup: in-batch keep-first by content hash,
     * then anti-join against the historical index. Returns the surviving
@@ -119,28 +97,15 @@ object DedupIngest {
             indexDir: String, checkpointDir: String,
             queryName: String = "dedup-ingest",
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .json(sourceDir)
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val s = batch.sparkSession
-        val fresh = dedupBatch(batch, readIndex(s, indexDir, epochId))
-          .withColumn("batch_id", lit(epochId))
-          .persist() // two writers below; dedup must not run twice
-        fresh.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-        fresh.select("text_hash", "batch_id")
-          .where(col("text_hash").isNotNull) // null-text rows carry no content to index
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(indexDir)
-        fresh.unpersist()
-        ()
+    Epochs.start(spark.readStream.schema(docSchema).json(sourceDir),
+        checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+      val index = Epochs.history(batch.sparkSession, indexDir, indexSchema, epochId, "batch_id")
+      // two writers below; dedup must not run twice
+      Epochs.persisted(dedupBatch(batch, index)) { fresh =>
+        Epochs.overwrite(fresh, epochId, outDir, "batch_id")
+        Epochs.overwrite(fresh.select("text_hash")
+          .where(col("text_hash").isNotNull), // null-text rows carry no content to index
+          epochId, indexDir, "batch_id")
       }
-      .start()
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Versioned
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -55,27 +55,19 @@ object DimensionEnrich {
     require(Versioned.versions(spark, dimDir).nonEmpty,
       s"DimensionEnrich.start: no committed dimension version under $dimDir — " +
         "commit the dimension table (Versioned.commit) before starting enrichment")
-    spark.readStream
+    val events = spark.readStream
       .schema(ChangeStreamJob.eventSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(sourceDir)
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val s = batch.sparkSession
-        val dimVersion = Versioned.versions(s, dimDir).last
-        val dim = Versioned.read(s, dimDir, dimVersion).select("user_id", "segment")
+    Epochs.start(events, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+      val s = batch.sparkSession
+      val dimVersion = Versioned.versions(s, dimDir).last
+      val dim = Versioned.read(s, dimDir, dimVersion).select("user_id", "segment")
+      Epochs.overwrite(
         batch.select("event_id", "user_id", "event_type")
           .join(broadcast(dim), Seq("user_id"), "left_outer")
-          .withColumn("dim_version", lit(dimVersion))
-          .withColumn("epoch", lit(epochId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch").parquet(outDir)
-        ()
-      }
-      .start()
+          .withColumn("dim_version", lit(dimVersion)),
+        epochId, outDir)
+    }
   }
 }

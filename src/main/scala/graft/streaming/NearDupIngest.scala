@@ -59,66 +59,67 @@ object NearDupIngest {
     StructField("band", IntegerType), StructField("band_key", StringType),
     StructField("doc_id", LongType), StructField("batch_id", LongType)))
 
-  /** Epoch-excluding index reads with explicit schemas — the same
-    * footerless-first-epoch crash contract as [[DedupIngest.readIndex]].
-    */
-  private def readPart(spark: SparkSession, dir: String, schema: StructType,
-                       excludeEpoch: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).option("basePath", dir).parquet(dir)
-      .where(col("batch_id") =!= excludeEpoch)
-  }
-
+  /** Epoch-excluding index reads with explicit schemas ([[Epochs.history]]). */
   def readSigIndex(spark: SparkSession, dir: String, excludeEpoch: Long,
                    numHashes: Int = 64): DataFrame =
-    readPart(spark, dir, sigSchema(numHashes), excludeEpoch)
+    Epochs.history(spark, dir, sigSchema(numHashes), excludeEpoch, "batch_id")
 
   def readBandIndex(spark: SparkSession, dir: String, excludeEpoch: Long): DataFrame =
-    readPart(spark, dir, bandSchema, excludeEpoch)
+    Epochs.history(spark, dir, bandSchema, excludeEpoch, "batch_id")
 
   /** One epoch: in-batch near-dup drop, then the band-probe + signature
     * verify against history. Returns surviving docs with their `sig`
     * column attached (the index writer consumes it). Null-text rows pass
     * through unexamined, [[DedupIngest.dedupBatch]]'s invariant: no
     * content, nothing to be a near-duplicate of, and never indexed.
+    * The result is lazy; like every [[Dedup.minhashPairs]] caller it leaves
+    * the in-batch pass's signature cache for [[graft.Caches.clear]].
     */
   def dedupBatch(batch: DataFrame, bandIndex: DataFrame, sigIndex: DataFrame,
                  numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
                  threshold: Double = 0.5, maxBucket: Int = 256,
-                 probeCap: Int = 64): DataFrame = {
+                 probeCap: Int = 64): DataFrame =
+    dedupSigned(batch, textedSignatures(batch, numHashes, shingleK), bandIndex, sigIndex,
+      numHashes, bands, threshold, maxBucket, probeCap)
+
+  /** (doc_id, sig) of the batch's texted docs, computed once per epoch. */
+  private def textedSignatures(batch: DataFrame, numHashes: Int, shingleK: Int): DataFrame =
+    Dedup.signatures(batch.where(col("text").isNotNull), numHashes, shingleK)
+
+  /** [[dedupBatch]] over the batch's [[textedSignatures]], which every stage
+    * reads: the in-batch pair pass ([[Dedup.pairsFrom]], which persists
+    * them), the band probe, the verify join and the survivors. The owner
+    * of `signed` unpersists it after the result's last action.
+    */
+  private def dedupSigned(batch: DataFrame, signed: DataFrame, bandIndex: DataFrame,
+                          sigIndex: DataFrame, numHashes: Int, bands: Int,
+                          threshold: Double, maxBucket: Int = 256,
+                          probeCap: Int = 64): DataFrame = {
     val textless = batch.where(col("text").isNull).withColumn("sig",
       lit(null).cast(ArrayType(LongType, containsNull = false)))
-    val texted = batch.where(col("text").isNotNull)
     // in-batch star drop: any pair (a < b) at threshold removes b
-    val inBatchDrops = Dedup.minhashPairs(texted, numHashes, bands, shingleK,
-      threshold, maxBucket).select(col("id_b").as("doc_id")).distinct()
-    val kept = texted.join(inBatchDrops, Seq("doc_id"), "left_anti")
-    val signed = Dedup.signatures(kept, numHashes, shingleK)
-      .persist() // three consumers: probe bands, verify join, survivor index
-    try {
-      val newBands = Dedup.explodedBands(signed, bands, numHashes / bands)
-      val byBucket = Window.partitionBy(col("band"), col("band_key"))
-        .orderBy(col("doc_id"))
-      val cappedHist = bandIndex
-        .withColumn("rn", row_number().over(byBucket))
-        .where(col("rn") <= probeCap)
-        .select(col("band"), col("band_key"), col("doc_id").as("old_id"))
-      val cand = newBands.join(cappedHist, Seq("band", "band_key"))
-        .select(col("id").as("doc_id"), col("old_id")).distinct()
-      val histDrops = cand
-        .join(signed, Seq("doc_id"))
-        .join(sigIndex.select(col("doc_id").as("old_id"), col("sig").as("old_sig")),
-          Seq("old_id"))
-        .where(graft.functions.VectorExpressions.agreeCount(col("sig"), col("old_sig"))
-          .cast("double") / lit(numHashes.toDouble) >= threshold)
-        .select("doc_id").distinct()
-      val survivors = kept.join(histDrops, Seq("doc_id"), "left_anti")
-        .join(signed, Seq("doc_id"))
-      survivors.unionByName(textless).persist()
-    } finally { signed.unpersist(); () }
+    val inBatchDrops = Dedup.pairsFrom(signed, numHashes, bands, threshold, maxBucket)
+      .select(col("id_b").as("doc_id")).distinct()
+    val kept = signed.join(inBatchDrops, Seq("doc_id"), "left_anti")
+    val newBands = Dedup.explodedBands(kept, bands, numHashes / bands)
+    val byBucket = Window.partitionBy(col("band"), col("band_key"))
+      .orderBy(col("doc_id"))
+    val cappedHist = bandIndex
+      .withColumn("rn", row_number().over(byBucket))
+      .where(col("rn") <= probeCap)
+      .select(col("band"), col("band_key"), col("doc_id").as("old_id"))
+    val cand = newBands.join(cappedHist, Seq("band", "band_key"))
+      .select(col("id").as("doc_id"), col("old_id")).distinct()
+    val histDrops = cand
+      .join(kept, Seq("doc_id"))
+      .join(sigIndex.select(col("doc_id").as("old_id"), col("sig").as("old_sig")),
+        Seq("old_id"))
+      .where(graft.functions.VectorExpressions.agreeCount(col("sig"), col("old_sig"))
+        .cast("double") / lit(numHashes.toDouble) >= threshold)
+      .select("doc_id").distinct()
+    val survivors = batch.where(col("text").isNotNull)
+      .join(kept.join(histDrops, Seq("doc_id"), "left_anti"), Seq("doc_id"))
+    survivors.unionByName(textless)
   }
 
   /** Start the ingest stream: JSON docs from `sourceDir` → near-dup-free
@@ -133,37 +134,23 @@ object NearDupIngest {
             numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
             threshold: Double = 0.5,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .json(sourceDir)
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val s = batch.sparkSession
-        val fresh = dedupBatch(batch,
-          readBandIndex(s, bandDir, epochId),
-          readSigIndex(s, sigDir, epochId, numHashes),
-          numHashes, bands, shingleK, threshold)
-          .withColumn("batch_id", lit(epochId))
-        try {
-          fresh.drop("sig").write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-          val indexed = fresh.where(col("sig").isNotNull)
-          indexed.select("doc_id", "sig", "batch_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(sigDir)
-          Dedup.explodedBands(indexed, bands, numHashes / bands)
-            .join(indexed.select(col("doc_id").as("id"), col("batch_id")), Seq("id"))
-            .select(col("band"), col("band_key"), col("id").as("doc_id"), col("batch_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(bandDir)
-        } finally { fresh.unpersist(); () }
-        ()
-      }
-      .start()
+    Epochs.start(spark.readStream.schema(docSchema).json(sourceDir),
+        checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+      val s = batch.sparkSession
+      val signed = textedSignatures(batch, numHashes, shingleK)
+      val survivors = dedupSigned(batch, signed,
+        readBandIndex(s, bandDir, epochId),
+        readSigIndex(s, sigDir, epochId, numHashes),
+        numHashes, bands, threshold)
+      // three writers below; the dedup must run once. The epoch owns both
+      // caches: the survivors and the signatures pairsFrom persisted.
+      try Epochs.persisted(survivors) { fresh =>
+        Epochs.overwrite(fresh.drop("sig"), epochId, outDir, "batch_id")
+        val indexed = fresh.where(col("sig").isNotNull)
+        Epochs.overwrite(indexed.select("doc_id", "sig"), epochId, sigDir, "batch_id")
+        Epochs.overwrite(Dedup.explodedBands(indexed, bands, numHashes / bands)
+            .select(col("band"), col("band_key"), col("id").as("doc_id")),
+          epochId, bandDir, "batch_id")
+      } finally { signed.unpersist(); () }
+    }
 }

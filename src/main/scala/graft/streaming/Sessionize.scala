@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -171,29 +171,13 @@ object Sessionize {
     val trigger =
       if (continuous) org.apache.spark.sql.streaming.Trigger.ProcessingTime("2 seconds")
       else org.apache.spark.sql.streaming.Trigger.AvailableNow()
-    events
+    val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(
         updateSession(gapUs, idleTimeout = if (continuous) Some("60 seconds") else None))
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      // One parquet partition per epoch, OVERWRITTEN on replay — the
-      // QueuePublisher idempotence contract: a crash between sink commit
-      // and checkpoint commit replays the epoch, and a plain append would
-      // emit its closed sessions twice. The batch is persisted so the
-      // emptiness probe and the write run the plan once.
-      .foreachBatch { (batch: Dataset[SessionOut], epochId: Long) =>
-        batch.persist()
-        if (batch.head(1).nonEmpty)
-          batch.withColumn("epoch", lit(epochId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch").parquet(outDir)
-        batch.unpersist()
-        ()
-      }
-      .start()
+      .toDF()
+    // one epoch-overwritten partition per epoch (a plain append would emit a
+    // replayed epoch's closed sessions twice)
+    Epochs.start(sessions, checkpointDir, trigger)(Epochs.overwriteNonEmpty(_, _, outDir))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Watermarked stream-stream interval join (SURVEY.md §2 D15) — the
   * enrichment pattern every change-stream consumer eventually needs: attach
@@ -101,31 +101,8 @@ object StreamJoin {
       feed.where(col("event_type") === "click"),
       feed.where(col("event_type") === "purchase"),
       maxWait, watermarkDelay, if (outer) "left_outer" else "inner")
-    out.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      // One parquet partition per epoch, OVERWRITTEN on replay — the same
-      // QueuePublisher idempotence contract as ChangeStreamJob: a crash
-      // between sink commit and checkpoint commit replays the epoch, and a
-      // plain append would duplicate its joined rows.
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // Empty epochs write nothing (a partitioned write of zero rows
-        // would still create a schema-less directory); replaying an empty
-        // epoch is trivially idempotent. The batch is persisted so the
-        // emptiness probe and the write run the join once, not twice.
-        batch.persist()
-        // try/finally: a failed epoch write must not leak the cached batch
-        // into the block manager of the (supervisor-restarted) session
-        try {
-          if (batch.head(1).nonEmpty)
-            batch.withColumn("epoch", lit(epochId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch").parquet(outDir)
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
+    // one epoch-overwritten partition per epoch (a plain append would
+    // duplicate a replayed epoch's joined rows); no-data epochs write nothing
+    Epochs.start(out, checkpointDir)(Epochs.overwriteNonEmpty(_, _, outDir))
   }
 }

@@ -120,23 +120,9 @@ object StreamingHeavyHitters {
     val events = spark.readStream
       .schema(ChangeStreamJob.eventSchema)
       .json(sourceDir)
-    summaries(events, k, nShards)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[HHRow], epochId: Long) =>
-        val b = batch.toDF().persist()
-        try {
-          if (b.head(1).nonEmpty)
-            b.withColumn("batch_id", lit(epochId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(outDir)
-        } finally b.unpersist()
-        ()
-      }
-      .start()
+    Epochs.start(summaries(events, k, nShards).toDF(), checkpointDir, trigger,
+        outputMode = OutputMode.Update())(
+      Epochs.overwriteNonEmpty(_, _, outDir, "batch_id"))
   }
 
   /** The newest summary row per (type, shard, user) — later epochs

@@ -93,16 +93,30 @@ final class Supervisor(spark: SparkSession, settings: Settings,
             metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
           running.remove(k)
         }
-        val q = startQuery(spark, c)
-        running.put(k, q)
-        if (lifecycleMetrics) {
-          metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
-          metrics.recordTaskStart()
-        }
+        launch(c)
       }
     }
     if (lifecycleMetrics) metrics.setServerCount(running.size().toLong)
   }
+
+  /** Start `c`'s query and record it as running. */
+  private def launch(c: CollectionConfig): Unit = {
+    running.put(keyOf(c), startQuery(spark, c))
+    if (lifecycleMetrics) {
+      metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
+      metrics.recordTaskStart()
+    }
+  }
+
+  /** [[launch]] for a restart: a start that throws is recorded as a task
+    * failure and reported as `false` instead of escaping the pass.
+    */
+  private def relaunch(c: CollectionConfig): Boolean =
+    try { launch(c); true }
+    catch { case NonFatal(e) =>
+      metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, classify(e)._1)
+      false
+    }
 
   /** One supervision pass (the `join_next` loop body, server.rs:200-252):
     * reap terminated queries; restart failed ones (bounded), record metrics;
@@ -120,17 +134,9 @@ final class Supervisor(spark: SparkSession, settings: Settings,
         val n = chargeRestart(k)
         if (n <= maxRestarts) {
           metrics.recordTaskRestart(c.watched.collName, c.watched.dbName, "restart_retry")
-          try {
-            val nq = startQuery(spark, c)
-            running.put(k, nq)
+          if (relaunch(c)) {
             pendingRestart.remove(k)
-            if (lifecycleMetrics) {
-              metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
-              metrics.recordTaskStart()
-            }
             restarted += 1
-          } catch { case NonFatal(e2) =>
-            metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, classify(e2)._1)
           }
         } else pendingRestart.remove(k)
       }
@@ -144,16 +150,8 @@ final class Supervisor(spark: SparkSession, settings: Settings,
               val n = chargeRestart(k)
               if (n <= maxRestarts) {
                 metrics.recordTaskRestart(c.watched.collName, c.watched.dbName, reason)
-                try {
-                  val nq = startQuery(spark, c)
-                  running.put(k, nq)
-                  if (lifecycleMetrics) {
-                    metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
-                    metrics.recordTaskStart()
-                  }
-                  restarted += 1
-                } catch { case NonFatal(e2) =>
-                  metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, classify(e2)._1)
+                if (relaunch(c)) restarted += 1
+                else {
                   // drop the dead query so the next pass doesn't re-count
                   // this failure / re-decrement gauges — but queue the key
                   // for retry: budget remains, and abandoning the stream on

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Watermarked, windowed streaming aggregation over the event feed — the
   * canonical Structured-Streaming shape (readStream → event-time window agg
@@ -39,28 +39,9 @@ object WindowedCounts {
     val events = spark.readStream
       .schema(ChangeStreamJob.eventSchema)
       .json(sourceDir)
-    windowed(events, windowLen, watermarkDelay)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      // One parquet partition per epoch, OVERWRITTEN on replay — the
-      // QueuePublisher idempotence contract: a crash between sink commit
-      // and checkpoint commit replays the epoch, and a plain append would
-      // double-count the finalized windows.
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        batch.persist()
-        // try/finally: a failed epoch write must not leak the cached batch
-        // into the block manager of the (supervisor-restarted) session
-        try {
-          if (batch.head(1).nonEmpty)
-            batch.withColumn("epoch", lit(epochId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch").parquet(outDir)
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
+    // one epoch-overwritten partition per epoch (a plain append would
+    // double-count a replayed epoch's finalized windows)
+    Epochs.start(windowed(events, windowLen, watermarkDelay), checkpointDir)(
+      Epochs.overwriteNonEmpty(_, _, outDir))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.{ChangeStreamJob, InMemoryQueuePublisher, JsonDirSource}
+import graft.streaming.{ChangeStreamJob, InMemoryQueuePublisher, JsonDirSource,
+  ParquetQueuePublisher, VersionedMergePublisher}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -26,7 +27,8 @@ class ChangeStreamSpec extends SparkSpec {
   test("bulk delivery: all events reach the queue exactly once with the full envelope") {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src, "batch0.json", 0 until 100)
-    val q = ChangeStreamJob.start(spark, src, queue, ckpt)
+    val q = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt)
     q.awaitTermination(60000)
     val out = spark.read.parquet(queue)
     assert(out.count() === 100)
@@ -150,7 +152,8 @@ class ChangeStreamSpec extends SparkSpec {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     (0 until 5).foreach { i =>
       writeEvents(src, s"one$i.json", i to i)
-      val q = ChangeStreamJob.start(spark, src, queue, ckpt)
+      val q = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+        ParquetQueuePublisher(queue), ckpt)
       q.awaitTermination(60000)
     }
     assert(queueIds(queue).sorted === (0L until 5L))
@@ -159,12 +162,14 @@ class ChangeStreamSpec extends SparkSpec {
   test("resume after restart: a restarted stream continues after the last committed event, no duplicates") {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src, "first.json", 0 until 50)
-    val q1 = ChangeStreamJob.start(spark, src, queue, ckpt)
+    val q1 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt)
     q1.awaitTermination(60000)
     assert(queueIds(queue).size === 50)
     // "crash", then more events arrive, then restart from the same checkpoint
     writeEvents(src, "second.json", 50 until 80)
-    val q2 = ChangeStreamJob.start(spark, src, queue, ckpt)
+    val q2 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt)
     q2.awaitTermination(60000)
     val ids = queueIds(queue)
     assert(ids.size === 80, "restart must not re-deliver the first batch")
@@ -175,7 +180,8 @@ class ChangeStreamSpec extends SparkSpec {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src, "first.json", 0 until 20)
     writeEvents(src, "redelivery.json", 10 until 20) // same ids again
-    val q = ChangeStreamJob.start(spark, src, queue, ckpt, dedupe = true)
+    val q = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt, dedupe = true)
     q.awaitTermination(60000)
     val ids = queueIds(queue)
     assert(ids.sorted === (0L until 20L), s"duplicates survived: ${ids.sorted}")
@@ -184,11 +190,13 @@ class ChangeStreamSpec extends SparkSpec {
   test("pre/post images: flag on carries each key's before-image ACROSS batch boundaries") {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src, "first.json", 0 until 10)
-    val q1 = ChangeStreamJob.start(spark, src, queue, ckpt, preAndPostImages = true)
+    val q1 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt, preAndPostImages = true)
     q1.awaitTermination(60000)
     // second batch, separate run: state must survive the restart too
     writeEvents(src, "second.json", 10 until 20)
-    val q2 = ChangeStreamJob.start(spark, src, queue, ckpt, preAndPostImages = true)
+    val q2 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt, preAndPostImages = true)
     q2.awaitTermination(60000)
     val out = spark.read.parquet(queue)
     assert(out.columns.contains("full_document_before_change"))
@@ -202,7 +210,8 @@ class ChangeStreamSpec extends SparkSpec {
     // flag off: the column does not exist (reference behavior when unset)
     val (src2, queue2, ckpt2) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src2, "only.json", 0 until 5)
-    val q3 = ChangeStreamJob.start(spark, src2, queue2, ckpt2)
+    val q3 = ChangeStreamJob.startStream(spark, JsonDirSource(src2),
+      ParquetQueuePublisher(queue2), ckpt2)
     q3.awaitTermination(60000)
     assert(!spark.read.parquet(queue2).columns.contains("full_document_before_change"))
   }
@@ -262,7 +271,8 @@ class ChangeStreamSpec extends SparkSpec {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src, "only.json", 0 until 3)
     val e = intercept[IllegalArgumentException] {
-      ChangeStreamJob.start(spark, src, queue, ckpt, dedupe = true, preAndPostImages = true)
+      ChangeStreamJob.startStream(spark, JsonDirSource(src),
+        ParquetQueuePublisher(queue), ckpt, dedupe = true, preAndPostImages = true)
     }
     assert(e.getMessage.contains("two chained streams"))
   }
@@ -319,7 +329,8 @@ class ChangeStreamSpec extends SparkSpec {
     // hop 1: at-least-once feed (ids 5-9 redelivered) -> dedup -> queue 1
     writeEvents(src, "first.json", 0 until 10)
     writeEvents(src, "redelivery.json", 5 until 10)
-    val h1 = ChangeStreamJob.start(spark, src, q1dir, ckpt1, dedupe = true)
+    val h1 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(q1dir), ckpt1, dedupe = true)
     h1.awaitTermination(60000)
     assert(queueIds(q1dir).sorted === (0L until 10L))
     // hop 2: queue 1 IS the source (file stream over the envelope parquet),
@@ -397,10 +408,12 @@ class ChangeStreamSpec extends SparkSpec {
   test("source drop: stream over an exhausted source terminates cleanly (no exception)") {
     val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
     writeEvents(src, "only.json", 0 until 10)
-    val q1 = ChangeStreamJob.start(spark, src, queue, ckpt)
+    val q1 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt)
     q1.awaitTermination(60000)
     // nothing new: AvailableNow over the same checkpoint commits nothing and stops
-    val q2 = ChangeStreamJob.start(spark, src, queue, ckpt)
+    val q2 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt)
     q2.awaitTermination(60000)
     assert(q2.exception.isEmpty)
     assert(queueIds(queue).size === 10)
@@ -410,7 +423,8 @@ class ChangeStreamSpec extends SparkSpec {
     import graft.ops.Versioned
     val (src, table, ckpt) = (tempDir("src"), tempDir("mat") + "/t", tempDir("ckpt"))
     writeEvents(src, "batch0.json", 0 until 50)
-    val q = ChangeStreamJob.startMaterialized(spark, JsonDirSource(src), table, ckpt)
+    val q = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      VersionedMergePublisher(table), ckpt)
     q.awaitTermination(60000)
 
     // expected fold: per user (document_key = i % 7), last event by id wins;
@@ -429,14 +443,16 @@ class ChangeStreamSpec extends SparkSpec {
 
     // a second delivery merges incrementally from the SAME checkpoint
     writeEvents(src, "batch1.json", 50 until 60)
-    val q2 = ChangeStreamJob.startMaterialized(spark, JsonDirSource(src), table, ckpt)
+    val q2 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      VersionedMergePublisher(table), ckpt)
     q2.awaitTermination(60000)
     assert(state() === fold(0 until 60))
     assert(Versioned.versions(spark, table) === Seq(1L, 2L), "one merge commit per new epoch")
 
     // replaying the whole feed against a FRESH checkpoint is a no-op: the
     // epoch guard sees epoch 0 <= max_epoch and the table does not move
-    val q3 = ChangeStreamJob.startMaterialized(spark, JsonDirSource(src), table, tempDir("ckpt3"))
+    val q3 = ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      VersionedMergePublisher(table), tempDir("ckpt3"))
     q3.awaitTermination(60000)
     assert(state() === fold(0 until 60))
   }

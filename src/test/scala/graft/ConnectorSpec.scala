@@ -45,7 +45,7 @@ class ConnectorSpec extends SparkSpec {
     val connections = Connections(s"$base/source", s"$base/queues")
     val cfg = CollectionConfig(WatchedDb("test", "conncoll"),
       ResumeTokensDb("test", "tokens"), QueueSink("stream_conncoll"))
-    val connector = Connector.withSession(spark, connections, cfg)
+    val connector = Connector.fromCollection(spark, connections, cfg)
 
     writeEvents(s"$base/source/conncoll", "first.json", 0 until 10)
     connector.connect("s1").awaitTermination(60000)

@@ -117,6 +117,23 @@ class NearDupIngestSpec extends SparkSpec {
     assert(got.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L),
       "null-text docs are distinct records, not duplicates of each other")
     assert(got.where(got("sig").isNull).count() === 2, "null text carries no signature")
-    got.unpersist()
+  }
+
+  test("the ingest caches nothing past its epochs: persistent-RDD count unchanged by two drains") {
+    val src = tempDir("ndl-src"); val out = tempDir("ndl-out")
+    val sig = tempDir("ndl-sig") + "/sig"; val band = tempDir("ndl-band") + "/band"
+    val cp = tempDir("ndl-cp")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    writeBatch(src, "b1", Seq(1L -> words(0, 40), 2L -> (0 until 40).map(i => s"x$i").mkString(" ")))
+    NearDupIngest.start(spark, src, out, sig, band, cp,
+      trigger = Trigger.AvailableNow()).awaitTermination()
+    writeBatch(src, "b2", Seq(3L -> words(0, 40).replace("w20", "EDITED"),
+      4L -> (0 until 40).map(i => s"y$i").mkString(" ")))
+    NearDupIngest.start(spark, src, out, sig, band, cp,
+      trigger = Trigger.AvailableNow()).awaitTermination()
+    assert(spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).toSet
+      === Set(1L, 2L, 4L))
+    assert(spark.sparkContext.getPersistentRDDs.size === before,
+      "every epoch must unpersist what it cached")
   }
 }
