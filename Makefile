@@ -13,7 +13,7 @@ SEED    ?= 1
 PAIRS   ?= 10
 BASE    ?= HEAD
 
-.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount help
 
 all: build
 
@@ -76,6 +76,11 @@ perfbench:
 ## Alternating-pair A/B against a base revision: make perf-ab W=curation PAIRS=10 BASE=<rev> [SEED=1]
 perf-ab:
 	python3 tools/perf_ab.py --workload $(W) --pairs $(PAIRS) --base $(BASE) --seed $(SEED)
+
+## Child processes a command spawns by program (chmod, readlink, stat, ls):
+## make forkcount CMD="python3 perfbench/run.py --workload connector --seed 1 --seconds 8"
+forkcount:
+	python3 tools/forkcount.py -- $(CMD)
 
 ## The benchmark harness's own unit tests
 perfbench-test:

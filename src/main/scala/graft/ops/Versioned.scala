@@ -1,6 +1,8 @@
 package graft.ops
 
+import graft.LocalFiles
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** D22 — snapshot-versioned parquet table ("Delta-lite"): commits publish an
@@ -46,6 +48,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * rename cannot fail-if-present — e.g. S3 without a coordination layer —
   * cross-PROCESS publication needs an external lock, same as Delta's
   * LogStore contract; same-JVM writers are always safe via the monitor.)
+  *
+  * A local (`file:`) table is written through [[graft.LocalFiles]]: the
+  * staging writes, `mkdirs` and the manifest and tag temps set their modes
+  * by syscall instead of a `chmod` child process each. The publish itself
+  * is unchanged: `FileContext.rename` with `Rename.NONE`, the no-clobber
+  * primitive above.
   */
 object Versioned {
 
@@ -57,8 +65,23 @@ object Versioned {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** The filesystem every manifest, tag and staging call goes through:
+    * [[graft.LocalFiles]] for a local table, so `mkdirs` and `create` set
+    * modes without a `chmod` child process; the session's own filesystem
+    * for any other scheme.
+    */
   private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFiles.fileSystem(p, spark.sparkContext.hadoopConfiguration)
+
+  /** Write `df` into a staging dir: through [[graft.LocalFiles]] for a
+    * local table, and without a `_SUCCESS` marker, since the dir is deleted
+    * once its parts are placed.
+    */
+  private def writeStaging(df: DataFrame, staging: Path): Unit =
+    df.write.mode("overwrite")
+      .options(LocalFiles.writeOptions(staging.toString))
+      .option(SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, "false")
+      .parquet(staging.toString)
 
   private def manifestPath(dir: String, v: Long) = new Path(dir, f"manifest-v$v%d.json")
 
@@ -588,7 +611,7 @@ object Versioned {
     fs.mkdirs(new Path(base, "data"))
     val tok = newToken()
     val staging = new Path(base, s"_staging-v$attempt-$tok")
-    df.write.mode("overwrite").parquet(staging.toString)
+    writeStaging(df, staging)
     val parts = fs.listStatus(staging)
       .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val named = parts.zipWithIndex.map { case (p, i) =>
@@ -996,7 +1019,7 @@ object Versioned {
     fs.mkdirs(new Path(base, "data"))
     val tok = newToken()
     val staging = new Path(base, s"_staging-v$attempt-$tok")
-    rows.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    writeStaging(rows.coalesce(1), staging)
     val part = fs.listStatus(staging)
       .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
     val name = f"dv-v$attempt%d-$tok.parquet"

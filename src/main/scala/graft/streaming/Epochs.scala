@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.LocalFiles
+import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -22,12 +24,20 @@ object Epochs {
     * only that partition. A zero-row batch still writes (and, on a fresh
     * `dir`, leaves a schema-less directory): callers whose epochs can be
     * empty use [[overwriteNonEmpty]].
+    *
+    * A local `dir` is written through [[graft.LocalFiles]], so the epoch's
+    * directories, part files and `.crc` sidecars get their modes without a
+    * `chmod` child process each (22 for a 4-task epoch before). No
+    * `_SUCCESS` marker is written: dynamic overwrite would put it in its
+    * staging dir and delete it with that dir.
     */
   def overwrite(batch: DataFrame, epochId: Long, dir: String,
                 partCol: String = "epoch"): Unit =
     batch.withColumn(partCol, lit(epochId))
       .write.mode("overwrite")
+      .options(LocalFiles.writeOptions(dir))
       .option("partitionOverwriteMode", "dynamic")
+      .option(SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, "false")
       .partitionBy(partCol).parquet(dir)
 
   /** Run `body` over `df` persisted, unpersisting in `finally` so a failed

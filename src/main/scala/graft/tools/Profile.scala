@@ -3,6 +3,8 @@ package graft.tools
 import graft.{BenchHarness, Jsons, SparkEntry, Tables}
 import graft.BenchHarness.{noop, query, sample}
 import graft.ops.Skew
+import graft.streaming.Epochs
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -146,6 +148,8 @@ object Profile {
     *                    sub-second families)
     *   scan_groupby_noaqe  same with AQE off (isolates AQE's re-plan cost)
     *   scan_groupby_p8  same with shuffle.partitions=8 (task-count term)
+    *   epoch_write      one 2,000-row, 4-task Epochs.overwrite into a temp
+    *                    local dir (the connector's per-epoch sink write)
     * as one JSON line {"floor_probe":{...}} — numbers recorded in SURVEY
     * §6's floor note.
     */
@@ -159,7 +163,10 @@ object Profile {
         .getOrElse(sys.error(s"floor probe $tag: no successful sample"))
     def groupbyDf = spark.read.parquet(s"$dir/documents.parquet")
       .groupBy("lang").agg(count(lit(1)).as("n"), sum("n_chars").as("chars"))
-    val out = Seq(
+    val epochDir = java.nio.file.Files.createTempDirectory("graft-epoch-probe")
+    val epochBatch = spark.range(0, 2000, 1, 4)
+      .select(col("id"), sha2(col("id").cast("string"), 256).as("doc"))
+    val out = try Seq(
       probe("plan_only") {
         // force full analysis+optimization+physical planning, no execution;
         // a fresh plan each sample (the lit defeats plan-cache hits)
@@ -174,7 +181,10 @@ object Profile {
       withConf(spark, "spark.sql.adaptive.enabled" -> "false")(
         probe("scan_groupby_noaqe")(noop(groupbyDf))),
       withConf(spark, "spark.sql.shuffle.partitions" -> "8")(
-        probe("scan_groupby_p8")(noop(groupbyDf))))
+        probe("scan_groupby_p8")(noop(groupbyDf))),
+      // every sample after the first replays epoch 0, as a restart would
+      probe("epoch_write")(Epochs.overwrite(epochBatch, 0L, s"$epochDir/out")))
+    finally FileUtil.fullyDelete(epochDir.toFile)
     Seq(s"""{"floor_probe":${Jsons.nums(out)},"sf":${Jsons.quote(dir)},"reps":$reps}""")
   }
 

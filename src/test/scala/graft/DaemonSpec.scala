@@ -2,6 +2,8 @@ package graft
 
 import graft.config._
 import graft.streaming._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 
 import java.net.{HttpURLConnection, URL}
 import java.nio.file.{Files, Paths}
@@ -189,5 +191,20 @@ class DaemonSpec extends SparkSpec {
     intercept[java.io.IOException] { get(s"http://localhost:$port/health") }
     // idempotent: a second call (hook + finally both fire) must not throw
     GraftDaemon.shutdown(http, supervisor)
+  }
+
+  test("a local sink resolves the FileSystem-based checkpoint manager; another scheme keeps Spark's") {
+    // the daemon session's confs as Spark applies them: spark.hadoop.* into
+    // the Hadoop conf, SQL confs copied into every per-query Hadoop conf
+    def resolved(sinkUri: String) = {
+      val hc = spark.sessionState.newHadoopConf()
+      GraftDaemon.localSinkConf(sinkUri).foreach { case (k, v) => hc.set(k.stripPrefix("spark.hadoop."), v) }
+      val manager = CheckpointFileManager.create(new Path(tempDir("daemon-ckpt")), hc)
+      (manager.getClass.getSimpleName, hc.get("fs.file.impl"))
+    }
+    assert(resolved(tempDir("daemon") + "/queues") ===
+      ("FileSystemBasedCheckpointFileManager", classOf[LocalFiles].getName))
+    assert(resolved("hdfs://nn:8020/queues") ===
+      ("FileContextBasedCheckpointFileManager", spark.sparkContext.hadoopConfiguration.get("fs.file.impl")))
   }
 }

@@ -51,8 +51,8 @@ class ProfileSpec extends SparkSpec {
     val before = keys.map(spark.conf.get)
     val line = Profile.floor(spark, Seq(sf0001, "1")).head
     val probe = json.readTree(line).path("floor_probe")
-    assert(probe.size() === 8 && probe.path("scan_groupby_p8").asDouble(-1) > 0 &&
-      probe.path("table_load").asDouble(-1) > 0, line)
+    assert(probe.size() === 9 && probe.path("scan_groupby_p8").asDouble(-1) > 0 &&
+      probe.path("table_load").asDouble(-1) > 0 && probe.path("epoch_write").asDouble(-1) > 0, line)
     assert(keys.map(spark.conf.get) === before)
   }
 }
