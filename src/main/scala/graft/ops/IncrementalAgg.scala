@@ -51,7 +51,10 @@ object IncrementalAgg {
       sum(col("n_chars")).as("n_chars"),
       max(col("max_chars")).as("max_chars"))
 
-  /** Base version the state currently covers (0 = no state yet). */
+  /** Base version a maintained Versioned view currently covers — the
+    * epoch its head commit recorded (0 = no view yet). Serves this state
+    * table and [[TokenIndex]]'s index alike.
+    */
   def covered(spark: SparkSession, stateDir: String): Long =
     Versioned.versions(spark, stateDir).lastOption
       .map(Versioned.epochOf(spark, stateDir, _)).getOrElse(0L)

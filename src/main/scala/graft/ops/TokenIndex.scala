@@ -37,11 +37,6 @@ object TokenIndex {
   private def clustered(p: DataFrame, nFiles: Int): DataFrame =
     p.repartitionByRange(nFiles, col("token")).sortWithinPartitions("token", "doc_id")
 
-  /** Corpus version the index currently covers (0 = no index yet). */
-  def covered(spark: SparkSession, indexDir: String): Long =
-    Versioned.versions(spark, indexDir).lastOption
-      .map(Versioned.epochOf(spark, indexDir, _)).getOrElse(0L)
-
   /** Full (re)build at the corpus' latest version — a REPLACE commit. */
   def build(spark: SparkSession, corpusDir: String, indexDir: String,
             nFiles: Int = 8): Long = {
@@ -61,7 +56,7 @@ object TokenIndex {
   def refresh(spark: SparkSession, corpusDir: String, indexDir: String,
               nFiles: Int = 4): (Long, Boolean) = {
     val base = Versioned.versions(spark, corpusDir).last
-    val cov = covered(spark, indexDir)
+    val cov = IncrementalAgg.covered(spark, indexDir) // corpus version indexed, 0 = none
     if (cov >= base) (cov, true)
     else if (cov == 0) (build(spark, corpusDir, indexDir), false)
     else Versioned.newFiles(spark, corpusDir, cov, base) match {

@@ -1,9 +1,13 @@
 package graft.ops
 
 import graft.LocalFiles
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, StandardCopyOption}
 
 /** D22 — snapshot-versioned parquet table ("Delta-lite"): commits publish an
   * immutable MANIFEST naming exactly the data files of one snapshot, and the
@@ -31,17 +35,25 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Concurrency (the Delta protocol in miniature): version `N` belongs to
   * whoever PUBLISHES `manifest-v<N>.json` first — publication is an atomic
-  * create-if-absent (temp write + no-overwrite rename via `FileContext`,
-  * the HDFS put-if-absent primitive; plus a per-dir JVM monitor that closes
-  * the local-filesystem exists/rename TOCTOU window for same-process
-  * writers). A committer that loses the race RE-RESOLVES the log and
-  * - **rebases appends**: re-reads the new latest manifest and republishes
-  *   (its files ++ own staged files) at the next version — appends commute,
-  *   so both writers' rows land, serialized, no lost files;
-  * - **fails replaces** with [[Versioned.ConcurrentWriteException]]: a
-  *   replace that raced would clobber a snapshot it never saw — the caller
-  *   must decide, not the library. The winner's snapshot is untouched and
-  *   the loser's staged files are unreferenced debris vacuum reclaims.
+  * create-if-absent ([[createIfAbsent]]: temp write, then `link(2)` on a
+  * `file:` table or a no-overwrite `FileContext` rename elsewhere, the HDFS
+  * put-if-absent primitive; plus a per-dir JVM monitor that closes the
+  * local-filesystem exists/publish TOCTOU window for same-process
+  * writers). Every commit is one of three kinds, and each kind has exactly
+  * one publish path:
+  * - **replace** ([[publishReplace]]: commit, checked commit, merge,
+  *   deleteWhere, optimize): the head observed before staging must still
+  *   be the head at publish, else [[Versioned.ConcurrentWriteException]] —
+  *   a replace that raced would clobber a snapshot it never saw, so the
+  *   caller re-derives from the new head. The winner's snapshot is
+  *   untouched and the loser's staged files are debris vacuum reclaims;
+  * - **rebase** ([[publishRebased]]: append, checked append, rollback):
+  *   the content commutes with any concurrent commit, so a lost publish
+  *   re-reads the new head and republishes on top of it — both writers'
+  *   rows land, serialized, no lost files;
+  * - **epoch** ([[epochGuarded]]: epochWriter, epochMergeWriter): a
+  *   streaming epoch commits through one of the above at most once — a
+  *   replayed epoch is a no-op, a lost race re-checks and retries.
   * Staging dirs, manifest temps, and data-file names all carry a per-commit
   * random token, so concurrent attempts never collide on intermediate
   * paths either. Readers are unrestricted throughout. (On stores whose
@@ -49,11 +61,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * cross-PROCESS publication needs an external lock, same as Delta's
   * LogStore contract; same-JVM writers are always safe via the monitor.)
   *
-  * A local (`file:`) table is written through [[graft.LocalFiles]]: the
-  * staging writes, `mkdirs` and the manifest and tag temps set their modes
-  * by syscall instead of a `chmod` child process each. The publish itself
-  * is unchanged: `FileContext.rename` with `Rename.NONE`, the no-clobber
-  * primitive above.
+  * A local (`file:`) table is written through [[graft.LocalFiles]], and
+  * its manifests and tags publish by hard link, so no commit step starts
+  * a `chmod` or `readlink` child process ([[retag]]'s overwrite rename
+  * still goes through `FileContext`).
   */
 object Versioned {
 
@@ -286,25 +297,6 @@ object Versioned {
     }
   }
 
-  /** Read `names` under dir/data with two synthetic columns appended:
-    * `_gdv_f` (the file's base name) and `_gdv_p` (the row's ordinal inside
-    * that file) — parquet's `_metadata` constant columns, zero extra I/O.
-    * The (file, position) pair is the row's physical identity, which is
-    * what a deletion vector masks.
-    */
-  private def readWithPos(spark: SparkSession, dir: String, names: Seq[String],
-                          mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-    val df = reader.parquet(names.map(n => s"$dir/data/$n"): _*)
-    require(!df.columns.contains("_gdv_f") && !df.columns.contains("_gdv_p"),
-      "table schema collides with the reserved _gdv_f/_gdv_p columns")
-    df.select(col("*"),
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("_gdv_f"),
-      col("_metadata.row_index").as("_gdv_p"))
-  }
-
   /** The LIVE deletion-vector rows (file, pos) masking `restrict`'s files:
     * each dv sidecar is read once and filtered to the rows whose data file
     * still POINTS at it — a file re-deleted later points at a newer
@@ -314,7 +306,6 @@ object Versioned {
   private def dvRowsFor(spark: SparkSession, dir: String,
                         dvs: Map[String, String],
                         restrict: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     val rel = dvs.filter { case (f, _) => restrict.contains(f) }
     val sess = spark
     import sess.implicits._
@@ -329,31 +320,45 @@ object Versioned {
     }
   }
 
-  /** Read `names` with the snapshot's deletion vectors APPLIED: a
-    * broadcast anti-join of the scan against the dv rows on physical
-    * (file, position) identity. DV-free reads take the plain-scan branch —
-    * a table that never deletes pays zero plan change. The dv side is
-    * broadcast by construction: deletion vectors are the SMALL-delete
-    * path (GDPR erasure, spot retractions); bulk deletes belong to
-    * [[merge]]'s copy-on-write rewrite.
+  /** The data files `names`, schema-reconciled across them when asked. */
+  private def scan(spark: SparkSession, dir: String, names: Seq[String],
+                   mergeSchema: Boolean): DataFrame =
+    (if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read)
+      .parquet(names.map(n => s"$dir/data/$n"): _*)
+
+  /** The live rows of `names` — a broadcast anti-join of the scan against
+    * the dv rows on physical (file, position) identity — with two
+    * synthetic columns appended: `_gdv_f` (the file's base name) and
+    * `_gdv_p` (the row's ordinal inside that file), parquet's `_metadata`
+    * constant columns, zero extra I/O. The (file, position) pair is what a
+    * deletion vector masks and what [[deleteWhere]] records.
+    */
+  private def liveWithPos(spark: SparkSession, dir: String, names: Seq[String],
+                          dvs: Map[String, String],
+                          mergeSchema: Boolean = false): DataFrame = {
+    val df = scan(spark, dir, names, mergeSchema)
+    require(!df.columns.contains("_gdv_f") && !df.columns.contains("_gdv_p"),
+      "table schema collides with the reserved _gdv_f/_gdv_p columns")
+    val mask = dvRowsFor(spark, dir, dvs, names)
+      .withColumnRenamed("file", "_gdv_f").withColumnRenamed("pos", "_gdv_p")
+    df.select(col("*"),
+      element_at(split(col("_metadata.file_path"), "/"), -1).as("_gdv_f"),
+      col("_metadata.row_index").as("_gdv_p"))
+      .join(broadcast(mask), Seq("_gdv_f", "_gdv_p"), "left_anti")
+  }
+
+  /** Read `names` with the snapshot's deletion vectors APPLIED
+    * ([[liveWithPos]]). DV-free reads take the plain-scan branch — a table
+    * that never deletes pays zero plan change. The dv side is broadcast by
+    * construction: deletion vectors are the SMALL-delete path (GDPR
+    * erasure, spot retractions); bulk deletes belong to [[merge]]'s
+    * copy-on-write rewrite.
     */
   private def readApplied(spark: SparkSession, dir: String, names: Seq[String],
                           dvs: Map[String, String],
-                          mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val rel = dvs.filter { case (f, _) => names.contains(f) }
-    if (rel.isEmpty) {
-      val reader =
-        if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-      reader.parquet(names.map(n => s"$dir/data/$n"): _*)
-    } else {
-      val mask = dvRowsFor(spark, dir, rel, names)
-        .withColumnRenamed("file", "_gdv_f").withColumnRenamed("pos", "_gdv_p")
-      readWithPos(spark, dir, names, mergeSchema)
-        .join(broadcast(mask), Seq("_gdv_f", "_gdv_p"), "left_anti")
-        .drop("_gdv_f", "_gdv_p")
-    }
-  }
+                          mergeSchema: Boolean = false): DataFrame =
+    if (!dvs.keys.exists(names.contains)) scan(spark, dir, names, mergeSchema)
+    else liveWithPos(spark, dir, names, dvs, mergeSchema).drop("_gdv_f", "_gdv_p")
 
   /** Per-commit random token: staging dirs, manifest temps, and data-file
     * names all embed one, so concurrent commit ATTEMPTS never collide on
@@ -372,34 +377,31 @@ object Versioned {
   private def lockFor(dir: String): Object =
     dirLocks.computeIfAbsent(dir, _ => new Object)
 
-  /** The max streaming epoch as of manifest `prior` — a FRESH read of that
-    * manifest (never the driver cache, which a concurrent writer in
-    * another process can leave stale-low), falling back to the legacy
-    * all-manifests scan for pre-max_epoch tables. −1 for an empty log.
+  /** The max streaming epoch carried by manifest `head` — a FRESH read of
+    * that manifest (never the driver cache, which a concurrent writer in
+    * another process can leave stale-low). Manifests written before the
+    * `max_epoch` field existed fall back to one scan across the retained
+    * manifests' own `epoch` fields — the pre-r13 guard — so existing tables
+    * keep their replay protection. −1 for an empty log.
     */
-  private def priorMaxEpoch(spark: SparkSession, dir: String,
-                            prior: Option[Long]): Long = prior match {
-    case None => -1L
-    case Some(p) =>
-      val node = manifestNode(spark, dir, p)
+  private def carriedMaxEpoch(spark: SparkSession, dir: String, head: Option[Long]): Long =
+    head.fold(-1L) { v =>
+      val node = manifestNode(spark, dir, v)
       if (node.has("max_epoch")) node.get("max_epoch").asLong(-1L)
       else versions(spark, dir).map(epochOf(spark, dir, _)).foldLeft(-1L)(math.max)
-  }
+    }
 
-  /** Atomically publish `manifest-v<v>.json`, claiming version `v`: temp
-    * write + no-overwrite rename (`FileContext` + `Options.Rename.NONE`,
-    * the HDFS put-if-absent primitive). Returns false — and removes the
-    * temp — when some other committer already owns `v`. The epoch carry
-    * (see [[maxEpoch]]) derives from the PRIOR manifest read fresh, so a
-    * concurrent writer's higher epoch is never laundered away by a stale
-    * driver cache.
+  /** Atomically publish `manifest-v<v>.json`, claiming version `v`
+    * ([[createIfAbsent]]). Returns false when some other committer already
+    * owns `v`. The epoch carry (see [[maxEpoch]]) derives from `prevMax`,
+    * the PRIOR manifest read fresh, so a concurrent writer's higher epoch
+    * is never laundered away by a stale driver cache.
     */
   private[graft] def publishManifest(spark: SparkSession, dir: String, v: Long,
                                      files: Seq[String], epoch: Long,
                                      prevMax: Long,
                                      dvs: Map[String, String] = Map.empty,
                                      op: String = "commit"): Boolean = {
-    val fs = fsOf(spark, new Path(dir))
     val carried = math.max(epoch, prevMax)
     val node = mapper.createObjectNode()
     node.put("version", v)
@@ -431,31 +433,66 @@ object Versioned {
         statsNode.set[com.fasterxml.jackson.databind.JsonNode](n, s); ()
       }
     }
-    // temp + rename: the manifest appears atomically or not at all — a
-    // crash mid-commit leaves data files with NO manifest, which vacuum
-    // reclaims and readers never see
-    val tmp = new Path(dir, s"_manifest-v$v-${newToken()}.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    finally out.close()
-    val target = fs.makeQualified(manifestPath(dir, v))
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, spark.sparkContext.hadoopConfiguration)
-    val won =
-      try { fc.rename(fs.makeQualified(tmp), target,
-        org.apache.hadoop.fs.Options.Rename.NONE); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-                   _: java.nio.file.FileAlreadyExistsException |
-                   _: org.apache.hadoop.fs.PathExistsException => false }
+    // create-if-absent from a temp: the manifest appears atomically or not
+    // at all — a crash mid-commit leaves data files with NO manifest, which
+    // vacuum reclaims and readers never see
+    val won = createIfAbsent(spark, dir, s"_manifest-v$v",
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node), manifestPath(dir, v))
     if (won) maxEpochCache.put(dir, java.lang.Long.valueOf(carried))
-    else fs.delete(tmp, false)
+    won
+  }
+
+  /** Write `bytes` to a token-unique temp `dir/<prefix>-<token>.json.tmp`;
+    * a crashed one is debris [[vacuum]] reclaims.
+    */
+  private def writeTemp(fs: FileSystem, dir: String, prefix: String,
+                        bytes: Array[Byte]): Path = {
+    val tmp = new Path(dir, s"$prefix-${newToken()}.json.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    tmp
+  }
+
+  /** Publish `bytes` at `target` only if nothing is there yet: the one
+    * create-if-absent that every manifest and tag rests on. The bytes go
+    * to a temp first ([[writeTemp]]), so `target` appears complete or not
+    * at all. On a `file:` table the temp is hard-linked to `target`
+    * (`link(2)` fails when the target exists) and its `.crc` sidecar is
+    * renamed after it; on any other scheme it is a `FileContext` rename
+    * with `Rename.NONE`, the HDFS put-if-absent. No temp survives either
+    * way. Returns whether this call created `target`.
+    */
+  private def createIfAbsent(spark: SparkSession, dir: String, prefix: String,
+                             bytes: Array[Byte], target: Path): Boolean = {
+    val fs = fsOf(spark, new Path(dir))
+    val tmp = writeTemp(fs, dir, prefix, bytes)
+    val won = fs match {
+      case local: LocalFileSystem =>
+        def file(p: Path) = local.pathToFile(p).toPath
+        val linked =
+          try { Files.createLink(file(target), file(tmp)); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        if (linked) Files.move(file(local.getChecksumFile(tmp)),
+          file(local.getChecksumFile(target)), StandardCopyOption.REPLACE_EXISTING)
+        linked
+      case _ =>
+        val to = fs.makeQualified(target)
+        try {
+          FileContext.getFileContext(to.toUri, spark.sparkContext.hadoopConfiguration)
+            .rename(fs.makeQualified(tmp), to, Options.Rename.NONE)
+          true
+        } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+                       _: java.nio.file.FileAlreadyExistsException |
+                       _: org.apache.hadoop.fs.PathExistsException => false }
+    }
+    fs.delete(tmp, false)
     won
   }
 
   /** Driver-side running max epoch per table dir — saves even the one
     * small manifest read per skipped replay batch. Write-through from
     * [[publishManifest]]; a fresh JVM faults it in from the latest
-    * manifest. Soundness of [[epochWriter]]'s replay guard rests on ONE
+    * manifest. Soundness of [[epochGuarded]]'s replay guard rests on ONE
     * streaming query per table dir owning its epochs (the epochWriter
     * contract): that query's own commits write through, so the cache
     * always holds the true max of the epochs that matter for its guard.
@@ -463,7 +500,7 @@ object Versioned {
     * leaving the cache stale-LOW would make `epoch > cachedMax` pass MORE
     * often, weakening the guard — which is why the COMMIT path never
     * trusts the cache (the epoch carry reads the prior manifest fresh,
-    * [[priorMaxEpoch]]), and why foreign batch commits carry epoch −1
+    * [[carriedMaxEpoch]]), and why foreign batch commits carry epoch −1
     * (they can never lower the carried max).
     */
   private val maxEpochCache =
@@ -472,22 +509,11 @@ object Versioned {
   private[graft] def invalidateEpochCache(): Unit = maxEpochCache.clear()
 
   /** The max streaming epoch ever committed to the table, −1 if none:
-    * the latest manifest's carried-forward `max_epoch`. Legacy manifests
-    * (written before the field existed) fall back to one scan across
-    * retained manifests' own `epoch` fields — the pre-r13 guard — so
-    * existing tables keep their replay protection.
+    * the latest manifest's carried-forward `max_epoch` ([[carriedMaxEpoch]]).
     */
   def maxEpoch(spark: SparkSession, dir: String): Long =
     Option(maxEpochCache.get(dir)).map(_.longValue).getOrElse {
-      val m = versions(spark, dir).lastOption match {
-        case None => -1L
-        case Some(latest) =>
-          val fs = fsOf(spark, new Path(dir))
-          val in = fs.open(manifestPath(dir, latest))
-          val node = try mapper.readTree(in) finally in.close()
-          if (node.has("max_epoch")) node.get("max_epoch").asLong(-1L)
-          else versions(spark, dir).map(epochOf(spark, dir, _)).foldLeft(-1L)(math.max)
-      }
+      val m = carriedMaxEpoch(spark, dir, versions(spark, dir).lastOption)
       maxEpochCache.put(dir, java.lang.Long.valueOf(m))
       m
     }
@@ -495,11 +521,41 @@ object Versioned {
   /** The streaming epoch recorded in version `v`'s manifest (-1 for plain
     * batch commits).
     */
-  def epochOf(spark: SparkSession, dir: String, v: Long): Long = {
-    val fs = fsOf(spark, new Path(dir))
-    val in = fs.open(manifestPath(dir, v))
-    try mapper.readTree(in).path("epoch").asLong(-1L) finally in.close()
-  }
+  def epochOf(spark: SparkSession, dir: String, v: Long): Long =
+    manifestNode(spark, dir, v).path("epoch").asLong(-1L)
+
+  /** Attempts a rebase publish or an epoch makes before it gives up. */
+  private val commitAttempts = 50
+
+  /** The one epoch guard, behind [[epochWriter]] and [[epochMergeWriter]]:
+    * `write` runs only for an epoch above the table's MAX epoch, so a
+    * crash-replayed epoch is a no-op. A [[ConcurrentWriteException]] means
+    * a batch committer won the publish race mid-epoch: the guard
+    * re-resolves (re-reading the fresh max) and retries, so the retry is
+    * idempotent; the lost attempt's staged files are vacuum debris.
+    *
+    * It guards on the MAX epoch, not the latest manifest's own epoch: a
+    * rollback() or plain batch commit() interleaved with the streaming
+    * sink writes epoch −1 (or an older epoch) into the newest manifest, and
+    * a latest-only read of `epoch` would reset the guard — letting a
+    * crash-replayed epoch re-commit (double-publish) despite the
+    * idempotence contract (ADVICE r11). Since every manifest carries the
+    * max forward (`max_epoch`), the read is O(1) — the driver cache, or one
+    * field of one manifest on a fresh JVM — and vacuum cannot erase it
+    * (ADVICE r12).
+    */
+  private def epochGuarded(dir: String, what: String)
+                          (write: (SparkSession, DataFrame, Long) => Long): (DataFrame, Long) => Unit =
+    (df, epoch) => {
+      val s = df.sparkSession
+      val done = Iterator.continually {
+        epoch <= maxEpoch(s, dir) ||
+          (try { write(s, df, epoch); true } catch { case _: ConcurrentWriteException => false })
+      }.take(commitAttempts).exists(identity)
+      if (!done) sys.error(
+        s"epoch $epoch $what could not publish to $dir after $commitAttempts attempts " +
+          "(pathological contention with batch committers)")
+    }
 
   /** D22b — epoch-idempotent `foreachBatch` sink: commit each micro-batch's
     * full result as a new version of the table — a streaming MATERIALIZED
@@ -507,46 +563,17 @@ object Versioned {
     * Structured Streaming replays the last uncommitted epoch after a crash
     * (the checkpoint advances only after foreachBatch returns), so a replay
     * of an epoch the table already holds must be a no-op — otherwise the
-    * restart double-publishes. The guard is the manifest's own epoch field:
-    * strictly-greater epochs commit, replays skip. ONE streaming query per
-    * table dir owns its epochs; interleaved batch committers are safe in
-    * BOTH directions (r15, ADVICE r14): they publish epoch −1 so the
-    * carried max never regresses, and when a batch commit wins the publish
-    * race against an epoch (the underlying [[commit]] is replace-flavored
-    * and throws), the writer RE-RESOLVES and retries — the epoch guard
-    * re-checks against the fresh max each attempt, so the retry is
-    * idempotent and the streaming query no longer dies on an interleaved
-    * batch write.
+    * restart double-publishes. The guard is the manifest's own epoch field
+    * ([[epochGuarded]]): strictly-greater epochs commit, replays skip. ONE
+    * streaming query per table dir owns its epochs; interleaved batch
+    * committers are safe in BOTH directions (r15, ADVICE r14): they publish
+    * epoch −1 so the carried max never regresses, and when a batch commit
+    * wins the publish race against an epoch (the underlying [[commit]] is
+    * replace-flavored and throws), the writer RE-RESOLVES and retries, so
+    * the streaming query no longer dies on an interleaved batch write.
     */
-  def epochWriter(dir: String): (DataFrame, Long) => Unit = (df, epoch) => {
-    val s = df.sparkSession
-    // Guard on the table's MAX epoch, not the latest manifest's own epoch:
-    // a rollback() or plain batch commit() interleaved with the streaming
-    // sink writes epoch −1 (or an older epoch) into the newest manifest,
-    // and a latest-only read of `epoch` would reset the guard — letting a
-    // crash-replayed epoch re-commit (double-publish) despite the
-    // idempotence contract (ADVICE r11). Since every manifest carries the
-    // max forward (`max_epoch`), the read is O(1) — the driver cache, or
-    // one field of one manifest on a fresh JVM — and vacuum cannot erase
-    // it (ADVICE r12).
-    var attempts = 0
-    var done = false
-    while (!done && attempts < 50) {
-      attempts += 1
-      if (epoch <= maxEpoch(s, dir)) done = true
-      else
-        try { commit(s, df, dir, epoch); done = true }
-        catch {
-          case _: ConcurrentWriteException =>
-          // a batch committer won the race mid-epoch: re-resolve (the
-          // guard re-reads the fresh max) and retry; the lost attempt's
-          // staged files are vacuum debris
-        }
-    }
-    if (!done) sys.error(
-      s"epoch $epoch could not publish to $dir after $attempts attempts " +
-        "(pathological contention with batch committers)")
-  }
+  def epochWriter(dir: String): (DataFrame, Long) => Unit =
+    epochGuarded(dir, "commit")(commit(_, _, dir, _))
 
   /** A5d×D22 (r15) — streaming CDC MERGE sink: a `foreachBatch` writer that
     * applies each micro-batch of change events to a Versioned table as ONE
@@ -557,8 +584,8 @@ object Versioned {
     * while this rewrites only the files containing the epoch's touched
     * keys (O(delta) with D22f min/max pruning on a clustered layout). The
     * first epoch against a non-existent table bootstraps it: the batch is
-    * folded per key (last op by `orderCol` wins, trailing deletes drop)
-    * and committed as v1.
+    * folded per key ([[lastOpPerKey]], trailing deletes drop) and
+    * committed as v1.
     *
     * Replay/idempotence: the epoch rides the merge commit's manifest, so a
     * crash-replayed epoch sees `epoch <= max_epoch` and no-ops; a batch
@@ -569,43 +596,33 @@ object Versioned {
   def epochMergeWriter(dir: String, keyCol: String, orderCol: String,
                        opCol: String = "operation_type",
                        deleteOp: String = "delete"): (DataFrame, Long) => Unit =
-    (df, epoch) => {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val s = df.sparkSession
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 50) {
-        attempts += 1
-        if (epoch <= maxEpoch(s, dir)) done = true
-        else try {
-          if (versions(s, dir).isEmpty) {
-            val byKey = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
-            val folded = df
-              .withColumn("_rn", row_number().over(byKey))
-              .where(col("_rn") === 1 && col(opCol) =!= deleteOp)
-              .drop("_rn", opCol)
-            commit(s, folded, dir, epoch)
-          } else merge(s, df, dir, keyCol, orderCol, opCol, deleteOp, epoch)
-          done = true
-        } catch {
-          case _: ConcurrentWriteException =>
-          // a batch committer won mid-epoch: re-resolve against the new
-          // head (the guard re-reads max_epoch; merge re-derives) and retry
-        }
-      }
-      if (!done) sys.error(
-        s"epoch $epoch merge could not publish to $dir after $attempts attempts " +
-          "(pathological contention with batch committers)")
+    epochGuarded(dir, "merge") { (s, df, epoch) =>
+      if (versions(s, dir).nonEmpty) merge(s, df, dir, keyCol, orderCol, opCol, deleteOp, epoch)
+      else commit(s, lastOpPerKey(df, keyCol, orderCol).where(col(opCol) =!= deleteOp)
+        .drop(opCol), dir, epoch)
     }
 
-  /** Stage `df`'s parquet parts into immutable token-unique names under
-    * data/, returning the placed file names. Runs OUTSIDE any lock — the
-    * expensive part of a commit is parallel across writers by design; only
-    * the manifest publish is contended.
+  /** One net action per key: the change with the highest `orderCol` wins
+    * (ties are the caller's to avoid — event ids are unique per key), the
+    * same last-op-wins fold as A5d's cdc_apply. Shared by [[merge]] and
+    * [[epochMergeWriter]]'s bootstrap.
+    */
+  private def lastOpPerKey(changes: DataFrame, keyCol: String, orderCol: String): DataFrame =
+    changes
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)))
+      .where(col("_rn") === 1)
+      .drop("_rn")
+
+  /** Stage `df`'s parquet parts into immutable token-unique names
+    * `data/<kind><attempt>-<token>-<i>.parquet` — data files (`kind` "v")
+    * and deletion-vector sidecars ("dv-v") alike — returning the placed
+    * names. Runs OUTSIDE any lock — the expensive part of a commit is
+    * parallel across writers by design; only the manifest publish is
+    * contended.
     */
   private def stage(spark: SparkSession, df: DataFrame, dir: String,
-                    attempt: Long): Seq[String] = {
+                    attempt: Long, kind: String = "v"): Seq[String] = {
     val base = new Path(dir)
     val fs = fsOf(spark, base)
     fs.mkdirs(new Path(base, "data"))
@@ -615,13 +632,51 @@ object Versioned {
     val parts = fs.listStatus(staging)
       .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val named = parts.zipWithIndex.map { case (p, i) =>
-      val target = new Path(base, f"data/v$attempt%d-$tok-$i%05d.parquet")
+      val target = new Path(base, f"data/$kind$attempt%d-$tok-$i%05d.parquet")
       if (!fs.rename(p, target)) sys.error(s"could not place ${p.getName} for v$attempt")
       target.getName
     }
     fs.delete(staging, true)
     named.toSeq
   }
+
+  /** The one REPLACE publish: under the dir's monitor, publish `files` as
+    * version basis+1 only while `basis` is still the head and that version
+    * is still unclaimed; otherwise throw [[ConcurrentWriteException]]
+    * naming the operation — the caller re-derives from the new head (see
+    * the object doc). Returns the published version.
+    */
+  private def publishReplace(spark: SparkSession, dir: String, basis: Option[Long],
+                             files: Seq[String], epoch: Long,
+                             dvs: Map[String, String], op: String): Long =
+    lockFor(dir).synchronized {
+      val v = basis.getOrElse(0L) + 1
+      if (versions(spark, dir).lastOption != basis || !publishManifest(spark, dir, v, files,
+            epoch, carriedMaxEpoch(spark, dir, basis), dvs, op))
+        throw new ConcurrentWriteException(
+          s"$op of $dir based on v${basis.getOrElse(0L)} lost to a concurrent commit (head " +
+            s"is now v${versions(spark, dir).lastOption.getOrElse(0L)}); its staged files " +
+            "are unreferenced and vacuumable — retry: derive again from the new head")
+      v
+    }
+
+  /** The one REBASE publish: publish `content(head)` — (files, dvs)
+    * derived from the CURRENT head — at the head's next version, re-reading
+    * the head and republishing whenever another process claims that
+    * version first. For commits whose intent commutes with any concurrent
+    * commit ([[append]], [[rollback]]). Returns the published version.
+    */
+  private def publishRebased(spark: SparkSession, dir: String, epoch: Long, op: String)
+                            (content: Option[Long] => (Seq[String], Map[String, String])): Long =
+    Iterator.continually(lockFor(dir).synchronized {
+      val head = versions(spark, dir).lastOption
+      val v = head.getOrElse(0L) + 1
+      val (files, dvs) = content(head)
+      Some(v).filter(_ => publishManifest(spark, dir, v, files, epoch,
+        carriedMaxEpoch(spark, dir, head), dvs, op))
+    }).take(commitAttempts).collectFirst { case Some(v) => v }.getOrElse(sys.error(
+      s"$op to $dir could not publish after $commitAttempts attempts " +
+        "(pathological cross-process contention)"))
 
   /** Commit `df` as the next version (REPLACE semantics): stage the parquet
     * write, move the part files to immutable names under data/, publish the
@@ -643,26 +698,14 @@ object Versioned {
     * commit call, so the conflict check must be anchored at that read, not
     * re-snapshotted at commit entry (a foreign commit landing between the
     * two would otherwise slip a stale derivation through as a clean
-    * replace — the classic lost-update TOCTOU).
+    * replace — the classic lost-update TOCTOU). The staged snapshot passes
+    * `checks` before it publishes ([[commitChecked]]).
     */
-  private def commitAt(spark: SparkSession, df: DataFrame, dir: String,
-                       epoch: Long, basis: Option[Long]): Long = {
-    val v = basis.getOrElse(0L) + 1
-    val named = stage(spark, df, dir, v)
-    lockFor(dir).synchronized {
-      val head = versions(spark, dir).lastOption
-      if (head != basis)
-        throw new ConcurrentWriteException(
-          s"replace of $dir based on v${basis.getOrElse(0L)} lost to a concurrent " +
-            s"commit (head is now v${head.getOrElse(0L)}); staged files are " +
-            "unreferenced and vacuumable")
-      if (!publishManifest(spark, dir, v, named, epoch,
-        priorMaxEpoch(spark, dir, basis), op = "replace"))
-        throw new ConcurrentWriteException(
-          s"replace of $dir lost the v$v manifest publish to a concurrent " +
-            "committer in another process; staged files are unreferenced and vacuumable")
-    }
-    v
+  private def commitAt(spark: SparkSession, df: DataFrame, dir: String, epoch: Long,
+                       basis: Option[Long], checks: Seq[Contracts.Check] = Nil): Long = {
+    val named = stage(spark, df, dir, basis.getOrElse(0L) + 1)
+    auditOrAbort(spark, dir, named, checks, "replace")
+    publishReplace(spark, dir, basis, named, epoch, Map.empty, "replace")
   }
 
   /** Commit `df` as an APPEND: the next version's manifest references the
@@ -678,37 +721,22 @@ object Versioned {
     * serialized versions, no lost files, no data rewrite on retry (the
     * staged files are version-agnostic; only the manifest is re-derived).
     */
-  def append(spark: SparkSession, df: DataFrame, dir: String, epoch: Long = -1L): Long = {
-    val named = stage(spark, df, dir,
-      versions(spark, dir).lastOption.getOrElse(0L) + 1)
-    publishAppendNamed(spark, dir, named, epoch)
-  }
+  def append(spark: SparkSession, df: DataFrame, dir: String, epoch: Long = -1L): Long =
+    appendAudited(spark, df, dir, Nil, epoch)
 
-  /** The append publish loop over already-staged file names (shared by
-    * [[append]] and [[appendChecked]]).
+  /** The append path of [[append]] and [[appendChecked]]: stage, audit the
+    * staged files against `checks`, then rebase-publish the head's files ++
+    * the staged ones. A rebase over a deleteWhere carries the head's dv
+    * pointers — the append adds files, it never unmasks rows.
     */
-  private def publishAppendNamed(spark: SparkSession, dir: String,
-                                 named: Seq[String], epoch: Long): Long = {
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val published = lockFor(dir).synchronized {
-        val prior = versions(spark, dir).lastOption
-        val v = prior.getOrElse(0L) + 1
-        val prevFiles = prior.map(readManifest(spark, dir, _)).getOrElse(Seq.empty)
-        // a rebase over a deleteWhere carries the head's dv pointers — the
-        // append adds files, it never unmasks rows
-        val prevDvs = prior.map(dvsOf(spark, dir, _)).getOrElse(Map.empty[String, String])
-        if (publishManifest(spark, dir, v, prevFiles ++ named, epoch,
-          priorMaxEpoch(spark, dir, prior), prevDvs, op = "append")) Some(v) else None
-      }
-      published match {
-        case Some(v) => return v
-        case None => // another PROCESS claimed the version mid-window; re-resolve
-      }
+  private def appendAudited(spark: SparkSession, df: DataFrame, dir: String,
+                            checks: Seq[Contracts.Check], epoch: Long): Long = {
+    val named = stage(spark, df, dir, versions(spark, dir).lastOption.getOrElse(0L) + 1)
+    auditOrAbort(spark, dir, named, checks, "append")
+    publishRebased(spark, dir, epoch, "append") { head =>
+      (head.fold(Seq.empty[String])(readManifest(spark, dir, _)) ++ named,
+        head.fold(Map.empty[String, String])(dvsOf(spark, dir, _)))
     }
-    sys.error(s"append to $dir could not publish after $attempts attempts " +
-      "(pathological cross-process contention)")
   }
 
   /** A data-quality contract rejected a staged write; nothing was
@@ -733,56 +761,37 @@ object Versioned {
     * one aggregation pass ([[Contracts.run]]).
     */
   def appendChecked(spark: SparkSession, df: DataFrame, dir: String,
-                    checks: Seq[Contracts.Check], epoch: Long = -1L): Long = {
-    val named = stage(spark, df, dir,
-      versions(spark, dir).lastOption.getOrElse(0L) + 1)
-    auditOrAbort(spark, dir, named, checks, "append")
-    publishAppendNamed(spark, dir, named, epoch)
-  }
+                    checks: Seq[Contracts.Check], epoch: Long = -1L): Long =
+    appendAudited(spark, df, dir, checks, epoch)
 
   /** [[commit]] (REPLACE semantics) behind the same write-audit-publish
     * gate as [[appendChecked]]: the staged snapshot is audited before the
     * conflict-checked publish; a violation aborts with the head untouched.
     */
   def commitChecked(spark: SparkSession, df: DataFrame, dir: String,
-                    checks: Seq[Contracts.Check], epoch: Long = -1L): Long = {
-    val basis = versions(spark, dir).lastOption
-    val v = basis.getOrElse(0L) + 1
-    val named = stage(spark, df, dir, v)
-    auditOrAbort(spark, dir, named, checks, "replace")
-    lockFor(dir).synchronized {
-      val head = versions(spark, dir).lastOption
-      if (head != basis)
-        throw new ConcurrentWriteException(
-          s"checked replace of $dir based on v${basis.getOrElse(0L)} lost to a " +
-            s"concurrent commit (head is now v${head.getOrElse(0L)}); staged files " +
-            "are unreferenced and vacuumable")
-      if (!publishManifest(spark, dir, v, named, epoch, priorMaxEpoch(spark, dir, basis),
-        op = "replace"))
-        throw new ConcurrentWriteException(
-          s"checked replace of $dir lost the v$v manifest publish to a concurrent " +
-            "committer in another process; staged files are unreferenced and vacuumable")
-    }
-    v
-  }
+                    checks: Seq[Contracts.Check], epoch: Long = -1L): Long =
+    commitAt(spark, df, dir, epoch, versions(spark, dir).lastOption, checks)
 
-  /** Audit staged files; on any failing check delete them and throw. */
+  /** Audit staged files; on any failing check delete them and throw. No
+    * checks, no audit.
+    */
   private def auditOrAbort(spark: SparkSession, dir: String, named: Seq[String],
-                           checks: Seq[Contracts.Check], kind: String): Unit = {
-    val staged = spark.read.parquet(named.map(n => s"$dir/data/$n"): _*)
-    // bounded collect: one row per check
-    val failed = Contracts.run(staged, checks).collect()
-      .filter(!_.getAs[Boolean]("pass"))
-      .map(r => (r.getAs[String]("check"), r.getAs[Double]("metric")))
-    if (failed.nonEmpty) {
-      val base = new Path(dir)
-      val fs = fsOf(spark, base)
-      named.foreach(n => fs.delete(new Path(base, s"data/$n"), false))
-      throw new ContractViolationException(
-        s"$kind to $dir rejected by contract: " +
-          failed.map { case (c, m) => s"$c=$m" }.mkString(", "), failed.toSeq)
+                           checks: Seq[Contracts.Check], kind: String): Unit =
+    if (checks.nonEmpty) {
+      // bounded collect: one row per check
+      val failed = Contracts.run(scan(spark, dir, named, mergeSchema = false), checks)
+        .collect()
+        .filter(!_.getAs[Boolean]("pass"))
+        .map(r => (r.getAs[String]("check"), r.getAs[Double]("metric")))
+      if (failed.nonEmpty) {
+        val base = new Path(dir)
+        val fs = fsOf(spark, base)
+        named.foreach(n => fs.delete(new Path(base, s"data/$n"), false))
+        throw new ContractViolationException(
+          s"$kind to $dir rejected by contract: " +
+            failed.map { case (c, m) => s"$c=$m" }.mkString(", "), failed.toSeq)
+      }
     }
-  }
 
   /** The data files version `to` references that version `since` does not
     * (file NAMES are immutable once committed, so set difference over the
@@ -841,7 +850,6 @@ object Versioned {
     */
   def changeFeed(spark: SparkSession, dir: String, from: Long, to: Long,
                  keyCol: String = null): DataFrame = {
-    import org.apache.spark.sql.functions._
     val vs = versions(spark, dir)
     require(vs.contains(to), s"version $to not present under $dir (have $vs)")
     require(from <= 0 || vs.contains(from),
@@ -942,7 +950,6 @@ object Versioned {
     */
   def prunedRead(spark: SparkSession, dir: String, colName: String,
                  lo: Any, hi: Any, version: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     val vs = versions(spark, dir)
     require(vs.nonEmpty, s"no committed versions under $dir")
     val v = if (version > 0) version else vs.last
@@ -982,51 +989,14 @@ object Versioned {
     */
   def rollback(spark: SparkSession, dir: String, to: Long): Long = {
     val files = readManifest(spark, dir, to) // throws if `to` was never committed
+    val dvs = dvsOf(spark, dir, to)
     // propagate the rolled-to snapshot's epoch so the rollback manifest
-    // never weakens epochWriter's replay guard (belt to the max-across-
-    // manifests suspenders above — and vacuum can drop old manifests).
+    // never weakens epochWriter's replay guard (belt to the carried
+    // max_epoch suspenders — and vacuum can drop old manifests).
     // Concurrency: metadata-only and intent-preserving ("make the latest
-    // snapshot be `to`'s"), so a lost publish race re-resolves and retries
-    // at the next version — last-writer-wins serialization, like append.
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val published = lockFor(dir).synchronized {
-        val prior = versions(spark, dir).lastOption
-        val v = prior.getOrElse(0L) + 1
-        if (publishManifest(spark, dir, v, files, epochOf(spark, dir, to),
-          priorMaxEpoch(spark, dir, prior), dvsOf(spark, dir, to),
-          op = "rollback")) Some(v)
-        else None
-      }
-      published match {
-        case Some(v) => return v
-        case None =>
-      }
-    }
-    sys.error(s"rollback of $dir could not publish after $attempts attempts")
-  }
-
-  /** Stage one dv sidecar parquet (columns `file`, `pos`) and return its
-    * immutable name under data/. One file per delete commit: the rows are
-    * positions, not data — megabytes where the masked table is terabytes —
-    * and the read side broadcasts them whole.
-    */
-  private def stageDv(spark: SparkSession, rows: DataFrame, dir: String,
-                      attempt: Long): String = {
-    val base = new Path(dir)
-    val fs = fsOf(spark, base)
-    fs.mkdirs(new Path(base, "data"))
-    val tok = newToken()
-    val staging = new Path(base, s"_staging-v$attempt-$tok")
-    writeStaging(rows.coalesce(1), staging)
-    val part = fs.listStatus(staging)
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-    val name = f"dv-v$attempt%d-$tok.parquet"
-    if (!fs.rename(part, new Path(base, s"data/$name")))
-      sys.error(s"could not place dv sidecar for v$attempt")
-    fs.delete(staging, true)
-    name
+    // snapshot be `to`'s"), so a lost publish race rebases at the next
+    // version — last-writer-wins serialization, like append.
+    publishRebased(spark, dir, epochOf(spark, dir, to), "rollback")(_ => (files, dvs))
   }
 
   /** D28 — deletion-vector DELETE (merge-on-read): mask every current row
@@ -1064,15 +1034,11 @@ object Versioned {
     * sidecar is vacuum debris).
     */
   def deleteWhere(spark: SparkSession, dir: String, predicate: Column): Long = {
-    import org.apache.spark.sql.functions._
     val basis = versions(spark, dir).lastOption
     require(basis.nonEmpty, s"deleteWhere requires an existing table under $dir")
     val files = readManifest(spark, dir, basis.get)
     val dvs = dvsOf(spark, dir, basis.get)
-    val mask = dvRowsFor(spark, dir, dvs, files)
-      .withColumnRenamed("file", "_gdv_f").withColumnRenamed("pos", "_gdv_p")
-    val matches = readWithPos(spark, dir, files)
-      .join(broadcast(mask), Seq("_gdv_f", "_gdv_p"), "left_anti")
+    val matches = liveWithPos(spark, dir, files, dvs)
       .where(predicate)
       .select(col("_gdv_f").as("file"), col("_gdv_p").as("pos"))
       .persist() // two consumers: affected-file discovery + sidecar write
@@ -1082,24 +1048,13 @@ object Versioned {
       if (affected.isEmpty) return basis.get
       // fresh sidecar = new positions ∪ the affected files' LIVE old
       // positions (their pointers move here; unaffected files keep theirs)
+      // — in one sidecar file: the rows are positions, not data (megabytes
+      // where the masked table is terabytes), and the read side broadcasts
+      // them whole
       val carried = dvRowsFor(spark, dir, dvs, affected)
-      val v = basis.get + 1
-      val dvName = stageDv(spark, matches.unionByName(carried), dir, v)
-      lockFor(dir).synchronized {
-        val head = versions(spark, dir).lastOption
-        if (head != basis)
-          throw new ConcurrentWriteException(
-            s"deleteWhere on $dir based on v${basis.get} lost to a concurrent " +
-              s"commit (head is now v${head.getOrElse(0L)}); the staged sidecar " +
-              "is vacuumable — retry: it re-derives from the new head")
-        if (!publishManifest(spark, dir, v, files, -1L,
-          priorMaxEpoch(spark, dir, basis),
-          dvs ++ affected.map(_ -> dvName), op = "delete"))
-          throw new ConcurrentWriteException(
-            s"deleteWhere on $dir lost the v$v manifest publish to a concurrent " +
-              "committer in another process; retry")
-      }
-      v
+      val dvName = stage(spark, matches.unionByName(carried).coalesce(1), dir,
+        basis.get + 1, kind = "dv-v").head
+      publishReplace(spark, dir, basis, files, -1L, dvs ++ affected.map(_ -> dvName), "delete")
     } finally { matches.unpersist(); () }
   }
 
@@ -1145,8 +1100,6 @@ object Versioned {
             deleteOp: String = "delete",
             epoch: Long = -1L,
             mergeSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
     val basis = versions(spark, dir).lastOption
     require(basis.nonEmpty, s"merge requires an existing table under $dir")
     // The authoritative table schema is ALWAYS the mergeSchema-reconciled
@@ -1197,13 +1150,7 @@ object Versioned {
     // prior append evolved in, and a touched file may predate it
     val fillType = (snap.schema.fields ++ newCols)
       .map(f => f.name -> f.dataType).toMap
-    // net action per key: last op in orderCol wins (ties broken by the
-    // caller's orderCol being unique per key, as event ids are)
-    val byKey = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
-    val net = changes
-      .withColumn("_rn", row_number().over(byKey))
-      .where(col("_rn") === 1)
-      .drop("_rn")
+    val net = lastOpPerKey(changes, keyCol, orderCol)
       .persist() // two consumers: touched-file scan + survivor anti-join/upserts
     try {
       val keys = net.select(col(keyCol)).distinct()
@@ -1235,16 +1182,11 @@ object Versioned {
       // a dv already masked must not drag its file into the rewrite
       val touchedNames: Set[String] =
         if (candidateNames.isEmpty) Set.empty
-        else {
-          val dmask = dvRowsFor(spark, dir, dvs, candidateNames)
-            .withColumnRenamed("file", "_gdv_f").withColumnRenamed("pos", "_gdv_p")
-          readWithPos(spark, dir, candidateNames)
-            .join(broadcast(dmask), Seq("_gdv_f", "_gdv_p"), "left_anti")
-            .select(col("_gdv_f").as("_file"), col(keyCol))
-            .join(keys, Seq(keyCol))
-            .select("_file").distinct()
-            .collect().map(_.getString(0)).toSet
-        }
+        else liveWithPos(spark, dir, candidateNames, dvs)
+          .select(col("_gdv_f").as("_file"), col(keyCol))
+          .join(keys, Seq(keyCol))
+          .select("_file").distinct()
+          .collect().map(_.getString(0)).toSet
       // rewriting a touched file MATERIALIZES its dv (survivors are read
       // dv-applied and the pointer is dropped); untouched files keep theirs
       val haveChange = net.schema.fieldNames.toSet
@@ -1266,25 +1208,9 @@ object Versioned {
             if (have(c)) col(c) else lit(null).cast(fillType(c)).as(c)
           }: _*)
         }
-      val rewritten = survivors.unionByName(upserts)
-      val v = basis.get + 1
-      val staged = stage(spark, rewritten, dir, v)
-      lockFor(dir).synchronized {
-        val head = versions(spark, dir).lastOption
-        if (head != basis)
-          throw new ConcurrentWriteException(
-            s"merge into $dir based on v${basis.get} lost to a concurrent commit " +
-              s"(head is now v${head.getOrElse(0L)}); staged files are vacuumable — " +
-              "retry the merge: it re-derives from the new head")
-        val prevFiles = readManifest(spark, dir, basis.get)
-        if (!publishManifest(spark, dir, v,
-          prevFiles.filterNot(touchedNames) ++ staged, epoch,
-          priorMaxEpoch(spark, dir, basis), dvs -- touchedNames, op = "merge"))
-          throw new ConcurrentWriteException(
-            s"merge into $dir lost the v$v manifest publish to a concurrent " +
-              "committer in another process; retry the merge")
-      }
-      v
+      val staged = stage(spark, survivors.unionByName(upserts), dir, basis.get + 1)
+      publishReplace(spark, dir, basis, basisFiles.filterNot(touchedNames) ++ staged, epoch,
+        dvs -- touchedNames, "merge")
     } finally { net.unpersist(); () }
   }
 
@@ -1329,54 +1255,23 @@ object Versioned {
     // D13's layout discipline applied IN-HISTORY, where D13 itself would
     // break the manifest log. All dvs materialize; size targeting and
     // history semantics are the compaction path's.
-    if (clusterBy.nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      val total = sized.map(_._2).sum
-      val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-      val clustered = readApplied(spark, dir, prevFiles, dvs, mergeSchema = true)
-        .repartitionByRange(nOut, clusterBy.map(col): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
-      val v = basis.get + 1
-      val staged = stage(spark, clustered, dir, v)
-      lockFor(dir).synchronized {
-        val head = versions(spark, dir).lastOption
-        if (head != basis)
-          throw new ConcurrentWriteException(
-            s"optimize of $dir based on v${basis.get} lost to a concurrent commit; " +
-              "staged files are vacuumable — retry")
-        if (!publishManifest(spark, dir, v, staged, -1L,
-          priorMaxEpoch(spark, dir, basis), Map.empty, op = "optimize"))
-          throw new ConcurrentWriteException(
-            s"optimize of $dir lost the v$v manifest publish; retry")
-      }
-      return v
-    }
-    val (small, big) = sized.partition(_._2 < targetBytes)
-    // act when ≥2 small files need coalescing OR a small file carries a
-    // deletion vector (the rewrite MATERIALIZES it — dv chains don't
-    // accumulate forever; [[deleteWhere]]'s maintenance contract)
-    if (small.size < 2 && !small.exists(p => dvs.contains(p._1)))
+    val (small, big) =
+      if (clusterBy.nonEmpty) (sized, Nil) else sized.partition(_._2 < targetBytes)
+    // compaction acts when ≥2 small files need coalescing OR a small file
+    // carries a deletion vector (the rewrite MATERIALIZES it — dv chains
+    // don't accumulate forever; [[deleteWhere]]'s maintenance contract)
+    if (clusterBy.isEmpty && small.size < 2 && !small.exists(p => dvs.contains(p._1)))
       return basis.get
-    val totalSmall = small.map(_._2).sum
-    val n = math.max(1L, (totalSmall + targetBytes - 1) / targetBytes).toInt
-    val compacted =
-      readApplied(spark, dir, small.map(_._1), dvs, mergeSchema = true)
-        .repartition(n)
-    val v = basis.get + 1
-    val staged = stage(spark, compacted, dir, v)
-    lockFor(dir).synchronized {
-      val head = versions(spark, dir).lastOption
-      if (head != basis)
-        throw new ConcurrentWriteException(
-          s"optimize of $dir based on v${basis.get} lost to a concurrent commit; " +
-            "staged files are vacuumable — retry")
-      if (!publishManifest(spark, dir, v, big.map(_._1) ++ staged, -1L,
-        priorMaxEpoch(spark, dir, basis), dvs.filter(kv => big.exists(_._1 == kv._1)),
-        op = "optimize"))
-        throw new ConcurrentWriteException(
-          s"optimize of $dir lost the v$v manifest publish; retry")
-    }
-    v
+    val nOut = math.max(1L, (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
+    val rows = readApplied(spark, dir, small.map(_._1), dvs, mergeSchema = true)
+    val rewritten =
+      if (clusterBy.isEmpty) rows.repartition(nOut)
+      else rows.repartitionByRange(nOut, clusterBy.map(col): _*)
+        .sortWithinPartitions(clusterBy.map(col): _*)
+    val kept = big.map(_._1)
+    val staged = stage(spark, rewritten, dir, basis.get + 1)
+    publishReplace(spark, dir, basis, kept ++ staged, -1L, dvs.filter(kv => kept.contains(kv._1)),
+      "optimize")
   }
 
   /** The user-facing retry recipe for replace-flavored commits (r15,
@@ -1530,7 +1425,7 @@ object Versioned {
     * `refs/`; [[vacuum]] treats tagged versions as pinned (manifest and
     * files survive any `keepLast`), and [[readTag]] resolves the name to a
     * time-travel read. Tags are IMMUTABLE once created — publishing uses
-    * the same temp + no-overwrite rename as manifests, so two writers
+    * the same create-if-absent as manifests ([[createIfAbsent]]), so two writers
     * racing the same name get one winner and one clean error; [[retag]] is
     * the explicit atomic-replace escape hatch, [[untag]] releases the pin.
     * Defaults to the latest version. Returns the pinned version.
@@ -1543,29 +1438,16 @@ object Versioned {
       throw new IllegalArgumentException(s"cannot tag an empty table: $dir"))
     else version
     require(vs.contains(v), s"version $v does not exist under $dir (have $vs)")
-    val fs = fsOf(spark, new Path(dir))
-    fs.mkdirs(new Path(dir, "refs"))
-    val tmp = new Path(dir, s"_staging-tag-${newToken()}.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"name":"$name","version":$v}""".getBytes("UTF-8"))
-    finally out.close()
-    val target = fs.makeQualified(tagPath(dir, name))
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, spark.sparkContext.hadoopConfiguration)
-    val won =
-      try { fc.rename(fs.makeQualified(tmp), target,
-        org.apache.hadoop.fs.Options.Rename.NONE); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-                   _: java.nio.file.FileAlreadyExistsException |
-                   _: org.apache.hadoop.fs.PathExistsException => false }
-    if (!won) {
-      fs.delete(tmp, false)
+    fsOf(spark, new Path(dir)).mkdirs(new Path(dir, "refs"))
+    if (!createIfAbsent(spark, dir, "_staging-tag", tagJson(name, v), tagPath(dir, name)))
       throw new IllegalStateException(
         s"tag '$name' already exists on $dir — tags are immutable; " +
           "untag first or retag to move it atomically")
-    }
     v
   }
+
+  private def tagJson(name: String, v: Long): Array[Byte] =
+    s"""{"name":"$name","version":$v}""".getBytes("UTF-8")
 
   /** Atomically move an existing (or create a new) tag — rename with
     * OVERWRITE, so readers see the old target or the new, never a gap.
@@ -1576,18 +1458,13 @@ object Versioned {
       s"version $version does not exist under $dir")
     val fs = fsOf(spark, new Path(dir))
     fs.mkdirs(new Path(dir, "refs"))
-    val tmp = new Path(dir, s"_staging-tag-${newToken()}.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"name":"$name","version":$version}""".getBytes("UTF-8"))
-    finally out.close()
+    val tmp = writeTemp(fs, dir, "_staging-tag", tagJson(name, version))
     val target = fs.makeQualified(tagPath(dir, name))
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, spark.sparkContext.hadoopConfiguration)
     // delete the temp ref if the overwrite rename throws (mirrors tag's
     // lost-race cleanup) — a failed retag must not leak staging debris that
     // vacuum's manifest-based sweep won't classify
-    try fc.rename(fs.makeQualified(tmp), target,
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    try FileContext.getFileContext(target.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(fs.makeQualified(tmp), target, Options.Rename.OVERWRITE)
     catch { case e: Throwable => fs.delete(tmp, false); throw e }
     version
   }

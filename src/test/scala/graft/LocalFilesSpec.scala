@@ -94,6 +94,23 @@ class LocalFilesSpec extends SparkSpec {
     assert(a.isInstanceOf[LocalFiles] && (a ne b) && (a ne FileSystem.get(p.toUri, conf)))
   }
 
+  test("a local Versioned table publishes its manifest and tag by hard link, .crc sidecars included") {
+    val dir = tempDir("localfiles") + "/table"
+    graft.ops.Versioned.commit(spark, spark.range(0, 10).toDF(), dir)
+    graft.ops.Versioned.tag(spark, dir, "release")
+    def names(d: String) = Files.list(Paths.get(d)).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(names(dir) === Set("data", "refs", "manifest-v1.json", ".manifest-v1.json.crc"))
+    assert(names(s"$dir/refs") === Set("release.json", ".release.json.crc"))
+    // the temp's link is gone, and each sidecar checks its file's bytes
+    val fs = FileSystem.getLocal(conf)
+    for (f <- Seq(s"$dir/manifest-v1.json", s"$dir/refs/release.json")) {
+      assert(Files.getAttribute(Paths.get(f), "unix:nlink") === 1, f)
+      val in = fs.open(new Path(f))
+      try assert(in.readAllBytes().toSeq === Files.readAllBytes(Paths.get(f)).toSeq, f)
+      finally in.close()
+    }
+  }
+
   private def writeEvents(dir: String, name: String, ids: Range): Unit = {
     val rows = ids.map { i =>
       s"""{"event_id":$i,"ts_us":${1704067200000000L + i * 1000000L},"user_id":${i % 7},""" +

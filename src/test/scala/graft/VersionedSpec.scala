@@ -1144,6 +1144,23 @@ class VersionedSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Versioned.readAsOf(spark, dir, h.head._3 - 60000L)
     }
+    // the audited commits, a clustered optimize and a merge writer's
+    // bootstrap and merge epoch record their kind and epoch the same way
+    import graft.ops.Contracts
+    val idPositive = Seq(Contracts.Check("id_min", min(col("id")), _ >= 0.0))
+    val audited = tempDir("versioned-history-audited") + "/table"
+    Versioned.commitChecked(spark, rows(0, 10), audited, idPositive, epoch = 3L) // v1
+    Versioned.appendChecked(spark, rows(100, 5), audited, idPositive)           // v2
+    Versioned.optimize(spark, audited, clusterBy = Seq("id"))                   // v3
+    assert(Versioned.history(spark, audited).map(t => (t._1, t._2, t._4)) === Seq(
+      (1L, "replace", 3L), (2L, "append", -1L), (3L, "optimize", -1L)))
+    val merged = tempDir("versioned-history-merge")
+    val w = Versioned.epochMergeWriter(merged, keyCol = "id", orderCol = "seq")
+    w(Seq((1L, "a", "insert", 1L), (2L, "b", "insert", 2L))
+      .toDF("id", "payload", "operation_type", "seq"), 0L)                    // v1 bootstrap
+    w(Seq((1L, "a2", "update", 3L)).toDF("id", "payload", "operation_type", "seq"), 1L) // v2
+    assert(Versioned.history(spark, merged).map(t => (t._1, t._2, t._4)) === Seq(
+      (1L, "replace", 0L), (2L, "merge", 1L)))
   }
 
   test("tags pin versions through vacuum: a tagged release stays readable past retention; untag releases it") {
@@ -1156,6 +1173,8 @@ class VersionedSpec extends SparkSpec {
     Versioned.append(spark, rows(200, 5), dir)                      // v3
     // immutability + validation
     intercept[IllegalStateException] { Versioned.tag(spark, dir, "release-A", 2L) }
+    assert(!new java.io.File(dir).list().exists(_.contains("_staging-tag-")),
+      "a lost tag race leaves no temp behind")
     intercept[IllegalArgumentException] { Versioned.tag(spark, dir, "nope", 99L) }
     intercept[IllegalArgumentException] { Versioned.tag(spark, dir, "../evil", 1L) }
     assert(Versioned.tags(spark, dir) === Map("release-A" -> 1L))

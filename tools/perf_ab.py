@@ -12,10 +12,12 @@ ones, so a drift of the host over the session taxes both sides alike.
 
 For every metric BENCHMARK.json lists for the chosen trace mode it prints
 each side's median and quartiles, the pairs the change won and lost (an
-exactly equal pair is a tie and counts for neither side), and whether the
-gain rule holds: the change wins at least nine tenths of ALL pairs run, and
-the medians differ, in the better direction, by more than the distance
-between the base's own quartiles. The raw results are kept in
+exactly equal pair is a tie and counts for neither side), the same won/lost
+split into base-first and change-first pairs (so an order effect, one side
+favoured by running second, shows), and whether the gain rule holds: the
+change wins at least nine tenths of ALL pairs run, and the medians differ,
+in the better direction, by more than the distance between the base's own
+quartiles. The raw results are kept in
 `.bench_ab/ab-<workload>-<base>-<time>.json`.
 
 The tool never writes under `perfbench/`; each checkout builds and runs its
@@ -63,6 +65,13 @@ def tally(pairs, better):
         else:
             lost += 1
     return won, lost, tied
+
+
+def tally_by_order(pairs, better):
+    """((won, lost, tied) over base-first pairs, the same over change-first
+    pairs): `tally` split by which side ran first (`base_runs_first`)."""
+    return (tally([p for i, p in enumerate(pairs) if base_runs_first(i)], better),
+            tally([p for i, p in enumerate(pairs) if not base_runs_first(i)], better))
 
 
 def gain_holds(pairs, better):
@@ -117,9 +126,11 @@ def report(metric_specs, results):
             rows.append({"metric": name, "better": better, "pairs": len(pairs)})
             continue
         won, lost, tied = tally(pairs, better)
+        base_first, change_first = tally_by_order(pairs, better)
         rows.append({"metric": name, "better": better, "pairs": len(pairs),
                      "base": summary(base), "change": summary(change),
                      "won": won, "lost": lost, "tied": tied,
+                     "base_first": base_first, "change_first": change_first,
                      "gain": gain_holds(pairs, better)})
     return rows
 
@@ -166,16 +177,19 @@ def main():
     failed = sum(1 for b, c in results if b is None or c is None)
     print("%s, %d pairs (%d with a failed run), base %s, seeds %d-%d; median [q1, q3]"
           % (args.workload, len(results), failed, sha[:12], args.seed, args.seed + args.pairs - 1))
-    print("| metric | better | base | change | change/base | won/lost/tied | gain rule |")
-    print("|---|---|---|---|---|---|---|")
+    print("| metric | better | base | change | change/base | won/lost/tied "
+          "| base first won/lost | change first won/lost | gain rule |")
+    print("|---|---|---|---|---|---|---|---|---|")
     for r in rows:
         if "base" not in r:
-            print("| %s | %s | n/a | n/a | | | no |" % (r["metric"], r["better"]))
+            print("| %s | %s | n/a | n/a | | | | | no |" % (r["metric"], r["better"]))
             continue
         ratio = r["change"][1] / r["base"][1] if r["base"][1] else float("nan")
-        print("| %s | %s | %s | %s | %.3f | %d/%d/%d | %s |"
+        print("| %s | %s | %s | %s | %.3f | %d/%d/%d | %d/%d | %d/%d | %s |"
               % (r["metric"], r["better"], fmt(r["base"]), fmt(r["change"]), ratio,
-                 r["won"], r["lost"], r["tied"], "holds" if r["gain"] else "no"))
+                 r["won"], r["lost"], r["tied"], r["base_first"][0], r["base_first"][1],
+                 r["change_first"][0], r["change_first"][1],
+                 "holds" if r["gain"] else "no"))
     for side, k in (("base", 0), ("change", 1)):
         runs = [r[k] for r in results if r[k]]
         print("%s: failed operations %d of %d" % (side, sum(r["failed"] for r in runs),

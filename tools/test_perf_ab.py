@@ -35,6 +35,13 @@ class PairTest(unittest.TestCase):
     def test_failed_side_counts_for_neither(self):
         self.assertEqual(perf_ab.tally([(None, 2.0), (1.0, None)], "higher"), (0, 0, 0))
 
+    def test_order_split_shows_an_order_effect(self):
+        # the change wins every pair where it runs second (base first) and
+        # loses every pair where it runs first
+        pairs = [(1.0, 2.0), (2.0, 1.0)] * 5
+        self.assertEqual(perf_ab.tally_by_order(pairs, "higher"), ((5, 0, 0), (0, 5, 0)))
+        self.assertEqual(perf_ab.tally(pairs, "higher"), (5, 5, 0))
+
 
 class GainRuleTest(unittest.TestCase):
     def test_holds_when_nine_of_ten_won_beyond_the_base_spread(self):
@@ -81,6 +88,8 @@ class ReportTest(unittest.TestCase):
         self.assertEqual(row["base"], (1.0, 1.0, 1.0))
         self.assertEqual(row["change"][1], 2.0)
         self.assertEqual((row["won"], row["lost"], row["tied"], row["pairs"]), (2, 0, 0, 3))
+        # pairs 0 and 2 ran base first, pair 1 change first; pair 2 failed
+        self.assertEqual((row["base_first"], row["change_first"]), ((1, 0, 0), (1, 0, 0)))
         self.assertFalse(row["gain"])  # 2 of 3 pairs won
 
 
