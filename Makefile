@@ -13,7 +13,7 @@ SEED    ?= 1
 PAIRS   ?= 10
 BASE    ?= HEAD
 
-.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount copyscan help
 
 all: build
 
@@ -81,6 +81,10 @@ perf-ab:
 ## make forkcount CMD="python3 perfbench/run.py --workload connector --seed 1 --seconds 8"
 forkcount:
 	python3 tools/forkcount.py -- $(CMD)
+
+## Code written twice: six-line windows repeated in src/main/scala (exit 1 if any)
+copyscan:
+	python3 tools/copyscan.py src/main/scala
 
 ## The benchmark harness's own unit tests
 perfbench-test:

@@ -78,4 +78,24 @@ object LocalFiles {
       fs.initialize(URI.create("file:///"), conf)
       fs
     } else path.getFileSystem(conf)
+
+  private val scratchDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A JVM-temp dir named `graft_<name>_…`, one per (name, data dir) and
+    * memoized, so callers sharing a JVM over two datasets never touch each
+    * other's files while re-runs over one dataset reuse (and overwrite)
+    * it. A shutdown hook deletes it with its contents.
+    */
+  private[graft] def scratchDir(name: String, dataDir: String): String =
+    scratchDirs.computeIfAbsent(s"$name:$dataDir", _ => {
+      val dir = Files.createTempDirectory(s"graft_${name}_")
+      Runtime.getRuntime.addShutdownHook(new Thread(() => {
+        def rm(f: java.io.File): Unit = {
+          Option(f.listFiles).foreach(_.foreach(rm))
+          f.delete(); ()
+        }
+        rm(dir.toFile)
+      }))
+      dir.toAbsolutePath.toString
+    })
 }

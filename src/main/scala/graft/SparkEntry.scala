@@ -371,19 +371,8 @@ object SparkEntry {
     * failure of ITS build would hand the probe a half-rewritten index).
     * Removed on exit.
     */
-  private val ivfIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfIndexDir(dataDir: String, tag: String = "persisted"): String =
-    ivfIndexDirs.computeIfAbsent(s"$tag:$dataDir", _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(dir.toFile)
-      }))
-      dir.toAbsolutePath.toString
-    })
+    LocalFiles.scratchDir(s"ivf_${tag}_index", dataDir)
 
   /** Shared SQL fragment: events with ns→µs timestamp (matches Tables.events). */
   private val evCte =
@@ -429,30 +418,39 @@ object SparkEntry {
     "alpha_words" -> "alpha_frac >= 0.8",
     "stopwords" -> "n_stopwords >= 2")
 
+  /** Shared SQL fragment: the per-language stopword hit counts — the `t`
+    * (lowercased tokens) and `h` (`hits_<lang>` per language, n_tokens)
+    * CTEs, the hit column list and their greatest — one definition feeds
+    * the lang-ID chain below and code_switch.
+    */
+  private val langHitCtes: String = {
+    val hitExprs = graft.ops.TextAnalysis.langStopwords.map { case (l, words) =>
+      val arr = words.map(w => s"'$w'").mkString("[", ",", "]")
+      s"CAST(len(list_filter(tok, x -> list_contains($arr, x))) AS BIGINT) AS hits_$l"
+    }.mkString(",\n        ")
+    s"""t AS (SELECT doc_id, lang, string_split(lower(text), ' ') AS tok FROM documents),
+       |h AS (SELECT doc_id, lang,
+       |        $hitExprs,
+       |        CAST(len(tok) AS BIGINT) AS n_tokens
+       |      FROM t)""".stripMargin
+  }
+  private val langHitNames: String =
+    graft.ops.TextAnalysis.langStopwords.map { case (l, _) => s"hits_$l" }.mkString(", ")
+  private val langBestHits: String = s"greatest($langHitNames)"
+
   /** Shared SQL fragment: the per-doc language-ID prediction CTE chain
     * (`pred` is the final per-doc frame) — one classifier definition feeds
     * both the lang_id oracle and the lang_confusion aggregate.
     */
   private val langIdCtes: String = {
-    val sw = graft.ops.TextAnalysis.langStopwords
-    val hitExprs = sw.map { case (l, words) =>
-      val arr = words.map(w => s"'$w'").mkString("[", ",", "]")
-      s"CAST(len(list_filter(tok, x -> list_contains($arr, x))) AS BIGINT) AS hits_$l"
-    }.mkString(",\n        ")
-    val bestExpr = sw.map { case (l, _) => s"hits_$l" }.mkString("greatest(", ", ", ")")
-    val predCases = sw.map { case (l, _) =>
+    val predCases = graft.ops.TextAnalysis.langStopwords.map { case (l, _) =>
       s"WHEN hits_$l = best_hits AND stopword_ratio > 0.04 THEN '$l'"
     }.mkString("\n            ")
-    val hitNames = sw.map { case (l, _) => s"hits_$l" }.mkString(", ")
-    s"""t AS (SELECT doc_id, lang, string_split(lower(text), ' ') AS tok FROM documents),
-       |h AS (SELECT doc_id, lang,
-       |        $hitExprs,
-       |        CAST(len(tok) AS BIGINT) AS n_tokens
-       |      FROM t),
-       |b AS (SELECT *, $bestExpr AS best_hits,
-       |        round(CAST($bestExpr AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS stopword_ratio
+    s"""$langHitCtes,
+       |b AS (SELECT *, $langBestHits AS best_hits,
+       |        round(CAST($langBestHits AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS stopword_ratio
        |      FROM h),
-       |pred AS (SELECT doc_id, lang AS lang_declared, $hitNames, n_tokens, best_hits,
+       |pred AS (SELECT doc_id, lang AS lang_declared, $langHitNames, n_tokens, best_hits,
        |           stopword_ratio,
        |           CASE $predCases
        |                ELSE 'und' END AS lang_pred
@@ -2200,11 +2198,6 @@ object SparkEntry {
     // the primary-mask -1 trick mirrors the Spark value-masking exactly
     "code_switch" -> {
       val sw = graft.ops.TextAnalysis.langStopwords
-      val hitExprs = sw.map { case (l, words) =>
-        val arr = words.map(w => s"'$w'").mkString("[", ",", "]")
-        s"CAST(len(list_filter(tok, x -> list_contains($arr, x))) AS BIGINT) AS hits_$l"
-      }.mkString(",\n        ")
-      val bestExpr = sw.map { case (l, _) => s"hits_$l" }.mkString("greatest(", ", ", ")")
       val secExpr = sw.map { case (l, _) =>
         s"CASE WHEN primary_lang = '$l' THEN CAST(-1 AS BIGINT) ELSE hits_$l END"
       }.mkString("greatest(", ", ", ")")
@@ -2214,15 +2207,10 @@ object SparkEntry {
       val secondaryCases = sw.map { case (l, _) =>
         s"WHEN primary_lang <> '$l' AND hits_$l = secondary_hits THEN '$l'"
       }.mkString("\n            ")
-      val hitNames = sw.map { case (l, _) => s"hits_$l" }.mkString(", ")
       val minHits = graft.ops.TextAnalysis.CodeSwitchMinHits
       val minRate = graft.ops.TextAnalysis.CodeSwitchMinRate
-      s"""WITH t AS (SELECT doc_id, lang, string_split(lower(text), ' ') AS tok FROM documents),
-         |h AS (SELECT doc_id, lang,
-         |        $hitExprs,
-         |        CAST(len(tok) AS BIGINT) AS n_tokens
-         |      FROM t),
-         |b AS (SELECT *, $bestExpr AS primary_hits FROM h),
+      s"""WITH $langHitCtes,
+         |b AS (SELECT *, $langBestHits AS primary_hits FROM h),
          |p AS (SELECT *, CASE $primaryCases
          |                ELSE 'und' END AS primary_lang FROM b),
          |s AS (SELECT *, $secExpr AS secondary_hits FROM p),

@@ -246,17 +246,18 @@ private[functions] object CentroidKernel {
     }
 }
 
-/** argmax-cosine cell id; ties resolve to the HIGHER index, NaN ranks
-  * greatest — bit-compatible with greatest(struct(CosineSim, idx)).getField("idx").
+/** The shell of the cell kernels ([[NearestCentroid]], [[ProbeCellIds]]):
+  * a uniform centroid matrix (checked at construction), an
+  * array<float|double> input, and [[cells]] applied to the row's cosines
+  * against every centroid — or NULL when the vector's dimension differs
+  * from the centroids' (CosineSim's contract), never a silently wrong cell.
   */
-case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression with CodegenFallback {
+abstract class CentroidCells(rows: Seq[Seq[Double]])
+    extends UnaryExpression with CodegenFallback with Serializable {
 
-  CentroidKernel.requireUniform(centroids)
+  CentroidKernel.requireUniform(rows)
 
-  override def dataType: DataType = IntegerType
   // nullable even over a non-null child: dimension mismatch yields null
-  // (CosineSim's contract), never a silently wrong cell
   override def nullable: Boolean = true
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     CentroidKernel.checkVec(child)
@@ -264,13 +265,27 @@ case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
   // the matrix field stays a Seq so case-class equality is structural (two
   // plans with the same centroids canonicalize/CSE together); the hot loop
   // reads this array view
-  @transient private lazy val matrix: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
+  @transient private lazy val matrix: Array[Array[Double]] = rows.map(_.toArray).toArray
+
+  /** The result for one row from its cosine against each centroid. */
+  protected def cells(cos: Array[Double]): Any
 
   override def nullSafeEval(input: Any): Any = {
     val cos = CentroidKernel.cosines(input.asInstanceOf[ArrayData],
       CentroidKernel.elemIsFloat(child), matrix)
-    if (cos == null) return null // dimension mismatch: null, never a wrong cell
+    if (cos == null) null else cells(cos)
+  }
+}
+
+/** argmax-cosine cell id; ties resolve to the HIGHER index, NaN ranks
+  * greatest — bit-compatible with greatest(struct(CosineSim, idx)).getField("idx").
+  */
+case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
+    extends CentroidCells(centroids) {
+
+  override def dataType: DataType = IntegerType
+
+  override protected def cells(cos: Array[Double]): Any = {
     var best = 0
     var i = 1
     while (i < cos.length) {
@@ -340,23 +355,11 @@ case class ProjectVector(child: Expression, basis: Seq[Seq[Double]], means: Seq[
   * reverse(array_sort(struct(cos, idx))) under Spark double ordering.
   */
 case class ProbeCellIds(child: Expression, centroids: Seq[Seq[Double]], nprobe: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  CentroidKernel.requireUniform(centroids)
+    extends CentroidCells(centroids) {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  // nullable even over a non-null child: dimension mismatch yields null
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    CentroidKernel.checkVec(child)
 
-  @transient private lazy val matrix: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override def nullSafeEval(input: Any): Any = {
-    val cos = CentroidKernel.cosines(input.asInstanceOf[ArrayData],
-      CentroidKernel.elemIsFloat(child), matrix)
-    if (cos == null) return null // dimension mismatch: null, never wrong cells
+  override protected def cells(cos: Array[Double]): Any = {
     val idx = Array.range(0, cos.length)
     val ordered = idx.sortWith { (a, b) =>
       val c = java.lang.Double.compare(cos(a), cos(b))
@@ -444,23 +447,34 @@ private[functions] object Md5Prefix {
     ((d(0) & 0xffL) << 16) | ((d(1) & 0xffL) << 8) | (d(2) & 0xffL)
 }
 
-/** Whitespace tokens hashed in ONE pass per row, duplicates kept (unlike
-  * ShingleHashes, which dedups for set semantics), each to its 60-bit md5
-  * prefix — ('0x'||substr(md5(x),1,15))::BIGINT in DuckDB. Replaces the
-  * interpreted per-token transform lambda in the SimHash path.
+/** The shell of every unary string kernel below: a string input (the type
+  * check's failure names the kernel's SQL name, `fnName`), a null result
+  * exactly for a null input, and one interpreted call per row
+  * (CodegenFallback per the D1 convention; the projection around it stays
+  * whole-stage-codegen'd).
   */
-case class TokenHashes(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+abstract class StringKernel(fnName: String)
+    extends UnaryExpression with CodegenFallback with Serializable {
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
       case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"token_hashes expects string, got $t")
+        s"$fnName expects string, got $t")
     }
+}
+
+/** Whitespace tokens hashed in ONE pass per row, duplicates kept (unlike
+  * ShingleHashes, which dedups for set semantics), each to its 60-bit md5
+  * prefix — ('0x'||substr(md5(x),1,15))::BIGINT in DuckDB. Replaces the
+  * interpreted per-token transform lambda in the SimHash path.
+  */
+case class TokenHashes(child: Expression)
+    extends StringKernel("token_hashes") {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toString.split(" ", -1)
@@ -860,19 +874,11 @@ case class QuantizeVector(child: Expression)
   * single loop over tokens probing per-language hash sets.
   */
 case class StopwordHits(child: Expression, stopwords: Seq[Seq[String]])
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("stopword_hits") {
 
   override def dataType: DataType = StructType(Seq(
     StructField("hits", ArrayType(LongType, containsNull = false)),
     StructField("n_tokens", LongType)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"stopword_hits expects string, got $t")
-    }
 
   @transient private lazy val sets: Array[java.util.HashSet[String]] =
     stopwords.map { ws =>
@@ -920,19 +926,11 @@ case class StopwordHits(child: Expression, stopwords: Seq[Seq[String]])
   * parity is preserved.
   */
 case class TokenCounts(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("token_counts") {
 
   override def dataType: DataType = StructType(Seq(
     StructField("ws_tokens", LongType, nullable = false),
     StructField("bpeish_tokens", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"token_counts expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
@@ -976,19 +974,11 @@ case class TokenCounts(child: Expression)
   * around a tight loop; the surrounding projection stays codegen'd.
   */
 case class TermFrequencies(child: Expression, terms: Seq[String])
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("term_frequencies") {
 
   override def dataType: DataType = StructType(Seq(
     StructField("dl", LongType, nullable = false),
     StructField("tf", ArrayType(LongType, containsNull = false), nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"term_frequencies expects string, got $t")
-    }
 
   @transient private lazy val termArr: Array[String] = terms.toArray
 
@@ -1040,20 +1030,12 @@ case class TermFrequencies(child: Expression, terms: Seq[String])
   * loop; the surrounding projection stays codegen'd.
   */
 case class TokenEntropyStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("token_entropy_stats") {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false),
     StructField("s", DoubleType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"token_entropy_stats expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toString.split(" ", -1)
@@ -1122,21 +1104,13 @@ private[functions] object NgramTally {
   * the D1 convention.
   */
 case class NgramCounts(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("ngram_counts") {
 
   require(n >= 1, "ngram_counts: n must be >= 1")
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("g", StringType, nullable = false),
     StructField("c", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ngram_counts expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val m = NgramTally.counts(NgramTally.tokens(input), n)
@@ -1172,7 +1146,7 @@ case class NgramCounts(child: Expression, n: Int)
   * CodegenFallback per the D1 convention.
   */
 case class NgramMultiCounts(child: Expression, maxN: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("ngram_multi_counts") {
 
   require(maxN >= 1, "ngram_multi_counts: maxN must be >= 1")
 
@@ -1180,14 +1154,6 @@ case class NgramMultiCounts(child: Expression, maxN: Int)
     StructField("n", IntegerType, nullable = false),
     StructField("g", StringType, nullable = false),
     StructField("c", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ngram_multi_counts expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val toks = NgramTally.tokens(input)
@@ -1304,7 +1270,7 @@ case class PqAdcScore(code: Expression, dotLut: Expression,
   * formulation is pinned in FunctionsSpec.
   */
 case class GopherStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("gopher_stats") {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
@@ -1316,14 +1282,6 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
     StructField("n_ell_end_lines", LongType, nullable = false),
     StructField("n_hash", LongType, nullable = false),
     StructField("n_ellipsis", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gopher_stats expects string, got $t")
-    }
 
   @transient private lazy val stopArr: Array[String] =
     stopwords.map(_.toLowerCase(java.util.Locale.ROOT)).toArray
@@ -1409,6 +1367,23 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
     copy(child = newChild)
 }
 
+/** The token k-shingles of [[ShingleHashes]] and [[PositionalShingleHashes]]:
+  * over n split(text, ' ') tokens there are max(n − k + 1, 1) of them (a
+  * doc shorter than k is its one whole-text shingle), shingle i being
+  * tokens i until min(i + k, n) joined by single spaces.
+  */
+private[functions] object Shingles {
+  def count(n: Int, k: Int): Int = math.max(n - k + 1, 1)
+
+  def at(toks: Array[String], i: Int, k: Int): String = {
+    val end = math.min(i + k, toks.length)
+    val sb = new java.lang.StringBuilder()
+    var j = i
+    while (j < end) { if (j > i) sb.append(' '); sb.append(toks(j)); j += 1 }
+    sb.toString
+  }
+}
+
 /** Distinct token k-shingles of a text, hashed, in ONE pass per row:
   * tokenize on single spaces (split(text, ' ') semantics, trailing empties
   * kept), emit max(n-k+1, 1) shingles joined by ' ', de-duplicate
@@ -1425,34 +1400,18 @@ case class GopherStats(child: Expression, stopwords: Seq[String])
   * surrounding projection stays whole-stage-codegen'd.
   */
 case class ShingleHashes(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("shingle_hashes") {
 
   override def dataType: DataType = StructType(Seq(
     StructField("h24", ArrayType(LongType, containsNull = false)),
     StructField("hv", ArrayType(LongType, containsNull = false))))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingle_hashes expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val n = toks.length
-    val m = math.max(n - k + 1, 1)
+    val m = Shingles.count(toks.length, k)
     val seen = new java.util.LinkedHashSet[String]()
     var i = 0
-    while (i < m) {
-      val end = math.min(i + k, n)
-      val sb = new java.lang.StringBuilder()
-      var j = i
-      while (j < end) { if (j > i) sb.append(' '); sb.append(toks(j)); j += 1 }
-      seen.add(sb.toString)
-      i += 1
-    }
+    while (i < m) { seen.add(Shingles.at(toks, i, k)); i += 1 }
     val h24 = new Array[Long](seen.size)
     val hv = new Array[Long](seen.size)
     val it = seen.iterator()
@@ -1482,30 +1441,17 @@ case class ShingleHashes(child: Expression, k: Int)
   * chars of md5 as a 60-bit long.
   */
 case class PositionalShingleHashes(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("positional_shingle_hashes") {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"positional_shingle_hashes expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val n = toks.length
-    val m = math.max(n - k + 1, 1)
+    val m = Shingles.count(toks.length, k)
     val hv = new Array[Long](m)
     var i = 0
     while (i < m) {
-      val end = math.min(i + k, n)
-      val sb = new java.lang.StringBuilder()
-      var j = i
-      while (j < end) { if (j > i) sb.append(' '); sb.append(toks(j)); j += 1 }
-      val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val bytes = Shingles.at(toks, i, k).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       hv(i) = Md5Prefix.hash60(Md5Prefix.digest(bytes))
       i += 1
     }
@@ -1527,17 +1473,9 @@ case class PositionalShingleHashes(child: Expression, k: Int)
   * oracle.
   */
 case class DeflatedSize(child: Expression, level: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends StringKernel("deflated_size") {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"deflated_size expects string, got $t")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes

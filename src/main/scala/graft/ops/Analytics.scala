@@ -864,23 +864,7 @@ object Analytics {
       .groupBy("l_orderkey").agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
       .persist() // feeds order count, part frequencies, and the pair explode
     val nOrders = basketArr.agg(count(lit(1)).as("n_orders"))
-    val freq = basketArr.select(explode(col("parts")).as("l_partkey"))
-      .groupBy("l_partkey").agg(count(lit(1)).as("c"))
-    val pairs = basketArr
-      .select(posexplode(col("parts")).as(Seq("i", "p1")), col("parts"))
-      .select(col("p1"),
-        explode(expr("slice(parts, i + 2, size(parts))")).as("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("pair_cnt"))
-      .where(col("pair_cnt") >= minSupport)
-    pairs
-      .join(freq.select(col("l_partkey").as("p1"), col("c").as("c1")), Seq("p1"))
-      .join(freq.select(col("l_partkey").as("p2"), col("c").as("c2")), Seq("p2"))
-      .crossJoin(broadcast(nOrders))
-      .select(col("p1"), col("p2"), col("pair_cnt"),
-        round((col("pair_cnt").cast("double") * col("n_orders").cast("double")) /
-          (col("c1").cast("double") * col("c2").cast("double")), 6).as("lift"))
-      .orderBy(col("pair_cnt").desc, col("lift").desc, col("p1"), col("p2"))
-      .limit(k)
+    basketLift(basketArr, nOrders, minSupport, k)
   }
 
   /** C29b — basket affinity over the TOP-`topParts` catalog head (r17,
@@ -936,10 +920,23 @@ object Analytics {
     val basketArr = li.where(col("l_partkey").isInCollection(top))
       .groupBy("l_orderkey").agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
       .persist() // feeds head-part frequencies and the pair explode
+    basketLift(basketArr, nOrders, minSupport, k)
+  }
+
+  /** The pair-explode, frequency-join and lift tail of [[basketAffinity]]
+    * and [[basketAffinityTop]], over a persisted (l_orderkey, parts) frame
+    * of sorted distinct-part arrays and a one-row `n_orders` frame: part
+    * frequencies are a small explode+agg of the baskets; ordered pairs
+    * explode map-side (p2 ranges over the strictly-later slice of the
+    * sorted array, so p1 < p2 and each unordered pair appears once), are
+    * counted and cut at `minSupport`; the top `k` by support then lift.
+    */
+  private def basketLift(basketArr: DataFrame, nOrders: DataFrame,
+                         minSupport: Int, k: Int): DataFrame = {
     val freq = basketArr.select(explode(col("parts")).as("l_partkey"))
       .groupBy("l_partkey").agg(count(lit(1)).as("c"))
     val pairs = basketArr
-      .where(size(col("parts")) >= 2)
+      .where(size(col("parts")) >= 2) // a one-part basket has no pair
       .select(posexplode(col("parts")).as(Seq("i", "p1")), col("parts"))
       .select(col("p1"),
         explode(expr("slice(parts, i + 2, size(parts))")).as("p2"))

@@ -584,9 +584,7 @@ object Corpus {
   def cdcChunksOf(docs: DataFrame, k: Int, divisor: Int): DataFrame = {
     require(k >= 1, "gram width must be positive")
     require(divisor >= 2, "divisor must be at least 2 (1 cuts after every token)")
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
+    Dedup.tokenGrams(docs, k)
       .withColumn("n", size(col("tok")).cast("long"))
       // cut after token p (1-based) ⇔ the k-gram ENDING at p (= ph index
       // p−k+1) hashes to 0 mod divisor, for p in [k, n−1]. The n > k guard
@@ -817,8 +815,9 @@ object Corpus {
     * excluded (B13's deduped clamped shingle for them has no position to
     * report).
     *
-    * Scale shape: one positional-hash pass persisted for its two
-    * consumers (eval-set build + corpus probe — the B34/B67 discipline);
+    * Scale shape: this is [[contaminationSpansAgainst]] with the
+    * `doc_id % 50 == 0` slice as the eval docs and the rest as the corpus,
+    * so each doc is hashed once, on its own side, and nothing is cached;
     * the eval set is a distinct-collapsed hash join (eval splits are
     * small relative to the corpus — AQE broadcasts); runs are one per-doc
     * window over MATCHED positions only (leak-cardinality, not corpus-
@@ -826,15 +825,9 @@ object Corpus {
     */
   def contaminationSpans(spark: SparkSession, dir: String,
                          shingleK: Int = 8): DataFrame = {
-    val k = shingleK
-    val st = Tables.documents(spark, dir)
-      .where(size(split(col("text"), " ")) >= k)
-      .select(col("doc_id"),
-        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
-      .persist()
-    val eval_ = st.where(col("doc_id") % 50 === 0).select("h").distinct()
-    spansOver(st.where(col("doc_id") % 50 =!= 0), eval_, k)
+    val docs = Tables.documents(spark, dir)
+    spansOver(docs.where(col("doc_id") % 50 =!= 0), docs.where(col("doc_id") % 50 === 0),
+      shingleK)
   }
 
   /** B13c against a REAL benchmark table (r15, VERDICT r14 #6): the
@@ -850,15 +843,8 @@ object Corpus {
     */
   def contaminationSpansAgainst(spark: SparkSession, dir: String,
                                 evalDocs: DataFrame,
-                                shingleK: Int = 8): DataFrame = {
-    val k = shingleK
-    val st = Tables.documents(spark, dir)
-      .where(size(split(col("text"), " ")) >= k)
-      .select(col("doc_id"),
-        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
-    spansOver(st, evalGramSet(evalDocs, k), k)
-  }
+                                shingleK: Int = 8): DataFrame =
+    spansOver(Tables.documents(spark, dir), evalDocs, shingleK)
 
   /** The distinct k-gram hash set of an external eval table (`text`
     * column; sub-k rows excluded — no full k-gram exists in them).
@@ -869,27 +855,16 @@ object Corpus {
       .select(explode(VectorExpressions.positionalShingleHashes(col("text"), k)).as("h"))
       .distinct()
 
-  /** The shared B13c island pass: corpus positional-gram starts joined
-    * against an eval gram set, merged into maximal leaked token intervals
-    * (break at start gap > k — disjoint spans, ≥ 1 clean token between).
+  /** The one B13c pass: the corpus docs' positional k-gram starts joined
+    * against the eval docs' gram set, merged into maximal leaked token
+    * intervals by [[Dedup.islands]]. Sub-k docs carry no full k-gram on
+    * either side and are excluded.
     */
-  private def spansOver(corpusSt: DataFrame, evalHashes: DataFrame,
-                        k: Int): DataFrame = {
-    val matched = corpusSt.join(evalHashes, Seq("h"))
+  private def spansOver(corpus: DataFrame, evalDocs: DataFrame, k: Int): DataFrame = {
+    val matched = Dedup.positionalGrams(corpus.where(size(split(col("text"), " ")) >= k), k)
+      .join(evalGramSet(evalDocs, k), Seq("h"))
       .select(col("doc_id"), col("pos"))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    matched
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) > k, 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(w))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("pos")).cast("long").as("span_start"),
-        (max(col("pos")) + k - 1).cast("long").as("span_end"),
-        count(lit(1)).as("n_grams"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1L).as("span_len"),
-        col("n_grams"))
-      .orderBy("doc_id", "span_start")
+    Dedup.islands(matched, Seq("doc_id"), k, count(lit(1)).as("n_grams"))
   }
 
   /** B13d — SURGICAL decontamination: remove from every corpus document
@@ -903,23 +878,18 @@ object Corpus {
     * Shapes: B34's coverage machinery with the dup set swapped for the
     * eval-gram set — token p is covered ⟺ a leaked gram starts in
     * [p−L+1, p] (one per-doc dense-position ROWS window), reassembly a
-    * per-doc ordered collect. The doc-level (tok, ph) frame persists for
-    * its two consumers (eval-set build + corpus flag join). Sub-k docs
+    * per-doc ordered collect. Like [[contaminationSpans]], this is the
+    * `…Against` seam with the `doc_id % 50 == 0` slice as the eval docs,
+    * each doc hashed once on its own side. Sub-k docs
     * pass through untrimmed on the corpus side and contribute no grams on
     * the eval side (consistent with [[contaminationSpans]]); eval rows are
     * not corpus members and do not appear in the output (B13b's rule).
     */
   def decontaminatedSpans(spark: SparkSession, dir: String,
                           shingleK: Int = 8): DataFrame = {
-    val k = shingleK
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
-      .withColumn("n", size(col("tok")))
-      .persist()
-    val ev = base.where(col("doc_id") % 50 === 0 && col("n") >= k)
-      .select(explode(col("ph")).as("h")).distinct()
-    trimOver(base.where(col("doc_id") % 50 =!= 0), ev, k)
+    val docs = Tables.documents(spark, dir)
+    trimOver(docs.where(col("doc_id") % 50 =!= 0), docs.where(col("doc_id") % 50 === 0),
+      shingleK)
   }
 
   /** B13d against a REAL benchmark table (r15, VERDICT r14 #6) — the
@@ -930,46 +900,16 @@ object Corpus {
     */
   def decontaminatedSpansAgainst(spark: SparkSession, dir: String,
                                  evalDocs: DataFrame,
-                                 shingleK: Int = 8): DataFrame = {
-    val k = shingleK
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
-      .withColumn("n", size(col("tok")))
-    trimOver(base, evalGramSet(evalDocs, k), k)
-  }
+                                 shingleK: Int = 8): DataFrame =
+    trimOver(Tables.documents(spark, dir), evalDocs, shingleK)
 
-  /** The shared B13d trim pass over a (doc_id, tok, ph, n) corpus frame
-    * and an eval gram-hash set: B34's coverage window with the dup set
-    * swapped for the leaked set; sub-k docs pass through untrimmed.
+  /** The one B13d pass: [[Dedup.coverageTrim]] over the corpus docs with
+    * the eval docs' gram set as the marked set; sub-k corpus docs pass
+    * through untrimmed (their clamped gram is not a full k-gram).
     */
-  private def trimOver(base: DataFrame, evalHashes: DataFrame,
-                       k: Int): DataFrame = {
-    val ev = evalHashes.withColumn("is_leak", lit(1))
-    // arrays_zip pads the shorter hash array with nulls (tail positions
-    // where no gram starts); a sub-k doc's clamped whole-text gram is
-    // nulled out too — it is not a full k-gram and must not match
-    val corpusTok = base
-      .select(col("doc_id"), col("n"),
-        posexplode(arrays_zip(col("tok"), col("ph"))).as(Seq("p0", "z")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("z.tok").as("token"),
-        when(col("n") >= k, col("z.ph")).otherwise(lit(null)).as("h"))
-    val flagged = corpusTok.join(ev, Seq("h"), "left_outer")
-      .select(col("doc_id"), col("pos"), col("token"),
-        coalesce(col("is_leak"), lit(0)).as("d"))
-    val w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(k - 1), 0)
-    val full = Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    flagged
-      .withColumn("covered", max(col("d")).over(w))
-      .withColumn("n_tokens", count(lit(1)).over(full))
-      .withColumn("n_removed", sum(col("covered")).over(full).cast("long"))
-      .withColumn("clean_text", concat_ws(" ",
-        collect_list(when(col("covered") === 0, col("token"))).over(full)))
-      .where(col("pos") === 1)
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"), col("clean_text"))
-      .orderBy("doc_id")
-  }
+  private def trimOver(corpus: DataFrame, evalDocs: DataFrame, k: Int): DataFrame =
+    Dedup.coverageTrim(Dedup.tokenGrams(corpus, k), evalGramSet(evalDocs, k), k,
+      "clean_text", shortGramCounts = false)
 
   /** B51 — cross-source overlap matrix: for every source pair, how many
     * distinct 8-gram shingles they share, plus the Jaccard of their shingle
@@ -995,12 +935,7 @@ object Corpus {
     */
   def sourceOverlap(spark: SparkSession, dir: String, shingleK: Int = 8,
                     maxSources: Int = 64): DataFrame = {
-    val sh = Tables.documents(spark, dir)
-      .select(col("source"),
-        explode(VectorExpressions.shingleHashes(col("text"), shingleK)
-          .getField("hv")).as("h"))
-      .distinct()
-      .persist()
+    val sh = sourceShingles(spark, dir, shingleK)
     val capped = sh.groupBy("h").agg(count(lit(1)).as("nsrc"))
       .where(col("nsrc") <= maxSources).select("h")
     // Persisted (r19, guide §2.4/§5): the capped universe feeds THREE
@@ -1025,6 +960,18 @@ object Corpus {
       .orderBy("source_a", "source_b")
   }
 
+  /** The distinct (source, shingle-hash) universe of [[sourceOverlap]]
+    * and [[noveltyCurve]], persisted for its several consumers (released
+    * by [[graft.Caches]].clear).
+    */
+  private def sourceShingles(spark: SparkSession, dir: String, shingleK: Int): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("source"),
+        explode(VectorExpressions.shingleHashes(col("text"), shingleK)
+          .getField("hv")).as("h"))
+      .distinct()
+      .persist()
+
   /** B66 — corpus-accumulation novelty curve: sources in deterministic
     * acquisition order (ascending name — the stable proxy both engines
     * agree on), and for each source how many of its distinct 8-gram
@@ -1046,12 +993,7 @@ object Corpus {
     * shuffle text: the universe carries (source, 64-bit hash) only.
     */
   def noveltyCurve(spark: SparkSession, dir: String, shingleK: Int = 8): DataFrame = {
-    val sh = Tables.documents(spark, dir)
-      .select(col("source"),
-        explode(VectorExpressions.shingleHashes(col("text"), shingleK)
-          .getField("hv")).as("h"))
-      .distinct()
-      .persist()
+    val sh = sourceShingles(spark, dir, shingleK)
     val novel = sh.groupBy("h").agg(min(col("source")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("novel_shingles"))
     val out = sh.groupBy("source").agg(count(lit(1)).as("total_shingles"))

@@ -505,28 +505,10 @@ object Curation {
       .select(col("doc_id"), col("quality_score"))
     val addK = Relevance.DefaultAddK
     val minCount = Relevance.DefaultMinCount
-    // persisted UNEXPLODED per-doc gram arrays, LAZILY filled — see
-    // lmPerplexity's measured argument (an eager blocking fill lost at
-    // both sf0.1 and 50×). Released by graft.Caches.clear.
-    val gramArrs = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        graft.functions.VectorExpressions.ngramMultiCounts(col("text"), 2).as("garr"))
-      .persist()
-    def ordRows(n: Int): DataFrame = gramArrs
-      .select(col("doc_id"), explode(col("garr")).as("g"))
-      .where(col("g.n") === n)
-      .select(col("doc_id"), col("g.g").as("gram"), col("g.c").as("cnt"))
-    val perDoc = ordRows(2)
-      .select(col("doc_id"), col("gram").as("bigram"), col("cnt"))
-    val bi = perDoc.groupBy("bigram").agg(sum(col("cnt")).as("cbi"))
-      .withColumn("w1", substring_index(col("bigram"), " ", 1))
-    val starts = bi.groupBy("w1").agg(sum(col("cbi")).as("cw"))
-    val vocab = ordRows(1).agg(count_distinct(col("gram")).as("vocab"))
-    val model = bi.join(starts, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      .select(col("bigram"), (col("cbi") >= minCount).as("is_common"),
-        log((col("cbi") + lit(addK)) / (col("cw") + lit(addK) * col("vocab"))).as("lp"))
-    val scored = perDoc.join(model, Seq("bigram"))
+    val (perDoc, model) = Relevance.bigramModel(Tables.documents(spark, dir), addK)
+    val scored = perDoc
+      .join(model.select(col("bigram"), (col("cbi") >= minCount).as("is_common"), col("lp")),
+        Seq("bigram"))
       .groupBy("doc_id")
       .agg(sum(col("cnt")).as("n_bigrams"),
         sum(when(col("is_common"), col("cnt")).otherwise(0L)).as("n_common"),

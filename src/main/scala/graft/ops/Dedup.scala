@@ -99,8 +99,15 @@ object Dedup {
     * same hash, AQE-skew-splittable. Reassembly is one groupBy(doc_id)
     * whose collect_list is bounded by the document's own passage count.
     */
-  def passageDedup(spark: SparkSession, dir: String, window: Int = 32): DataFrame = {
-    val ch = Corpus.chunksOf(Tables.documents(spark, dir), window, overlap = 0)
+  def passageDedup(spark: SparkSession, dir: String, window: Int = 32): DataFrame =
+    keepFirstChunks(Corpus.chunksOf(Tables.documents(spark, dir), window, overlap = 0))
+
+  /** Keep each distinct chunk's first occurrence (by doc_id, then chunk_id)
+    * and reassemble each document's survivors in chunk order: the body of
+    * [[passageDedup]] and [[cdcPassageDedup]] after chunking.
+    */
+  private def keepFirstChunks(chunks: DataFrame): DataFrame = {
+    val ch = chunks
       .select(col("doc_id"), col("chunk_id"), col("chunk_text"),
         md5(col("chunk_text")).as("h"))
     val firsts = ch.groupBy("h")
@@ -135,27 +142,8 @@ object Dedup {
     * groupBy on the chunk hash, reassembly is per-doc bounded.
     */
   def cdcPassageDedup(spark: SparkSession, dir: String,
-                      k: Int = 3, divisor: Int = 16): DataFrame = {
-    val ch = Corpus.cdcChunksOf(Tables.documents(spark, dir), k, divisor)
-      .select(col("doc_id"), col("chunk_id"), col("chunk_text"),
-        md5(col("chunk_text")).as("h"))
-    val firsts = ch.groupBy("h")
-      .agg(min(struct(col("doc_id"), col("chunk_id"))).as("m"))
-    ch.join(firsts, Seq("h"))
-      .withColumn("is_first",
-        col("m.doc_id") === col("doc_id") && col("m.chunk_id") === col("chunk_id"))
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("n_chunks"),
-        sum(when(col("is_first"), 1L).otherwise(0L)).as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when(col("is_first"),
-              struct(col("chunk_id"), col("chunk_text"))))),
-            x => x.getField("chunk_text")),
-          " ").as("kept_text"))
-      .orderBy("doc_id")
-  }
+                      k: Int = 3, divisor: Int = 16): DataFrame =
+    keepFirstChunks(Corpus.cdcChunksOf(Tables.documents(spark, dir), k, divisor))
 
   /** B49 — cross-snapshot corpus diff: classify every document of a NEW
     * crawl against the PREVIOUS snapshot — `exact_dup` (byte-identical text
@@ -343,32 +331,53 @@ object Dedup {
     */
   def dupSpanTrim(spark: SparkSession, dir: String,
                   k: Int = 5, minDup: Long = 2): DataFrame = {
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tok"),
-        VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
+    // Lazily persisted — feeds the dup count and the coverage pass, so the
+    // shingling pass runs once; released by graft.Caches.clear (see Caches).
+    val base = tokenGrams(Tables.documents(spark, dir), k).persist()
+    val dup = base.select(explode(col("ph")).as("h"))
+      .groupBy("h").agg(count(lit(1)).as("c"))
+      .where(col("c") >= minDup)
+      .select(col("h"))
+    coverageTrim(base, dup, k, "trimmed_text", shortGramCounts = true)
+  }
+
+  /** (doc_id, tok, ph): each doc's split(text, ' ') tokens beside its
+    * positional k-gram hashes — the input of [[coverageTrim]].
+    */
+  private[ops] def tokenGrams(docs: DataFrame, k: Int): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("tok"),
+      VectorExpressions.positionalShingleHashes(col("text"), k).as("ph"))
+
+  /** The one coverage-window trim (B34 [[dupSpanTrim]], B13d
+    * [[Corpus.decontaminatedSpans]]): token p of a [[tokenGrams]] doc is
+    * removed iff a k-gram of `marked` (an `h` column) starts in
+    * [p−k+1, p]; output (doc_id, n_tokens, n_removed, `textCol`).
+    * `shortGramCounts` is the sub-k rule: a doc shorter than k carries one
+    * clamped whole-text gram at pos 1, which either counts like any gram
+    * (B34: a byte-identical short doc repeated corpus-wide is duplicate
+    * material) or is nulled (B13d: it is not a full k-gram and must not
+    * match).
+    */
+  private[ops] def coverageTrim(base: DataFrame, marked: DataFrame, k: Int,
+                                textCol: String, shortGramCounts: Boolean): DataFrame = {
     // ONE explode carries both the token and the gram hash STARTING at its
     // position: arrays_zip pads the (shorter) hash array with nulls, so
     // tail positions — where no k-gram starts — surface with h = null and
     // still count as tokens. The r6 shape exploded tokens and hashes
     // SEPARATELY and re-joined them on (doc_id, pos): a second parquet
     // scan + text split AND a corpus-token-sized equi-join shuffle on both
-    // sides, all replaced here by reading the zipped row. Lazily persisted
-    // — feeds the dup count and the flag join, so the shingling pass runs
-    // once; released by graft.Caches.clear (see Caches).
-    val exploded = base
-      .select(col("doc_id"), posexplode(arrays_zip(col("tok"), col("ph"))).as(Seq("p0", "z")))
+    // sides, all replaced here by reading the zipped row.
+    val gram = if (shortGramCounts) col("z.ph") else when(col("n") >= k, col("z.ph"))
+    val tokens = base
+      .select(col("doc_id"), size(col("tok")).as("n"),
+        posexplode(arrays_zip(col("tok"), col("ph"))).as(Seq("p0", "z")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"),
-        col("z.tok").as("token"), col("z.ph").as("h"))
-      .persist()
-    val dup = exploded.where(col("h").isNotNull)
-      .groupBy("h").agg(count(lit(1)).as("c"))
-      .where(col("c") >= minDup)
-      .select(col("h"), lit(1).as("is_dup"))
+        col("z.tok").as("token"), gram.as("h"))
     // null h joins nothing → d = 0, exactly the tail-position semantics
-    val flagged = exploded.join(dup, Seq("h"), "left_outer")
+    val flagged = tokens.join(marked.withColumn("is_marked", lit(1)), Seq("h"), "left_outer")
       .select(col("doc_id"), col("pos"), col("token"),
-        coalesce(col("is_dup"), lit(0)).as("d"))
-    // token at pos is covered iff ANY duplicated gram starts in
+        coalesce(col("is_marked"), lit(0)).as("d"))
+    // token at pos is covered iff ANY marked gram starts in
     // [pos-k+1, pos]; positions are dense 1..n per doc, so a ROWS frame is
     // exact — and a doc shorter than k (single whole-text gram at pos 1)
     // falls out naturally: the frame from any pos ≤ n < k reaches back to 1
@@ -387,10 +396,10 @@ object Dedup {
       .withColumn("covered", max(col("d")).over(w))
       .withColumn("n_tokens", count(lit(1)).over(full))
       .withColumn("n_removed", sum(col("covered")).over(full).cast("long"))
-      .withColumn("trimmed_text", concat_ws(" ",
+      .withColumn(textCol, concat_ws(" ",
         collect_list(when(col("covered") === 0, col("token"))).over(full)))
       .where(col("pos") === 1)
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"), col("trimmed_text"))
+      .select(col("doc_id"), col("n_tokens"), col("n_removed"), col(textCol))
       .orderBy("doc_id")
   }
 
@@ -438,31 +447,17 @@ object Dedup {
     * Docs shorter than `minLen` are excluded up front: a ≥L-token repeat
     * cannot exist in them (a fully-duplicated short doc is B1's job), and
     * their clamped whole-text gram would otherwise mint a phantom span.
-    * The run grouping key (pos − row_number) rides the SAME doc_id
-    * exchange as the window (hash partitioning on doc_id satisfies the
-    * (doc_id, grp) clustering), so spans add no shuffle of their own.
+    * The islands are [[islands]]' (the B13c/B4b grouping): the island id
+    * rides the SAME doc_id exchange as the window (hash partitioning on
+    * doc_id satisfies the (doc_id, grp) clustering), so spans add no
+    * shuffle of their own.
     */
   def exactSubstrSpans(spark: SparkSession, dir: String,
                        minLen: Int = 20, minDup: Long = 2): DataFrame = {
     val st = dupGramStarts(spark, dir, minLen, minDup)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    // brk: coverage island break (gap > L ⟹ ≥1 clean token between);
-    // runBrk: strict-run break (any gap, incl. the island boundary) —
-    // both lags ride the ONE (doc_id, pos) window sort, and the groupBy
-    // below rides the same doc_id exchange (no shuffle of its own).
-    st.withColumn("gap", col("pos") - lag(col("pos"), 1).over(w))
-      .withColumn("brk", when(col("gap") > minLen, 1).otherwise(0))
-      .withColumn("runBrk",
-        when(col("gap").isNull || col("gap") > 1, 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(w))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("pos")).cast("long").as("span_start"),
-        (max(col("pos")) + lit(minLen) - 1).cast("long").as("span_end"),
-        sum(col("runBrk")).cast("long").as("n_runs"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1L).as("span_len"),
-        col("n_runs"))
-      .orderBy("doc_id", "span_start")
+    // runs: strict-run breaks (any gap > 1, incl. the island boundary)
+    islands(st, Seq("doc_id"), minLen,
+      sum(when(col("gap").isNull || col("gap") > 1, 1).otherwise(0)).cast("long").as("n_runs"))
   }
 
   /** The duplicated-L-gram start positions feeding [[exactSubstrSpans]] and
@@ -471,21 +466,52 @@ object Dedup {
     */
   private def dupGramStarts(spark: SparkSession, dir: String,
                             minLen: Int, minDup: Long): DataFrame = {
-    val base = Tables.documents(spark, dir)
-      .where(size(split(col("text"), " ")) >= minLen)
-      .select(col("doc_id"),
-        VectorExpressions.positionalShingleHashes(col("text"), minLen).as("ph"))
-    // persisted for the same reason as dupSpanTrim's exploded frame: the
+    // persisted for the same reason as dupSpanTrim's frame: the
     // start positions feed BOTH the dup-set groupBy and the probe join,
     // and at L=20 the positional hashing is O(L) bytes of md5 per token —
     // the one pass worth sharing. Released by graft.Caches.clear.
-    val st = base
-      .select(col("doc_id"), posexplode(col("ph")).as(Seq("p0", "h")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
+    val st = positionalGrams(Tables.documents(spark, dir)
+      .where(size(split(col("text"), " ")) >= minLen), minLen)
       .persist()
     val dup = st.groupBy("h").agg(count(lit(1)).as("c"))
       .where(col("c") >= minDup).select(col("h"))
     st.join(dup, Seq("h")).select(col("doc_id"), col("pos"))
+  }
+
+  /** (doc_id, `carry`…, pos, h): one row per position-aligned k-gram hash,
+    * pos 1-based — the positional frame every span operator reads. A doc
+    * shorter than k yields its one clamped whole-text gram at pos 1;
+    * callers that need full k-grams filter such docs out first.
+    */
+  private[ops] def positionalGrams(docs: DataFrame, k: Int, carry: String*): DataFrame = {
+    val kept = col("doc_id") +: carry.map(col)
+    docs.select(kept :+ posexplode(VectorExpressions.positionalShingleHashes(col("text"), k))
+        .as(Seq("p0", "h")): _*)
+      .select(kept ++ Seq((col("p0") + 1).as("pos"), col("h")): _*)
+  }
+
+  /** The one span-island grouping (B13c, B4b, B67): within each `keys`
+    * group, gram starts (`pos`) merge into one island while their k-token
+    * coverage overlaps or abuts — a break needs a start gap > k, so islands
+    * are disjoint with ≥ 1 clean token between. One row per island:
+    * keys, span_start, span_end = last start + k − 1, span_len and
+    * `measure`, an aliased aggregate that may read `gap` (the distance to
+    * the previous start, null at the first). The gap lag and the island
+    * id ride ONE (keys, pos) window sort, and the groupBy rides the same
+    * exchange (no shuffle of its own).
+    */
+  private[ops] def islands(starts: DataFrame, keys: Seq[String], k: Int,
+                           measure: Column): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy("pos")
+    starts.withColumn("gap", col("pos") - lag(col("pos"), 1).over(w))
+      .withColumn("grp", sum(when(col("gap") > k, 1).otherwise(0)).over(w))
+      .groupBy((keys :+ "grp").map(col): _*)
+      .agg(min(col("pos")).cast("long").as("span_start"),
+        (max(col("pos")) + k - 1).cast("long").as("span_end"),
+        (max(col("pos")) - min(col("pos")) + k).cast("long").as("span_len"),
+        measure)
+      .drop("grp")
+      .orderBy((keys :+ "span_start").map(col): _*)
   }
 
   /** B67b — trim every maximal ≥`minLen`-token corpus-repeated substring
@@ -811,11 +837,9 @@ object Dedup {
     val a = stats.where(col("bucket_n") <= maxBlock || col("id") === col("rep_id"))
       .select(col("source"), col("len_bucket"), col("id").as("id_a"), col("sh").as("sh_a"))
     val b = stats.select(col("source"), col("len_bucket"), col("id").as("id_b"), col("sh").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(col("sh_a")).cast("double") + size(col("sh_b")).cast("double") - inter
     a.join(b, Seq("source", "len_bucket"))
       .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), round(inter / union, 6).as("jaccard"))
+      .select(col("id_a"), col("id_b"), exactJaccard.as("jaccard"))
       .where(col("jaccard") >= 0.05)
       .orderBy("id_a", "id_b")
   }
@@ -859,23 +883,7 @@ object Dedup {
   def jaccardPrefixPairs(spark: SparkSession, dir: String, shingleK: Int = 5,
                          minJaccard: Double = 0.5): DataFrame = {
     val t = lit(minJaccard).cast("decimal(9,6)")
-    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK)
-      .select(col("doc_id"), col("hs.hv").as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist()
-    // Every join below meets two corpus-scale sides (the exploded shingle
-    // frame, the distinct-shingle df table, the array-carrying signature
-    // table). Catalyst's static estimates under explode/window/persist read
-    // small enough to pick BROADCAST builds that OOM at 50x (measured) —
-    // the merge hints pin them to sort-merge, the only strategy whose
-    // memory is bounded at any scale.
-    val ex = hashed.select(col("doc_id"), size(col("sh")).as("n"),
-      explode(col("sh")).as("h"))
-    val dfTbl = ex.groupBy("h").agg(count(lit(1)).as("df"))
-    val prefix = ex.hint("merge").join(dfTbl.hint("merge"), Seq("h"))
-      .withColumn("rnk",
-        row_number().over(Window.partitionBy("doc_id").orderBy("df", "h")))
-      .where(col("rnk") <= col("n") - ceil(t * col("n")) + 1)
+    val (hashed, _, prefix) = rarestFirstPrefix(spark, dir, shingleK, t)
     // Both candidate-join sides are corpus-scale; Catalyst's static size
     // estimate under the window filter reads small enough to BROADCAST
     // one, which OOMs at 50x (measured) — the merge hint pins the join to
@@ -889,13 +897,46 @@ object Dedup {
       .select("id_a", "id_b").distinct()
     val a = hashed.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = hashed.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(col("sh_a")).cast("double") + size(col("sh_b")).cast("double") - inter
     cands.join(a.hint("merge"), Seq("id_a")).join(b.hint("merge"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), round(inter / union, 6).as("jaccard"))
+      .select(col("id_a"), col("id_b"), exactJaccard.as("jaccard"))
       .where(col("jaccard") >= minJaccard)
       .orderBy("id_a", "id_b")
   }
+
+  /** The rarest-first prefix filter of [[jaccardPrefixPairs]] and
+    * [[containmentPrefixPairs]]: each doc's non-empty shingle-hash set
+    * (doc_id, sh — persisted), its exploded (doc_id, n, h) rows, and its
+    * prefix — the first n − ⌈t·n⌉ + 1 hashes in ascending (df, h) order,
+    * `t` a decimal threshold so the prefix length is integer-exact.
+    */
+  private def rarestFirstPrefix(spark: SparkSession, dir: String, shingleK: Int,
+                                t: Column): (DataFrame, DataFrame, DataFrame) = {
+    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK)
+      .select(col("doc_id"), col("hs.hv").as("sh"))
+      .where(size(col("sh")) > 0)
+      .persist()
+    // Every join in both operators meets two corpus-scale sides (the
+    // exploded shingle frame, the distinct-shingle df table, the
+    // array-carrying signature table). Catalyst's static estimates under
+    // explode/window/persist read small enough to pick BROADCAST builds
+    // that OOM at 50x (measured) — the merge hints pin them to sort-merge,
+    // the only strategy whose memory is bounded at any scale.
+    val ex = hashed.select(col("doc_id"), size(col("sh")).as("n"),
+      explode(col("sh")).as("h"))
+    val dfTbl = ex.groupBy("h").agg(count(lit(1)).as("df"))
+    val prefix = ex.hint("merge").join(dfTbl.hint("merge"), Seq("h"))
+      .withColumn("rnk",
+        row_number().over(Window.partitionBy("doc_id").orderBy("df", "h")))
+      .where(col("rnk") <= col("n") - ceil(t * col("n")) + 1)
+    (hashed, ex, prefix)
+  }
+
+  /** |sh_a ∩ sh_b| and the exact Jaccard of the two shingle-hash sets
+    * (rounded at 6 dp) — the verify every n-gram Jaccard join runs.
+    */
+  private val sharedShingles = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
+  private val exactJaccard = round(sharedShingles /
+    (size(col("sh_a")).cast("double") + size(col("sh_b")).cast("double") - sharedShingles), 6)
 
   /** B4d — exact n-gram CONTAINMENT join: all ordered pairs with
     * C(a→b) = |sh(a) ∩ sh(b)| / |sh(a)| ≥ t — "most of a's shingles occur
@@ -920,21 +961,8 @@ object Dedup {
   def containmentPrefixPairs(spark: SparkSession, dir: String, shingleK: Int = 5,
                              minContain: Double = 0.9): DataFrame = {
     val t = lit(minContain).cast("decimal(9,6)")
-    val hashed = hashedDocs(Tables.documents(spark, dir), shingleK)
-      .select(col("doc_id"), col("hs.hv").as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist()
-    // merge hints throughout for the same measured reason as
-    // jaccardPrefixPairs: every join side here is corpus-scale and the
-    // static estimates invite broadcasts that OOM at 50x
-    val ex = hashed.select(col("doc_id"), size(col("sh")).as("n"),
-      explode(col("sh")).as("h"))
-    val dfTbl = ex.groupBy("h").agg(count(lit(1)).as("df"))
-    val prefixA = ex.hint("merge").join(dfTbl.hint("merge"), Seq("h"))
-      .withColumn("rnk",
-        row_number().over(Window.partitionBy("doc_id").orderBy("df", "h")))
-      .where(col("rnk") <= col("n") - ceil(t * col("n")) + 1)
-      .select(col("doc_id").as("id_a"), col("n").as("n_a"), col("h"))
+    val (hashed, ex, prefix) = rarestFirstPrefix(spark, dir, shingleK, t)
+    val prefixA = prefix.select(col("doc_id").as("id_a"), col("n").as("n_a"), col("h"))
     // corpus-scale x corpus-scale candidate join: pin to sort-merge (the
     // static post-window estimate otherwise picks a broadcast that OOMs
     // at 50x — same fix as jaccardPrefixPairs, measured there)
@@ -943,14 +971,13 @@ object Dedup {
         .hint("merge"), Seq("h"))
       .where(col("id_a") =!= col("id_b") && t * col("n_a") <= col("n_b"))
       .select("id_a", "id_b").distinct()
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
     cands
       .join(hashed.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
         .hint("merge"), Seq("id_a"))
       .join(hashed.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
         .hint("merge"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(inter / size(col("sh_a")).cast("double"), 6).as("containment"))
+        round(sharedShingles / size(col("sh_a")).cast("double"), 6).as("containment"))
       .where(col("containment") >= minContain)
       .orderBy("id_a", "id_b")
   }
@@ -982,10 +1009,8 @@ object Dedup {
     val cands = minhashCandidates(signed, numHashes, bands, maxBucket)
     val a = hashed.select(col("doc_id").as("id_a"), col("hs.hv").as("sh_a"))
     val b = hashed.select(col("doc_id").as("id_b"), col("hs.hv").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(col("sh_a")).cast("double") + size(col("sh_b")).cast("double") - inter
     cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"), round(inter / union, 6).as("jaccard"))
+      .select(col("id_a"), col("id_b"), exactJaccard.as("jaccard"))
       .where(col("jaccard") >= minJaccard)
   }
 
@@ -1012,30 +1037,15 @@ object Dedup {
     val k = shingleK
     val pairs = ngramJaccardLsh(Tables.documents(spark, dir), shingleK = k,
       minJaccard = minJaccard)
-    val st = Tables.documents(spark, dir)
-      .where(size(split(col("text"), " ")) >= k)
-      .select(col("doc_id"),
-        posexplode(VectorExpressions.positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
+    val st = positionalGrams(Tables.documents(spark, dir)
+      .where(size(split(col("text"), " ")) >= k), k)
       .persist() // two consumers: a-side positions + b-side gram sets
     val aSide = pairs.join(st.withColumnRenamed("doc_id", "id_a"), Seq("id_a"))
     val bSet = st.select(col("doc_id").as("id_b"), col("h")).distinct()
     val matched = aSide.join(bSet, Seq("id_b", "h"))
       .select(col("id_a"), col("id_b"), col("jaccard"), col("pos"))
-    val w = Window.partitionBy(col("id_a"), col("id_b")).orderBy(col("pos"))
-    matched
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) > k, 1).otherwise(0))
-      .withColumn("grp", sum(col("brk")).over(w))
-      .groupBy(col("id_a"), col("id_b"), col("jaccard"), col("grp"))
-      .agg(min(col("pos")).cast("long").as("span_start"),
-        (max(col("pos")) + k - 1).cast("long").as("span_end"),
-        count(lit(1)).as("n_grams"))
-      .select(col("id_a"), col("id_b"), col("jaccard"),
-        col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1L).as("span_len"),
-        col("n_grams"))
-      .orderBy("id_a", "id_b", "span_start")
+    // jaccard is fixed per (id_a, id_b): keying on it splits no island
+    islands(matched, Seq("id_a", "id_b", "jaccard"), k, count(lit(1)).as("n_grams"))
   }
 
   /** B59 — LSH candidate-precision report: one row summarizing how well the

@@ -236,6 +236,27 @@ object Relevance {
     */
   def lmPerplexity(spark: SparkSession, dir: String, addK: Double = DefaultAddK): DataFrame = {
     val docs = Tables.documents(spark, dir)
+    val (perDoc, model) = bigramModel(docs, addK)
+    val scored = perDoc.join(model.select(col("bigram"), col("lp")), Seq("bigram"))
+      .groupBy("doc_id")
+      .agg(sum(col("cnt")).as("n_bigrams"),
+        sum(col("cnt") * col("lp")).as("s"))
+    docs.select(col("doc_id"), col("lang"))
+      .join(scored, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("lang"),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        round(-col("s") / col("n_bigrams"), 6).as("cross_entropy"),
+        round(exp(-col("s") / col("n_bigrams")), 4).as("perplexity"))
+      .orderBy("doc_id")
+  }
+
+  /** The add-k bigram model of [[lmPerplexity]] and
+    * [[graft.ops.Curation.qualityEnsemble]]'s signals: per-(doc, bigram)
+    * counts (doc_id, bigram, cnt) and the corpus model (bigram, cbi, lp),
+    * lp = ln((c(w1 w2) + addK) / (c(w1 ·) + addK·|V|)), both read from one
+    * persisted multi-order kernel pass.
+    */
+  private[ops] def bigramModel(docs: DataFrame, addK: Double): (DataFrame, DataFrame) = {
     // Persisted: feeds the corpus bigram counts, the vocab scalar, AND the
     // scoring join. Lazily persisted — released by graft.Caches.clear (see
     // Caches). r17: per-(doc, bigram) counts derive MAP-SIDE (NgramCounts —
@@ -248,7 +269,7 @@ object Relevance {
     // corpus); the multi-order kernel emits both orders in ONE pass, so
     // vocab now reads the same persisted frame. Counts per order are
     // bit-identical to the per-order kernel (FunctionsSpec pins it) —
-    // arithmetic unchanged token for token, the float budget below holds.
+    // arithmetic unchanged token for token, lmPerplexity's float budget holds.
     // The cache holds the UNEXPLODED per-doc gram arrays — one row per doc,
     // not one per gram: the array cache is corpus-row-count sized and each
     // consumer re-explodes it at Generate speed, so the expensive work
@@ -274,21 +295,11 @@ object Relevance {
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
     val starts = bi.groupBy("w1").agg(sum(col("cbi")).as("cw"))
     val vocab = ordRows(1).agg(count_distinct(col("gram")).as("vocab"))
-    val logProb = bi.join(starts, Seq("w1"))
+    val model = bi.join(starts, Seq("w1"))
       .crossJoin(broadcast(vocab))
-      .select(col("bigram"),
+      .select(col("bigram"), col("cbi"),
         log((col("cbi") + lit(addK)) / (col("cw") + lit(addK) * col("vocab"))).as("lp"))
-    val scored = perDoc.join(logProb, Seq("bigram"))
-      .groupBy("doc_id")
-      .agg(sum(col("cnt")).as("n_bigrams"),
-        sum(col("cnt") * col("lp")).as("s"))
-    docs.select(col("doc_id"), col("lang"))
-      .join(scored, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        round(-col("s") / col("n_bigrams"), 6).as("cross_entropy"),
-        round(exp(-col("s") / col("n_bigrams")), 4).as("perplexity"))
-      .orderBy("doc_id")
+    (perDoc, model)
   }
 
   /** B44 — CCNet-style perplexity buckets (Wenzek et al. 2020,
@@ -515,10 +526,7 @@ object Relevance {
 
   /** (doc_id, source, pos 1-based, h): position-aligned k-gram hashes. */
   private def positionalFrame(docs: DataFrame, k: Int): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      posexplode(graft.functions.VectorExpressions
-        .positionalShingleHashes(col("text"), k)).as(Seq("p0", "h")))
-      .select(col("doc_id"), col("source"), (col("p0") + 1).cast("long").as("pos"), col("h"))
+    Dedup.positionalGrams(docs, k, "source").withColumn("pos", col("pos").cast("long"))
 
   /** B53c — HYBRID retrieval: reciprocal-rank fusion of a lexical BM25
     * pool (B53's scorer, per-query term sets) and a semantic exact-cosine

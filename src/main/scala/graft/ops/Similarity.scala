@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{LocalFiles, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,10 +85,26 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val queries = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
+    exactTopK(emb.join(broadcast(queries), col("vec_id") =!= col("query_id")), k)
+  }
+
+  /** The one exact top-k tail every ANN candidate generator ends in: the
+    * exact cosine of each (query_id, query_vec) × (vec_id, embedding)
+    * candidate row, rounded at 6 dp, ranked per query by cosine desc then
+    * vec_id, cut at rank k — as (query_id, rank, neighbor_id, cos). The
+    * candidate payload is pruned to (query_id, vec_id, cos) before the
+    * rank window, so the window never buffers vectors. Candidates must be
+    * distinct per (query, vector). The IVF arms need no dedup for that:
+    * every corpus vector lives in EXACTLY one cell and a query's probed
+    * cells are distinct by construction, so a pair matches at most once (a
+    * distinct there would shuffle the whole candidate set for nothing — at
+    * 100 TB a corpus-scale exchange).
+    */
+  private def exactTopK(candidates: DataFrame, k: Int): DataFrame = {
     val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored
+    candidates
+      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
+      .select("query_id", "vec_id", "cos")
       .withColumn("rank", row_number().over(byQuery).cast("long"))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
@@ -128,13 +144,7 @@ object Similarity {
       .orderBy(col("cos_head").desc, col("vec_id"))
     val pool = coarse.withColumn("crank", row_number().over(byHead))
       .where(col("crank") <= candidates)
-    val byExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    pool
-      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
-      .withColumn("rank", row_number().over(byExact).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
+    exactTopK(pool, k)
   }
 
   /** B5f (r17, VERDICT r16 #7) — ANN recall report: recall@k of each
@@ -173,7 +183,7 @@ object Similarity {
     // the pq arm probes a real persisted index (build+probe, like the
     // registered ann_pq_topk) — the report witnesses the production shape,
     // not an inline stand-in
-    val pqDir = tempIndexDir("recall_pq", dir)
+    val pqDir = LocalFiles.scratchDir("recall_pq_index", dir)
     buildIvfPqIndex(spark, dir, pqDir)
     // the ivf arm probes the SAME index (r18): buildIvfPqIndex writes the
     // identical centroids.csv the inline ivfTopK k-means would recompute
@@ -279,15 +289,7 @@ object Similarity {
       .distinct()
     val queryVecs = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val scored = candIds
-      .join(emb, Seq("vec_id"))
-      .join(broadcast(queryVecs), Seq("query_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
+    exactTopK(candIds.join(emb, Seq("vec_id")).join(broadcast(queryVecs), Seq("query_id")), k)
   }
 
   /** B5b — mini-IVF (inverted-file) index: deterministic Lloyd's iterations
@@ -366,20 +368,9 @@ object Similarity {
     val probes = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
         explode(probeCells(col("embedding"), centroids, nprobe)).as("cell"))
-    val scored = corpus.join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    // No dedup needed before the rank: every corpus vector lives in EXACTLY
-    // one cell and a query's probed cells are distinct by construction, so
-    // a (query, vector) pair can match at most once — the distinct that
-    // used to sit here shuffled the whole candidate set for nothing (at
-    // 100 TB that was a corpus-scale exchange).
-    scored
-      .select("query_id", "vec_id", "cos")
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
+    // no dedup before the rank: see exactTopK
+    exactTopK(corpus.join(broadcast(probes), Seq("cell"))
+      .where(col("vec_id") =!= col("query_id")), k)
       .transform(boundedSort(_, "query_id", "rank"))
   }
 
@@ -527,20 +518,9 @@ object Similarity {
     val corpus = Tables.parquet(spark, s"$indexDir/assignments")
       .where(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       .join(emb, Seq("vec_id"))
-    val scored = corpus.join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
-    val byQuery = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    // No dedup needed before the rank: every corpus vector lives in EXACTLY
-    // one cell and a query's probed cells are distinct by construction, so
-    // a (query, vector) pair can match at most once — the distinct that
-    // used to sit here shuffled the whole candidate set for nothing (at
-    // 100 TB that was a corpus-scale exchange).
-    scored
-      .select("query_id", "vec_id", "cos")
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
+    // no dedup before the rank: see exactTopK
+    exactTopK(corpus.join(broadcast(probes), Seq("cell"))
+      .where(col("vec_id") =!= col("query_id")), k)
   }
 
   // ---- B5g (r18): IVF-PQ — the FAISS-default composition of B5d's
@@ -571,27 +551,6 @@ object Similarity {
   /** Probe-side codebook cache, same lifecycle as [[centroidCache]]. */
   private val pqBooksCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
-  /** Memoized JVM-temp index dirs (one per tag:dataDir, shutdown-hook
-    * cleaned — the SparkEntry.ivfIndexDir lifecycle) for probes whose
-    * index is an implementation detail of the operator rather than a
-    * caller-owned artifact (the recall report's pq arm).
-    */
-  private val tempIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def tempIndexDir(tag: String, dataDir: String): String =
-    tempIndexDirs.computeIfAbsent(s"$tag:$dataDir", _ => {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_index_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(dir.toFile)
-      }))
-      dir.toAbsolutePath.toString
-    })
 
   /** Build + persist the IVF-PQ index: the centroid sidecar, the PQ
     * codebook sidecar, and ONE corpus-sized artifact — (vec_id, pq_code,
@@ -763,14 +722,8 @@ object Similarity {
       .withColumn("crank", row_number().over(byAdc))
       .where(col("crank") <= rerank)
     val qvecs = queries.toDF("query_id", "query_vec")
-    val byCos = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    cands.join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(qvecs), Seq("query_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("query_vec")), 6))
-      .select("query_id", "vec_id", "cos")
-      .withColumn("rank", row_number().over(byCos).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
+    exactTopK(cands.join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+      .join(broadcast(qvecs), Seq("query_id")), k)
   }
 
   /** B5c — embedding-cosine near-dup: corpus-wide near-duplicate pairs by

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftSqlBridge
 
 /** Skew-handling join utilities (SURVEY.md §4: "skewed keys → salting or AQE
   * skew-join").
@@ -55,58 +54,44 @@ object Skew {
     * heaviest stage (by total records read — for an equi-join that is the
     * join stage reading both shuffled sides). Measurement harness for the
     * skew evidence in ScaleSpec / CROSSOVER.json; diagnostic-grade like
-    * [[keySkew]], not a hot-path helper. Listener delivery is async, so
-    * after the job returns we wait for the listener bus to deliver every
-    * posted event before reading the counters.
+    * [[keySkew]], not a hot-path helper.
     *
-    * The measurement is scoped to `job`'s OWN jobs (r15, ADVICE r14): the
-    * block runs under a unique job group, and only task metrics from
-    * stages submitted by that group's jobs are counted — a concurrent job
-    * on the same session (a streaming trigger, another thread's query)
-    * can no longer pollute the heaviest-stage pick. A stage RETRY within
-    * the measured job still merges its attempts into one stageId entry;
+    * The measurement is scoped to `job`'s OWN jobs by [[graft.OwnJobs]]
+    * (r15, ADVICE r14), which also drains the listener bus before the
+    * counters are read — a concurrent job on the same session (a
+    * streaming trigger, another thread's query) cannot pollute the
+    * heaviest-stage pick. A stage RETRY within the measured job still
+    * merges its attempts into one stageId entry;
     * retried tasks inflate nTasks/mean slightly, which is the
     * conservative direction for an imbalance read (documented, not
     * filtered — a diagnostic should not hide that a stage retried).
     */
   def stageLoadOf(spark: SparkSession)(job: => Unit): StageLoad = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val groupId = s"graft-stageload-${java.util.UUID.randomUUID()}"
-    val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val byStage =
       new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        if (g.contains(groupId)) j.stageIds.foreach(sid => { myStages.add(sid); () })
-      }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
-        if (m != null && myStages.contains(t.stageId)) {
+        if (m != null) {
           byStage.computeIfAbsent(t.stageId,
             _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
             .add(m.shuffleReadMetrics.recordsRead)
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(groupId,
-        "graft.ops.Skew.stageLoadOf measurement", interruptOnCancel = false)
+    val wall = graft.OwnJobs.observe(spark, listener) {
       val t0 = System.nanoTime()
-      try job finally spark.sparkContext.clearJobGroup()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // every task-end of the job was posted before the action returned
-      GraftSqlBridge.waitUntilEmpty(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      val stages = byStage.asScala.map { case (sid, q) =>
-        (sid, q.asScala.toSeq)
-      }
-      require(stages.nonEmpty, "no task metrics observed — job ran no stages")
-      val (sid, xs) = stages.maxBy(_._2.sum)
-      StageLoad(sid, xs.size, xs.max, xs.sum.toDouble / xs.size, wall)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      job
+      (System.nanoTime() - t0) / 1e9
+    }
+    import scala.jdk.CollectionConverters._
+    val stages = byStage.asScala.map { case (sid, q) =>
+      (sid, q.asScala.toSeq)
+    }
+    require(stages.nonEmpty, "no task metrics observed — job ran no stages")
+    val (sid, xs) = stages.maxBy(_._2.sum)
+    StageLoad(sid, xs.size, xs.max, xs.sum.toDouble / xs.size, wall)
   }
 
   /** Skew diagnosis: per-key row share of the top keys — the check that

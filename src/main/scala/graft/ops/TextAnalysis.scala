@@ -312,12 +312,8 @@ object TextAnalysis {
     */
   def winnowFingerprint(spark: SparkSession, dir: String,
                         k: Int = 5, w: Int = 4): DataFrame = {
-    val st = Tables.documents(spark, dir)
-      .where(size(split(col("text"), " ")) >= k + w - 1)
-      .select(col("doc_id"),
-        posexplode(graft.functions.VectorExpressions.positionalShingleHashes(
-          col("text"), k)).as(Seq("p0", "h")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
+    val st = Dedup.positionalGrams(Tables.documents(spark, dir)
+      .where(size(split(col("text"), " ")) >= k + w - 1), k)
     val key = concat(lower(lpad(hex(col("h")), 15, "0")),
       format_string("%06d", lit(999999) - col("pos")))
     val win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(w - 1), 0)

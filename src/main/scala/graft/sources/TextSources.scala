@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{LocalFiles, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,23 +47,11 @@ object TextSources {
 
   /** One private interchange dir per (format, data dir) — parallel suites
     * sharing the JVM cannot interleave into each other's dump; same-dir
-    * re-runs overwrite. Removed on JVM exit (mirrors SparkEntry's IVF
-    * index-dir lifecycle) so repeated bench/verify runs don't accumulate
-    * dumps in the system temp dir.
+    * re-runs overwrite. Removed on JVM exit so repeated bench/verify runs
+    * don't accumulate dumps in the system temp dir.
     */
-  private val roundtripDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def roundtripDir(dataDir: String, fmt: String): String =
-    roundtripDirs.computeIfAbsent(s"$fmt:$dataDir", _ => {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_ingest_${fmt}_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(dir.toFile)
-      }))
-      dir.toAbsolutePath.toString
-    })
+    LocalFiles.scratchDir(s"ingest_$fmt", dataDir)
 
   /** The oracle-checked fidelity projection: md5 of the round-tripped text
     * against the original parquet's. A format hop that mangles escaping,

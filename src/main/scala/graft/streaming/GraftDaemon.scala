@@ -43,8 +43,7 @@ object GraftDaemon {
     val metrics = new MetricsRegistry
     spark.streams.addListener(new GraftQueryListener(metrics))
 
-    val supervisor = new Supervisor(spark, settings, metrics, startQuery(connections),
-      lifecycleMetrics = false)
+    val supervisor = new Supervisor(spark, settings, metrics, startQuery(connections))
     // Bootstrap with retry like server.rs:38-69 (source dir may not exist yet).
     Supervisor.retryWithTimeout(timeoutMs = 300000, retryDelayMs = 5000) { () =>
       supervisor.startAll()

@@ -3,23 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
-import java.util.concurrent.ConcurrentHashMap
-
-/** StreamingQueryListener → MetricsRegistry bridge (SURVEY.md §2 A12).
+/** StreamingQueryListener → MetricsRegistry bridge (SURVEY.md §2 A12):
+  * the per-batch progress the engine reports for every query on the
+  * session, as `graft_query_input_rows_last_batch` (collection, database).
+  * Registered via `spark.streams.addListener` (control-plane only;
+  * executors never touch this path).
   *
-  * The reference's metrics are driven by its supervision loop
-  * (mrcon/src/server.rs:188-259). In Spark the engine itself emits query
-  * lifecycle events, so gauges/counters can track ALL queries on the
-  * session — including ones the Supervisor didn't start. Registered via
-  * `spark.streams.addListener` (control-plane only; executors never touch
-  * this path).
+  * The five lifecycle series of the reference (mrcon/src/server.rs:188-259)
+  * are the [[Supervisor]]'s alone, as the reference's supervision loop owns
+  * them: a listener that also counted starts would count every supervised
+  * start twice.
   *
   * Query-name convention: `db.collection` (the Supervisor's key) so the
   * labelled series match metrics.rs labels.
   */
 final class GraftQueryListener(metrics: MetricsRegistry) extends StreamingQueryListener {
-
-  private val names = new ConcurrentHashMap[java.util.UUID, String]()
 
   private def split(name: String): (String, String) =
     if (name == null || name.isEmpty) ("unknown", "unknown") // guard BEFORE split — a null would NPE on it
@@ -28,14 +26,7 @@ final class GraftQueryListener(metrics: MetricsRegistry) extends StreamingQueryL
       case _ => (name, "unknown")
     }
 
-  override def onQueryStarted(event: QueryStartedEvent): Unit = {
-    val name = Option(event.name).getOrElse("unknown")
-    names.put(event.id, name)
-    val (coll, db) = split(name)
-    metrics.incrementServers()
-    metrics.incrementCollectionServer(coll, db)
-    metrics.recordTaskStart()
-  }
+  override def onQueryStarted(event: QueryStartedEvent): Unit = ()
 
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
     val (coll, db) = split(Option(event.progress.name).getOrElse("unknown"))
@@ -43,18 +34,5 @@ final class GraftQueryListener(metrics: MetricsRegistry) extends StreamingQueryL
       event.progress.numInputRows, "collection" -> coll, "database" -> db)
   }
 
-  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
-    // Only decrement for queries whose START this listener counted: a
-    // termination with no names entry (listener attached after the query
-    // started, or the async bus dropped the started event under overflow)
-    // would otherwise drive the gauges negative — a false "no servers"
-    // alert and a phantom (unknown, unknown) series at -1.
-    Option(names.remove(event.id)).foreach { name =>
-      val (coll, db) = split(name)
-      metrics.decrementServers()
-      metrics.decrementCollectionServer(coll, db)
-    }
-    // failures/restarts are recorded by the Supervisor, which can classify
-    // the exception properly — the listener only tracks lifecycle gauges.
-  }
+  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
 }

@@ -22,11 +22,11 @@ final class Supervisor(spark: SparkSession, settings: Settings,
                        metrics: MetricsRegistry,
                        startQuery: (SparkSession, CollectionConfig) => StreamingQuery,
                        maxRestarts: Int = 3,
-                       lifecycleMetrics: Boolean = true,
                        restartWindowMs: Long = 600000L) {
-  // With lifecycleMetrics=false (daemon mode) the GraftQueryListener owns the
-  // running/started gauges and the supervisor records only what it alone
-  // knows: classified failures and restart decisions.
+  // The supervisor is the one writer of the lifecycle series (starts, the
+  // running-server and per-collection gauges) as well as of the failures
+  // and restarts it alone can classify; GraftQueryListener adds only
+  // per-batch progress, so attaching both never counts a start twice.
 
   private val running = new ConcurrentHashMap[String, StreamingQuery]()
   private val restarts = new ConcurrentHashMap[String, Integer]()
@@ -82,30 +82,26 @@ final class Supervisor(spark: SparkSession, settings: Settings,
       val existing = Option(running.get(k))
       if (!existing.exists(_.isActive)) {
         // Reap a dead query before overwriting it: silently replacing it
-        // would lose its failure classification and, with lifecycle
-        // metrics on, double-increment the collection gauge with no
-        // matching decrement.
+        // would lose its failure classification and double-increment the
+        // collection gauge with no matching decrement.
         existing.foreach { dead =>
           dead.exception.foreach { e =>
             metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, classify(e)._1)
           }
-          if (lifecycleMetrics)
-            metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
+          metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
           running.remove(k)
         }
         launch(c)
       }
     }
-    if (lifecycleMetrics) metrics.setServerCount(running.size().toLong)
+    metrics.setServerCount(running.size().toLong)
   }
 
   /** Start `c`'s query and record it as running. */
   private def launch(c: CollectionConfig): Unit = {
     running.put(keyOf(c), startQuery(spark, c))
-    if (lifecycleMetrics) {
-      metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
-      metrics.recordTaskStart()
-    }
+    metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
+    metrics.recordTaskStart()
   }
 
   /** [[launch]] for a restart: a start that throws is recorded as a task
@@ -142,7 +138,7 @@ final class Supervisor(spark: SparkSession, settings: Settings,
       }
       Option(running.get(k)).foreach { q =>
         if (!q.isActive) {
-          if (lifecycleMetrics) metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
+          metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
           q.exception match {
             case Some(e) =>
               val (errorType, reason) = classify(e)
@@ -169,7 +165,7 @@ final class Supervisor(spark: SparkSession, settings: Settings,
         }
       }
     }
-    if (lifecycleMetrics) metrics.setServerCount(running.values.asScala.count(_.isActive).toLong)
+    metrics.setServerCount(running.values.asScala.count(_.isActive).toLong)
     restarted
   }
 

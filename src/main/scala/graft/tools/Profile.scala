@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{BenchHarness, Jsons, SparkEntry, Tables}
+import graft.{BenchHarness, Jsons, OwnJobs, SparkEntry, Tables}
 import graft.BenchHarness.{noop, query, sample}
 import graft.ops.Skew
 import graft.streaming.Epochs
@@ -9,7 +9,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftSqlBridge
 
 import scala.util.control.NonFatal
 
@@ -83,7 +82,9 @@ object Profile {
   /** Every Spark job one query launches (id, wall, #stages, first stage
     * name) and the query's total wall — the tool for hunting fixed per-job
     * overhead in multi-action operators. One warm pass first, so JIT and
-    * codegen don't masquerade as job cost.
+    * codegen don't masquerade as job cost. Only the query's own jobs are
+    * listed ([[graft.OwnJobs]]): another thread's jobs on the session are
+    * not.
     */
   def jobs(spark: SparkSession, args: Seq[String]): Seq[String] = {
     require(args.length == 2, "usage: Profile jobs <dir> <query>")
@@ -101,14 +102,10 @@ object Profile {
         lines.add(f"[jobs] job ${je.jobId}%3d ${(je.time - t0) / 1000.0}%6.3f s  stages=$nStages%2d  $stage")
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val total = sample(spark, name)(noop(fn(spark, dir)))
-        .getOrElse(sys.error(s"$name failed"))
-      GraftSqlBridge.waitUntilEmpty(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      lines.asScala.toSeq :+ f"[jobs] TOTAL $total%.3f s, ${lines.size} jobs"
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val total = OwnJobs.observe(spark, listener)(sample(spark, name)(noop(fn(spark, dir))))
+      .getOrElse(sys.error(s"$name failed"))
+    import scala.jdk.CollectionConverters._
+    lines.asScala.toSeq :+ f"[jobs] TOTAL $total%.3f s, ${lines.size} jobs"
   }
 
   /** `explain("formatted")` of each named query, or of every registered one

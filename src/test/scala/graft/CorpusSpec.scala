@@ -151,6 +151,25 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
+  test("contaminationSpansAgainst the doc_id % 50 slice equals the registered contaminationSpans") {
+    val evalSlice = Tables.documents(spark, sf0001).where(col("doc_id") % 50 === 0)
+    val registered = Corpus.contaminationSpans(spark, sf0001).collect().toSeq
+    val seam = Corpus.contaminationSpansAgainst(spark, sf0001, evalSlice)
+      .where(col("doc_id") % 50 =!= 0).collect().toSeq
+    assert(registered.nonEmpty, "the corpus must carry leaks for the comparison to bite")
+    assert(seam === registered)
+  }
+
+  test("decontaminatedSpansAgainst the doc_id % 50 slice equals the registered decontaminatedSpans") {
+    val evalSlice = Tables.documents(spark, sf0001).where(col("doc_id") % 50 === 0)
+    val registered = Corpus.decontaminatedSpans(spark, sf0001).collect().toSeq
+    val seam = Corpus.decontaminatedSpansAgainst(spark, sf0001, evalSlice)
+      .where(col("doc_id") % 50 =!= 0).collect().toSeq
+    assert(registered.exists(_.getAs[Long]("n_removed") > 0),
+      "the corpus must carry leaks for the comparison to bite")
+    assert(seam === registered)
+  }
+
   test("decontaminatedSpans' removal tiles the span report exactly on the real corpus") {
     val spanTotal = Corpus.contaminationSpans(spark, sf0001).collect()
       .groupBy(_.getAs[Long]("doc_id"))

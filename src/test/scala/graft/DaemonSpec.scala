@@ -9,7 +9,7 @@ import java.net.{HttpURLConnection, URL}
 import java.nio.file.{Files, Paths}
 import scala.io.Source
 
-/** Daemon surface: listener-fed metrics + health/metrics HTTP endpoints
+/** Daemon surface: supervisor-fed metrics + health/metrics HTTP endpoints
   * (mrcond/src/main.rs:53-73) driven by real streaming queries.
   */
 class DaemonSpec extends SparkSpec {
@@ -23,7 +23,7 @@ class DaemonSpec extends SparkSpec {
     (code, body)
   }
 
-  test("listener feeds lifecycle gauges; /health and /metrics serve over HTTP") {
+  test("supervisor-fed lifecycle gauges; /health and /metrics serve over HTTP") {
     val base = tempDir("daemon")
     val metrics = new MetricsRegistry
     val listener = new GraftQueryListener(metrics)
@@ -41,7 +41,7 @@ class DaemonSpec extends SparkSpec {
           ResumeTokensDb("test", "tokens"), QueueSink("stream_testcoll")))).toOption.get
 
       val supervisor = new Supervisor(spark, settings, metrics,
-        GraftDaemon.startQuery(settings.connections), lifecycleMetrics = false)
+        GraftDaemon.startQuery(settings.connections))
       // bind port 0 so a concurrent JVM on the host can't collide
       val http = GraftDaemon.serveHttp(0, metrics, supervisor)
       val port = http.getAddress.getPort
@@ -50,10 +50,9 @@ class DaemonSpec extends SparkSpec {
         val (hc, hb) = get(s"http://localhost:$port/health")
         assert(hc === 200 && hb === "OK")
         supervisor.awaitAll(60000)
-        // listener events are async; wait for the started counter
-        val deadline = System.currentTimeMillis() + 30000
-        while (metrics.value(MetricsRegistry.TasksStarted) < 1 &&
-               System.currentTimeMillis() < deadline) Thread.sleep(100)
+        // the supervisor counts the start; every listener event is
+        // delivered before the count is read, so a second count would show
+        org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(spark.sparkContext)
         assert(metrics.value(MetricsRegistry.TasksStarted) === 1)
         assert(metrics.value(MetricsRegistry.CollectionServers,
           "collection" -> "testcoll", "database" -> "test") >= 0)
@@ -118,8 +117,7 @@ class DaemonSpec extends SparkSpec {
           }
           .start()
       }
-      val supervisor = new Supervisor(spark, settings, metrics, startRateQuery,
-        lifecycleMetrics = false)
+      val supervisor = new Supervisor(spark, settings, metrics, startRateQuery)
       val http = GraftDaemon.serveHttp(0, metrics, supervisor)
       val port = http.getAddress.getPort
       try {
@@ -178,7 +176,7 @@ class DaemonSpec extends SparkSpec {
         ResumeTokensDb("test", "tokens"), QueueSink("stream_shutcoll")))).toOption.get
     // the daemon's own continuous trigger: the stream stays live until stopped
     val supervisor = new Supervisor(spark, settings, metrics,
-      GraftDaemon.startQuery(settings.connections), lifecycleMetrics = false)
+      GraftDaemon.startQuery(settings.connections))
     val http = GraftDaemon.serveHttp(0, metrics, supervisor)
     val port = http.getAddress.getPort
     supervisor.startAll()

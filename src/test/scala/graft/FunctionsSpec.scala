@@ -333,6 +333,30 @@ class FunctionsSpec extends SparkSpec {
     assert(bad.count() === 0, bad.collect().take(2).mkString("\n"))
   }
 
+  test("every string kernel rejects a non-string input with a message naming it") {
+    import graft.functions._
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val notText = Literal(1)
+    Seq(
+      "token_hashes" -> TokenHashes(notText),
+      "stopword_hits" -> StopwordHits(notText, Seq(Seq("the"))),
+      "token_counts" -> TokenCounts(notText),
+      "term_frequencies" -> TermFrequencies(notText, Seq("a")),
+      "token_entropy_stats" -> TokenEntropyStats(notText),
+      "ngram_counts" -> NgramCounts(notText, 2),
+      "ngram_multi_counts" -> NgramMultiCounts(notText, 2),
+      "gopher_stats" -> GopherStats(notText, Seq("the")),
+      "shingle_hashes" -> ShingleHashes(notText, 3),
+      "positional_shingle_hashes" -> PositionalShingleHashes(notText, 3),
+      "deflated_size" -> DeflatedSize(notText, 6)).foreach { case (name, e) =>
+      e.checkInputDataTypes() match {
+        case TypeCheckFailure(msg) => assert(msg === s"$name expects string, got IntegerType")
+        case other => fail(s"$name accepted an int input: $other")
+      }
+    }
+  }
+
   test("constant-carrying expressions compare structurally (canonicalization works)") {
     // Two independently-built instances over the same constants must be
     // equal, or Catalyst never recognizes identical subplans (CSE, exchange

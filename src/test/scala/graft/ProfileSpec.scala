@@ -37,6 +37,34 @@ class ProfileSpec extends SparkSpec {
     assert(text.contains("Exchange"), text)
   }
 
+  test("jobs: lists only the query's own jobs, none another thread runs meanwhile") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val intruderJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val recorder = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { intruderJobs.add(e.jobId); () }
+    }
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val running = new java.util.concurrent.CountDownLatch(1)
+    // a second client on the session: small jobs in its own job group for
+    // the whole of the profiled run
+    val intruder = new Thread(() => OwnJobs.observe(spark, recorder) {
+      while (!stop.get()) {
+        spark.range(1000).selectExpr("sum(id)").collect()
+        running.countDown()
+      }
+    })
+    intruder.start()
+    val lines = try {
+      assert(running.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Profile.jobs(spark, Seq(sf0001, "q6_agg"))
+    } finally { stop.set(true); intruder.join(60000) }
+    val listed = lines.flatMap(l => "job +(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt))
+    assert(listed.nonEmpty, lines.mkString("\n"))
+    assert(intruderJobs.size > 1, "the second thread must have run jobs meanwhile")
+    val leaked = listed.filter(intruderJobs.contains)
+    assert(leaked.isEmpty, s"another thread's jobs listed: $leaked\n${lines.mkString("\n")}")
+  }
+
   test("an unknown query name fails with a message naming it") {
     for (mode <- Seq("time", "jobs", "plan")) {
       val args = if (mode == "time") Seq(sf0001, "1", "no_such_query") else Seq(sf0001, "no_such_query")

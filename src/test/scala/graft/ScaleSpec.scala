@@ -131,7 +131,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("two-level rank ops keep per-task input near the mean on a 90%-one-source corpus") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     // The design claim behind tokenBudgetMix/sourceCapSample (VERDICT r6
     // asked for it as a MEASURED number): on an adversarially skewed corpus
     // the shard decomposition means no window task ever holds a whole
@@ -151,24 +151,14 @@ class ScaleSpec extends SparkSpec {
     val taskReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     // The listener is session-global and sbt runs suites in parallel, so a
     // concurrent suite's corpus-sized shuffle could land in taskReads and
-    // flake the 2x-mean assert. Scope the capture to THIS test's jobs: tag
-    // them with a job group, map group -> stage ids at job start, and only
-    // record tasks from those stages.
-    val jobGroup = "scale-skew-measure"
-    val ownStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    // flake the 2x-mean assert: OwnJobs scopes the capture to THIS test's
+    // jobs and drains the bus before the reads are used.
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            jobGroup == e.properties.getProperty("spark.jobGroup.id"))
-          e.stageInfos.foreach(si => ownStages.add(si.stageId))
-      }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
-        if (m != null && ownStages.contains(e.stageId))
-          taskReads.add((e.stageId, m.shuffleReadMetrics.recordsRead))
+        if (m != null) taskReads.add((e.stageId, m.shuffleReadMetrics.recordsRead))
       }
     }
-    spark.sparkContext.addSparkListener(listener)
     // AQE's small-partition coalescing would fold this toy shuffle into one
     // task and blind the measurement; at 100 TB the same partitions sit far
     // above the advisory size and never coalesce, so disabling it here is
@@ -176,24 +166,10 @@ class ScaleSpec extends SparkSpec {
     val prevCoalesce = spark.conf.getOption("spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      spark.sparkContext.setJobGroup(jobGroup, "skew measurement actions")
-      try {
+      OwnJobs.observe(spark, listener) {
         graft.ops.Curation.sourceCapSample(spark, dir, cap = 1000, shardBits = 8).count()
         graft.ops.Curation.tokenBudgetMix(spark, dir, perLangTokens = Long.MaxValue,
           shardBits = 8).count()
-      } finally spark.sparkContext.clearJobGroup()
-      // The listener bus posts asynchronously; a fixed sleep can under-read
-      // on a stalled host (documented multi-second stalls) and silently
-      // drop the one hot task the assertion exists to catch. Drain
-      // deterministically instead: poll until the event count is stable
-      // across consecutive checks.
-      var stable = 0
-      var last = -1
-      val drainDeadline = System.currentTimeMillis() + 30000
-      while (stable < 4 && System.currentTimeMillis() < drainDeadline) {
-        Thread.sleep(250)
-        val n = taskReads.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
       }
       val byStage = taskReads.toArray(Array.empty[(Int, Long)]).groupBy(_._1)
         .map { case (stage, rs) => (stage, rs.map(_._2)) }
@@ -213,7 +189,6 @@ class ScaleSpec extends SparkSpec {
         case Some(v) => spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", v)
         case None => spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
       }
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{MetricsRegistry, StreamingHeavyHitters}
+import graft.streaming.{GraftQueryListener, MetricsRegistry, StreamingHeavyHitters}
 import graft.streaming.StreamingHeavyHitters.HHState
 
 import java.nio.file.{Files, Paths}
@@ -148,5 +148,23 @@ class StreamingHeavyHittersSpec extends SparkSpec {
       .collect().map(_.getAs[Long]("count_min")).max
     assert(t === 10L, "restart-from-checkpoint must not lose or double-count the feed")
     sup.stopAll()
+  }
+
+  test("supervised beside the daemon's listener: one start counts once") {
+    val (src, out, ckpt) = (tempDir("hhlis_src"), tempDir("hhlis_out"), tempDir("hhlis_ckpt"))
+    Files.write(Paths.get(src, "a.json"), (1L to 5L).map(i => line(i, 7, "click")).mkString("\n").getBytes)
+    val metrics = new MetricsRegistry
+    // the daemon's wiring: its listener on the session, the sketch's
+    // supervisor plugged into the same registry
+    val listener = new GraftQueryListener(metrics)
+    spark.streams.addListener(listener)
+    try {
+      val sup = StreamingHeavyHitters.supervised(spark, metrics, src, out, ckpt, k = 4, nShards = 2)
+      sup.startAll()
+      sup.awaitAll(120000)
+      org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(spark.sparkContext)
+      assert(metrics.value(MetricsRegistry.TasksStarted) === 1)
+      sup.stopAll()
+    } finally spark.streams.removeListener(listener)
   }
 }

@@ -68,28 +68,18 @@ class TablesSpec extends SparkSpec {
     assert(got.select(unix_micros(col("ts"))).head().getLong(0) === 1704067200000000L)
   }
 
-  /** Spark jobs `body` launches from this thread. The listener is
-    * session-global and sbt runs suites in parallel, so the count is scoped
-    * to a job group of this test's own, and the bus is drained before and
-    * after so no event is read early or late.
+  /** Spark jobs `body` launches from this thread — scoped by
+    * [[OwnJobs]], since the listener is session-global and sbt runs suites
+    * in parallel.
     */
   private def jobsLaunchedBy(body: => Unit): Int = {
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec job count")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
+    OwnJobs.observe(spark, new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    })(body)
+    jobs.get()
   }
 
   private def writeDocs(dir: String, extra: Boolean = false): Unit = {
