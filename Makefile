@@ -13,7 +13,7 @@ SEED    ?= 1
 PAIRS   ?= 10
 BASE    ?= HEAD
 
-.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount copyscan help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount forkcheck copyscan help
 
 all: build
 
@@ -81,6 +81,13 @@ perf-ab:
 ## make forkcount CMD="python3 perfbench/run.py --workload connector --seed 1 --seconds 8"
 forkcount:
 	python3 tools/forkcount.py -- $(CMD)
+
+# the benchmark is built first, outside the count; the spawns are kept in $(FORKLOG)
+FORKLOG ?= .forkcheck.log
+## Fail if one connector run spawns any readlink, or any chmod under _checkpoints/
+forkcheck:
+	python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
+	python3 tools/forkcount.py --check --log $(FORKLOG) -- python3 perfbench/run.py --workload connector --seed 1 --seconds 8 --trace 0
 
 ## Code written twice: six-line windows repeated in src/main/scala (exit 1 if any)
 copyscan:

@@ -684,19 +684,22 @@ object ChangeStreamJob {
       "beforeImageTtlMs requires a continuous trigger (e.g. ProcessingTime): " +
         "ProcessingTimeTimeout under an AvailableNow drain hangs the " +
         "MultiBatchExecutor — drop the TTL for draining runs")
-    val events = source.load(spark)
-    // Optional source-side exactly-once: an at-least-once feed (redeliveries
-    // under the same event_id) is deduped in-stream with watermark-bounded
-    // state — the streaming analog of the batch publish_dedup operator.
-    val deduped =
-      if (!dedupe) events
-      else events
-        .withColumn("event_time", timestamp_micros(col("ts_us")))
-        .withWatermark("event_time", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .drop("event_time")
-    val envelope = toChangeEvents(deduped, db, coll)
-    val shaped = if (preAndPostImages) withBeforeImages(envelope, beforeImageTtlMs) else envelope
-    Epochs.start(shaped, checkpointDir, trigger, Some(queryName))(publisher.publish)
+    def shaped(s: SparkSession): DataFrame = {
+      val events = source.load(s)
+      // Optional source-side exactly-once: an at-least-once feed
+      // (redeliveries under the same event_id) is deduped in-stream with
+      // watermark-bounded state — the streaming analog of the batch
+      // publish_dedup operator.
+      val deduped =
+        if (!dedupe) events
+        else events
+          .withColumn("event_time", timestamp_micros(col("ts_us")))
+          .withWatermark("event_time", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id")
+          .drop("event_time")
+      val envelope = toChangeEvents(deduped, db, coll)
+      if (preAndPostImages) withBeforeImages(envelope, beforeImageTtlMs) else envelope
+    }
+    Epochs.start(spark, shaped, checkpointDir, trigger, Some(queryName))(publisher.publish)
   }
 }

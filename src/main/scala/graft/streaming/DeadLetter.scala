@@ -129,14 +129,14 @@ object DeadLetter {
                    coll: String = "testcoll", queryName: String = "connector-dlq",
                    trigger: Trigger = Trigger.AvailableNow(),
                    maxFilesPerTrigger: Int = 4): StreamingQuery = {
-    val raw = spark.readStream
+    def raw(s: SparkSession) = s.readStream
       .schema(ChangeStreamJob.eventSchema.add(RawCol, StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", RawCol)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(sourceDir)
       .withColumn("__dlq_reason", reasonCol)
-    Epochs.start(raw, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+    Epochs.start(spark, raw, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val bad = batch.where(col("__dlq_reason").isNotNull)
         .select(col("__dlq_reason").as("reason"),
           coalesce(col(RawCol),

@@ -97,7 +97,7 @@ object DedupIngest {
             indexDir: String, checkpointDir: String,
             queryName: String = "dedup-ingest",
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    Epochs.start(spark.readStream.schema(docSchema).json(sourceDir),
+    Epochs.start(spark, _.readStream.schema(docSchema).json(sourceDir),
         checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val index = Epochs.history(batch.sparkSession, indexDir, indexSchema, epochId, "batch_id")
       // two writers below; dedup must not run twice

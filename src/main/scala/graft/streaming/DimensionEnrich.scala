@@ -55,11 +55,11 @@ object DimensionEnrich {
     require(Versioned.versions(spark, dimDir).nonEmpty,
       s"DimensionEnrich.start: no committed dimension version under $dimDir — " +
         "commit the dimension table (Versioned.commit) before starting enrichment")
-    val events = spark.readStream
+    def events(s: SparkSession) = s.readStream
       .schema(ChangeStreamJob.eventSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(sourceDir)
-    Epochs.start(events, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+    Epochs.start(spark, events, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val s = batch.sparkSession
       val dimVersion = Versioned.versions(s, dimDir).last
       val dim = Versioned.read(s, dimDir, dimVersion).select("user_id", "segment")

@@ -4,7 +4,7 @@ import graft.LocalFiles
 import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** The one epoch contract every graft stream runs on: a replayable source
@@ -17,6 +17,10 @@ import org.apache.spark.sql.types.StructType
   * `partCol` is `epoch` for the queue, the DLQ and the operator outputs,
   * and `batch_id` for the two ingests and the heavy-hitter summaries; both
   * on-disk layouts predate this module and stay as they are.
+  *
+  * Every stream starts through [[start]], on the caller's graft-owned
+  * stream session ([[streamSession]]), so Spark's own checkpoint files are
+  * written as fork-free as the epochs.
   */
 object Epochs {
 
@@ -79,21 +83,89 @@ object Epochs {
       .where(col(partCol) =!= epochId)
   }
 
-  /** Start `df` as a checkpointed stream whose every micro-batch goes to
-    * `body(batch, epochId)`. Restarting with the same `checkpointDir`
-    * resumes after the last committed epoch; `body` must be idempotent
-    * per epoch (the writers above are).
+  /** Start the frame `source` builds as a checkpointed stream whose every
+    * micro-batch goes to `body(batch, epochId)`. Restarting with the same
+    * `checkpointDir` resumes after the last committed epoch; `body` must be
+    * idempotent per epoch (the writers above are).
+    *
+    * The one `.writeStream` of graft and the one place that picks the
+    * session a stream runs on: `source` is applied to the stream session of
+    * `spark` ([[streamSession]]), never to `spark` itself.
     */
-  def start(df: DataFrame, checkpointDir: String,
+  def start(spark: SparkSession, source: SparkSession => DataFrame, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
             queryName: Option[String] = None,
             outputMode: OutputMode = OutputMode.Append())
            (body: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = df.writeStream
+    val s = streamSession(spark)
+    val w = source(s).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .outputMode(outputMode)
     queryName.foreach(w.queryName)
     w.foreachBatch(body).start()
+  }
+
+  private val streamSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** The session every graft stream of `caller` runs on: one
+    * `caller.newSession()`, made on first use and kept while `caller` lives.
+    * It differs from `caller` in one key. Its checkpoint file manager is
+    * [[graft.LocalFiles.CheckpointManager]], so Spark's offsets, commits,
+    * source log and state store are written without a child process on a
+    * `file:` checkpoint (a `connector` benchmark run spawned 3,040
+    * `readlink` and 899 `chmod` through Spark's default manager). A caller
+    * that names its own manager keeps it.
+    *
+    * Each call takes `caller`'s runtime SQL conf, so a conf set between two
+    * starts is in effect in the second stream. Setting only the keys that
+    * differ leaves a running stream's session alone: each stream runs on
+    * its own clone, taken at start. The caller's conf, its
+    * `hadoopConfiguration` and its cached `file:` filesystem do not change.
+    *
+    * One listener on the stream session hands each started, progress, idle
+    * and terminated event to the listeners on `caller.streams`, on the
+    * thread Spark delivers it on, so they see graft's streams as before.
+    * What they no longer see is the streams themselves in
+    * `caller.streams.active`: graft's streams are listed in the stream
+    * session's manager, and are reached through the `StreamingQuery` that
+    * starting them returns.
+    */
+  private[graft] def streamSession(caller: SparkSession): SparkSession = {
+    val s = streamSessions.synchronized {
+      Option(streamSessions.get(caller)).getOrElse {
+        val fresh = caller.newSession()
+        fresh.streams.addListener(new Forward(new java.lang.ref.WeakReference(caller)))
+        streamSessions.put(caller, fresh)
+        fresh
+      }
+    }
+    val key = LocalFiles.CheckpointManagerKey
+    val callerConf = caller.sessionState.conf.getAllConfs
+    val want = callerConf + (key -> callerConf.getOrElse(key, classOf[LocalFiles.CheckpointManager].getName))
+    val conf = s.sessionState.conf
+    val have = conf.getAllConfs
+    (have.keySet -- want.keySet).foreach(conf.unsetConf)
+    want.foreach { case (k, v) => if (!have.get(k).contains(v)) conf.setConfString(k, v) }
+    s
+  }
+
+  /** Hands each event of the stream session to the listeners on the
+    * caller's `streams`, read at delivery, so a listener added or removed
+    * mid-stream is honoured. A listener that throws does not starve the
+    * others; the first failure is rethrown for Spark's bus to log.
+    */
+  private final class Forward(caller: java.lang.ref.WeakReference[SparkSession])
+      extends StreamingQueryListener {
+    private def each(f: StreamingQueryListener => Unit): Unit =
+      Option(caller.get).foreach { c =>
+        val failures = c.streams.listListeners().flatMap(l => scala.util.Try(f(l)).failed.toOption)
+        failures.headOption.foreach(throw _)
+      }
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = each(_.onQueryStarted(e))
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = each(_.onQueryProgress(e))
+    override def onQueryIdle(e: StreamingQueryListener.QueryIdleEvent): Unit = each(_.onQueryIdle(e))
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      each(_.onQueryTerminated(e))
   }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import graft.LocalFiles
 import graft.config.{CollectionConfig, Connections, Settings}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
@@ -39,7 +37,7 @@ object GraftDaemon {
       Connections(sourceUri = "/tmp/graft/source", sinkUri = "/tmp/graft/queues"))
     val settings = Settings.create(connections, collections).fold(e => sys.error(e), identity)
 
-    val spark = session(sys.env.getOrElse("SPARK_MASTER", "local[4]"), connections)
+    val spark = session(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
     val metrics = new MetricsRegistry
     spark.streams.addListener(new GraftQueryListener(metrics))
 
@@ -74,41 +72,24 @@ object GraftDaemon {
     }
   }
 
-  /** The daemon's session. The daemon owns it, so unlike a library call it
-    * may choose how Spark writes its own checkpoint files: for a local sink
-    * it adds [[localSinkConf]].
+  /** The daemon's session. Its streams run, like every graft stream, on
+    * the graft-owned stream session `Epochs.start` derives from it, which
+    * writes Spark's checkpoint files for a `file:` sink without a child
+    * process; the daemon's [[GraftQueryListener]] on `spark.streams` gets
+    * their events forwarded from there.
     */
-  def session(master: String, connections: Connections): SparkSession = {
-    val builder = SparkSession.builder()
+  def session(master: String): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .appName("graft-daemon")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    localSinkConf(connections.sinkUri).foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Fork-free checkpoints for a `file:` (or scheme-less) sink: Spark's
-    * `FileSystemBasedCheckpointFileManager` instead of the `FileContext`
-    * one, whose renames spawn `readlink` child processes, and
-    * [[graft.LocalFiles]] as the session's `file:` filesystem, whose
-    * `setPermission` spawns no `chmod`. On `file:` both managers write a
-    * temp file, check the target and `rename(2)` it, so the guarantee is
-    * the same. One checkpoint file's `createAtomic` (median of 55, 4 vCPU)
-    * took 48 ms with Spark's default, 11 ms with the FileSystem manager
-    * alone and 2 ms with both confs. Empty for a sink with any other
-    * scheme, which keeps Spark's default.
-    */
-  private[graft] def localSinkConf(sinkUri: String): Seq[(String, String)] =
-    if (!LocalFiles.isLocal(sinkUri)) Nil
-    else Seq(
-      "spark.sql.streaming.checkpointFileManagerClass" ->
-        classOf[FileSystemBasedCheckpointFileManager].getName,
-      "spark.hadoop.fs.file.impl" -> classOf[LocalFiles].getName)
 
   /** Stop the control plane, then the data plane. Idempotent — safe to call
     * from both the shutdown hook and the supervision loop's exit path.

@@ -7,7 +7,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * the per-batch progress the engine reports for every query on the
   * session, as `graft_query_input_rows_last_batch` (collection, database).
   * Registered via `spark.streams.addListener` (control-plane only;
-  * executors never touch this path).
+  * executors never touch this path). graft's streams run on the stream
+  * session `Epochs.start` derives from `spark`, which forwards their
+  * events to the listeners registered here.
   *
   * The five lifecycle series of the reference (mrcon/src/server.rs:188-259)
   * are the [[Supervisor]]'s alone, as the reference's supervision loop owns

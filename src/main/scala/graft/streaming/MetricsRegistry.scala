@@ -49,8 +49,6 @@ final class MetricsRegistry {
   }
 
   // Typed helpers mirroring metrics.rs update methods.
-  def incrementServers(): Unit = incGauge(MetricsRegistry.RunningServers)
-  def decrementServers(): Unit = decGauge(MetricsRegistry.RunningServers)
   def setServerCount(n: Long): Unit = setGauge(MetricsRegistry.RunningServers, n)
   def incrementCollectionServer(coll: String, db: String): Unit =
     incGauge(MetricsRegistry.CollectionServers, "collection" -> coll, "database" -> db)

@@ -134,7 +134,7 @@ object NearDupIngest {
             numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
             threshold: Double = 0.5,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    Epochs.start(spark.readStream.schema(docSchema).json(sourceDir),
+    Epochs.start(spark, _.readStream.schema(docSchema).json(sourceDir),
         checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val s = batch.sparkSession
       val signed = textedSignatures(batch, numHashes, shingleK)

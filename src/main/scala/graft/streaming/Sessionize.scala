@@ -161,23 +161,24 @@ object Sessionize {
     */
   def start(spark: SparkSession, sourceDir: String, outDir: String, checkpointDir: String,
             gapUs: Long = GapSeconds * 1000000L, continuous: Boolean = false) = {
-    import spark.implicits._
-    val events = spark.readStream
-      .schema(ChangeStreamJob.eventSchema)
-      .json(sourceDir)
-      .as[Event]
     val timeoutMode =
       if (continuous) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
     val trigger =
       if (continuous) org.apache.spark.sql.streaming.Trigger.ProcessingTime("2 seconds")
       else org.apache.spark.sql.streaming.Trigger.AvailableNow()
-    val sessions = events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(
-        updateSession(gapUs, idleTimeout = if (continuous) Some("60 seconds") else None))
-      .toDF()
+    def sessions(s: SparkSession) = {
+      import s.implicits._
+      s.readStream
+        .schema(ChangeStreamJob.eventSchema)
+        .json(sourceDir)
+        .as[Event]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(
+          updateSession(gapUs, idleTimeout = if (continuous) Some("60 seconds") else None))
+        .toDF()
+    }
     // one epoch-overwritten partition per epoch (a plain append would emit a
     // replayed epoch's closed sessions twice)
-    Epochs.start(sessions, checkpointDir, trigger)(Epochs.overwriteNonEmpty(_, _, outDir))
+    Epochs.start(spark, sessions, checkpointDir, trigger)(Epochs.overwriteNonEmpty(_, _, outDir))
   }
 }

@@ -94,15 +94,17 @@ object StreamJoin {
             checkpointDir: String, maxWait: String = "10 minutes",
             watermarkDelay: String = "10 minutes",
             outer: Boolean = false): StreamingQuery = {
-    val feed = spark.readStream
-      .schema(ChangeStreamJob.eventSchema)
-      .json(sourceDir)
-    val out = joined(
-      feed.where(col("event_type") === "click"),
-      feed.where(col("event_type") === "purchase"),
-      maxWait, watermarkDelay, if (outer) "left_outer" else "inner")
+    def out(s: SparkSession) = {
+      val feed = s.readStream
+        .schema(ChangeStreamJob.eventSchema)
+        .json(sourceDir)
+      joined(
+        feed.where(col("event_type") === "click"),
+        feed.where(col("event_type") === "purchase"),
+        maxWait, watermarkDelay, if (outer) "left_outer" else "inner")
+    }
     // one epoch-overwritten partition per epoch (a plain append would
     // duplicate a replayed epoch's joined rows); no-data epochs write nothing
-    Epochs.start(out, checkpointDir)(Epochs.overwriteNonEmpty(_, _, outDir))
+    Epochs.start(spark, out, checkpointDir)(Epochs.overwriteNonEmpty(_, _, outDir))
   }
 }

@@ -117,10 +117,10 @@ object StreamingHeavyHitters {
   def start(spark: SparkSession, sourceDir: String, outDir: String,
             checkpointDir: String, k: Int = 8, nShards: Int = 4,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val events = spark.readStream
+    def events(s: SparkSession) = s.readStream
       .schema(ChangeStreamJob.eventSchema)
       .json(sourceDir)
-    Epochs.start(summaries(events, k, nShards).toDF(), checkpointDir, trigger,
+    Epochs.start(spark, s => summaries(events(s), k, nShards).toDF(), checkpointDir, trigger,
         outputMode = OutputMode.Update())(
       Epochs.overwriteNonEmpty(_, _, outDir, "batch_id"))
   }

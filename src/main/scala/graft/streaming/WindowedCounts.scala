@@ -36,12 +36,12 @@ object WindowedCounts {
   def start(spark: SparkSession, sourceDir: String, outDir: String,
             checkpointDir: String, windowLen: String = "5 minutes",
             watermarkDelay: String = "10 minutes"): StreamingQuery = {
-    val events = spark.readStream
+    def events(s: SparkSession) = s.readStream
       .schema(ChangeStreamJob.eventSchema)
       .json(sourceDir)
     // one epoch-overwritten partition per epoch (a plain append would
     // double-count a replayed epoch's finalized windows)
-    Epochs.start(windowed(events, windowLen, watermarkDelay), checkpointDir)(
+    Epochs.start(spark, s => windowed(events(s), windowLen, watermarkDelay), checkpointDir)(
       Epochs.overwriteNonEmpty(_, _, outDir))
   }
 }

@@ -25,6 +25,9 @@ object GraftSqlBridge {
     */
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
+  /** Listeners registered on the context's bus, over all its queues. */
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+
   /** `schema` with every field, at every depth, nullable — what a file
     * source relation declares whatever the files say.
     */

@@ -3,7 +3,7 @@ package graft
 import graft.config._
 import graft.streaming._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 import java.net.{HttpURLConnection, URL}
 import java.nio.file.{Files, Paths}
@@ -192,17 +192,19 @@ class DaemonSpec extends SparkSpec {
   }
 
   test("a local sink resolves the FileSystem-based checkpoint manager; another scheme keeps Spark's") {
-    // the daemon session's confs as Spark applies them: spark.hadoop.* into
-    // the Hadoop conf, SQL confs copied into every per-query Hadoop conf
-    def resolved(sinkUri: String) = {
-      val hc = spark.sessionState.newHadoopConf()
-      GraftDaemon.localSinkConf(sinkUri).foreach { case (k, v) => hc.set(k.stripPrefix("spark.hadoop."), v) }
-      val manager = CheckpointFileManager.create(new Path(tempDir("daemon-ckpt")), hc)
-      (manager.getClass.getSimpleName, hc.get("fs.file.impl"))
-    }
-    assert(resolved(tempDir("daemon") + "/queues") ===
+    // the stream session's conf as Spark applies it: every SQL conf copied
+    // into the per-query Hadoop conf the checkpoint manager is created from
+    val hc = Epochs.streamSession(spark).sessionState.newHadoopConf()
+    def resolved(dir: String) =
+      CheckpointFileManager.create(new Path(dir), hc).asInstanceOf[LocalFiles.CheckpointManager].inner match {
+        case m: FileSystemBasedCheckpointFileManager => // `fs` is protected in Scala, public in bytecode
+          (m.getClass.getSimpleName, m.getClass.getMethod("fs").invoke(m).getClass.getName)
+        case m => (m.getClass.getSimpleName, hc.get("fs.file.impl"))
+      }
+    assert(resolved(tempDir("daemon") + "/queues/_checkpoints/s") ===
       ("FileSystemBasedCheckpointFileManager", classOf[LocalFiles].getName))
-    assert(resolved("hdfs://nn:8020/queues") ===
+    // a local authority: the manager is built, no namenode is contacted
+    assert(resolved("hdfs://localhost:8020/queues/_checkpoints/s") ===
       ("FileContextBasedCheckpointFileManager", spark.sparkContext.hadoopConfiguration.get("fs.file.impl")))
   }
 }

@@ -15,10 +15,16 @@ arguments to a log, then execs the real binary found on the original
 `--log` keeps that log, one line per spawn. Prints the command's own output unchanged, then one JSON line on
 standard output: `{"forkcount": {"chmod": n, "ls": n, "readlink": n, "stat": n},
 "total": n, "exit": code}`. Exits with the command's exit code.
+
+`--check` (what `make forkcheck` runs) also fails on the spawns that graft's
+writes no longer make: any `readlink`, and any `chmod` of a path under a
+`_checkpoints/` directory. It prints each such spawn on standard error and
+exits 1 when the command itself succeeded.
 """
 import argparse
 import json
 import os
+import re
 import shlex
 import shutil
 import subprocess
@@ -63,9 +69,26 @@ def count(lines, programs=PROGRAMS):
     return dict(sorted(counts.items()))
 
 
+CHECKPOINT_PATH = re.compile(r"/_checkpoints(/|\s|$)")
+
+
+def forbidden(lines):
+    """The spawns `--check` fails on, from the shim log's lines: every
+    `readlink`, and every `chmod` whose arguments name a path under a
+    `_checkpoints/` directory."""
+    out = []
+    for line in lines:
+        words = line.split()
+        if words[:1] == ["readlink"] or (words[:1] == ["chmod"] and CHECKPOINT_PATH.search(line)):
+            out.append(line.rstrip("\n"))
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--log", help="keep the shim log at this path")
+    ap.add_argument("--check", action="store_true",
+                    help="exit 1 on any readlink spawn or chmod under _checkpoints/")
     ap.add_argument("command", nargs=argparse.REMAINDER)
     args = ap.parse_args()
     cmd = args.command[1:] if args.command[:1] == ["--"] else args.command
@@ -79,9 +102,13 @@ def main():
         env = dict(os.environ, PATH=shim_dir + os.pathsep + path)
         code = subprocess.call(cmd, env=env)
         with open(log) as f:
-            counts = count(f, programs)
+            lines = f.readlines()
+    counts = count(lines, programs)
     print(json.dumps({"forkcount": counts, "total": sum(counts.values()), "exit": code}))
-    return code
+    bad = forbidden(lines) if args.check else []
+    for line in bad:
+        print("forkcount: forbidden spawn: " + line, file=sys.stderr)
+    return code or (1 if bad else 0)
 
 
 if __name__ == "__main__":

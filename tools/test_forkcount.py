@@ -25,6 +25,21 @@ class CountTest(unittest.TestCase):
                          {"chmod": 0, "df": 1})
 
 
+class ForbiddenTest(unittest.TestCase):
+    def test_every_readlink_and_only_checkpoint_chmods_are_forbidden(self):
+        lines = ["readlink -f /usr/x\n",
+                 "chmod 0644 /w/sink/_checkpoints/q/offsets/.0.tmp\n",
+                 "chmod 0755 /w/sink/_checkpoints\n",
+                 "chmod 0644 /w/data/events.parquet/_SUCCESS\n",
+                 "chmod 0644 /w/my_checkpoints/x\n",
+                 "stat /w/sink/_checkpoints/q\n",
+                 "\n"]
+        self.assertEqual(forkcount.forbidden(lines),
+                         ["readlink -f /usr/x",
+                          "chmod 0644 /w/sink/_checkpoints/q/offsets/.0.tmp",
+                          "chmod 0755 /w/sink/_checkpoints"])
+
+
 class ShimTest(unittest.TestCase):
     def test_shims_log_each_spawn_and_run_the_real_program(self):
         with tempfile.TemporaryDirectory() as d:
@@ -59,6 +74,21 @@ class MainTest(unittest.TestCase):
         self.assertEqual(result["total"], 1)
         self.assertEqual(result["exit"], 3)
 
+    def test_check_fails_a_successful_command_on_a_forbidden_spawn(self):
+        with tempfile.TemporaryDirectory() as d:
+            os.mkdir(os.path.join(d, "_checkpoints"))
+            plain, ckpt = os.path.join(d, "plain"), os.path.join(d, "_checkpoints", "offsets")
+            for f in (plain, ckpt):
+                open(f, "w").close()
+            tool = [sys.executable, os.path.join(HERE, "forkcount.py"), "--check", "--",
+                    "sh", "-c", 'chmod 0600 "$1"', "sh"]
+            clean = subprocess.run(tool + [plain], capture_output=True, text=True)
+            dirty = subprocess.run(tool + [ckpt], capture_output=True, text=True)
+        self.assertEqual(clean.returncode, 0, clean.stderr)
+        self.assertEqual(dirty.returncode, 1)
+        self.assertIn("forbidden spawn: chmod 0600 " + ckpt, dirty.stderr)
+
 
 if __name__ == "__main__":
     unittest.main()
+
