@@ -15,9 +15,11 @@ import java.nio.file.attribute.{PosixFilePermission, PosixFilePermissions}
   * On a JVM without libhadoop (most pip and tarball Spark installs),
   * `RawLocalFileSystem.setPermission` runs `chmod` as a child process, and
   * the raw filesystem calls it for every file and directory it creates:
-  * 22 for a 4-task [[graft.streaming.Epochs.overwrite]], 2,716 for one
-  * `connector` benchmark run. They were a quarter of a queue epoch's
-  * publish time. [[LocalFiles.Raw]] maps the same mode onto
+  * 22 for a 4-task epoch written through Spark's dynamic-overwrite commit,
+  * 2,716 for one `connector` benchmark run. They were a quarter of a queue
+  * epoch's publish time. [[graft.streaming.Epochs.overwrite]], which now
+  * stages its own files, still creates a part file and a `.crc` sidecar
+  * per task. [[LocalFiles.Raw]] maps the same mode onto
   * `Files.setPosixFilePermissions`. It defers to Hadoop where that cannot
   * express the mode (a sticky bit) or where the filesystem has no POSIX
   * attributes. Everything else is Hadoop's own code, `.crc` sidecars

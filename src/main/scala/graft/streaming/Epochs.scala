@@ -1,17 +1,30 @@
 package graft.streaming
 
 import graft.LocalFiles
-import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import java.io.IOException
+import java.util.UUID
 
 /** The one epoch contract every graft stream runs on: a replayable source
   * plus an idempotent sink (Structured Streaming, SIGMOD 2018; the
   * publisher-confirm semantics of mrcon/src/rabbitmq/amqp.rs:95-110). Each
-  * micro-batch is written as ONE `partCol=<epoch>` parquet partition and
-  * OVERWRITTEN when a crash between sink write and checkpoint commit
+  * micro-batch is written as ONE `partCol=<epoch>` parquet partition,
+  * staged in a hidden dir and published with one rename ([[overwrite]]),
+  * and OVERWRITTEN when a crash between sink write and checkpoint commit
   * replays the epoch — so a replay replaces, never duplicates.
   *
   * `partCol` is `epoch` for the queue, the DLQ and the operator outputs,
@@ -25,24 +38,107 @@ import org.apache.spark.sql.types.StructType
 object Epochs {
 
   /** Write `batch` as the `partCol=epochId` partition of `dir`, replacing
-    * only that partition. A zero-row batch still writes (and, on a fresh
-    * `dir`, leaves a schema-less directory): callers whose epochs can be
-    * empty use [[overwriteNonEmpty]].
+    * only that partition. A zero-row batch writes no partition and leaves
+    * an earlier one in place, but still creates `dir`, where schema
+    * inference then finds no files: callers whose epochs can be empty use
+    * [[overwriteNonEmpty]].
     *
-    * A local `dir` is written through [[graft.LocalFiles]], so the epoch's
-    * directories, part files and `.crc` sidecars get their modes without a
-    * `chmod` child process each (22 for a 4-task epoch before). No
-    * `_SUCCESS` marker is written: dynamic overwrite would put it in its
-    * staging dir and delete it with that dir.
+    * The layout is a partitioned Spark parquet write's:
+    * `dir/partCol=<epoch>/` holding one
+    * `part-%05d-<jobUUID>.c000.snappy.parquet` file per non-empty task,
+    * `partCol` dropped from the files (a `batch` column of that name
+    * included), and the same schema checks and errors as
+    * `df.write.parquet`. The commit is graft's own:
+    *  1. each task of the batch's plan writes its rows through one Spark
+    *     parquet `OutputWriter` (`spark.sql.files.maxRecordsPerFile` is not
+    *     applied) into the job's staging dir
+    *     `dir/.staging-<partCol>-<epoch>/<jobUUID>/`, creating no file when
+    *     it has no rows;
+    *  1. the driver deletes every staged file the job did not return (a
+    *     failed attempt's) and the old `partCol=<epoch>`, renames the job's
+    *     staging dir into its place, then deletes `.staging-<partCol>-<epoch>`
+    *     with whatever an earlier crashed write of this epoch left in it.
+    *
+    * A failed job deletes the staging dir and leaves the committed partition
+    * as it was. A crash before the rename leaves one, which readers skip
+    * (its name starts with a dot) and the replay of the epoch deletes. One
+    * staging dir per epoch, not per job, keeps that cleanup from listing
+    * `dir`, whose one entry per epoch grows for as long as a stream runs
+    * (Hadoop's local `listStatus` takes 150-300 ms over 10,000 entries).
+    *
+    * The job conf and writer factory are built once, on the driver, through
+    * `ParquetFileFormat.prepareWrite`, and the conf reaches the tasks as one
+    * broadcast `JobConf`. Spark's `FileFormatWriter` instead ships the whole
+    * Hadoop conf inside every task, where it is deserialized and copied into
+    * a `JobConf`, and its dynamic-overwrite commit moves each file three
+    * times (task commit, job commit, partition move). On a `--trace 1`
+    * `connector` pair (4 vCPU) the queue's `publish_ms_p50` went 124 → 61
+    * ms.
+    *
+    * A local `dir` is written through [[graft.LocalFiles]], tasks and
+    * driver alike, so no directory, part file or `.crc` sidecar spawns a
+    * `chmod` child process. A cached frame that reads `dir` is not
+    * refreshed, unlike after a `df.write`.
     */
   def overwrite(batch: DataFrame, epochId: Long, dir: String,
-                partCol: String = "epoch"): Unit =
-    batch.withColumn(partCol, lit(epochId))
-      .write.mode("overwrite")
-      .options(LocalFiles.writeOptions(dir))
-      .option("partitionOverwriteMode", "dynamic")
-      .option(SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, "false")
-      .partitionBy(partCol).parquet(dir)
+                partCol: String = "epoch"): Unit = {
+    val spark = batch.sparkSession
+    val data = GraftSqlBridge.ofRows(spark, batch.drop(partCol).queryExecution.analyzed)
+    GraftSqlBridge.checkColumnNameDuplication(data.columns.toSeq :+ partCol,
+      spark.sessionState.conf.caseSensitiveAnalysis)
+    val format = new ParquetFileFormat
+    val schema = data.queryExecution.optimizedPlan.schema
+    DataSourceUtils.verifySchema(format, schema)
+    DataSourceUtils.checkFieldNames(format, schema)
+    val options = LocalFiles.writeOptions(dir)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
+    val factory = format.prepareWrite(spark, job, options, schema)
+    val fs = LocalFiles.fileSystem(new Path(dir), job.getConfiguration)
+    val out = fs.makeQualified(new Path(dir))
+    val jobId = UUID.randomUUID.toString
+    val staging = new Path(out, s".staging-$partCol-$epochId")
+    val staged = new Path(staging, jobId)
+    fs.mkdirs(out)
+    val conf = GraftSqlBridge.broadcastJobConf(spark.sparkContext, job.getConfiguration)
+    val written = try {
+      val task = writeTask(conf, factory, schema, staged.toString, jobId) _
+      SQLExecution.withNewExecutionId(data.queryExecution, Some("save")) {
+        spark.sparkContext.runJob(data.queryExecution.toRdd, task)
+      }.flatten.toSet
+    } catch {
+      case e: Throwable =>
+        fs.delete(staging, true)
+        throw e
+    } finally conf.destroy()
+    if (written.nonEmpty) publish(fs, staged, written, new Path(out, s"$partCol=$epochId"))
+    fs.delete(staging, true)
+  }
+
+  /** One task of [[overwrite]]: its rows as one parquet file in `staged`,
+    * none when it has no rows. Returns the name of the file it wrote. A
+    * retried attempt gets its own name, because parquet will not create
+    * over a file an earlier attempt left.
+    */
+  private def writeTask(conf: Broadcast[AnyRef], factory: OutputWriterFactory, schema: StructType,
+                        staged: String, jobId: String)
+                       (task: TaskContext, rows: Iterator[InternalRow]): Option[String] =
+    Option.when(rows.hasNext) {
+      val ctx = new TaskAttemptContextImpl(GraftSqlBridge.jobConf(conf), new TaskAttemptID)
+      val attempt = if (task.attemptNumber() == 0) "" else s"-${task.attemptNumber()}"
+      val name = f"part-${task.partitionId()}%05d-$jobId$attempt.c000${factory.getFileExtension(ctx)}"
+      val writer = factory.newInstance(s"$staged/$name", schema, ctx)
+      try rows.foreach(writer.write) finally writer.close()
+      name
+    }
+
+  /** Make the job's staging dir `staged` the partition `target`: drop the
+    * files in it that are not in `written`, delete `target`, rename.
+    */
+  private def publish(fs: FileSystem, staged: Path, written: Set[String], target: Path): Unit = {
+    fs.listStatus(staged).map(_.getPath).filterNot(p => written(p.getName)).foreach(fs.delete(_, false))
+    fs.delete(target, true)
+    if (!fs.rename(staged, target)) throw new IOException(s"could not rename $staged to $target")
+  }
 
   /** Run `body` over `df` persisted, unpersisting in `finally` so a failed
     * write cannot leave the batch cached in the (supervisor-restarted)
@@ -71,8 +167,9 @@ object Epochs {
     * excluding the current epoch so a replay never sees its own earlier
     * half-write. The read carries an explicit `schema` (including
     * `partCol`): a crash mid-write of the very first epoch can leave `dir`
-    * holding only a `_temporary` subtree, where schema inference finds no
-    * footers and every replay would fail — with the schema it reads empty.
+    * holding only its hidden `.staging-<partCol>-<epoch>` dir (or nothing,
+    * after a zero-row epoch), where schema inference finds no footers and
+    * every replay would fail — with the schema it reads empty.
     */
   def history(spark: SparkSession, dir: String, schema: StructType, epochId: Long,
               partCol: String = "epoch"): DataFrame = {

@@ -146,7 +146,9 @@ object Profile {
     *   scan_groupby_noaqe  same with AQE off (isolates AQE's re-plan cost)
     *   scan_groupby_p8  same with shuffle.partitions=8 (task-count term)
     *   epoch_write      one 2,000-row, 4-task Epochs.overwrite into a temp
-    *                    local dir (the connector's per-epoch sink write)
+    *                    local dir (the connector's per-epoch sink write:
+    *                    four parquet writers under one broadcast job conf,
+    *                    then one rename of the epoch's staging dir)
     * as one JSON line {"floor_probe":{...}} — numbers recorded in SURVEY
     * §6's floor note.
     */
