@@ -84,7 +84,7 @@ forkcount:
 
 # the benchmark is built first, outside the count; the spawns are kept in $(FORKLOG)
 FORKLOG ?= .forkcheck.log
-## Fail if one connector run spawns any readlink, or any chmod under _checkpoints/
+## Fail if one connector run spawns any readlink, or any chmod under _checkpoints/ or sink<n>/
 forkcheck:
 	python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
 	python3 tools/forkcount.py --check --log $(FORKLOG) -- python3 perfbench/run.py --workload connector --seed 1 --seconds 8 --trace 0

@@ -14,15 +14,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Session conf, warmup, and the cold-sample recipe live in BenchHarness,
     // shared with tools.Profile so single-query timings stay comparable.
-    val spark = BenchHarness.session(cpus)
+    val spark = BenchHarness.envSession(32)
     BenchHarness.warmup(spark, sfDir)
     // 3 samples: this host shows occasional external multi-second stalls
     // (measured: an untouched query jumping 0.2 s → 3.2 s between full
     // bench runs) long enough to poison BOTH samples of a 2-sample min.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = BenchHarness.envCount("SPARK_GRAFT_BENCH_REPS", 3)
     // benchExtras (ann_ivf_build/ann_ivf_probe) are timed but reported under
     // a separate "extras" field (ADVICE r7: tooling that joins bench keys
     // against oracle output must see exactly the oracle-comparable set in

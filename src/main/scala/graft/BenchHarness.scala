@@ -44,6 +44,19 @@ object BenchHarness {
     spark
   }
 
+  /** A count knob of the tools: the environment variable `key`, `default`
+    * when unset. A value that is not a positive integer fails naming `key`.
+    * `SPARK_GRAFT_CPUS` sets the width of a tool's [[session]] and
+    * `SPARK_GRAFT_BENCH_REPS` [[Bench]]'s sample count.
+    */
+  def envCount(key: String, default: Int, env: Map[String, String] = sys.env): Int =
+    env.get(key).fold(default)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$key must be a positive integer, got '$v'")))
+
+  /** [[session]] as wide as `SPARK_GRAFT_CPUS`, `defaultCpus` when unset. */
+  def envSession(defaultCpus: Int): SparkSession =
+    session(envCount("SPARK_GRAFT_CPUS", defaultCpus).toString)
+
   /** A registered query by name: [[SparkEntry.queries]] plus the bench-only
     * [[SparkEntry.benchExtras]]. An unknown name fails with the known keys.
     */

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Library-level cache hygiene. Several operators persist an intermediate
   * that feeds multiple consumers of the ONE returned plan (the sparse-
@@ -49,5 +50,18 @@ object Caches {
     // survive (see the object doc). QualityModel.invalidateWeightCache
     // (public) exists only to force a re-train cost measurement (bench's
     // quality_train).
+  }
+
+  /** Run `body` over `df` persisted, for a function that reads one frame
+    * more than once and returns only after its last read. The frame is
+    * persisted only when the caller has not cached it, and `finally`
+    * unpersists only what this call persisted: a failed body cannot leave
+    * the frame cached in a long-lived session, and a caller's own cache
+    * survives for its later reads.
+    */
+  def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val own = df.storageLevel == StorageLevel.NONE
+    if (own) df.persist()
+    try body(df) finally if (own) { df.unpersist(); () }
   }
 }

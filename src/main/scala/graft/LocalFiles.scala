@@ -17,16 +17,17 @@ import java.nio.file.attribute.{PosixFilePermission, PosixFilePermissions}
   * the raw filesystem calls it for every file and directory it creates:
   * 22 for a 4-task epoch written through Spark's dynamic-overwrite commit,
   * 2,716 for one `connector` benchmark run. They were a quarter of a queue
-  * epoch's publish time. [[graft.streaming.Epochs.overwrite]], which now
-  * stages its own files, still creates a part file and a `.crc` sidecar
-  * per task. [[LocalFiles.Raw]] maps the same mode onto
+  * epoch's publish time. [[graft.PartFiles]], the one part-file writer of
+  * graft's epoch sink and `Versioned` table, still creates a part file and
+  * a `.crc` sidecar per task. [[LocalFiles.Raw]] maps the same mode onto
   * `Files.setPosixFilePermissions`. It defers to Hadoop where that cannot
   * express the mode (a sticky bit) or where the filesystem has no POSIX
   * attributes. Everything else is Hadoop's own code, `.crc` sidecars
   * included, so the files on disk are byte-identical.
   *
   * The binding is per write and never global: [[writeOptions]] scopes it to
-  * one DataFrame write, [[fileSystem]] to one Hadoop handle and
+  * the job conf of one [[graft.PartFiles]] write, [[fileSystem]] to one
+  * Hadoop handle and
   * [[LocalFiles.CheckpointManager]] to the checkpoint files of one graft
   * stream. No session conf, no `SparkContext.hadoopConfiguration` entry and
   * no environment variable of the caller is changed, so a caller's session
@@ -54,7 +55,7 @@ object LocalFiles {
   private def isLocal(path: String): Boolean =
     Option(new Path(path).toUri.getScheme).forall(_ == "file")
 
-  /** DataFrame-writer options that bind this filesystem for one write to
+  /** Hadoop conf options that bind this filesystem for one write to
     * `path`: `fs.file.impl`, plus `fs.file.impl.disable.cache`, because
     * Hadoop caches the `file:` instance by scheme, not by class, and would
     * otherwise hand the write whatever instance the JVM cached first. Empty

@@ -12,8 +12,7 @@ object Verify {
     // optional name filter for single-query iteration (tools/parity.py
     // passes its `names...` through); empty = the driver's full dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = BenchHarness.session(cpus)
+    val spark = BenchHarness.envSession(4)
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }

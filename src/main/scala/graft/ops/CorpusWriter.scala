@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Caches
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -37,10 +38,10 @@ object CorpusWriter {
     // curation pipeline) runs once, and so both actions see the SAME rows:
     // without it a nondeterministic or source-mutated plan could commit a
     // manifest whose totals disagree with the data it describes.
-    // try/finally: a failed collect or write must not leave the (possibly
-    // multi-GB) cache pinned for the session lifetime.
-    df.persist()
-    val stats = try {
+    // Caches.persisted: a failed collect or write must not leave the
+    // (possibly multi-GB) cache pinned for the session lifetime, and a
+    // frame the caller cached stays cached.
+    val stats = Caches.persisted(df) { df =>
       val charsCol =
         if (df.columns.contains("n_chars")) sum(col("n_chars")).as("n_chars")
         else lit(null).cast("long").as("n_chars")
@@ -54,7 +55,7 @@ object CorpusWriter {
         .partitionBy(partitionCol)
         .parquet(outDir)
       collected
-    } finally df.unpersist()
+    }
     val statCols = df.columns.filter(_ != partitionCol)
     val parts = stats.map { r =>
       // a NULL partition value keys as Spark's on-disk directory name for

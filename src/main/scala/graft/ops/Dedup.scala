@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Caches, Tables}
 import graft.functions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1155,23 +1155,17 @@ object Dedup {
     // twice (only the persisted signatures are shared); the distributed
     // loop instead doubles rows with a single explode over the cache, and
     // union-find needs no symmetry at all.
-    val pairs = minhashPairs(Tables.documents(spark, dir), threshold = threshold)
-      .select("id_a", "id_b").persist()
-    val nPairs = pairs.count() // materializes the persisted pair list
-    val resolved =
+    val resolved = Caches.persisted(minhashPairs(Tables.documents(spark, dir), threshold = threshold)
+        .select("id_a", "id_b")) { pairs =>
+      val nPairs = pairs.count() // materializes the persisted pair list
       if (nPairs <= localEdgeCap)
         localUnionFind(spark, pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      else {
-        val edges = pairs.select(explode(array(
+      else
+        Caches.persisted(pairs.select(explode(array(
             struct(col("id_a").as("src"), col("id_b").as("dst")),
             struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-          .select("e.src", "e.dst")
-          .persist()
-        val labeled = propagateLabels(edges, maxIter)
-        edges.unpersist(blocking = false)
-        labeled
-      }
-    pairs.unpersist()
+          .select("e.src", "e.dst"))(propagateLabels(_, maxIter))
+    }
     resolved
       .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
       .withColumn("cluster_size",

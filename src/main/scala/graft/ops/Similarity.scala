@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{LocalFiles, Tables}
+import graft.{Caches, LocalFiles, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -320,11 +320,8 @@ object Similarity {
     // round HALF_UP at 6 dp (exactly Spark's round(double, 6)); an empty
     // cell keeps its anchor; per-component counts mirror
     // avg(element_at(...))'s skip-null semantics.
-    val own = emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (own) emb.persist()
-    try Embeddings.fusedKmeans(emb,
-      Seq(Embeddings.KmeansSpec(0, dim, c, fullRow = true)), iters).head
-    finally { if (own) { emb.unpersist(); () } }
+    Caches.persisted(emb)(Embeddings.fusedKmeans(_,
+      Seq(Embeddings.KmeansSpec(0, dim, c, fullRow = true)), iters).head)
   }
 
   /** Index of the max-cosine centroid. The centroid matrix rides as an
@@ -442,23 +439,21 @@ object Similarity {
     // Fully eager function (both writes happen inside), so the persist that
     // feeds the k-means ALSO serves the assignment scan below and is
     // cleanly released before returning — no Caches.clear residue.
-    val own = emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (own) emb.persist()
-    try {
-    val centroids = ivfCentroids(emb, cells, iters, dim)
-    // KB sidecar, driver-written: a Spark job for it was fixed overhead
-    writeCentroids(indexDir, centroids)
-    // Repartition on cell before the partitioned write: without it every
-    // one of the N writer tasks emits a file into every cell=K directory
-    // (N×C small files); with it each cell's rows land in one task → one
-    // file per directory, the layout a 100 TB index wants (at that scale
-    // raise the partition count to a multiple of C for bounded file sizes).
-    emb.select(col("vec_id"), nearestCell(col("embedding"), centroids).as("cell"))
-      .repartition(cells, col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$indexDir/assignments")
-    // write-through: probes against this indexDir skip the parquet fetch
-    centroidCache.put(indexDir, centroids)
-    } finally { if (own) { emb.unpersist(); () } }
+    Caches.persisted(emb) { emb =>
+      val centroids = ivfCentroids(emb, cells, iters, dim)
+      // KB sidecar, driver-written: a Spark job for it was fixed overhead
+      writeCentroids(indexDir, centroids)
+      // Repartition on cell before the partitioned write: without it every
+      // one of the N writer tasks emits a file into every cell=K directory
+      // (N×C small files); with it each cell's rows land in one task → one
+      // file per directory, the layout a 100 TB index wants (at that scale
+      // raise the partition count to a multiple of C for bounded file sizes).
+      emb.select(col("vec_id"), nearestCell(col("embedding"), centroids).as("cell"))
+        .repartition(cells, col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(s"$indexDir/assignments")
+      // write-through: probes against this indexDir skip the parquet fetch
+      centroidCache.put(indexDir, centroids)
+    }
   }
 
   /** Probe a persisted IVF index: identical result to [[ivfTopK]] with the
@@ -574,9 +569,7 @@ object Similarity {
   def buildIvfPqIndexOf(emb: DataFrame, indexDir: String,
                         cells: Int = 16, iters: Int = 2, dim: Int = 64,
                         m: Int = 8, kCode: Int = 16): Unit = {
-    val own = emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (own) emb.persist()
-    try {
+    Caches.persisted(emb) { emb =>
       // The cell k-means and the m subspace codebook k-means are
       // independent learners over the same frame, so when their iteration
       // counts agree (pqCodebooks is pinned at 2) they share ONE fused
@@ -610,8 +603,7 @@ object Similarity {
         .write.partitionBy("cell").mode("overwrite").parquet(s"$indexDir/assignments")
       centroidCache.put(indexDir, centroids)
       pqBooksCache.put(indexDir, books)
-      ()
-    } finally { if (own) { emb.unpersist(); () } }
+    }
   }
 
   /** B5h (r18) — incremental index maintenance, the append half: encode a

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -107,8 +108,7 @@ object Skew {
     // block manager until someone clears caches — this is a diagnostic
     // run occasionally inside long-lived sessions, the exact caller that
     // least expects a cache residue.
-    val counts = df.groupBy(key.as("key")).agg(count(lit(1)).as("rows")).persist()
-    try {
+    Caches.persisted(df.groupBy(key.as("key")).agg(count(lit(1)).as("rows"))) { counts =>
       val totalRow = counts.agg(sum(col("rows"))).first()
       val total = if (totalRow.isNullAt(0)) 1.0 else totalRow.getLong(0).toDouble
       val out = counts
@@ -117,6 +117,6 @@ object Skew {
         .limit(topN)
       val rows = java.util.Arrays.asList(out.collect(): _*)
       df.sparkSession.createDataFrame(rows, out.schema)
-    } finally { counts.unpersist(); () }
+    }
   }
 }

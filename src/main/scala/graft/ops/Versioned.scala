@@ -1,8 +1,7 @@
 package graft.ops
 
-import graft.LocalFiles
+import graft.{Caches, LocalFiles, PartFiles}
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
-import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,10 +60,13 @@ import java.nio.file.{Files, StandardCopyOption}
   * cross-PROCESS publication needs an external lock, same as Delta's
   * LogStore contract; same-JVM writers are always safe via the monitor.)
   *
-  * A local (`file:`) table is written through [[graft.LocalFiles]], and
-  * its manifests and tags publish by hard link, so no commit step starts
-  * a `chmod` or `readlink` child process ([[retag]]'s overwrite rename
-  * still goes through `FileContext`).
+  * Data files are written by [[graft.PartFiles]], the one part-file
+  * writer graft's epoch sink writes through too, into a staging dir, and
+  * each is then renamed into `data/` ([[stage]]). A local (`file:`) table
+  * is written through [[graft.LocalFiles]], and its manifests and tags
+  * publish by hard link, so no commit step starts a `chmod` or `readlink`
+  * child process ([[retag]]'s overwrite rename still goes through
+  * `FileContext`).
   */
 object Versioned {
 
@@ -83,16 +85,6 @@ object Versioned {
     */
   private def fsOf(spark: SparkSession, p: Path) =
     LocalFiles.fileSystem(p, spark.sparkContext.hadoopConfiguration)
-
-  /** Write `df` into a staging dir: through [[graft.LocalFiles]] for a
-    * local table, and without a `_SUCCESS` marker, since the dir is deleted
-    * once its parts are placed.
-    */
-  private def writeStaging(df: DataFrame, staging: Path): Unit =
-    df.write.mode("overwrite")
-      .options(LocalFiles.writeOptions(staging.toString))
-      .option(SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, "false")
-      .parquet(staging.toString)
 
   private def manifestPath(dir: String, v: Long) = new Path(dir, f"manifest-v$v%d.json")
 
@@ -617,9 +609,12 @@ object Versioned {
   /** Stage `df`'s parquet parts into immutable token-unique names
     * `data/<kind><attempt>-<token>-<i>.parquet` — data files (`kind` "v")
     * and deletion-vector sidecars ("dv-v") alike — returning the placed
-    * names. Runs OUTSIDE any lock — the expensive part of a commit is
-    * parallel across writers by design; only the manifest publish is
-    * contended.
+    * names. [[graft.PartFiles]], the writer of the epoch sink too, writes
+    * them into `_staging-v<attempt>-<token>` as an unpartitioned write, so
+    * an empty `df` still stages one schema-only file; each is then renamed
+    * into `data/` in task order. A failed write leaves no staging dir. Runs
+    * OUTSIDE any lock — the expensive part of a commit is parallel across
+    * writers by design; only the manifest publish is contended.
     */
   private def stage(spark: SparkSession, df: DataFrame, dir: String,
                     attempt: Long, kind: String = "v"): Seq[String] = {
@@ -628,16 +623,13 @@ object Versioned {
     fs.mkdirs(new Path(base, "data"))
     val tok = newToken()
     val staging = new Path(base, s"_staging-v$attempt-$tok")
-    writeStaging(df, staging)
-    val parts = fs.listStatus(staging)
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val named = parts.zipWithIndex.map { case (p, i) =>
+    val named = PartFiles.write(df, staging, None).sorted.zipWithIndex.map { case (n, i) =>
       val target = new Path(base, f"data/$kind$attempt%d-$tok-$i%05d.parquet")
-      if (!fs.rename(p, target)) sys.error(s"could not place ${p.getName} for v$attempt")
+      if (!fs.rename(new Path(staging, n), target)) sys.error(s"could not place $n for v$attempt")
       target.getName
     }
     fs.delete(staging, true)
-    named.toSeq
+    named
   }
 
   /** The one REPLACE publish: under the dir's monitor, publish `files` as
@@ -1038,24 +1030,25 @@ object Versioned {
     require(basis.nonEmpty, s"deleteWhere requires an existing table under $dir")
     val files = readManifest(spark, dir, basis.get)
     val dvs = dvsOf(spark, dir, basis.get)
-    val matches = liveWithPos(spark, dir, files, dvs)
-      .where(predicate)
-      .select(col("_gdv_f").as("file"), col("_gdv_p").as("pos"))
-      .persist() // two consumers: affected-file discovery + sidecar write
-    try {
+    // two consumers: affected-file discovery + sidecar write
+    Caches.persisted(liveWithPos(spark, dir, files, dvs)
+        .where(predicate)
+        .select(col("_gdv_f").as("file"), col("_gdv_p").as("pos"))) { matches =>
       val affected = matches.select("file").distinct()
         .collect().map(_.getString(0)).toSeq // manifest-cardinality bound
-      if (affected.isEmpty) return basis.get
-      // fresh sidecar = new positions ∪ the affected files' LIVE old
-      // positions (their pointers move here; unaffected files keep theirs)
-      // — in one sidecar file: the rows are positions, not data (megabytes
-      // where the masked table is terabytes), and the read side broadcasts
-      // them whole
-      val carried = dvRowsFor(spark, dir, dvs, affected)
-      val dvName = stage(spark, matches.unionByName(carried).coalesce(1), dir,
-        basis.get + 1, kind = "dv-v").head
-      publishReplace(spark, dir, basis, files, -1L, dvs ++ affected.map(_ -> dvName), "delete")
-    } finally { matches.unpersist(); () }
+      if (affected.isEmpty) basis.get
+      else {
+        // fresh sidecar = new positions ∪ the affected files' LIVE old
+        // positions (their pointers move here; unaffected files keep theirs)
+        // — in one sidecar file: the rows are positions, not data (megabytes
+        // where the masked table is terabytes), and the read side broadcasts
+        // them whole
+        val carried = dvRowsFor(spark, dir, dvs, affected)
+        val dvName = stage(spark, matches.unionByName(carried).coalesce(1), dir,
+          basis.get + 1, kind = "dv-v").head
+        publishReplace(spark, dir, basis, files, -1L, dvs ++ affected.map(_ -> dvName), "delete")
+      }
+    }
   }
 
   /** D22c — keyed MERGE: apply a change set (upserts + deletes by key) to
@@ -1150,9 +1143,8 @@ object Versioned {
     // prior append evolved in, and a touched file may predate it
     val fillType = (snap.schema.fields ++ newCols)
       .map(f => f.name -> f.dataType).toMap
-    val net = lastOpPerKey(changes, keyCol, orderCol)
-      .persist() // two consumers: touched-file scan + survivor anti-join/upserts
-    try {
+    // two consumers: touched-file scan + survivor anti-join/upserts
+    Caches.persisted(lastOpPerKey(changes, keyCol, orderCol)) { net =>
       val keys = net.select(col(keyCol)).distinct()
       // D22f pruning: files whose committed key min/max cannot contain any
       // change key never enter the touched-file scan — on a range-clustered
@@ -1211,7 +1203,7 @@ object Versioned {
       val staged = stage(spark, survivors.unionByName(upserts), dir, basis.get + 1)
       publishReplace(spark, dir, basis, basisFiles.filterNot(touchedNames) ++ staged, epoch,
         dvs -- touchedNames, "merge")
-    } finally { net.unpersist(); () }
+    }
   }
 
   /** D22d — OPTIMIZE: rewrite the CURRENT snapshot's small files into

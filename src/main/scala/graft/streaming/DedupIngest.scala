@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Caches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -101,7 +102,7 @@ object DedupIngest {
         checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val index = Epochs.history(batch.sparkSession, indexDir, indexSchema, epochId, "batch_id")
       // two writers below; dedup must not run twice
-      Epochs.persisted(dedupBatch(batch, index)) { fresh =>
+      Caches.persisted(dedupBatch(batch, index)) { fresh =>
         Epochs.overwrite(fresh, epochId, outDir, "batch_id")
         Epochs.overwrite(fresh.select("text_hash")
           .where(col("text_hash").isNotNull), // null-text rows carry no content to index

@@ -1,18 +1,9 @@
 package graft.streaming
 
-import graft.LocalFiles
+import graft.{LocalFiles, PartFiles}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -38,98 +29,50 @@ import java.util.UUID
 object Epochs {
 
   /** Write `batch` as the `partCol=epochId` partition of `dir`, replacing
-    * only that partition. A zero-row batch writes no partition and leaves
-    * an earlier one in place, but still creates `dir`, where schema
-    * inference then finds no files: callers whose epochs can be empty use
-    * [[overwriteNonEmpty]].
+    * only that partition. A zero-row batch writes nothing and creates no
+    * dir: it leaves an earlier partition of the epoch in place, and `dir`
+    * absent until the first row, where [[history]] reads empty.
     *
     * The layout is a partitioned Spark parquet write's:
     * `dir/partCol=<epoch>/` holding one
     * `part-%05d-<jobUUID>.c000.snappy.parquet` file per non-empty task,
     * `partCol` dropped from the files (a `batch` column of that name
-    * included), and the same schema checks and errors as
-    * `df.write.parquet`. The commit is graft's own:
-    *  1. each task of the batch's plan writes its rows through one Spark
-    *     parquet `OutputWriter` (`spark.sql.files.maxRecordsPerFile` is not
-    *     applied) into the job's staging dir
-    *     `dir/.staging-<partCol>-<epoch>/<jobUUID>/`, creating no file when
-    *     it has no rows;
-    *  1. the driver deletes every staged file the job did not return (a
-    *     failed attempt's) and the old `partCol=<epoch>`, renames the job's
-    *     staging dir into its place, then deletes `.staging-<partCol>-<epoch>`
-    *     with whatever an earlier crashed write of this epoch left in it.
+    * included), and the same schema checks and errors as a plain parquet
+    * write. The files are written by [[graft.PartFiles]], the writer
+    * `Versioned` stages through too, into the job's staging dir
+    * `dir/.staging-<partCol>-<epoch>/<uuid>/`. The publish is this
+    * module's own: the driver deletes every staged file the job did not
+    * return (a failed attempt's) and the old `partCol=<epoch>`, renames the
+    * job's staging dir into its place, then deletes
+    * `.staging-<partCol>-<epoch>` with whatever an earlier crashed write of
+    * this epoch left in it.
     *
-    * A failed job deletes the staging dir and leaves the committed partition
-    * as it was. A crash before the rename leaves one, which readers skip
-    * (its name starts with a dot) and the replay of the epoch deletes. One
+    * A failed job leaves the committed partition as it was and no staging
+    * dir. A crash before the rename leaves one, which readers skip (its
+    * name starts with a dot) and the replay of the epoch deletes. One
     * staging dir per epoch, not per job, keeps that cleanup from listing
     * `dir`, whose one entry per epoch grows for as long as a stream runs
     * (Hadoop's local `listStatus` takes 150-300 ms over 10,000 entries).
+    * Against Spark's dynamic-overwrite commit, which moves each file three
+    * times (task commit, job commit, partition move), the queue's
+    * `publish_ms_p50` on a `--trace 1` `connector` pair (4 vCPU) went 124 →
+    * 61 ms.
     *
-    * The job conf and writer factory are built once, on the driver, through
-    * `ParquetFileFormat.prepareWrite`, and the conf reaches the tasks as one
-    * broadcast `JobConf`. Spark's `FileFormatWriter` instead ships the whole
-    * Hadoop conf inside every task, where it is deserialized and copied into
-    * a `JobConf`, and its dynamic-overwrite commit moves each file three
-    * times (task commit, job commit, partition move). On a `--trace 1`
-    * `connector` pair (4 vCPU) the queue's `publish_ms_p50` went 124 → 61
-    * ms.
-    *
-    * A local `dir` is written through [[graft.LocalFiles]], tasks and
-    * driver alike, so no directory, part file or `.crc` sidecar spawns a
-    * `chmod` child process. A cached frame that reads `dir` is not
-    * refreshed, unlike after a `df.write`.
+    * A local `dir` is published through [[graft.LocalFiles]], as it is
+    * written, so no step spawns a `chmod` child process. A cached frame
+    * that reads `dir` is not refreshed, unlike after a DataFrame write.
     */
   def overwrite(batch: DataFrame, epochId: Long, dir: String,
                 partCol: String = "epoch"): Unit = {
-    val spark = batch.sparkSession
-    val data = GraftSqlBridge.ofRows(spark, batch.drop(partCol).queryExecution.analyzed)
-    GraftSqlBridge.checkColumnNameDuplication(data.columns.toSeq :+ partCol,
-      spark.sessionState.conf.caseSensitiveAnalysis)
-    val format = new ParquetFileFormat
-    val schema = data.queryExecution.optimizedPlan.schema
-    DataSourceUtils.verifySchema(format, schema)
-    DataSourceUtils.checkFieldNames(format, schema)
-    val options = LocalFiles.writeOptions(dir)
-    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
-    val factory = format.prepareWrite(spark, job, options, schema)
-    val fs = LocalFiles.fileSystem(new Path(dir), job.getConfiguration)
+    val fs = LocalFiles.fileSystem(new Path(dir), batch.sparkSession.sessionState.newHadoopConf())
     val out = fs.makeQualified(new Path(dir))
-    val jobId = UUID.randomUUID.toString
     val staging = new Path(out, s".staging-$partCol-$epochId")
-    val staged = new Path(staging, jobId)
-    fs.mkdirs(out)
-    val conf = GraftSqlBridge.broadcastJobConf(spark.sparkContext, job.getConfiguration)
-    val written = try {
-      val task = writeTask(conf, factory, schema, staged.toString, jobId) _
-      SQLExecution.withNewExecutionId(data.queryExecution, Some("save")) {
-        spark.sparkContext.runJob(data.queryExecution.toRdd, task)
-      }.flatten.toSet
-    } catch {
-      case e: Throwable =>
-        fs.delete(staging, true)
-        throw e
-    } finally conf.destroy()
-    if (written.nonEmpty) publish(fs, staged, written, new Path(out, s"$partCol=$epochId"))
-    fs.delete(staging, true)
+    val staged = new Path(staging, UUID.randomUUID.toString)
+    try {
+      val written = PartFiles.write(batch, staged, Some(partCol)).toSet
+      if (written.nonEmpty) publish(fs, staged, written, new Path(out, s"$partCol=$epochId"))
+    } finally fs.delete(staging, true)
   }
-
-  /** One task of [[overwrite]]: its rows as one parquet file in `staged`,
-    * none when it has no rows. Returns the name of the file it wrote. A
-    * retried attempt gets its own name, because parquet will not create
-    * over a file an earlier attempt left.
-    */
-  private def writeTask(conf: Broadcast[AnyRef], factory: OutputWriterFactory, schema: StructType,
-                        staged: String, jobId: String)
-                       (task: TaskContext, rows: Iterator[InternalRow]): Option[String] =
-    Option.when(rows.hasNext) {
-      val ctx = new TaskAttemptContextImpl(GraftSqlBridge.jobConf(conf), new TaskAttemptID)
-      val attempt = if (task.attemptNumber() == 0) "" else s"-${task.attemptNumber()}"
-      val name = f"part-${task.partitionId()}%05d-$jobId$attempt.c000${factory.getFileExtension(ctx)}"
-      val writer = factory.newInstance(s"$staged/$name", schema, ctx)
-      try rows.foreach(writer.write) finally writer.close()
-      name
-    }
 
   /** Make the job's staging dir `staged` the partition `target`: drop the
     * files in it that are not in `written`, delete `target`, rename.
@@ -140,36 +83,15 @@ object Epochs {
     if (!fs.rename(staged, target)) throw new IOException(s"could not rename $staged to $target")
   }
 
-  /** Run `body` over `df` persisted, unpersisting in `finally` so a failed
-    * write cannot leave the batch cached in the (supervisor-restarted)
-    * session's block manager.
-    */
-  def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
-    df.persist()
-    try body(df) finally df.unpersist()
-  }
-
-  /** [[overwrite]] for the stateful jobs, whose no-data epochs (watermark
-    * advances, timeouts that close nothing) emit zero rows: an empty epoch
-    * writes nothing, which is trivially idempotent and keeps `dir` absent
-    * until the first row — an empty partitioned write would leave a
-    * directory `spark.read.parquet` cannot infer a schema from. The batch
-    * is persisted so the probe and the write run its plan once.
-    */
-  def overwriteNonEmpty(batch: DataFrame, epochId: Long, dir: String,
-                        partCol: String = "epoch"): Unit =
-    persisted(batch) { b =>
-      if (b.head(1).nonEmpty) overwrite(b, epochId, dir, partCol)
-    }
-
   /** The rows written under `dir` by every epoch except `epochId` (empty
     * when `dir` does not exist yet): the history an ingest index probes,
     * excluding the current epoch so a replay never sees its own earlier
     * half-write. The read carries an explicit `schema` (including
     * `partCol`): a crash mid-write of the very first epoch can leave `dir`
-    * holding only its hidden `.staging-<partCol>-<epoch>` dir (or nothing,
-    * after a zero-row epoch), where schema inference finds no footers and
-    * every replay would fail — with the schema it reads empty.
+    * holding only its hidden `.staging-<partCol>-<epoch>` dir, where schema
+    * inference finds no footers and every replay would fail — with the
+    * schema it reads empty. (A zero-row epoch writes nothing, so `dir` is
+    * absent until the first row and reads empty too.)
     */
   def history(spark: SparkSession, dir: String, schema: StructType, epochId: Long,
               partCol: String = "epoch"): DataFrame = {

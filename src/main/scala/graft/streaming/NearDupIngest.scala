@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Caches
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -144,7 +145,7 @@ object NearDupIngest {
         numHashes, bands, threshold)
       // three writers below; the dedup must run once. The epoch owns both
       // caches: the survivors and the signatures pairsFrom persisted.
-      try Epochs.persisted(survivors) { fresh =>
+      try Caches.persisted(survivors) { fresh =>
         Epochs.overwrite(fresh.drop("sig"), epochId, outDir, "batch_id")
         val indexed = fresh.where(col("sig").isNotNull)
         Epochs.overwrite(indexed.select("doc_id", "sig"), epochId, sigDir, "batch_id")

@@ -179,6 +179,6 @@ object Sessionize {
     }
     // one epoch-overwritten partition per epoch (a plain append would emit a
     // replayed epoch's closed sessions twice)
-    Epochs.start(spark, sessions, checkpointDir, trigger)(Epochs.overwriteNonEmpty(_, _, outDir))
+    Epochs.start(spark, sessions, checkpointDir, trigger)(Epochs.overwrite(_, _, outDir))
   }
 }

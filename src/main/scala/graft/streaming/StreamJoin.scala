@@ -105,6 +105,6 @@ object StreamJoin {
     }
     // one epoch-overwritten partition per epoch (a plain append would
     // duplicate a replayed epoch's joined rows); no-data epochs write nothing
-    Epochs.start(spark, out, checkpointDir)(Epochs.overwriteNonEmpty(_, _, outDir))
+    Epochs.start(spark, out, checkpointDir)(Epochs.overwrite(_, _, outDir))
   }
 }

@@ -122,7 +122,7 @@ object StreamingHeavyHitters {
       .json(sourceDir)
     Epochs.start(spark, s => summaries(events(s), k, nShards).toDF(), checkpointDir, trigger,
         outputMode = OutputMode.Update())(
-      Epochs.overwriteNonEmpty(_, _, outDir, "batch_id"))
+      Epochs.overwrite(_, _, outDir, "batch_id"))
   }
 
   /** The newest summary row per (type, shard, user) — later epochs

@@ -42,6 +42,6 @@ object WindowedCounts {
     // one epoch-overwritten partition per epoch (a plain append would
     // double-count a replayed epoch's finalized windows)
     Epochs.start(spark, s => windowed(events(s), windowLen, watermarkDelay), checkpointDir)(
-      Epochs.overwriteNonEmpty(_, _, outDir))
+      Epochs.overwrite(_, _, outDir))
   }
 }

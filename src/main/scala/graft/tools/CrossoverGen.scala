@@ -138,7 +138,7 @@ object CrossoverGen {
     val nEvents = if (args.length > 3) args(3).toLong else 2000000L
     val nOrders = if (args.length > 4) args(4).toLong else 0L
     val srcDir = "/root/testdata/sf0.1"
-    val spark = graft.BenchHarness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.BenchHarness.envSession(32)
     import spark.implicits._
 
     // marginals measured from the real table, not hardcoded guesses

@@ -33,7 +33,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.flatMap(modes.get).getOrElse(sys.error(
       s"usage: Profile <${modes.keys.toSeq.sorted.mkString("|")}> args... (see the scaladoc)"))
-    val spark = BenchHarness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = BenchHarness.envSession(32)
     try mode(spark, args.toSeq.tail).foreach(println) finally spark.stop()
   }
 

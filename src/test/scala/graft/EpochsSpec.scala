@@ -9,10 +9,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The one epoch contract every stream writes through: a replayed epoch
-  * replaces its own partition and nothing else, an empty stateful epoch
-  * writes nothing, a failed or crashed write leaves the committed epoch
-  * as it was, the files and errors are a plain Spark write's, and a
-  * cached batch is released even when its write fails.
+  * replaces its own partition and nothing else, an empty epoch writes
+  * nothing, a failed or crashed write leaves the committed epoch as it
+  * was, and the files and errors are a plain Spark write's.
   */
 class EpochsSpec extends SparkSpec {
 
@@ -32,19 +31,12 @@ class EpochsSpec extends SparkSpec {
     assert(ids(dir, 0L) === (0L until 5L).toSet, "the other epoch is untouched")
   }
 
-  test("overwriteNonEmpty: an empty first epoch leaves the directory absent") {
+  test("overwrite: an empty first epoch leaves the directory absent") {
     val base = tempDir("epochs")
-    val empty = spark.range(0).toDF()
-    Epochs.overwriteNonEmpty(empty, 0L, s"$base/probed")
-    assert(!Files.exists(Paths.get(s"$base/probed")))
-    // why the probe exists: a plain empty partitioned write leaves a
-    // directory with no data files, which schema inference rejects
-    Epochs.overwrite(empty, 0L, s"$base/plain")
-    assert(names(s"$base/plain").isEmpty)
-    val e = intercept[AnalysisException](spark.read.parquet(s"$base/plain"))
-    assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"))
-    Epochs.overwriteNonEmpty(spark.range(0, 3).toDF(), 1L, s"$base/probed")
-    assert(ids(s"$base/probed", 1L) === Set(0L, 1L, 2L))
+    Epochs.overwrite(spark.range(0).toDF(), 0L, s"$base/out")
+    assert(!Files.exists(Paths.get(s"$base/out")))
+    Epochs.overwrite(spark.range(0, 3).toDF(), 1L, s"$base/out")
+    assert(ids(s"$base/out", 1L) === Set(0L, 1L, 2L))
   }
 
   test("overwrite: a write whose task throws leaves the committed epoch and no staging dir") {
@@ -97,18 +89,5 @@ class EpochsSpec extends SparkSpec {
       assert(condition(Epochs.overwrite(df, 0L, s"$base/graft")) === expected, df.schema)
       assert(!Files.exists(Paths.get(s"$base/graft")), df.schema)
     }
-  }
-
-  test("persisted: a body that throws still unpersists its frame") {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val e = intercept[IllegalStateException] {
-      Epochs.persisted(spark.range(0, 100).toDF()) { df =>
-        assert(df.count() === 100) // materializes the cache
-        assert(spark.sparkContext.getPersistentRDDs.size === before + 1)
-        throw new IllegalStateException("write failed mid-epoch")
-      }
-    }
-    assert(e.getMessage.contains("mid-epoch"))
-    assert(spark.sparkContext.getPersistentRDDs.size === before)
   }
 }

@@ -74,6 +74,16 @@ class ProfileSpec extends SparkSpec {
     }
   }
 
+  test("a CPU or rep knob keeps its default when unset and fails naming its key on a bad value") {
+    assert(BenchHarness.envCount("SPARK_GRAFT_CPUS", 32, Map.empty) === 32)
+    assert(BenchHarness.envCount("SPARK_GRAFT_BENCH_REPS", 3, Map("SPARK_GRAFT_BENCH_REPS" -> " 5 ")) === 5)
+    for (bad <- Seq("0", "-2", "four", "", "1.5")) {
+      val e = intercept[IllegalArgumentException](
+        BenchHarness.envCount("SPARK_GRAFT_CPUS", 4, Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("floor: the AQE and shuffle-partition flips leave the session's conf as it was") {
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val before = keys.map(spark.conf.get)

@@ -148,6 +148,43 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.read(spark, dir).count() === 5)
   }
 
+  test("zero-row commits, an empty append and a merge that deletes every key each read back empty with the table's schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    val dir = tempDir("versioned-empty") + "/table"
+    val schema = rows(0, 1).schema
+    val noPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(noPartitions.rdd.getNumPartitions === 0)
+    Versioned.commit(spark, noPartitions, dir)                           // v1
+    Versioned.commit(spark, rows(0, 0), dir)                             // v2
+    Versioned.append(spark, rows(0, 0), dir)                             // v3
+    Versioned.commit(spark, rows(0, 5), dir)                             // v4
+    val deletes = rows(0, 5).withColumn("operation_type", lit("delete")).withColumn("seq", lit(1L))
+    Versioned.merge(spark, deletes, dir, keyCol = "id", orderCol = "seq") // v5
+    for (v <- Seq(1L, 2L, 3L, 5L)) {
+      val back = Versioned.read(spark, dir, v)
+      assert(back.count() === 0, s"v$v")
+      assert(back.schema.map(f => f.name -> f.dataType) === schema.map(f => f.name -> f.dataType), s"v$v")
+    }
+    // each empty write stages one schema-only file, as Spark's unpartitioned write does
+    assert(Versioned.history(spark, dir).map(h => (h._1, h._2, h._5)) === Seq(
+      (1L, "replace", 1), (2L, "replace", 1), (3L, "append", 2), (4L, "replace", 4), (5L, "merge", 1)))
+  }
+
+  test("a commit whose task throws publishes no version and leaves no staging dir") {
+    import org.apache.spark.sql.functions._
+    val dir = tempDir("versioned-fail") + "/table"
+    Versioned.commit(spark, rows(0, 5), dir)
+    val failing = spark.range(10, 15, 1, 1)
+      .select(expr("if(id = 13, raise_error('boom'), id)").as("id"), lit("x").as("payload"))
+    val e = intercept[Exception](Versioned.commit(spark, failing, dir))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    assert(Versioned.versions(spark, dir) === Seq(1L))
+    assert(Versioned.read(spark, dir).count() === 5)
+    val left = new java.io.File(dir).list().filter(_.startsWith("_staging-v"))
+    assert(left.isEmpty, left.toSeq)
+  }
+
   private def docs(langs: (String, Long)*) = {
     val s = spark
     import s.implicits._

@@ -18,8 +18,10 @@ standard output: `{"forkcount": {"chmod": n, "ls": n, "readlink": n, "stat": n},
 
 `--check` (what `make forkcheck` runs) also fails on the spawns that graft's
 writes no longer make: any `readlink`, and any `chmod` of a path under a
-`_checkpoints/` directory. It prints each such spawn on standard error and
-exits 1 when the command itself succeeded.
+`_checkpoints/` directory or under a benchmark drain's `sink<n>/` directory,
+which holds the epoch queue, the `Versioned` table and the checkpoints. It
+prints each such spawn on standard error and exits 1 when the command
+itself succeeded.
 """
 import argparse
 import json
@@ -69,17 +71,17 @@ def count(lines, programs=PROGRAMS):
     return dict(sorted(counts.items()))
 
 
-CHECKPOINT_PATH = re.compile(r"/_checkpoints(/|\s|$)")
+FORK_FREE_PATH = re.compile(r"/(_checkpoints|sink\d+)(/|\s|$)")
 
 
 def forbidden(lines):
     """The spawns `--check` fails on, from the shim log's lines: every
     `readlink`, and every `chmod` whose arguments name a path under a
-    `_checkpoints/` directory."""
+    `_checkpoints/` or a `sink<n>/` directory."""
     out = []
     for line in lines:
         words = line.split()
-        if words[:1] == ["readlink"] or (words[:1] == ["chmod"] and CHECKPOINT_PATH.search(line)):
+        if words[:1] == ["readlink"] or (words[:1] == ["chmod"] and FORK_FREE_PATH.search(line)):
             out.append(line.rstrip("\n"))
     return out
 
@@ -88,7 +90,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--log", help="keep the shim log at this path")
     ap.add_argument("--check", action="store_true",
-                    help="exit 1 on any readlink spawn or chmod under _checkpoints/")
+                    help="exit 1 on any readlink spawn or chmod under _checkpoints/ or sink<n>/")
     ap.add_argument("command", nargs=argparse.REMAINDER)
     args = ap.parse_args()
     cmd = args.command[1:] if args.command[:1] == ["--"] else args.command

@@ -39,6 +39,19 @@ class ForbiddenTest(unittest.TestCase):
                           "chmod 0644 /w/sink/_checkpoints/q/offsets/.0.tmp",
                           "chmod 0755 /w/sink/_checkpoints"])
 
+    def test_chmods_under_a_drain_sink_are_forbidden_and_the_check_table_is_not(self):
+        lines = ["chmod 0644 /w/sink3/queue/epoch=0/part-00000-x.c000.snappy.parquet\n",
+                 "chmod 0755 /w/sink12/queue_table/_staging-v1-t\n",
+                 "chmod 0755 /w/sink1\n",
+                 "chmod 0644 /w/data/check.parquet/part-00000-x.snappy.parquet\n",
+                 "chmod 0755 /w/sink/queue\n",
+                 "chmod 0755 /w/sinks2/queue\n",
+                 "chmod 0755 /w/mysink2/queue\n"]
+        self.assertEqual(forkcount.forbidden(lines),
+                         ["chmod 0644 /w/sink3/queue/epoch=0/part-00000-x.c000.snappy.parquet",
+                          "chmod 0755 /w/sink12/queue_table/_staging-v1-t",
+                          "chmod 0755 /w/sink1"])
+
 
 class ShimTest(unittest.TestCase):
     def test_shims_log_each_spawn_and_run_the_real_program(self):
