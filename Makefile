@@ -13,7 +13,7 @@ SEED    ?= 1
 PAIRS   ?= 10
 BASE    ?= HEAD
 
-.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount forkcheck copyscan help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount forkcheck copyscan loc help
 
 all: build
 
@@ -92,6 +92,10 @@ forkcheck:
 ## Code written twice: six-line windows repeated in src/main/scala (exit 1 if any)
 copyscan:
 	python3 tools/copyscan.py src/main/scala
+
+## Non-blank, non-comment lines per file and in total under src/main/scala
+loc:
+	python3 tools/loc.py src/main/scala
 
 ## The benchmark harness's own unit tests
 perfbench-test:

@@ -30,17 +30,22 @@ final case class Settings private (connections: Connections,
 
 object Settings {
   /** Duplicate-configuration validation (config.rs:44-58): two identical
-    * collection configs are a user error — reject with both indices.
+    * collection configs are a user error — reject with both indices. So are
+    * two configs that watch the same `db_name.coll_name` under different
+    * queues: a namespace is one supervised stream and one Spark query name,
+    * so the second config would never start.
     */
   def create(connections: Connections,
              collections: Seq[CollectionConfig]): Either[String, Settings] = {
-    val seen = scala.collection.mutable.HashMap[CollectionConfig, Int]()
+    val seen = scala.collection.mutable.HashMap[(String, String), (CollectionConfig, Int)]()
     collections.zipWithIndex.foreach { case (c, i) =>
-      seen.get(c) match {
-        case Some(prev) =>
-          return Left(s"Duplicate collection configuration found at index $i and $prev: $c")
-        case None => seen.update(c, i)
+      val ns = (c.watched.dbName, c.watched.collName)
+      seen.get(ns).foreach { case (first, prev) =>
+        return Left(
+          if (first == c) s"Duplicate collection configuration found at index $i and $prev: $c"
+          else s"Collection ${ns._1}.${ns._2} is watched by the configurations at index $i and $prev: $c")
       }
+      seen.update(ns, (c, i))
     }
     Right(Settings(connections, collections.toVector))
   }

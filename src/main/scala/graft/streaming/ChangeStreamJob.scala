@@ -90,7 +90,7 @@ final case class KafkaEventSource(bootstrapServers: String, topic: String,
                                   startingOffsets: String = "earliest",
                                   maxOffsetsPerTrigger: Option[Long] = None) extends EventSource {
   override def load(spark: SparkSession): DataFrame = {
-    KafkaEventSource.failFast(spark)
+    KafkaEventSource.failFast()
     val reader = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("subscribe", topic)
@@ -115,13 +115,11 @@ object KafkaEventSource {
       .select(col("e.*"))
       .where(col("event_id").isNotNull)
 
-  private[streaming] def failFast(spark: SparkSession): Unit =
-    require(
-      try { Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider",
-        false, Thread.currentThread.getContextClassLoader); true }
-      catch { case _: ClassNotFoundException => false },
-      "KafkaEventSource needs the spark-sql-kafka-0-10 package on the classpath " +
-        "(--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark version>)")
+  /** The classpath guard both Kafka bindings run first. */
+  private[streaming] def failFast(): Unit = ChangeStreamJob.requireClass(
+    "org.apache.spark.sql.kafka010.KafkaSourceProvider",
+    "KafkaEventSource needs the spark-sql-kafka-0-10 package on the classpath " +
+      "(--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark version>)")
 }
 
 /** Native MongoDB change-stream binding — the source the reference actually
@@ -136,13 +134,16 @@ object KafkaEventSource {
   * are PURE static-frame functions (MongoSourceSpec drives them without a
   * mongod): [[MongoEventSource.decode]] for the event feed,
   * [[MongoEventSource.decodeEnvelope]] for the 1:1 change-event envelope.
-  * The connector jar is not in this sandbox — `failFast` names the missing
-  * package instead of Spark's "Failed to find data source" at query start.
+  * graft does not ship the connector jar: `load` names the missing package
+  * ([[ChangeStreamJob.requireClass]]) instead of Spark's "Failed to find
+  * data source" at query start.
   */
 final case class MongoEventSource(connectionUri: String, database: String,
                                   collection: String) extends EventSource {
   override def load(spark: SparkSession): DataFrame = {
-    MongoEventSource.failFast(spark)
+    ChangeStreamJob.requireClass("com.mongodb.spark.sql.connector.MongoTableProvider",
+      "MongoEventSource needs the mongo-spark-connector package on the classpath " +
+        "(--packages org.mongodb.spark:mongo-spark-connector_2.13:<version>)")
     MongoEventSource.decode(
       spark.readStream.format("mongodb")
         .option("spark.mongodb.connection.uri", connectionUri)
@@ -206,14 +207,6 @@ object MongoEventSource {
       col("fullDocument").as("full_document"),
       timestamp_seconds(ts.getField("$timestamp").getField("t")).as("cluster_time"))
   }
-
-  private[streaming] def failFast(spark: SparkSession): Unit =
-    require(
-      try { Class.forName("com.mongodb.spark.sql.connector.MongoTableProvider",
-        false, Thread.currentThread.getContextClassLoader); true }
-      catch { case _: ClassNotFoundException => false },
-      "MongoEventSource needs the mongo-spark-connector package on the classpath " +
-        "(--packages org.mongodb.spark:mongo-spark-connector_2.13:<version>)")
 }
 
 /** Where change-event payloads go. Called once per epoch from foreachBatch;
@@ -273,7 +266,7 @@ final case class VersionedMergePublisher(tableDir: String) extends QueuePublishe
 final case class KafkaQueuePublisher(bootstrapServers: String, topic: String)
     extends QueuePublisher {
   override def publish(batch: DataFrame, epochId: Long): Unit = {
-    KafkaEventSource.failFast(batch.sparkSession)
+    KafkaEventSource.failFast()
     KafkaQueuePublisher.encode(batch)
       .write.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
@@ -301,13 +294,16 @@ object KafkaQueuePublisher {
   * (`confirmSelect` + `waitForConfirms`, the lapin `Confirmation` await) —
   * at-least-once into the same epoch-replay contract as every publisher
   * here; the reference's consumers dedupe by event key (A5b) exactly as
-  * ours do. The client jar is not in this sandbox, so the transport is
-  * reached via reflection behind a failFast naming the missing package.
+  * ours do. graft does not ship the client jar, so the transport is
+  * reached via reflection behind a classpath guard naming the missing
+  * package ([[ChangeStreamJob.requireClass]]).
   */
 final case class AmqpQueuePublisher(amqpUri: String, streamName: String)
     extends QueuePublisher {
   override def publish(batch: DataFrame, epochId: Long): Unit = {
-    AmqpQueuePublisher.failFast()
+    ChangeStreamJob.requireClass("com.rabbitmq.client.ConnectionFactory",
+      "AmqpQueuePublisher needs the RabbitMQ java client on the classpath " +
+        "(--packages com.rabbitmq:amqp-client:<version>)")
     val uri = amqpUri
     val queue = streamName
     // Coalesce before publishing: an epoch fanned over 32 shuffle
@@ -407,7 +403,7 @@ object AmqpQueuePublisher {
     new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
   @volatile private var hookInstalled = false
 
-  // Classloader note (mirrors failFast): --packages jars can be visible
+  // Classloader note (mirrors ChangeStreamJob.requireClass): --packages jars can be visible
   // only through the thread context loader (REPL/notebook child loaders); a
   // bare Class.forName would use graft's DEFINING loader — passing the
   // guard and then dying with ClassNotFoundException inside the task.
@@ -506,14 +502,6 @@ object AmqpQueuePublisher {
       chClass.getMethod("waitForConfirmsOrDie").invoke(ch)
     }
   }
-
-  private[streaming] def failFast(): Unit =
-    require(
-      try { Class.forName("com.rabbitmq.client.ConnectionFactory",
-        false, Thread.currentThread.getContextClassLoader); true }
-      catch { case _: ClassNotFoundException => false },
-      "AmqpQueuePublisher needs the RabbitMQ java client on the classpath " +
-        "(--packages com.rabbitmq:amqp-client:<version>)")
 }
 
 /** Toy in-driver publisher proving the QueuePublisher seam in tests. */
@@ -547,6 +535,17 @@ final class InMemoryQueuePublisher extends QueuePublisher {
   *    each document's last image across micro-batches.
   */
 object ChangeStreamJob {
+
+  /** Fail with `message` unless `className` loads through the thread
+    * context class loader, the one `--packages` jars may be visible through
+    * only: the guard an optional connector runs before Spark would fail
+    * deep in query start.
+    */
+  private[streaming] def requireClass(className: String, message: String): Unit =
+    require(
+      try { Class.forName(className, false, Thread.currentThread.getContextClassLoader); true }
+      catch { case _: ClassNotFoundException => false },
+      message)
 
   /** Schema of the JSON/parquet event feed the stream watches. */
   val eventSchema: StructType = StructType(Seq(

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A14 — dead-letter (quarantine) routing for malformed change events: the
   * connector's sources currently DROP rows that cannot become envelopes (a
@@ -23,9 +23,11 @@ import org.apache.spark.sql.types.StringType
   * an event (missing event_id) is the other reason. Routing happens inside
   * `foreachBatch`: good rows take EXACTLY the normal path
   * (ChangeStreamJob.toChangeEvents → the idempotent QueuePublisher), bad
-  * rows append to the DLQ as an epoch-overwritten parquet partition — the
-  * same replay-replaces idempotence contract as the queue itself, so a
-  * crash-replayed epoch cannot double-quarantine.
+  * rows append to the DLQ as an epoch-overwritten `epoch=<n>` parquet
+  * partition ([[Epochs.overwrite]]) — the same replay-replaces idempotence
+  * contract as the queue itself, so a crash-replayed epoch cannot
+  * double-quarantine. Every DLQ writer keeps that partition layout, and
+  * every reader here reads it with the fixed [[Schema]].
   *
   * Scale: quarantining is a per-row filter on the already-decoded batch —
   * no second parse, no extra shuffle; the DLQ write is one partition per
@@ -34,6 +36,10 @@ import org.apache.spark.sql.types.StringType
 object DeadLetter {
 
   val RawCol = "_raw"
+
+  /** A DLQ row: `reason` and `raw` in the files, `epoch` the partition. */
+  val Schema: StructType = StructType(Seq(StructField("reason", StringType),
+    StructField("raw", StringType), StructField("epoch", LongType)))
 
   /** The quarantine split of a decoded batch: (reason, raw) for bad rows.
     * Reasons: `corrupt_json` (unparseable line — `_raw` holds the bytes),
@@ -51,9 +57,16 @@ object DeadLetter {
     * `raw` line re-parses under the CURRENT schema; rows that now decode
     * to a real event publish through the normal envelope path under a
     * replay epoch, rows that still fail stay quarantined (the DLQ is
-    * REWRITTEN to exactly the still-bad set, so replay is idempotent:
-    * a second replay with nothing fixed is a no-op). Returns
-    * (published, still_quarantined).
+    * REWRITTEN to exactly the still-bad set, so replay is idempotent: a
+    * second replay with nothing fixed publishes nothing and writes
+    * nothing). Returns (published, still_quarantined).
+    *
+    * The DLQ is read with its fixed [[Schema]] ([[Epochs.read]]), so an
+    * absent or emptied DLQ reads empty. A replay that empties the DLQ
+    * leaves one schema-only file in `epoch=<replayEpoch>/`: a zero-row
+    * partitioned write leaves no data file, and a plain
+    * `spark.read.parquet` of the DLQ would then fail schema inference
+    * (ADVICE r11).
     *
     * Batch job, not a stream: replay is an operator action after a fix,
     * and the DLQ is bounded by the failure window — one keyed-nothing
@@ -62,11 +75,7 @@ object DeadLetter {
   def replay(spark: SparkSession, dlqDir: String, publisher: QueuePublisher,
              replayEpoch: Long, db: String = "test",
              coll: String = "testcoll"): (Long, Long) = {
-    // An emptied-by-replay (or never-populated) DLQ has no data files —
-    // schema inference would fail, and there is nothing to do (ADVICE r11).
-    if (!hasDataFiles(spark, dlqDir)) return (0L, 0L)
-    val dlq = spark.read.parquet(dlqDir)
-    val parsed = dlq.withColumn("ev",
+    val parsed = Epochs.read(spark, dlqDir, Schema).withColumn("ev",
       from_json(col("raw"), ChangeStreamJob.eventSchema))
     val good = parsed.where(col("ev").isNotNull && col("ev.event_id").isNotNull)
       .select(col("ev.*"))
@@ -74,28 +83,18 @@ object DeadLetter {
       .select("reason", "raw", "epoch")
       // materialize before the overwrite clobbers the files being read
       .localCheckpoint(true)
-    val published = good.count()
-    if (published > 0)
+    val (published, stillCount) = (good.count(), still.count())
+    if (published > 0) {
       publisher.publish(ChangeStreamJob.toChangeEvents(good, db, coll), replayEpoch)
-    val stillCount = still.count()
-    if (stillCount > 0)
       still.write.mode("overwrite").partitionBy("epoch").parquet(dlqDir)
-    else
-      // A fully-successful replay must leave the DLQ READABLE, but a
-      // zero-row partitionBy write emits no data files at all (only
-      // _SUCCESS) and plain spark.read.parquet then fails inference
-      // (ADVICE r11). Write one explicit empty UNPARTITIONED file carrying
-      // the (reason, raw, epoch) schema instead; [[startWithDlq]] clears it
-      // before its next partitioned quarantine write so the two layouts
-      // never coexist.
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          still.schema)
-        .write.mode("overwrite").parquet(dlqDir)
+      if (stillCount == 0) still.drop("epoch").write.parquet(s"$dlqDir/epoch=$replayEpoch")
+    }
     (published, stillCount)
   }
 
-  /** Delete root-level parquet files under `dir` (the empty readability
-    * marker [[replay]] writes when everything replayed successfully).
+  /** Delete root-level parquet files under `dir`: the empty readability
+    * marker that replays once wrote at the DLQ's root, which Spark rejects
+    * beside the `epoch=<n>` partitions.
     */
   private def clearFlatMarker(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -105,23 +104,11 @@ object DeadLetter {
         .foreach(s => fs.delete(s.getPath, false))
   }
 
-  /** Whether `dir` holds at least one parquet data file (top level or one
-    * partition level down — the two layouts the DLQ writers produce).
-    */
-  private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    def parquetIn(d: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(d).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    parquetIn(p) || fs.listStatus(p).exists(s =>
-      s.isDirectory && !s.getPath.getName.startsWith("_") && parquetIn(s.getPath))
-  }
-
   /** Stream a JSON event dir with quarantine routing: good rows → the
     * change-event envelope → `publisher` (the normal pipeline), bad rows →
     * `dlqDir` as (reason, raw, epoch), epoch-overwritten. One streaming
-    * query, one checkpoint — the DLQ commits atomically with the queue.
+    * query, one checkpoint — the DLQ commits atomically with the queue. A
+    * root-level marker an older [[replay]] left is cleared once, here.
     */
   def startWithDlq(spark: SparkSession, sourceDir: String,
                    publisher: QueuePublisher, dlqDir: String,
@@ -136,17 +123,13 @@ object DeadLetter {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(sourceDir)
       .withColumn("__dlq_reason", reasonCol)
+    clearFlatMarker(spark, dlqDir)
     Epochs.start(spark, raw, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val bad = batch.where(col("__dlq_reason").isNotNull)
         .select(col("__dlq_reason").as("reason"),
           coalesce(col(RawCol),
             to_json(struct(ChangeStreamJob.eventSchema.fieldNames.map(col): _*)))
             .as("raw"))
-      // Clear the zero-row flat marker a fully-successful [[replay]] may
-      // have left: root-level data files and epoch=N partition dirs must
-      // never coexist (Spark rejects the mixed layout at read). The
-      // marker is empty by construction, so this deletes no data.
-      clearFlatMarker(batch.sparkSession, dlqDir)
       Epochs.overwrite(bad, epochId, dlqDir)
       val good = batch.where(col("__dlq_reason").isNull)
         .drop("__dlq_reason", RawCol)

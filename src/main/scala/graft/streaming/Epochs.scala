@@ -94,12 +94,18 @@ object Epochs {
     * absent until the first row and reads empty too.)
     */
   def history(spark: SparkSession, dir: String, schema: StructType, epochId: Long,
-              partCol: String = "epoch"): DataFrame = {
+              partCol: String = "epoch"): DataFrame =
+    read(spark, dir, schema).where(col(partCol) =!= epochId)
+
+  /** Every row under `dir`, read with the explicit `schema` (partition
+    * column included), so `dir` reads empty where schema inference would
+    * fail: absent, or holding no data file.
+    */
+  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else spark.read.schema(schema).option("basePath", dir).parquet(dir)
-      .where(col(partCol) =!= epochId)
   }
 
   /** Start the frame `source` builds as a checkpointed stream whose every

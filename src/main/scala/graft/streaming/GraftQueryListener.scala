@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * them: a listener that also counted starts would count every supervised
   * start twice.
   *
-  * Query-name convention: `db.collection` (the Supervisor's key) so the
-  * labelled series match metrics.rs labels.
+  * Query-name convention: `db.collection` (the watched namespace, one per
+  * supervised stream) so the labelled series match metrics.rs labels.
   */
 final class GraftQueryListener(metrics: MetricsRegistry) extends StreamingQueryListener {
 

@@ -12,10 +12,12 @@ import scala.jdk.CollectionConverters._
   *   mrcon_task_restarts_total          counter (collection, database, reason)
   *   mrcon_task_failures_total          counter (collection, database, error_type)
   *
-  * Same exposition names so reference dashboards keep working; fed by the
-  * [[Supervisor]] and by a StreamingQueryListener. Driver-side only (metrics
-  * are control-plane, never per-row), so a ConcurrentHashMap of LongAdders is
-  * the right scale design — executor work never touches this.
+  * Same exposition names so reference dashboards keep working. The
+  * [[Supervisor]] sets both gauges from its per-stream records after each
+  * pass and counts starts, restarts and failures; a StreamingQueryListener
+  * adds per-batch progress. Driver-side only (metrics are control-plane,
+  * never per-row), so a ConcurrentHashMap of LongAdders is the right scale
+  * design — executor work never touches this.
   */
 final class MetricsRegistry {
   // Gauges are AtomicLong, not LongAdder: setGauge must be one atomic
@@ -30,15 +32,8 @@ final class MetricsRegistry {
     if (labels.isEmpty) name
     else name + labels.map { case (k, v) => s"""$k="$v"""" }.mkString("{", ",", "}")
 
-  private def gauge(k: String): java.util.concurrent.atomic.AtomicLong =
-    gauges.computeIfAbsent(k, _ => new java.util.concurrent.atomic.AtomicLong)
-
   def setGauge(name: String, value: Long, labels: (String, String)*): Unit =
-    gauge(key(name, labels)).set(value)
-  def incGauge(name: String, labels: (String, String)*): Unit =
-    gauge(key(name, labels)).incrementAndGet()
-  def decGauge(name: String, labels: (String, String)*): Unit =
-    gauge(key(name, labels)).decrementAndGet()
+    gauges.computeIfAbsent(key(name, labels), _ => new java.util.concurrent.atomic.AtomicLong).set(value)
   def inc(name: String, labels: (String, String)*): Unit =
     counters.computeIfAbsent(key(name, labels), _ => new LongAdder).increment()
 
@@ -50,10 +45,8 @@ final class MetricsRegistry {
 
   // Typed helpers mirroring metrics.rs update methods.
   def setServerCount(n: Long): Unit = setGauge(MetricsRegistry.RunningServers, n)
-  def incrementCollectionServer(coll: String, db: String): Unit =
-    incGauge(MetricsRegistry.CollectionServers, "collection" -> coll, "database" -> db)
-  def decrementCollectionServer(coll: String, db: String): Unit =
-    decGauge(MetricsRegistry.CollectionServers, "collection" -> coll, "database" -> db)
+  def setCollectionServer(coll: String, db: String, n: Long): Unit =
+    setGauge(MetricsRegistry.CollectionServers, n, "collection" -> coll, "database" -> db)
   def recordTaskStart(): Unit = inc(MetricsRegistry.TasksStarted)
   def recordTaskRestart(coll: String, db: String, reason: String): Unit =
     inc(MetricsRegistry.TaskRestarts, "collection" -> coll, "database" -> db, "reason" -> reason)

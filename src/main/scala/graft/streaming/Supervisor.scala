@@ -16,7 +16,13 @@ import scala.util.control.NonFatal
   * In Spark the "task" is a StreamingQuery; failure shows up as
   * `query.exception` being defined after termination. Restart = start a new
   * query from the same checkpoint, which resumes after the last committed
-  * batch (the resume-token semantics come for free).
+  * batch (the resume-token semantics come for free). So each stream needs
+  * one record (`Supervisor.StreamState`): its unreaped query, why to start
+  * it next, and its failure burst. The records live in one concurrent map,
+  * which `/health` and the shutdown hook read without waiting for a pass;
+  * every start goes through one function (`start`), and the two gauges
+  * are derived from the records at the end of [[startAll]] and of each
+  * [[superviseOnce]].
   */
 final class Supervisor(spark: SparkSession, settings: Settings,
                        metrics: MetricsRegistry,
@@ -28,31 +34,9 @@ final class Supervisor(spark: SparkSession, settings: Settings,
   // and restarts it alone can classify; GraftQueryListener adds only
   // per-batch progress, so attaching both never counts a start twice.
 
-  private val running = new ConcurrentHashMap[String, StreamingQuery]()
-  private val restarts = new ConcurrentHashMap[String, Integer]()
-  // The restart budget applies per failure BURST, not per daemon lifetime:
-  // a counter that only ever increments would permanently abandon a
-  // collection after maxRestarts TRANSIENT failures spread over months of
-  // uptime. A failure arriving more than restartWindowMs after the
-  // previous one opens a fresh budget.
-  private val lastFailureAt = new ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Consume one unit of restart budget for `k`, resetting the counter
-    * first when the previous failure is outside the burst window.
-    */
-  private def chargeRestart(k: String): Int = {
-    val now = System.currentTimeMillis()
-    val prev = lastFailureAt.put(k, now)
-    if (prev != null && now - prev > restartWindowMs) restarts.put(k, 0)
-    restarts.merge(k, 1, (a, b) => a + b)
-  }
-  // Streams whose restart ATTEMPT itself threw (e.g. checkpoint dir briefly
-  // unreachable): retried on the next pass while restart budget remains.
-  // Kept out of `running` so the dead query's gauges/failure are not
-  // re-counted every pass.
-  private val pendingRestart = ConcurrentHashMap.newKeySet[String]()
-
-  private def keyOf(c: CollectionConfig) = s"${c.watched.dbName}.${c.watched.collName}"
+  import Supervisor.StreamState
+  // A stream that never started has no record, and so no gauge series.
+  private val streams = new ConcurrentHashMap[CollectionConfig, StreamState]()
 
   /** Classify a failure like server.rs:216-235 routes error types.
     * Exception-TYPE indicators (FileNotFound / path-does-not-exist) are
@@ -73,100 +57,76 @@ final class Supervisor(spark: SparkSession, settings: Settings,
     else ("unknown_error", "unhandled_error")
   }
 
-  /** Start every configured collection's stream (server.rs:181-199). */
-  def startAll(): Unit = {
-    settings.collections.foreach { c =>
-      val k = keyOf(c)
-      // Idempotent: a retry-with-timeout wrapper may call startAll again
-      // after a partial failure; already-live streams must not be restarted.
-      val existing = Option(running.get(k))
-      if (!existing.exists(_.isActive)) {
-        // Reap a dead query before overwriting it: silently replacing it
-        // would lose its failure classification and double-increment the
-        // collection gauge with no matching decrement.
-        existing.foreach { dead =>
-          dead.exception.foreach { e =>
-            metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, classify(e)._1)
-          }
-          metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
-          running.remove(k)
-        }
-        launch(c)
-      }
-    }
-    metrics.setServerCount(running.size().toLong)
-  }
+  private def stream(c: CollectionConfig): StreamState = streams.getOrDefault(c, StreamState())
 
-  /** Start `c`'s query and record it as running. */
-  private def launch(c: CollectionConfig): Unit = {
-    running.put(keyOf(c), startQuery(spark, c))
-    metrics.incrementCollectionServer(c.watched.collName, c.watched.dbName)
-    metrics.recordTaskStart()
-  }
-
-  /** [[launch]] for a restart: a start that throws is recorded as a task
-    * failure and reported as `false` instead of escaping the pass.
+  /** Start every configured collection's stream (server.rs:181-199).
+    * Idempotent: a retry-with-timeout wrapper calls it again after a
+    * partial failure, and a live stream is not restarted. A start that
+    * throws escapes to that wrapper.
     */
-  private def relaunch(c: CollectionConfig): Boolean =
-    try { launch(c); true }
-    catch { case NonFatal(e) =>
-      metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, classify(e)._1)
-      false
-    }
+  def startAll(): Unit =
+    try settings.collections.foreach { c =>
+      val s = stream(c)
+      if (!s.query.exists(_.isActive)) start(c, s, None)
+    } finally publishGauges()
 
   /** One supervision pass (the `join_next` loop body, server.rs:200-252):
-    * reap terminated queries; restart failed ones (bounded), record metrics;
-    * a clean stop (collection dropped) is not restarted.
-    * Returns the number of restarts performed.
+    * reap terminated queries; restart failed ones (bounded) and retry the
+    * restarts that threw; a clean stop (collection dropped) is not
+    * restarted (server.rs:205-207). Returns the number of restarts
+    * performed.
     */
-  def superviseOnce(): Int = {
-    var restarted = 0
-    settings.collections.foreach { c =>
-      val k = keyOf(c)
-      // Retry a stream whose previous restart attempt threw — each attempt
-      // consumes restart budget; past the budget the stream is abandoned
-      // like any other over-budget failure.
-      if (pendingRestart.contains(k) && !running.containsKey(k)) {
-        val n = chargeRestart(k)
-        if (n <= maxRestarts) {
-          metrics.recordTaskRestart(c.watched.collName, c.watched.dbName, "restart_retry")
-          if (relaunch(c)) {
-            pendingRestart.remove(k)
-            restarted += 1
-          }
-        } else pendingRestart.remove(k)
-      }
-      Option(running.get(k)).foreach { q =>
-        if (!q.isActive) {
-          metrics.decrementCollectionServer(c.watched.collName, c.watched.dbName)
-          q.exception match {
-            case Some(e) =>
-              val (errorType, reason) = classify(e)
-              metrics.recordTaskFailure(c.watched.collName, c.watched.dbName, errorType)
-              val n = chargeRestart(k)
-              if (n <= maxRestarts) {
-                metrics.recordTaskRestart(c.watched.collName, c.watched.dbName, reason)
-                if (relaunch(c)) restarted += 1
-                else {
-                  // drop the dead query so the next pass doesn't re-count
-                  // this failure / re-decrement gauges — but queue the key
-                  // for retry: budget remains, and abandoning the stream on
-                  // one transient start failure would silently stop the
-                  // collection while /health stays green
-                  running.remove(k)
-                  pendingRestart.add(k)
-                }
-              } else running.remove(k)
-            case None =>
-              // Clean termination == watched collection dropped: do not
-              // restart (server.rs:205-207), tokens cleaned by checkpoint.
-              running.remove(k)
-          }
+  def superviseOnce(): Int =
+    try settings.collections.count { c =>
+      val s = stream(c)
+      s.query match {
+        case Some(q) if q.isActive => false
+        case Some(q) => q.exception match {
+          case Some(e) => start(c, s, Some(classify(e)._2))
+          case None => streams.put(c, s.copy(query = None)); false
         }
+        case None => s.next.exists(r => start(c, s, Some(r)))
       }
+    } finally publishGauges()
+
+  /** The one start path: bootstrap (`reason` None) or a restart for
+    * `reason`. It reaps `s`'s dead query, recording its failure; a restart
+    * charges the burst budget and, past it, abandons the stream. A
+    * bootstrap start that throws escapes; a restart that throws is
+    * recorded as a failure and retried on the next pass. Returns whether
+    * a query was started.
+    */
+  private def start(c: CollectionConfig, s: StreamState, reason: Option[String]): Boolean = {
+    val (coll, db) = (c.watched.collName, c.watched.dbName)
+    s.query.flatMap(_.exception).foreach(e => metrics.recordTaskFailure(coll, db, classify(e)._1))
+    val now = System.currentTimeMillis()
+    val reaped = if (reason.isEmpty) s.copy(query = None)
+      else s.copy(query = None, lastFailureAt = now,
+        burst = (if (now - s.lastFailureAt > restartWindowMs) 0 else s.burst) + 1)
+    if (reason.isDefined && reaped.burst > maxRestarts) {
+      streams.put(c, reaped.copy(next = None))
+      false
+    } else try {
+      reason.foreach(metrics.recordTaskRestart(coll, db, _))
+      streams.put(c, reaped.copy(query = Some(startQuery(spark, c)), next = None))
+      metrics.recordTaskStart()
+      true
+    } catch { case NonFatal(e) =>
+      // replace, not put: a stream that never started keeps no record
+      if (reason.isEmpty) { streams.replace(c, reaped); throw e }
+      metrics.recordTaskFailure(coll, db, classify(e)._1)
+      streams.put(c, reaped.copy(next = Some("restart_retry")))
+      false
     }
-    metrics.setServerCount(running.values.asScala.count(_.isActive).toLong)
-    restarted
+  }
+
+  /** The gauges, derived from the records: a stream counts as a server
+    * while it holds an unreaped query.
+    */
+  private def publishGauges(): Unit = {
+    val held = streams.asScala.toSeq.map { case (c, s) => c -> s.query.size.toLong }
+    held.foreach { case (c, n) => metrics.setCollectionServer(c.watched.collName, c.watched.dbName, n) }
+    metrics.setServerCount(held.map(_._2).sum)
   }
 
   /** Health endpoint semantics (mrcond/src/main.rs:53-60): healthy while at
@@ -177,25 +137,37 @@ final class Supervisor(spark: SparkSession, settings: Settings,
     */
   def healthy(): Boolean =
     settings.collections.isEmpty ||
-      running.values.asScala.exists(_.isActive) ||
-      !pendingRestart.isEmpty
+      streams.values.asScala.exists(s => s.query.exists(_.isActive) || s.next.isDefined)
 
-  def activeQueries: Seq[StreamingQuery] = running.values.asScala.toSeq.filter(_.isActive)
+  private def queries: Seq[StreamingQuery] = streams.values.asScala.toSeq.flatMap(_.query)
+
+  def activeQueries: Seq[StreamingQuery] = queries.filter(_.isActive)
 
   def awaitAll(timeoutMs: Long): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    running.values.asScala.foreach { q =>
+    queries.foreach { q =>
       val left = (deadline - System.currentTimeMillis()).max(1)
       try q.awaitTermination(left) catch { case NonFatal(_) => () }
     }
   }
 
-  def stopAll(): Unit = running.values.asScala.foreach { q =>
+  def stopAll(): Unit = queries.foreach { q =>
     try q.stop() catch { case NonFatal(_) => () }
   }
 }
 
 object Supervisor {
+  /** One supervised stream's state. `query` is held, live or not, until a
+    * pass or `startAll` reaps it; `next` is the restart reason of a pending
+    * retry (a restart attempt that threw). The restart budget applies per
+    * failure BURST, not per daemon lifetime: `burst` counts the restart
+    * attempts since a failure that came more than `restartWindowMs` after
+    * the one before it (`lastFailureAt`), so transient failures spread over
+    * months of uptime never abandon a collection.
+    */
+  private final case class StreamState(query: Option[StreamingQuery] = None, next: Option[String] = None,
+                                       burst: Int = 0, lastFailureAt: Long = 0L)
+
   /** Retry-with-timeout bootstrap (server.rs:38-69): retry `op` every
     * `retryDelayMs` until `timeoutMs` elapses; first success wins.
     */

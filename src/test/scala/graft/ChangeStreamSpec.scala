@@ -110,6 +110,32 @@ class ChangeStreamSpec extends SparkSpec {
     assert(graft.streaming.DeadLetter.replay(spark, tempDir("dlq3") + "/never", pub, 3L) === ((0L, 0L)))
   }
 
+  test("the DLQ keeps one partition layout: an emptying replay, then a root marker cleared at stream start") {
+    val s = spark
+    import s.implicits._
+    val (queue, dlq) = (tempDir("queue4") + "/q", tempDir("dlq4") + "/d")
+    val nowValid =
+      """{"event_id":12,"ts_us":1704067200000000,"user_id":5,"event_type":"view","value":2.0,"props":"{}"}"""
+    Seq(("corrupt_json", nowValid, 0L)).toDF("reason", "raw", "epoch")
+      .write.partitionBy("epoch").parquet(dlq)
+    val pub = graft.streaming.ParquetQueuePublisher(queue)
+    assert(graft.streaming.DeadLetter.replay(spark, dlq, pub, replayEpoch = 5L) === ((1L, 0L)))
+    def visible(dir: String) =
+      new java.io.File(dir).listFiles().map(_.getName).toSeq.filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(visible(dlq) === Seq("epoch=5"), "the emptied DLQ holds no root-level file")
+    // a root-level marker as earlier replays wrote it: the DLQ stream clears
+    // it once, when it starts, and quarantines into partitions beside nothing
+    val (src, old) = (tempDir("src"), tempDir("dlq5") + "/d")
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      graft.streaming.DeadLetter.Schema).write.parquet(old)
+    writeEvents(src, "good.json", 0 until 3)
+    Files.write(Paths.get(src, "bad.json"), "{\"event_id\": 1, NOT-JSON".getBytes)
+    val q = graft.streaming.DeadLetter.startWithDlq(spark, src, pub, old, tempDir("ckpt"))
+    q.awaitTermination(60000)
+    assert(visible(old).forall(_.startsWith("epoch=")))
+    assert(spark.read.parquet(old).select("reason").as[String].collect().toSeq === Seq("corrupt_json"))
+  }
+
   test("dimension enrichment re-resolves the versioned dimension at epoch boundaries") {
     import graft.ops.Versioned
     val s = spark

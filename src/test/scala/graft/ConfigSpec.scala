@@ -16,6 +16,14 @@ class ConfigSpec extends AnyFunSuite {
     assert(res.left.exists(m => m.contains("index 2") && m.contains("0")))
   }
 
+  test("two configurations watching one namespace are rejected with both indices") {
+    val res = Settings.create(Connections("src://x", "sink://y"),
+      Seq(coll("test", "c1", "q1"), coll("test", "c2", "q2"), coll("test", "c1", "q3")))
+    assert(res.left.exists(m => m.contains("test.c1") && m.contains("index 2 and 0")))
+    // the same collection name in another database is another namespace
+    assert(Settings.create(Connections("s", "k"), Seq(coll("a", "c1", "q1"), coll("b", "c1", "q1"))).isRight)
+  }
+
   test("distinct collections are accepted in order") {
     val res = Settings.create(Connections("s", "k"),
       Seq(coll("test", "c1", "q1"), coll("test", "c2", "q2")))

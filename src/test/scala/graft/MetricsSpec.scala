@@ -29,8 +29,8 @@ class MetricsSpec extends AnyFunSuite {
 
   test("export emits exactly one TYPE line per metric name across label sets") {
     val m = new MetricsRegistry
-    m.incrementCollectionServer("c1", "db")
-    m.incrementCollectionServer("c2", "db")
+    m.setCollectionServer("c1", "db", 1)
+    m.setCollectionServer("c2", "db", 1)
     m.recordTaskFailure("c1", "db", "sink_error")
     m.recordTaskFailure("c2", "db", "source_error")
     val out = m.export()
@@ -45,7 +45,7 @@ class MetricsSpec extends AnyFunSuite {
     val m = new MetricsRegistry
     m.setServerCount(3)
     m.recordTaskStart()
-    m.incrementCollectionServer("testcoll", "test")
+    m.setCollectionServer("testcoll", "test", 1)
     m.recordTaskRestart("testcoll", "test", "source_connection_failed")
     val out = m.export()
     assert(out.contains("mrcon_running_servers_total 3"))

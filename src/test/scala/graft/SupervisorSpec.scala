@@ -80,13 +80,76 @@ class SupervisorSpec extends SparkSpec {
     sup.awaitAll(60000)
     val r1 = sup.superviseOnce() // restart attempt -> starter THROWS
     assert(r1 === 0, "the throwing restart must not count as a restart")
+    assert(sup.healthy(), "a stream awaiting an in-budget retry counts as alive")
     val r2 = sup.superviseOnce() // retried: budget remains -> starts cleanly
     assert(r2 === 1, "the stream must be retried on the next pass, not abandoned")
+    def c9(labels: (String, String)*) = Seq("collection" -> "c9", "database" -> "test") ++ labels
+    assert(metrics.value(MetricsRegistry.TasksStarted) === 2, "only the starts that succeeded count")
+    assert(metrics.value(MetricsRegistry.TaskRestarts, c9("reason" -> "sink_connection_failed"): _*) === 1)
+    assert(metrics.value(MetricsRegistry.TaskRestarts, c9("reason" -> "restart_retry"): _*) === 1)
+    assert(metrics.value(MetricsRegistry.TaskFailures, c9("error_type" -> "sink_error"): _*) === 1)
+    assert(metrics.value(MetricsRegistry.TaskFailures, c9("error_type" -> "source_error"): _*) === 1)
+    assert(metrics.value(MetricsRegistry.CollectionServers, c9(): _*) === 1)
     sup.awaitAll(60000)
     sup.superviseOnce()
     assert(spark.read.parquet(s"$base/queue_c9").count() === 1,
       "the retried stream processed the feed")
     sup.stopAll()
+  }
+
+  /** One stream whose sink fails twice, under `maxRestarts = 1` and
+    * `window` (the constructor default when None): the restarts each of
+    * the two supervision passes after a failure performs.
+    */
+  private def twoFailures(name: String, window: Option[Long]): (Seq[Int], Supervisor, MetricsRegistry) = {
+    val base = tempDir("sup-burst")
+    val metrics = new MetricsRegistry
+    val starter = flakyQuery(new AtomicInteger(0), failTimes = 2, base) _
+    val settings = settingsOf(coll(name))
+    val sup = window.fold(new Supervisor(spark, settings, metrics, starter, maxRestarts = 1))(w =>
+      new Supervisor(spark, settings, metrics, starter, maxRestarts = 1, restartWindowMs = w))
+    sup.startAll()
+    val restarts = (1 to 2).map { _ => sup.awaitAll(60000); sup.superviseOnce() }
+    (restarts, sup, metrics)
+  }
+
+  test("the restart budget is per failure burst") {
+    // a zero window opens a fresh budget for each failure: both restart
+    val (spread, sup0, _) = twoFailures("w0", Some(0L))
+    assert(spread === Seq(1, 1))
+    sup0.awaitAll(60000)
+    assert(sup0.superviseOnce() === 0)
+    // the default window holds both failures in one burst: the second
+    // exceeds the budget and the stream is abandoned
+    val (burst, sup, metrics) = twoFailures("wd", None)
+    assert(burst === Seq(1, 0))
+    assert(!sup.healthy(), "an abandoned stream is not live")
+    val wd = Seq("collection" -> "wd", "database" -> "test")
+    assert(metrics.value(MetricsRegistry.CollectionServers, wd: _*) === 0)
+    assert(metrics.value(MetricsRegistry.TaskFailures, wd :+ ("error_type" -> "sink_error"): _*) === 2)
+    assert(metrics.value(MetricsRegistry.TaskRestarts, wd :+ ("reason" -> "sink_connection_failed"): _*) === 1)
+    assert(metrics.value(MetricsRegistry.RunningServers) === 0)
+  }
+
+  test("a second startAll relaunches a dead stream and records its failure without charging the budget") {
+    val base = tempDir("sup-again")
+    val metrics = new MetricsRegistry
+    val sup = new Supervisor(spark, settingsOf(coll("c3")), metrics,
+      flakyQuery(new AtomicInteger(0), failTimes = 2, base), maxRestarts = 1)
+    val c3 = Seq("collection" -> "c3", "database" -> "test")
+    sup.startAll()
+    sup.awaitAll(60000) // the first sink failure
+    sup.startAll()
+    assert(metrics.value(MetricsRegistry.TaskFailures, c3 :+ ("error_type" -> "sink_error"): _*) === 1)
+    assert(metrics.value(MetricsRegistry.TaskRestarts, c3 :+ ("reason" -> "sink_connection_failed"): _*) === 0)
+    assert(metrics.value(MetricsRegistry.TasksStarted) === 2)
+    assert(metrics.value(MetricsRegistry.CollectionServers, c3: _*) === 1)
+    assert(metrics.value(MetricsRegistry.RunningServers) === 1)
+    sup.awaitAll(60000) // the second sink failure
+    assert(sup.superviseOnce() === 1, "the budget is whole: startAll charged none of it")
+    sup.awaitAll(60000)
+    assert(sup.superviseOnce() === 0)
+    assert(spark.read.parquet(s"$base/queue_c3").count() === 1)
   }
 
   test("clean termination (collection drop) is not restarted") {

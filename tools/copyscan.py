@@ -20,11 +20,12 @@ WINDOW = 6
 MIN_CHARS = 150
 
 
-def strip_code(text):
+def strip_code(text, blank_strings=True):
     """The text with comments and triple-quoted string contents blanked.
 
     Newlines are kept, so line numbers still match the file. Plain string
-    and char literals are copied through, so a `//` inside one is no comment.
+    and char literals are copied through, so a `//` inside one is no comment;
+    so are triple-quoted strings when `blank_strings` is false.
     """
     out = []
     i, n = 0, len(text)
@@ -50,7 +51,7 @@ def strip_code(text):
             # a closing run of more than three quotes ends with the last three
             while text.startswith('""""', j):
                 j += 1
-            out.append('"""' + "\n" * text.count("\n", i + 3, j) + '"""')
+            out.append('"""' + "\n" * text.count("\n", i + 3, j) + '"""' if blank_strings else text[i:j + 3])
             i = j + 3
         elif c == '"':
             j = i + 1
