@@ -13,11 +13,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * B5). The built-in higher-order functions (`zip_with` + `aggregate`) are
   * interpreted per element with boxing — fine for occasional use, 10ms/row
   * for a 96-plane LSH projection. These expressions run the same arithmetic
-  * as a tight JVM loop inside whole-stage codegen.
+  * as a tight JVM loop.
+  *
+  * Every kernel has ONE body. The per-pair and per-row vector kernels
+  * (cosine, sign keys, MinHash, bit vote, agreement count) keep their
+  * projection in whole-stage codegen: each body is a plain function in
+  * [[VectorKernels]], `nullSafeEval` calls it and the generated code emits
+  * a static call to it, with scalar parameters spliced in as literals (the
+  * pattern of Spark's `DateTimeUtils`-backed expressions). Not
+  * `CodegenFallback`, which would also leave one body but evaluates the
+  * children through `eval` and boxes every `Long`/`Double` result of a
+  * per-candidate-pair kernel. The other kernels are `CodegenFallback`:
+  * one interpreted call per row around a tight loop, the surrounding
+  * projection still codegen'd.
   *
   * Arithmetic order matches the HOF formulation exactly (sequential
   * left-fold in double), so results — and the DuckDB oracle parity — are
-  * bit-for-bit unchanged.
+  * bit-for-bit unchanged. KernelBodiesSpec runs each codegen'd kernel
+  * interpreted and generated over the same rows.
   */
 object VectorExpressions {
 
@@ -185,7 +198,7 @@ object VectorExpressions {
   * (NaN greatest), so tie/NaN behavior is identical to the
   * greatest(struct(cos, idx)) / array_sort formulations.
   */
-private[functions] object CentroidKernel {
+private[graft] object CentroidKernel {
   /** Construction-time guard for the centroid matrix: every row must share
     * one dimension. [[cosines]] checks only centroids(0) against the input
     * vector (one comparison on the hot path); with a MIXED-length matrix —
@@ -211,14 +224,26 @@ private[functions] object CentroidKernel {
     if (centroids.length > 0 && centroids(0).length != n) return null
     val x = new Array[Double](n)
     var i = 0
-    var na = 0.0
     while (i < n) {
       x(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      na += x(i) * x(i)
       i += 1
     }
-    val sna = math.sqrt(na)
     val out = new Array[Double](centroids.length)
+    cosines(x, centroids, out)
+    out
+  }
+
+  /** The cosine fold itself: out(c) = cos(x, centroids(c)) over the first
+    * centroids(0).length components of `x`, norms and dots as sequential
+    * double folds in component order. `x` and `out` are the caller's
+    * buffers, so a per-row loop can reuse them.
+    */
+  def cosines(x: Array[Double], centroids: Array[Array[Double]], out: Array[Double]): Unit = {
+    val n = if (centroids.length > 0) centroids(0).length else 0
+    var na = 0.0
+    var i = 0
+    while (i < n) { na += x(i) * x(i); i += 1 }
+    val sna = math.sqrt(na)
     var c = 0
     while (c < centroids.length) {
       val ctr = centroids(c)
@@ -229,7 +254,19 @@ private[functions] object CentroidKernel {
       out(c) = dot / (sna * math.sqrt(nb))
       c += 1
     }
-    out
+  }
+
+  /** Index of the greatest cosine under Spark's double ordering (NaN
+    * greatest); ties go to the HIGHER index.
+    */
+  def argmax(cos: Array[Double]): Int = {
+    var best = 0
+    var i = 1
+    while (i < cos.length) {
+      if (java.lang.Double.compare(cos(i), cos(best)) >= 0) best = i
+      i += 1
+    }
+    best
   }
 
   def elemIsFloat(e: Expression): Boolean = e.dataType match {
@@ -244,6 +281,122 @@ private[functions] object CentroidKernel {
       case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"expected array<float|double>, got $t")
     }
+}
+
+/** The one body of each per-row vector kernel whose projection stays in
+  * whole-stage codegen ([[ArrayAgreeCount]], [[CosineSim]],
+  * [[HyperplaneSignKeys]], [[MinHashFamily]], [[BitVoteFingerprint]]).
+  * Each expression's `nullSafeEval` calls its function here, and its
+  * `doGenCode` emits a static call to the same function ([[call]]), so the
+  * interpreted and the generated path cannot drift apart. Arguments are
+  * `ArrayData` and primitives, results primitive or `ArrayData`: nothing
+  * is boxed on the generated path. Scalar parameters arrive in generated
+  * code as Java literals, so once C2 inlines the call it folds them as
+  * constants (the `% p` of the MinHash loop among them).
+  */
+private[functions] object VectorKernels {
+
+  /** Java source of a static call to one of these functions. */
+  def call(fn: String, args: Any*): String =
+    s"${getClass.getName.stripSuffix("$")}.$fn(${args.mkString(", ")})"
+
+  /** Positions where `x` and `y` hold equal longs, over the shorter one. */
+  def agreeCount(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var c = 0L
+    var i = 0
+    while (i < n) {
+      if (x.getLong(i) == y.getLong(i)) c += 1L
+      i += 1
+    }
+    c
+  }
+
+  /** dot/(sqrt(na)*sqrt(nb)) in one sequential fold; the caller has checked
+    * that `x` and `y` have one length.
+    */
+  def cosine(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): Double = {
+    val n = x.numElements()
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** `tables` keys, bit j of key t the sign of the projection onto plane
+    * t*k+j; null when the vector is not `dim` wide.
+    */
+  def signKeys(vec: ArrayData, isFloat: Boolean, planes: Array[Array[Double]],
+               dim: Int, tables: Int, k: Int): ArrayData = {
+    if (vec.numElements() != dim) return null
+    val keys = new Array[Long](tables)
+    var t = 0
+    while (t < tables) {
+      var bits = 0L
+      var j = 0
+      while (j < k) {
+        val row = planes(t * k + j)
+        var proj = 0.0
+        var i = 0
+        while (i < dim) {
+          val v = if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
+          proj += v * row(i)
+          i += 1
+        }
+        if (proj > 0) bits |= (1L << j)
+        j += 1
+      }
+      keys(t) = bits
+      t += 1
+    }
+    new GenericArrayData(keys)
+  }
+
+  /** sig(j) = min over the hashes h of (a(j)*h + b(j)) mod p; an empty
+    * input gives the identity of min (callers guarantee one shingle).
+    */
+  def minhash(hs: ArrayData, a: Array[Long], b: Array[Long], p: Long): ArrayData = {
+    val n = hs.numElements()
+    val mins = new Array[Long](a.length)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val h = hs.getLong(i)
+      var j = 0
+      while (j < mins.length) {
+        val v = (h * a(j) + b(j)) % p
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(mins)
+  }
+
+  /** Bit b < nbits is 1 iff more hashes have bit b set than clear. */
+  def bitVote(hs: ArrayData, nbits: Int): Long = {
+    val n = hs.numElements()
+    val votes = new Array[Int](nbits)
+    var i = 0
+    while (i < n) {
+      val h = hs.getLong(i)
+      var b = 0
+      while (b < nbits) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
+      }
+      i += 1
+    }
+    var out = 0L
+    var b = 0
+    while (b < nbits) { if (votes(b) > 0) out |= (1L << b); b += 1 }
+    out
+  }
 }
 
 /** The shell of the cell kernels ([[NearestCentroid]], [[ProbeCellIds]]):
@@ -285,15 +438,7 @@ case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
 
   override def dataType: DataType = IntegerType
 
-  override protected def cells(cos: Array[Double]): Any = {
-    var best = 0
-    var i = 1
-    while (i < cos.length) {
-      if (java.lang.Double.compare(cos(i), cos(best)) >= 0) best = i
-      i += 1
-    }
-    best
-  }
+  override protected def cells(cos: Array[Double]): Any = CentroidKernel.argmax(cos)
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
@@ -372,8 +517,9 @@ case class ProbeCellIds(child: Expression, centroids: Seq[Seq[Double]], nprobe: 
     copy(child = newChild)
 }
 
-/** Positions where two long arrays hold equal values, as a whole-stage
-  * codegen'd loop — the per-candidate-pair MinHash agreement count that the
+/** Positions where two long arrays hold equal values, one
+  * [[VectorKernels.agreeCount]] call per row inside whole-stage codegen —
+  * the per-candidate-pair MinHash agreement count that the
   * `aggregate(zip_with(...))` formulation evaluates with an interpreted
   * lambda per element. Arrays of different lengths compare over the shorter
   * prefix (zip_with semantics would pad with null ≠ anything — callers only
@@ -392,30 +538,11 @@ case class ArrayAgreeCount(left: Expression, right: Expression) extends BinaryEx
         s"agree_count expects two array<long>, got $l, $r")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var c = 0L
-    var i = 0
-    while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) c += 1L
-      i += 1
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.agreeCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        ${ev.value} = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          if ($a.getLong($i) == $b.getLong($i)) ${ev.value}++;
-        }
-      """
-    })
+    defineCodeGen(ctx, ev, (a, b) => VectorKernels.call("agreeCount", a, b))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArrayAgreeCount =
     copy(left = newLeft, right = newRight)
@@ -493,69 +620,37 @@ case class TokenHashes(child: Expression)
 }
 
 /** Cosine similarity of two numeric arrays, computed in one pass:
-  * dot/(sqrt(na)*sqrt(nb)), sequential fold in document order.
+  * dot/(sqrt(na)*sqrt(nb)), sequential fold in document order
+  * ([[VectorKernels.cosine]]). Null when the lengths differ; the generated
+  * code checks that before its static call.
   */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  private def elemIsFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def lf = CentroidKernel.elemIsFloat(left)
+  private def rf = CentroidKernel.elemIsFloat(right)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression) = e.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (CentroidKernel.checkVec(left).isSuccess && CentroidKernel.checkVec(right).isSuccess)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"cosine_sim expects array<float|double>, got ${left.dataType}, ${right.dataType}")
-  }
 
+  // dimension mismatch → null, never a silently-truncated score
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    // dimension mismatch → null, never a silently-truncated score
-    if (n != y.numElements()) return null
-    val lf = elemIsFloat(left); val rf = elemIsFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    if (x.numElements() != y.numElements()) null
+    else VectorKernels.cosine(x, y, lf, rf)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val rGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-        int $n = $a.numElements();
-        if ($n != $b.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            double $xv = (double) $a.$lGet($i);
-            double $yv = (double) $b.$rGet($i);
-            $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-          }
-          ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-        }
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      if ($a.numElements() != $b.numElements()) ${ev.isNull} = true;
+      else ${ev.value} = ${VectorKernels.call("cosine", a, b, lf, rf)};
+    """)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
@@ -563,7 +658,8 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
 
 /** Packed sign-LSH table keys: for each of `tables` tables, a long whose k
   * low bits are the signs of the vector's projections onto that table's
-  * hyperplanes. One pass over tables×k×dim in codegen'd arithmetic.
+  * hyperplanes. One pass over tables×k×dim ([[VectorKernels.signKeys]]),
+  * the plane matrix passed by reference and its shape as literals.
   */
 case class HyperplaneSignKeys(child: Expression, planes: Seq[Seq[Double]],
                               tables: Int, k: Int) extends UnaryExpression {
@@ -592,68 +688,18 @@ case class HyperplaneSignKeys(child: Expression, planes: Seq[Seq[Double]],
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     CentroidKernel.checkVec(child)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def isFloat = CentroidKernel.elemIsFloat(child)
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    if (dim != planeDim) return null // width mismatch → error signal, never a truncated key
-    val isF = elemIsFloat
-    val keys = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var bits = 0L
-      var j = 0
-      while (j < k) {
-        val row = planesArr(t * k + j)
-        var proj = 0.0
-        var i = 0
-        while (i < dim) {
-          val v = if (isF) vec.getFloat(i).toDouble else vec.getDouble(i)
-          proj += v * row(i)
-          i += 1
-        }
-        if (proj > 0) bits |= (1L << j)
-        j += 1
-      }
-      keys(t) = bits
-      t += 1
-    }
-    new GenericArrayData(keys)
-  }
+  // width mismatch → null, an error signal, never a truncated key
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.signKeys(input.asInstanceOf[ArrayData], isFloat, planesArr, planeDim, tables, k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("planes", planesArr, "double[][]")
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, vec => {
-      val keys = ctx.freshName("keys"); val t = ctx.freshName("t"); val j = ctx.freshName("j")
-      val bits = ctx.freshName("bits"); val proj = ctx.freshName("proj")
-      val row = ctx.freshName("row"); val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      s"""
-        int ${n}dim = $vec.numElements();
-        if (${n}dim != $planeDim) {
-          ${ev.isNull} = true;
-        } else {
-          long[] $keys = new long[$tables];
-          for (int $t = 0; $t < $tables; $t++) {
-            long $bits = 0L;
-            for (int $j = 0; $j < $k; $j++) {
-              double[] $row = $planesRef[$t * $k + $j];
-              double $proj = 0.0;
-              for (int $i = 0; $i < ${n}dim; $i++) {
-                $proj += ((double) $vec.$get($i)) * $row[$i];
-              }
-              if ($proj > 0) $bits |= (1L << $j);
-            }
-            $keys[$t] = $bits;
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($keys);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, vec => s"""
+      ${ev.value} = ${VectorKernels.call("signKeys", vec, isFloat, planesRef, planeDim, tables, k)};
+      ${ev.isNull} = ${ev.value} == null;
+    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSignKeys =
@@ -663,8 +709,9 @@ case class HyperplaneSignKeys(child: Expression, planes: Seq[Seq[Double]],
 /** MinHash signature family over a pre-hashed shingle array: for each of the
   * k (a, b) coefficient pairs, the min over elements of (a*h + b) mod p.
   * Replaces k interpreted `transform`+`array_min` passes (one boxed lambda
-  * call per element per hash) with a single codegen'd elements×k loop —
-  * the same universal-hash arithmetic, identical results.
+  * call per element per hash) with a single elements×k loop
+  * ([[VectorKernels.minhash]]) called from the codegen'd projection — the
+  * same universal-hash arithmetic, identical results.
   */
 case class MinHashFamily(child: Expression, coefA: Seq[Long], coefB: Seq[Long],
                          p: Long) extends UnaryExpression {
@@ -684,48 +731,13 @@ case class MinHashFamily(child: Expression, coefA: Seq[Long], coefB: Seq[Long],
         s"minhash_family expects array<bigint>, got $t")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    val k = coefAArr.length
-    val mins = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val h = hs.getLong(i)
-      var j = 0
-      while (j < k) {
-        val v = (h * coefAArr(j) + coefBArr(j)) % p
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    // empty input → the identity of min; callers guarantee ≥1 shingle
-    new GenericArrayData(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.minhash(input.asInstanceOf[ArrayData], coefAArr, coefBArr, p)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("coefA", coefAArr, "long[]")
     val bRef = ctx.addReferenceObj("coefB", coefBArr, "long[]")
-    val k = coefAArr.length
-    nullSafeCodeGen(ctx, ev, hs => {
-      val mins = ctx.freshName("mins"); val n = ctx.freshName("n")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val h = ctx.freshName("h"); val v = ctx.freshName("v")
-      s"""
-        int $n = $hs.numElements();
-        long[] $mins = new long[$k];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        for (int $i = 0; $i < $n; $i++) {
-          long $h = $hs.getLong($i);
-          for (int $j = 0; $j < $k; $j++) {
-            long $v = ($h * $aRef[$j] + $bRef[$j]) % ${p}L;
-            if ($v < $mins[$j]) $mins[$j] = $v;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-      """
-    })
+    defineCodeGen(ctx, ev, hs => VectorKernels.call("minhash", hs, aRef, bRef, s"${p}L"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashFamily =
@@ -734,7 +746,8 @@ case class MinHashFamily(child: Expression, coefA: Seq[Long], coefB: Seq[Long],
 
 /** Bit-vote fingerprint (SimHash core) over a pre-hashed token array: for
   * each bit b < nbits, votes += (bit b of h set ? +1 : -1) over all hashes;
-  * the output bit is 1 iff votes > 0. One codegen'd pass over elements,
+  * the output bit is 1 iff votes > 0. One pass over elements
+  * ([[VectorKernels.bitVote]]) called from the codegen'd projection,
   * replacing nbits interpreted `aggregate` folds.
   */
 case class BitVoteFingerprint(child: Expression, nbits: Int) extends UnaryExpression {
@@ -749,47 +762,11 @@ case class BitVoteFingerprint(child: Expression, nbits: Int) extends UnaryExpres
         s"bit_vote expects array<bigint>, got $t")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    val votes = new Array[Int](nbits)
-    var i = 0
-    while (i < n) {
-      val h = hs.getLong(i)
-      var b = 0
-      while (b < nbits) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < nbits) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.bitVote(input.asInstanceOf[ArrayData], nbits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, hs => {
-      val votes = ctx.freshName("votes"); val n = ctx.freshName("n")
-      val i = ctx.freshName("i"); val b = ctx.freshName("b")
-      val h = ctx.freshName("h"); val out = ctx.freshName("out")
-      s"""
-        int $n = $hs.numElements();
-        int[] $votes = new int[$nbits];
-        for (int $i = 0; $i < $n; $i++) {
-          long $h = $hs.getLong($i);
-          for (int $b = 0; $b < $nbits; $b++) {
-            if ((($h >>> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-          }
-        }
-        long $out = 0L;
-        for (int $b = 0; $b < $nbits; $b++) {
-          if ($votes[$b] > 0) $out |= (1L << $b);
-        }
-        ${ev.value} = $out;
-      """
-    })
+    defineCodeGen(ctx, ev, hs => VectorKernels.call("bitVote", hs, nbits))
 
   override protected def withNewChildInternal(newChild: Expression): BitVoteFingerprint =
     copy(child = newChild)
@@ -814,11 +791,6 @@ case class QuantizeVector(child: Expression)
     StructField("q_csv", StringType)))
   override def nullable: Boolean = child.nullable
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -830,7 +802,7 @@ case class QuantizeVector(child: Expression)
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     val n = v.numElements()
-    val isF = elemIsFloat
+    val isF = CentroidKernel.elemIsFloat(child)
     // empty vector: array_max over an empty array is null in the HOF form;
     // ss (an aggregate fold from 0.0) and q_csv (concat_ws over no
     // elements) are 0.0 / "" there, so only maxabs goes null

@@ -284,6 +284,7 @@ object Curation {
     val signed = base.select(col("doc_id"),
       VectorExpressions.minhashFamily(col("hs.h24"),
         Dedup.minhashCoefs(32), Dedup.MinhashP).as("sig"))
+      .persist() // Dedup.pairsFrom reads it four times; released by Caches.clear
     val dups = Dedup.pairsFrom(signed, numHashes = 32, bands = 16,
         threshold = 0.5, maxBucket = 256)
       .select(col("id_b").as("doc_id")).distinct()

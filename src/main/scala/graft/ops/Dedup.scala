@@ -672,7 +672,9 @@ object Dedup {
   def minhashPairs(docs: DataFrame, numHashes: Int = 32, bands: Int = 16,
                    shingleK: Int = 3, threshold: Double = 0.5,
                    maxBucket: Int = 256): DataFrame =
-    pairsFrom(signatures(docs, numHashes, shingleK), numHashes, bands, threshold, maxBucket)
+    // lazily persisted (see pairsFrom) — released by graft.Caches.clear
+    pairsFrom(signatures(docs, numHashes, shingleK).persist(), numHashes, bands, threshold,
+      maxBucket)
 
   /** B2b — b-BIT MINHASH (Li & König, CACM '11): keep only the lowest `b`
     * bits of every signature component, packed into ONE long per doc, and
@@ -721,15 +723,16 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  private[graft] def pairsFrom(signed0: DataFrame, numHashes: Int, bands: Int,
+  /** MinHash pairs at `threshold` over a (doc_id, sig) frame its caller
+    * owns. The frame fans out to four consumers (bucket stats, band join,
+    * and both sides of the signature re-attach), so callers persist it:
+    * the expensive pass — shingling + content hashing — then runs exactly
+    * once and everything downstream reads the narrow (doc_id, sig) cache.
+    * Size: ~8 B/hash per doc (k×8 B ≈ 0.5 KB/doc at k=64) — a small
+    * fraction of the raw text; MEMORY_AND_DISK spills at cluster scale.
+    */
+  private[graft] def pairsFrom(signed: DataFrame, numHashes: Int, bands: Int,
                              threshold: Double, maxBucket: Int): DataFrame = {
-    // The per-doc signature table fans out to four consumers (bucket stats,
-    // band join, and both sides of the signature re-attach). Persisting it
-    // makes the expensive pass — shingling + content hashing — run exactly
-    // once; everything downstream reads the narrow (doc_id, sig) cache.
-    // Size: ~8 B/hash per doc (k×8 B ≈ 0.5 KB/doc at k=64) — a small
-    // fraction of the raw text; MEMORY_AND_DISK spills at cluster scale.
-    val signed = signed0.persist()
     val cands = minhashCandidates(signed, numHashes, bands, maxBucket)
     val sa = signed.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
     val sb = signed.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))

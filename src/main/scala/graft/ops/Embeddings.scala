@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Caches, Tables}
+import graft.functions.CentroidKernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,20 +156,11 @@ object Embeddings {
     * longs) — pennies on a 32-core local session, GBs per iteration at
     * 100 TB partition counts (10⁵–10⁶). The bound keeps the cheap
     * single-job shape exactly where it is cheap (the collect never
-    * exceeds collectMax × models), and is conf/env-overridable so a
-    * cluster deployment can force either path. AnnSpec pins the two
-    * paths bit-identical, so the switch is a pure execution-strategy
-    * choice, never a semantic one.
+    * exceeds KmeansCollectMax × models). AnnSpec pins the two paths
+    * bit-identical through [[fusedKmeans]]' `collectMax` parameter, so the
+    * switch is a pure execution-strategy choice, never a semantic one.
     */
-  private[graft] def kmeansCollectMax(spark: SparkSession): Int = {
-    val confKey = "spark.graft.kmeans.collectMaxPartitions"
-    val envKey = "SPARK_GRAFT_KMEANS_COLLECT_MAX"
-    spark.conf.getOption(confKey).map(confKey -> _)
-      .orElse(sys.env.get(envKey).map(envKey -> _))
-      .map { case (key, v) => v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"$key must be an integer partition count, got '$v'")) }
-      .getOrElse(64)
-  }
+  private[graft] val KmeansCollectMax = 64
 
   /** FUSED multi-learner k-means (r18): learn SEVERAL fixed-iteration
     * cosine k-means models over (slices of) the same embedding frame in
@@ -180,15 +172,18 @@ object Embeddings {
     * m× redundant corpus passes at any scale). BIT-IDENTICAL per learner
     * to an independent `ivfCentroids` run over the equivalent frame
     * (AnnSpec pins both the sliced and the fullRow form): same seeds
-    * (the k lowest vec_ids), same per-row assignment arithmetic as
-    * NearestCentroid/CentroidKernel.cosines (doubles from floats, argmax
-    * by Double.compare with ties → higher idx, dimension mismatch → row
-    * skipped for that learner), same ascending-partition merge order,
-    * same HALF_UP 6-dp rounding, same empty-cell anchor keep.
+    * (the k lowest vec_ids), the per-row assignment of NearestCentroid
+    * itself (CentroidKernel.cosines over the row's slice as doubles, then
+    * CentroidKernel.argmax: Double.compare, ties → higher idx; dimension
+    * mismatch → row skipped for that learner), same ascending-partition
+    * merge order, same HALF_UP 6-dp rounding, same empty-cell anchor keep.
+    * The input is persisted for the seed fetch and the iterations unless
+    * the caller cached it, and released before the arrays return
+    * (Caches.persisted).
     *
     * r19 (guide §5, VERDICT r18 #3): the per-iteration merge of
     * per-partition partials is O(partitions) driver traffic only below
-    * [[kmeansCollectMax]]; above it the partials shuffle to an
+    * `collectMax` partitions; above it the partials shuffle to an
     * executor-side merge keyed on (learner, cell) and SORTED by source
     * partition id, so each key's sums fold in the SAME ascending-
     * partition order the driver loop used — bit-identical totals (each
@@ -196,14 +191,11 @@ object Embeddings {
     * order), O(dim) memory per reduce task, and the driver receives one
     * row per (learner, cell) regardless of partition count.
     */
-  private[graft] def fusedKmeans(emb: DataFrame, specs: Seq[KmeansSpec],
+  private[graft] def fusedKmeans(input: DataFrame, specs: Seq[KmeansSpec],
                                  iters: Int,
-                                 collectMax: Int = -1): Array[Array[Array[Double]]] = {
+                                 collectMax: Int = KmeansCollectMax): Array[Array[Array[Double]]] = {
     require(specs.nonEmpty, "at least one learner")
-    if (emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE) emb.persist()
-    val collectBound =
-      if (collectMax >= 0) collectMax else kmeansCollectMax(emb.sparkSession)
-    Similarity.withoutAqe(emb.sparkSession) {
+    Caches.persisted(input) { emb => Similarity.withoutAqe(emb.sparkSession) {
       val sp = specs.toArray
       val seeds: Array[Seq[Float]] = emb.orderBy("vec_id").limit(sp.map(_.k).max)
         .select("embedding").collect().map(_.getSeq[Float](0))
@@ -229,6 +221,11 @@ object Embeddings {
           val cnts = Array.tabulate(cur.length)(j =>
             Array.fill(cur(j).length)(new Array[Long](accLen(j))))
           val seen = Array.tabulate(cur.length)(j => new Array[Boolean](cur(j).length))
+          // per-learner buffers reused row to row: the row's slice as
+          // doubles, and its cosine against each centroid
+          val xs = Array.tabulate(cur.length)(j =>
+            new Array[Double](if (cur(j).nonEmpty) cur(j)(0).length else 0))
+          val cos = Array.tabulate(cur.length)(j => new Array[Double](cur(j).length))
           rows.foreach { r =>
             if (!r.isNullAt(0)) {
               val vec = r.getSeq[Float](0)
@@ -246,27 +243,11 @@ object Embeddings {
                   else math.max(0,
                     math.min(vec.length, start + sp(j).len) - start) == dj
                 if (kj > 0 && dj > 0 && matches) {
-                  val x = new Array[Double](dj)
-                  var na = 0.0
+                  val x = xs(j)
                   var i = 0
-                  while (i < dj) {
-                    x(i) = vec(start + i).toDouble; na += x(i) * x(i); i += 1
-                  }
-                  val sna = math.sqrt(na)
-                  var best = 0
-                  var bestCos = 0.0
-                  var c = 0
-                  while (c < kj) {
-                    val ctr = cur(j)(c)
-                    var dotv = 0.0; var nb = 0.0
-                    var i2 = 0
-                    while (i2 < dj) { dotv += x(i2) * ctr(i2); nb += ctr(i2) * ctr(i2); i2 += 1 }
-                    val cos = dotv / (sna * math.sqrt(nb))
-                    if (c == 0 || java.lang.Double.compare(cos, bestCos) >= 0) {
-                      best = c; bestCos = cos
-                    }
-                    c += 1
-                  }
+                  while (i < dj) { x(i) = vec(start + i).toDouble; i += 1 }
+                  CentroidKernel.cosines(x, cur(j), cos(j))
+                  val best = CentroidKernel.argmax(cos(j))
                   seen(j)(best) = true
                   val n = accLen(j)
                   var i3 = 0
@@ -291,7 +272,7 @@ object Embeddings {
         // side after a (learner, cell)-partitioned, partition-id-sorted
         // shuffle — bit-identical by construction, pinned by AnnSpec.
         val partials: Array[(Int, Int, Array[Double], Array[Long])] =
-          if (partialsRdd.getNumPartitions <= collectBound) partialsRdd.collect()
+          if (partialsRdd.getNumPartitions <= collectMax) partialsRdd.collect()
           else {
             val keyed = partialsRdd.mapPartitionsWithIndex { (pid, it) =>
               it.map { case (j, c, s, n) => ((j, c, pid), (s, n)) }
@@ -356,7 +337,7 @@ object Embeddings {
         }
       }
       models
-    }
+    }}
   }
 
   /** Packed PQ code column for `vec` under a learned codebook set: m codes,

@@ -302,12 +302,10 @@ object Similarity {
     */
   def ivfCentroids(emb: DataFrame, c: Int = 16, iters: Int = 2, dim: Int = 64): Array[Array[Double]] = {
     // k-means drives 1 + iters EAGER jobs over the corpus (seed fetch, then
-    // one partials pass per iteration) — persist so the scan+spread runs
-    // once and the iterations read the cache. OWNERSHIP-GUARDED: a frame
-    // the caller already cached (buildIvfIndex/ivfTopKOf do, so their own
-    // follow-up corpus scans reuse the same blocks) must not be evicted by
-    // this function's cleanup — unpersisting a caller's cache would
-    // silently force every later use back to a full recompute.
+    // one partials pass per iteration); fusedKmeans persists the frame for
+    // them unless the caller cached it (buildIvfIndex/ivfTopKOf do, so
+    // their own follow-up corpus scans reuse the same blocks), and
+    // releases only what it persisted.
     //
     // r19: the iteration loop is Embeddings.fusedKmeans with ONE fullRow
     // learner — the r18 fused learner was already pinned bit-identical to
@@ -320,8 +318,7 @@ object Similarity {
     // round HALF_UP at 6 dp (exactly Spark's round(double, 6)); an empty
     // cell keeps its anchor; per-component counts mirror
     // avg(element_at(...))'s skip-null semantics.
-    Caches.persisted(emb)(Embeddings.fusedKmeans(_,
-      Seq(Embeddings.KmeansSpec(0, dim, c, fullRow = true)), iters).head)
+    Embeddings.fusedKmeans(emb, Seq(Embeddings.KmeansSpec(0, dim, c, fullRow = true)), iters).head
   }
 
   /** Index of the max-cosine centroid. The centroid matrix rides as an

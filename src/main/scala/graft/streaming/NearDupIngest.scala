@@ -73,8 +73,9 @@ object NearDupIngest {
     * column attached (the index writer consumes it). Null-text rows pass
     * through unexamined, [[DedupIngest.dedupBatch]]'s invariant: no
     * content, nothing to be a near-duplicate of, and never indexed.
-    * The result is lazy; like every [[Dedup.minhashPairs]] caller it leaves
-    * the in-batch pass's signature cache for [[graft.Caches.clear]].
+    * The result is lazy and caches nothing, so each of its stages
+    * recomputes the batch's signatures; [[start]] shares one persisted
+    * copy per epoch.
     */
   def dedupBatch(batch: DataFrame, bandIndex: DataFrame, sigIndex: DataFrame,
                  numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
@@ -88,9 +89,8 @@ object NearDupIngest {
     Dedup.signatures(batch.where(col("text").isNotNull), numHashes, shingleK)
 
   /** [[dedupBatch]] over the batch's [[textedSignatures]], which every stage
-    * reads: the in-batch pair pass ([[Dedup.pairsFrom]], which persists
-    * them), the band probe, the verify join and the survivors. The owner
-    * of `signed` unpersists it after the result's last action.
+    * reads: the in-batch pair pass ([[Dedup.pairsFrom]]), the band probe,
+    * the verify join and the survivors; [[start]] passes them persisted.
     */
   private def dedupSigned(batch: DataFrame, signed: DataFrame, bandIndex: DataFrame,
                           sigIndex: DataFrame, numHashes: Int, bands: Int,
@@ -138,20 +138,21 @@ object NearDupIngest {
     Epochs.start(spark, _.readStream.schema(docSchema).json(sourceDir),
         checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val s = batch.sparkSession
-      val signed = textedSignatures(batch, numHashes, shingleK)
-      val survivors = dedupSigned(batch, signed,
-        readBandIndex(s, bandDir, epochId),
-        readSigIndex(s, sigDir, epochId, numHashes),
-        numHashes, bands, threshold)
-      // three writers below; the dedup must run once. The epoch owns both
-      // caches: the survivors and the signatures pairsFrom persisted.
-      try Caches.persisted(survivors) { fresh =>
-        Epochs.overwrite(fresh.drop("sig"), epochId, outDir, "batch_id")
-        val indexed = fresh.where(col("sig").isNotNull)
-        Epochs.overwrite(indexed.select("doc_id", "sig"), epochId, sigDir, "batch_id")
-        Epochs.overwrite(Dedup.explodedBands(indexed, bands, numHashes / bands)
-            .select(col("band"), col("band_key"), col("id").as("doc_id")),
-          epochId, bandDir, "batch_id")
-      } finally { signed.unpersist(); () }
+      // the epoch owns both caches: the signatures every stage reads, and
+      // the survivors the three writers below read (the dedup runs once)
+      Caches.persisted(textedSignatures(batch, numHashes, shingleK)) { signed =>
+        val survivors = dedupSigned(batch, signed,
+          readBandIndex(s, bandDir, epochId),
+          readSigIndex(s, sigDir, epochId, numHashes),
+          numHashes, bands, threshold)
+        Caches.persisted(survivors) { fresh =>
+          Epochs.overwrite(fresh.drop("sig"), epochId, outDir, "batch_id")
+          val indexed = fresh.where(col("sig").isNotNull)
+          Epochs.overwrite(indexed.select("doc_id", "sig"), epochId, sigDir, "batch_id")
+          Epochs.overwrite(Dedup.explodedBands(indexed, bands, numHashes / bands)
+              .select(col("band"), col("band_key"), col("id").as("doc_id")),
+            epochId, bandDir, "batch_id")
+        }
+      }
     }
 }

@@ -339,15 +339,6 @@ class AnnSpec extends SparkSpec {
     assert(emb.rdd.getNumPartitions > 1)
   }
 
-  test("a malformed k-means collect bound names its key") {
-    val key = "spark.graft.kmeans.collectMaxPartitions"
-    spark.conf.set(key, "abc")
-    try {
-      val e = intercept[IllegalArgumentException](graft.ops.Embeddings.kmeansCollectMax(spark))
-      assert(e.getMessage.contains(key) && e.getMessage.contains("abc"), e.getMessage)
-    } finally spark.conf.unset(key)
-  }
-
   test("brute-force top-k is deterministic and self-consistent") {
     val rows = Similarity.bruteTopK(spark, sf0001, nQueries = 2, k = 3).collect()
     assert(rows.length === 6)

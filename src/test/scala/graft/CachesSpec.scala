@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.storage.StorageLevel
+
 /** A library call leaves the caller's cache as it found it: a scoped
   * persist releases its own frame even when the body fails, and never a
   * frame the caller cached.
@@ -31,6 +33,29 @@ class CachesSpec extends SparkSpec {
       assert(Caches.persisted(cached)(_.count()) === 50)
       assert(cached.storageLevel.useMemory)
       assert(spark.sparkContext.getPersistentRDDs.size === held)
+    } finally { cached.unpersist(); () }
+  }
+
+  test("pqCodebooks releases the frame it persisted and keeps the caller's cache") {
+    // a copy at a fresh path, so no other spec's cache can hold its plan
+    val path = tempDir("caches-emb") + "/embeddings.parquet"
+    Tables.embeddings(spark, sf0001).write.parquet(path)
+    val emb = spark.read.parquet(path)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // storageLevel is the session cache manager's entry for the plan
+    assert(emb.storageLevel === StorageLevel.NONE)
+    val books = graft.ops.Embeddings.pqCodebooks(emb, m = 4, k = 4)
+    assert(books.length === 4)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore)
+    assert(emb.storageLevel === StorageLevel.NONE, "an uncached input stays uncached")
+    val cached = emb.persist()
+    try {
+      assert(cached.count() > 0)
+      val held = spark.sparkContext.getPersistentRDDs.keySet
+      assert(graft.ops.Embeddings.pqCodebooks(cached, m = 4, k = 4).map(_.map(_.toSeq).toSeq)
+        .toSeq === books.map(_.map(_.toSeq).toSeq).toSeq)
+      assert(cached.storageLevel.useMemory, "the caller's cache survives")
+      assert(spark.sparkContext.getPersistentRDDs.keySet === held)
     } finally { cached.unpersist(); () }
   }
 }
