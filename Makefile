@@ -13,7 +13,7 @@ SEED    ?= 1
 PAIRS   ?= 10
 BASE    ?= HEAD
 
-.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount forkcheck copyscan loc help
+.PHONY: all build check test verify bench qbench daemon daemon-assembly smoke crossover tripwire e2e-broker perfbench perfbench-test perf-ab forkcount forkcheck copyscan loc tools-test help
 
 all: build
 
@@ -100,6 +100,10 @@ loc:
 ## The benchmark harness's own unit tests
 perfbench-test:
 	python3 -m unittest discover -s perfbench -p 'test_*.py'
+
+## The unit tests of the tools under tools/ (copyscan, forkcount, loc, perf_ab)
+tools-test:
+	python3 -m unittest discover -s tools -p 'test_*.py'
 
 help:
 	@grep -B1 -E '^[a-z0-9-]+:' Makefile | grep -E '^##|^[a-z0-9-]+:' | sed 's/^## //'

@@ -47,23 +47,35 @@ object ChangeEvents {
     )
   }
 
-  /** A1 — normalize the event feed to the change-event envelope
-    * (connector.rs:145-153 ChangeStreamEvent fields). Narrow, shuffle-free;
-    * the ORDER BY exists only for deterministic verification output.
+  /** The resume token of a feed offset: its zero-padded hex, the shape of
+    * a `_data` hex resume token. Fixed width, so tokens compare as strings
+    * in offset order.
     */
-  def normalize(spark: SparkSession, dir: String, db: String = "test", coll: String = "testcoll"): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    ev.select(
-      format_string("%016x", col("event_id")).as("resume_token"),
-      operationType(col("event_type")).as("operation_type"),
-      lit(db).as("ns_db"),
-      lit(coll).as("ns_coll"),
-      col("user_id").as("document_key"),
-      fullDocumentJson.as("full_document"),
-      col("ts").as("cluster_time"),
-      col("event_id")
-    ).orderBy("event_id")
-  }
+  def resumeToken(offset: Column): Column = format_string("%016x", offset)
+
+  /** The change-event envelope (connector.rs:145-153 ChangeStreamEvent
+    * fields) of an event row, `event_id` aside: the one projection the
+    * batch [[normalize]] and the stream's `ChangeStreamJob.toChangeEvents`
+    * share. `clusterTime` is the row's event time as a timestamp, which the
+    * parquet table and the JSON feed store differently.
+    */
+  def envelope(db: String, coll: String, clusterTime: Column): Seq[Column] = Seq(
+    resumeToken(col("event_id")).as("resume_token"),
+    operationType(col("event_type")).as("operation_type"),
+    lit(db).as("ns_db"),
+    lit(coll).as("ns_coll"),
+    col("user_id").as("document_key"),
+    fullDocumentJson.as("full_document"),
+    clusterTime.as("cluster_time"))
+
+  /** A1 — normalize the event feed to the change-event envelope. Narrow,
+    * shuffle-free; the ORDER BY exists only for deterministic verification
+    * output.
+    */
+  def normalize(spark: SparkSession, dir: String, db: String = "test", coll: String = "testcoll"): DataFrame =
+    Tables.events(spark, dir)
+      .select(envelope(db, coll, col("ts")) :+ col("event_id"): _*)
+      .orderBy("event_id")
 
   /** A5 — publish payload: the JSON message body the queue sink would send,
     * with its routing queue (= stream name, one queue per collection in the

@@ -16,14 +16,11 @@ import org.apache.spark.sql.functions._
   * (resume_tokens.rs:59-62 `clean`, connector.rs:169-171).
   *
   * Streams are keyed by event_type here (one stream per watched collection in
-  * the reference). Tokens are the zero-padded hex of the event offset — same
-  * shape as `_data` hex resume tokens. Every operator aggregates or windows
-  * on the stream key: bounded cardinality, map-side partial aggregation,
-  * no skew concern at 100 TB.
+  * the reference). Tokens are [[ChangeEvents.resumeToken]]s of the event
+  * offset. Every operator aggregates or windows on the stream key: bounded
+  * cardinality, map-side partial aggregation, no skew concern at 100 TB.
   */
 object ResumeTokens {
-
-  private def tokenOf(c: org.apache.spark.sql.Column) = format_string("%016x", c)
 
   /** Midpoint of the feed (scalar aggregate fetch — one 8-byte value to the
     * driver, like a scalar subquery; rows never leave the executors). An
@@ -40,7 +37,8 @@ object ResumeTokens {
     Tables.events(spark, dir)
       .groupBy(col("event_type").as("stream_name"))
       .agg(max(col("event_id")).as("last_offset"))
-      .select(col("stream_name"), col("last_offset"), tokenOf(col("last_offset")).as("resume_token"))
+      .select(col("stream_name"), col("last_offset"),
+        ChangeEvents.resumeToken(col("last_offset")).as("resume_token"))
       .orderBy("stream_name")
 
   /** A3b — upsert merge (`set_last_resume_token` with upsert:true): an
@@ -62,7 +60,7 @@ object ResumeTokens {
       .select(
         col("stream_name"),
         coalesce(col("new.offset"), col("old.offset")).as("offset"),
-        tokenOf(coalesce(col("new.offset"), col("old.offset"))).as("resume_token"),
+        ChangeEvents.resumeToken(coalesce(col("new.offset"), col("old.offset"))).as("resume_token"),
         col("new.offset").isNotNull.as("updated")
       )
       .orderBy("stream_name")
@@ -125,7 +123,8 @@ object ResumeTokens {
       .select(col("event_type").as("stream_name"), col("event_id").as("offset"))
       .withColumn("rank_desc", row_number().over(byStream).cast("long"))
       .where(col("rank_desc") <= cap)
-      .select(col("stream_name"), col("offset"), tokenOf(col("offset")).as("resume_token"), col("rank_desc"))
+      .select(col("stream_name"), col("offset"),
+        ChangeEvents.resumeToken(col("offset")).as("resume_token"), col("rank_desc"))
       .orderBy("stream_name", "offset")
   }
 }

@@ -53,14 +53,6 @@ object Embeddings {
       .drop(vd, ma)
   }
 
-  /** B18 (registered, oracle-portable) — quantization summary per vector:
-    * the scale factor, the l2 norm, and the quantized vector serialized as a
-    * csv string (arrays hash engine-differently in the parity gate; the
-    * string form is canonical). One codegen'd QuantizeVector pass per row —
-    * the HOF formulation in [[quantizeCols]] evaluates four interpreted
-    * lambda passes per vector — with identical arithmetic order, so the
-    * oracle hash is unchanged. Registered as `embedding_quantize`.
-    */
   /** B18b — MATRYOSHKA truncation fidelity: per prefix length d, how much
     * of each vector's norm the first d dimensions carry —
     * `||x[1:d]|| / ||x||`, which IS `cos(x, truncate(x))`, the exact
@@ -356,10 +348,6 @@ object Embeddings {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Encode + fidelity over a learned codebook set: (vec_id, pq_code
-    * packed 4-bit little-endian per subspace, recon_cos = cosine of the
-    * vector against its codebook reconstruction, rounded 6 dp).
-    */
   /** Cosine of `vec` against its PQ reconstruction under `books`, rounded
     * 6 dp — the per-vector fidelity statistic. Pure projection: codegen'd
     * NearestCentroid per subspace + element_at on the KB codebook literal.
@@ -380,6 +368,10 @@ object Embeddings {
     round(graft.functions.VectorExpressions.cosine(asDouble(vec), recon), 6)
   }
 
+  /** Encode + fidelity over a learned codebook set: (vec_id, pq_code
+    * packed 4-bit little-endian per subspace, recon_cos = cosine of the
+    * vector against its codebook reconstruction, rounded 6 dp).
+    */
   def pqFidelityOf(emb: DataFrame, m: Int = 8, k: Int = 16,
                    dim: Int = 64): DataFrame = {
     val books = pqCodebooks(emb, m, k, dim)
@@ -394,6 +386,14 @@ object Embeddings {
                  dim: Int = 64): DataFrame =
     pqFidelityOf(Tables.embeddings(spark, dir), m, k, dim)
 
+  /** B18 (registered, oracle-portable) — quantization summary per vector:
+    * the scale factor, the l2 norm, and the quantized vector serialized as a
+    * csv string (arrays hash engine-differently in the parity gate; the
+    * string form is canonical). One codegen'd QuantizeVector pass per row —
+    * the HOF formulation in [[quantizeCols]] evaluates four interpreted
+    * lambda passes per vector — with identical arithmetic order, so the
+    * oracle hash is unchanged. Registered as `embedding_quantize`.
+    */
   def quantizeSummary(spark: SparkSession, dir: String): DataFrame = {
     val qz = graft.functions.VectorExpressions.quantizeVector(col("embedding"))
     Tables.embeddings(spark, dir)

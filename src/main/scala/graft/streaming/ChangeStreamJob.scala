@@ -9,28 +9,65 @@ import org.apache.spark.sql.types._
   * directory; the production binding for the reference's change stream
   * (mrcon/src/mongo/connector.rs:142 `collection.watch()`) is any
   * `readStream` source producing the same row schema — a Kafka topic fed by
-  * a CDC tool, a Kinesis stream — configured in, not coded in.
+  * a CDC tool, a Kinesis stream — configured in, not coded in. Every graft
+  * event stream reads through this seam: the connector and the operator
+  * streams (StreamJoin, WindowedCounts, DimensionEnrich,
+  * StreamingHeavyHitters, Sessionize). The DLQ stream, which must keep a
+  * corrupt line's bytes, reads its dir itself and splits it by the same
+  * predicate.
+  *
+  * The feed contract: `load` yields events only, the rows
+  * [[EventSource.isEvent]] accepts, so every consumer may decode
+  * `event_id`, `user_id` and `ts_us` as non-null — the before-image
+  * stage's `document_key: Long`, Sessionize's `Event`, the heavy-hitter
+  * sketch's user id. A row without one of them (a corrupt line read
+  * permissively, a document with no key) is dropped by the binding rather
+  * than failing its epoch, which a restart would replay and fail again.
   */
 trait EventSource {
-  /** A STREAMING DataFrame of raw feed rows (ChangeStreamJob.eventSchema). */
+  /** A STREAMING DataFrame of events (ChangeStreamJob.eventSchema). */
   def load(spark: SparkSession): DataFrame
+}
+
+object EventSource {
+
+  /** The fields that make a feed row an event: the reference's `_id`,
+    * `documentKey` and `clusterTime`. Their order is the order
+    * [[missingField]] names them in.
+    */
+  private val KeyFields = Seq("event_id", "user_id", "ts_us")
+
+  /** The one predicate of the feed contract: every key field is non-null.
+    * Resolved against the attached plan, like any reusable Column.
+    */
+  def isEvent: Column = KeyFields.map(col(_).isNotNull).reduce(_ && _)
+
+  /** Why a feed row is not an event: `missing_<field>` for the first null
+    * key field, null for an event — the DLQ's quarantine reason.
+    */
+  def missingField: Column =
+    coalesce(KeyFields.map(f => when(col(f).isNull, lit(s"missing_$f"))): _*)
 }
 
 /** Sandbox source: a directory of JSON files; each new file is a change
   * batch. Bounded files-per-trigger keeps micro-batches sized like the
-  * reference's cursor batches.
+  * reference's cursor batches. Rows that are not events (a line that does
+  * not parse, a row missing a key field) are dropped.
   */
-final case class JsonDirSource(sourceDir: String, maxFilesPerTrigger: Int = 4) extends EventSource {
+final case class JsonDirSource(sourceDir: String,
+                               maxFilesPerTrigger: Int = JsonDirSource.MaxFilesPerTrigger)
+    extends EventSource {
   override def load(spark: SparkSession): DataFrame =
     spark.readStream
       .schema(ChangeStreamJob.eventSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(sourceDir)
-      // same malformed-row policy as every other source binding: a feed row
-      // with no event_id (missing field, corrupt line parsed permissively)
-      // is dropped rather than poisoning the stream — the before-image
-      // stage's envelope decode would otherwise die on the null
-      .where(col("event_id").isNotNull)
+      .where(EventSource.isEvent)
+}
+
+object JsonDirSource {
+  /** Files per micro-batch of every JSON feed read, the DLQ stream's too. */
+  val MaxFilesPerTrigger = 4
 }
 
 /** Continuously-streaming sandbox source: Spark's built-in rate source
@@ -105,15 +142,16 @@ object KafkaEventSource {
 
   /** Kafka's wire envelope → the event schema: the record value is the event
     * JSON (what a Debezium-style CDC tool or the queue publisher writes);
-    * rows whose value fails to parse to an event_id are dropped rather than
-    * poisoning the stream (same malformed-row policy as SocketEventSource).
+    * values that do not parse to an event ([[EventSource.isEvent]]) are
+    * dropped rather than poisoning the stream (SocketEventSource shares
+    * this decode).
     * Pure column mapping — no streaming dependency — so it is testable on
     * static frames and reusable for a BATCH backfill read of the same topic.
     */
   def decode(raw: DataFrame): DataFrame =
     raw.select(from_json(col("value").cast("string"), ChangeStreamJob.eventSchema).as("e"))
       .select(col("e.*"))
-      .where(col("event_id").isNotNull)
+      .where(EventSource.isEvent)
 
   /** The classpath guard both Kafka bindings run first. */
   private[streaming] def failFast(): Unit = ChangeStreamJob.requireClass(
@@ -176,14 +214,14 @@ object MongoEventSource {
   /** Wire rows → the event feed ([[ChangeStreamJob.eventSchema]]): the
     * watched collection's documents ARE the events, so `fullDocument`
     * parses directly. Deletes and malformed documents carry no parseable
-    * event and are dropped — same policy as [[KafkaEventSource.decode]];
+    * event and are dropped ([[EventSource.isEvent]]);
     * feeds that must see deletes use [[decodeEnvelope]]. Pure column
     * mapping, static-testable, reusable for batch backfill reads.
     */
   def decode(raw: DataFrame): DataFrame =
     raw.select(from_json(col("fullDocument"), ChangeStreamJob.eventSchema).as("e"))
       .select(col("e.*"))
-      .where(col("event_id").isNotNull)
+      .where(EventSource.isEvent)
 
   /** Wire rows → the engine's change-event envelope, 1:1 — the projection
     * the reference serializes to the queue (connector.rs:145-153): the
@@ -562,15 +600,8 @@ object ChangeStreamJob {
     * so consumers see ONE document format regardless of pipeline.
     */
   def toChangeEvents(events: DataFrame, db: String, coll: String): DataFrame =
-    events.select(
-      col("event_id"),
-      format_string("%016x", col("event_id")).as("resume_token"),
-      graft.events.ChangeEvents.operationType(col("event_type")).as("operation_type"),
-      lit(db).as("ns_db"), lit(coll).as("ns_coll"),
-      col("user_id").as("document_key"),
-      graft.events.ChangeEvents.fullDocumentJson.as("full_document"),
-      timestamp_micros(col("ts_us")).as("cluster_time")
-    )
+    events.select(col("event_id") +:
+      graft.events.ChangeEvents.envelope(db, coll, timestamp_micros(col("ts_us"))): _*)
 
   /** Typed envelope rows for the stateful pre/post-image stage. */
   // event_id is Option: a DELETE envelope has no fullDocument to extract an
@@ -627,9 +658,9 @@ object ChangeStreamJob {
             // (the pre-r9 code) reordered the real feed: a delete followed
             // by a same-key reinsert in one batch processed the delete LAST,
             // reporting the reinserted doc as its before-image and wrongly
-            // clearing the key's state (ADVICE r8). Null-less hex tokens
-            // (%016x) compare in event order; a null token (corrupt
-            // envelope) sorts first rather than throwing.
+            // clearing the key's state (ADVICE r8). Fixed-width tokens
+            // (ChangeEvents.resumeToken) compare in event order; a null
+            // token (corrupt envelope) sorts first rather than throwing.
             val ordered = events.toSeq
               .sortBy(e => Option(e.resume_token).getOrElse(""))
             var last = state.getOption

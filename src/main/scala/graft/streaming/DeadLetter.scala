@@ -6,27 +6,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A14 — dead-letter (quarantine) routing for malformed change events: the
-  * connector's sources currently DROP rows that cannot become envelopes (a
-  * corrupt JSON line, a document with no id — the policy every binding
-  * shares), which protects the stream but silently loses the evidence. A
-  * production CDC pipeline quarantines instead: the poison row lands in a
-  * dead-letter store with its RAW bytes and a reason, the stream keeps
-  * moving, and an operator replays the DLQ after fixing the producer — the
-  * reference's failure story is job-restart-on-error (server.rs:200-252);
-  * this is the complementary per-ROW error path that keeps one bad record
-  * from ever costing a restart.
+  * connector's sources DROP rows that are not events (a corrupt JSON line,
+  * a document missing its id, key or time — the feed contract every
+  * [[EventSource]] keeps), which protects the stream but silently loses
+  * the evidence. A production CDC pipeline quarantines instead: the poison
+  * row lands in a dead-letter store with its RAW bytes and a reason, the
+  * stream keeps moving, and an operator replays the DLQ after fixing the
+  * producer — the reference's failure story is job-restart-on-error
+  * (server.rs:200-252); this is the complementary per-ROW error path that
+  * keeps one bad record from ever costing a restart.
   *
   * Mechanics: the JSON dir source reads PERMISSIVE with
   * `columnNameOfCorruptRecord`, so a syntactically corrupt line surfaces as
   * one row whose `_raw` column holds the original bytes (all schema fields
   * null) instead of poisoning the batch; a parseable row that is still not
-  * an event (missing event_id) is the other reason. Routing happens inside
-  * `foreachBatch`: good rows take EXACTLY the normal path
-  * (ChangeStreamJob.toChangeEvents → the idempotent QueuePublisher), bad
-  * rows append to the DLQ as an epoch-overwritten `epoch=<n>` parquet
-  * partition ([[Epochs.overwrite]]) — the same replay-replaces idempotence
-  * contract as the queue itself, so a crash-replayed epoch cannot
-  * double-quarantine. Every DLQ writer keeps that partition layout, and
+  * an event (a key field missing, [[EventSource.isEvent]]) is the other
+  * reason. Routing happens inside `foreachBatch`: good rows take EXACTLY
+  * the normal path (ChangeStreamJob.toChangeEvents → the idempotent
+  * QueuePublisher), bad rows append to the DLQ as an epoch-overwritten
+  * `epoch=<n>` parquet partition ([[Epochs.overwrite]]) — the same
+  * replay-replaces idempotence contract as the queue itself, so a
+  * crash-replayed epoch cannot double-quarantine. Every DLQ writer keeps that partition layout, and
   * every reader here reads it with the fixed [[Schema]].
   *
   * Scale: quarantining is a per-row filter on the already-decoded batch —
@@ -43,23 +43,24 @@ object DeadLetter {
 
   /** The quarantine split of a decoded batch: (reason, raw) for bad rows.
     * Reasons: `corrupt_json` (unparseable line — `_raw` holds the bytes),
-    * `missing_event_id` (valid JSON, not an event — raw is reconstructed
-    * from the parsed fields, since Spark only retains the original line
-    * for corrupt rows).
+    * else `missing_<field>` for the first key field the row lacks
+    * ([[EventSource.missingField]]: `missing_event_id`, `missing_user_id`,
+    * `missing_ts_us`) — valid JSON, not an event; raw is reconstructed from
+    * the parsed fields, since Spark only retains the original line for
+    * corrupt rows.
     */
   def reasonCol: org.apache.spark.sql.Column =
-    when(col(RawCol).isNotNull, "corrupt_json")
-      .when(col("event_id").isNull, "missing_event_id")
+    coalesce(when(col(RawCol).isNotNull, lit("corrupt_json")), EventSource.missingField)
 
   /** A15 — DLQ replay: re-attempt the quarantined rows after the producer
     * or parser was fixed — the second half of the dead-letter contract
     * (quarantine without replay is just a slower delete). Each stored
     * `raw` line re-parses under the CURRENT schema; rows that now decode
-    * to a real event publish through the normal envelope path under a
-    * replay epoch, rows that still fail stay quarantined (the DLQ is
-    * REWRITTEN to exactly the still-bad set, so replay is idempotent: a
-    * second replay with nothing fixed publishes nothing and writes
-    * nothing). Returns (published, still_quarantined).
+    * to an event ([[EventSource.isEvent]]) publish through the normal
+    * envelope path under a replay epoch, rows that still fail stay
+    * quarantined (the DLQ is REWRITTEN to exactly the still-bad set, so
+    * replay is idempotent: a second replay with nothing fixed publishes
+    * nothing and writes nothing). Returns (published, still_quarantined).
     *
     * The DLQ is read with its fixed [[Schema]] ([[Epochs.read]]), so an
     * absent or emptied DLQ reads empty. A replay that empties the DLQ
@@ -75,11 +76,12 @@ object DeadLetter {
   def replay(spark: SparkSession, dlqDir: String, publisher: QueuePublisher,
              replayEpoch: Long, db: String = "test",
              coll: String = "testcoll"): (Long, Long) = {
-    val parsed = Epochs.read(spark, dlqDir, Schema).withColumn("ev",
-      from_json(col("raw"), ChangeStreamJob.eventSchema))
-    val good = parsed.where(col("ev").isNotNull && col("ev.event_id").isNotNull)
-      .select(col("ev.*"))
-    val still = parsed.where(col("ev").isNull || col("ev.event_id").isNull)
+    val parsed = Epochs.read(spark, dlqDir, Schema)
+      .withColumn("ev", from_json(col("raw"), ChangeStreamJob.eventSchema))
+      .select("reason", "raw", "epoch", "ev.*")
+    val good = parsed.where(EventSource.isEvent)
+      .select(ChangeStreamJob.eventSchema.fieldNames.map(col): _*)
+    val still = parsed.where(!EventSource.isEvent)
       .select("reason", "raw", "epoch")
       // materialize before the overwrite clobbers the files being read
       .localCheckpoint(true)
@@ -114,13 +116,12 @@ object DeadLetter {
                    publisher: QueuePublisher, dlqDir: String,
                    checkpointDir: String, db: String = "test",
                    coll: String = "testcoll", queryName: String = "connector-dlq",
-                   trigger: Trigger = Trigger.AvailableNow(),
-                   maxFilesPerTrigger: Int = 4): StreamingQuery = {
+                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     def raw(s: SparkSession) = s.readStream
       .schema(ChangeStreamJob.eventSchema.add(RawCol, StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", RawCol)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", JsonDirSource.MaxFilesPerTrigger)
       .json(sourceDir)
       .withColumn("__dlq_reason", reasonCol)
     clearFlatMarker(spark, dlqDir)

@@ -37,16 +37,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object DimensionEnrich {
 
-  /** Start enrichment of the JSON event dir stream against the versioned
+  /** Start enrichment of the event feed `source` against the versioned
     * dimension at `dimDir` (expects columns `user_id`, `segment`), writing
     * (event_id, user_id, event_type, segment, dim_version, epoch) to
     * `outDir`, epoch-overwritten.
     */
-  def start(spark: SparkSession, sourceDir: String, dimDir: String,
+  def start(spark: SparkSession, source: EventSource, dimDir: String,
             outDir: String, checkpointDir: String,
             queryName: String = "dimension-enrich",
-            trigger: Trigger = Trigger.AvailableNow(),
-            maxFilesPerTrigger: Int = 4): StreamingQuery = {
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // Fail FAST with an actionable message rather than letting the first
     // micro-batch die on a bare NoSuchElementException from versions().last
     // when enrichment is started before the dimension's first commit
@@ -55,11 +54,7 @@ object DimensionEnrich {
     require(Versioned.versions(spark, dimDir).nonEmpty,
       s"DimensionEnrich.start: no committed dimension version under $dimDir — " +
         "commit the dimension table (Versioned.commit) before starting enrichment")
-    def events(s: SparkSession) = s.readStream
-      .schema(ChangeStreamJob.eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(sourceDir)
-    Epochs.start(spark, events, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
+    Epochs.start(spark, source.load, checkpointDir, trigger, Some(queryName)) { (batch, epochId) =>
       val s = batch.sparkSession
       val dimVersion = Versioned.versions(s, dimDir).last
       val dim = Versioned.read(s, dimDir, dimVersion).select("user_id", "segment")

@@ -148,8 +148,8 @@ object Sessionize {
     out.reverseIterator
   }
 
-  /** Streaming sessionize over the json event feed (same schema as
-    * ChangeStreamJob). Emits closed sessions to `outDir` via foreachBatch.
+  /** Streaming sessionize over an event feed. Emits closed sessions to
+    * `outDir` via foreachBatch.
     *
     * Two modes:
     *  - drain (default): AvailableNow + NoTimeout — batch-incremental runs;
@@ -159,7 +159,7 @@ object Sessionize {
     *    users' open sessions are closed by timeout and their state FREED,
     *    which is what bounds state growth on an unbounded feed.
     */
-  def start(spark: SparkSession, sourceDir: String, outDir: String, checkpointDir: String,
+  def start(spark: SparkSession, source: EventSource, outDir: String, checkpointDir: String,
             gapUs: Long = GapSeconds * 1000000L, continuous: Boolean = false) = {
     val timeoutMode =
       if (continuous) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
@@ -168,9 +168,7 @@ object Sessionize {
       else org.apache.spark.sql.streaming.Trigger.AvailableNow()
     def sessions(s: SparkSession) = {
       import s.implicits._
-      s.readStream
-        .schema(ChangeStreamJob.eventSchema)
-        .json(sourceDir)
+      source.load(s)
         .as[Event]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(

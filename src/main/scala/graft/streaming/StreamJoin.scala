@@ -86,18 +86,16 @@ object StreamJoin {
                          watermarkDelay: String = "10 minutes"): DataFrame =
     joined(clicks, purchases, maxWait, watermarkDelay, "left_outer")
 
-  /** Run the enrichment over a json event-feed dir (both event types arrive
-    * on the one feed, as they do from the change stream), appending matched
-    * pairs to `outDir`.
+  /** Run the enrichment over an event feed (both event types arrive on the
+    * one feed, as they do from the change stream), appending matched pairs
+    * to `outDir`.
     */
-  def start(spark: SparkSession, sourceDir: String, outDir: String,
+  def start(spark: SparkSession, source: EventSource, outDir: String,
             checkpointDir: String, maxWait: String = "10 minutes",
             watermarkDelay: String = "10 minutes",
             outer: Boolean = false): StreamingQuery = {
     def out(s: SparkSession) = {
-      val feed = s.readStream
-        .schema(ChangeStreamJob.eventSchema)
-        .json(sourceDir)
+      val feed = source.load(s)
       joined(
         feed.where(col("event_type") === "click"),
         feed.where(col("event_type") === "purchase"),

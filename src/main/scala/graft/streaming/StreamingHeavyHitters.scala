@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.LongType
 
 /** Streaming heavy hitters (SURVEY.md §2 D26): the approximate top items
   * per event type over an UNBOUNDED feed, maintained incrementally in
@@ -109,33 +110,30 @@ object StreamingHeavyHitters {
       }
   }
 
-  /** Run over a json feed dir, appending each epoch's updated summaries
+  /** Run over an event feed, appending each epoch's updated summaries
     * under `batch_id=<epoch>`, overwritten on replay (the
     * ParquetQueuePublisher idempotence contract — a crash between sink
     * and checkpoint commit replays the epoch into the same partition).
     */
-  def start(spark: SparkSession, sourceDir: String, outDir: String,
+  def start(spark: SparkSession, source: EventSource, outDir: String,
             checkpointDir: String, k: Int = 8, nShards: Int = 4,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    def events(s: SparkSession) = s.readStream
-      .schema(ChangeStreamJob.eventSchema)
-      .json(sourceDir)
-    Epochs.start(spark, s => summaries(events(s), k, nShards).toDF(), checkpointDir, trigger,
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    Epochs.start(spark, s => summaries(source.load(s), k, nShards).toDF(), checkpointDir, trigger,
         outputMode = OutputMode.Update())(
       Epochs.overwrite(_, _, outDir, "batch_id"))
-  }
 
   /** The newest summary row per (type, shard, user) — later epochs
     * supersede earlier ones for the groups they re-emitted. Runs over
-    * summary-cardinality data (nTypes × nShards × k × nEpochs rows).
+    * summary-cardinality data (nTypes × nShards × k × nEpochs rows). Read
+    * with the summary schema plus `batch_id`, so a drain that emitted
+    * nothing, which leaves no `outDir`, reads empty.
     */
-  def latestSummaries(spark: SparkSession, outDir: String): DataFrame = {
-    spark.read.option("basePath", outDir).parquet(outDir)
+  def latestSummaries(spark: SparkSession, outDir: String): DataFrame =
+    Epochs.read(spark, outDir, Encoders.product[HHRow].schema.add("batch_id", LongType))
       .withColumn("newest", max(col("batch_id")).over(
         Window.partitionBy("event_type", "shard")))
       .where(col("batch_id") === col("newest"))
       .drop("newest")
-  }
 
   /** Merge shard summaries into the per-type top-m: shard substreams are
     * disjoint, so summing per-shard lower bounds keeps the global
@@ -166,7 +164,7 @@ object StreamingHeavyHitters {
     * endpoint GraftDaemon uses for connectors.
     */
   def supervised(spark: SparkSession, metrics: MetricsRegistry,
-                 sourceDir: String, outDir: String, checkpointDir: String,
+                 source: EventSource, outDir: String, checkpointDir: String,
                  k: Int = 8, nShards: Int = 4,
                  trigger: Trigger = Trigger.AvailableNow(),
                  maxRestarts: Int = 3): Supervisor = {
@@ -175,10 +173,10 @@ object StreamingHeavyHitters {
       WatchedDb("analytics", "heavy_hitters"),
       ResumeTokensDb("analytics", "heavy_hitters_ckpt"),
       QueueSink("heavy-hitter-summaries"))
-    val settings = Settings.create(Connections(sourceDir, outDir), Seq(cfg))
+    val settings = Settings.create(Connections(source.toString, outDir), Seq(cfg))
       .fold(e => sys.error(e), identity)
     new Supervisor(spark, settings, metrics,
-      (s, _) => start(s, sourceDir, outDir, checkpointDir, k, nShards, trigger),
+      (s, _) => start(s, source, outDir, checkpointDir, k, nShards, trigger),
       maxRestarts = maxRestarts)
   }
 }

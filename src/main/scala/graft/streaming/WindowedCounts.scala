@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Watermarked, windowed streaming aggregation over the event feed — the
-  * canonical Structured-Streaming shape (readStream → event-time window agg
+  * canonical Structured-Streaming shape (event source → event-time window agg
   * with a watermark bounding state → append sink).
   *
   * State is bounded by the watermark: windows older than (max event time −
@@ -30,18 +30,14 @@ object WindowedCounts {
         col("window.end").as("window_end"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** Start the windowed aggregation over a json feed dir, appending
+  /** Start the windowed aggregation over an event feed, appending
     * finalized windows to `outDir`.
     */
-  def start(spark: SparkSession, sourceDir: String, outDir: String,
+  def start(spark: SparkSession, source: EventSource, outDir: String,
             checkpointDir: String, windowLen: String = "5 minutes",
-            watermarkDelay: String = "10 minutes"): StreamingQuery = {
-    def events(s: SparkSession) = s.readStream
-      .schema(ChangeStreamJob.eventSchema)
-      .json(sourceDir)
+            watermarkDelay: String = "10 minutes"): StreamingQuery =
     // one epoch-overwritten partition per epoch (a plain append would
     // double-count a replayed epoch's finalized windows)
-    Epochs.start(spark, s => windowed(events(s), windowLen, watermarkDelay), checkpointDir)(
+    Epochs.start(spark, s => windowed(source.load(s), windowLen, watermarkDelay), checkpointDir)(
       Epochs.overwrite(_, _, outDir))
-  }
 }

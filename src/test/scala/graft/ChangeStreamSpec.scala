@@ -68,6 +68,20 @@ class ChangeStreamSpec extends SparkSpec {
     assert(spark.read.parquet(dlq).count() === 2, "replayed epoch must not duplicate the DLQ")
   }
 
+  test("dead-letter routing: a row with an event_id but no user_id quarantines as missing_user_id") {
+    val s = spark
+    import s.implicits._
+    val (src, queue, ckpt, dlq) =
+      (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"), tempDir("dlq") + "/d")
+    writeEvents(src, "good.json", 0 until 10)
+    Files.write(Paths.get(src, "bad.json"), notEventLines.mkString("\n").getBytes)
+    graft.streaming.DeadLetter.startWithDlq(spark, src,
+      ParquetQueuePublisher(queue), dlq, ckpt).awaitTermination(60000)
+    assert(queueIds(queue).sorted === (0L until 10L))
+    assert(spark.read.parquet(dlq).select("reason").as[String].collect().sorted.toSeq ===
+      Seq("corrupt_json", "missing_user_id"))
+  }
+
   test("DLQ replay publishes rows the fixed parser now accepts and keeps the rest quarantined") {
     val s = spark
     import s.implicits._
@@ -146,12 +160,12 @@ class ChangeStreamSpec extends SparkSpec {
     def dimRows(seg: String) = (0 until 7).map(u => (u.toLong, seg)).toDF("user_id", "segment")
     Versioned.commit(spark, dimRows("bronze"), dim)
     writeEvents(src, "batch1.json", 0 until 6)
-    val q1 = graft.streaming.DimensionEnrich.start(spark, src, dim, out, ckpt)
+    val q1 = graft.streaming.DimensionEnrich.start(spark, JsonDirSource(src), dim, out, ckpt)
     q1.awaitTermination(60000)
     // the dimension moves BETWEEN epochs; new events must see the new version
     Versioned.commit(spark, dimRows("gold"), dim)
     writeEvents(src, "batch2.json", 100 until 106)
-    val q2 = graft.streaming.DimensionEnrich.start(spark, src, dim, out, ckpt)
+    val q2 = graft.streaming.DimensionEnrich.start(spark, JsonDirSource(src), dim, out, ckpt)
     q2.awaitTermination(60000)
     val rows = spark.read.parquet(out).collect()
       .map(r => r.getAs[Long]("event_id") ->
@@ -168,7 +182,7 @@ class ChangeStreamSpec extends SparkSpec {
     // with an actionable message, not a mid-batch NoSuchElementException
     // (ADVICE r11)
     val e = intercept[IllegalArgumentException] {
-      graft.streaming.DimensionEnrich.start(spark, src,
+      graft.streaming.DimensionEnrich.start(spark, JsonDirSource(src),
         tempDir("dim-none") + "/never", out, tempDir("ckpt-none"))
     }
     assert(e.getMessage.contains("no committed dimension version"))
@@ -240,6 +254,15 @@ class ChangeStreamSpec extends SparkSpec {
       ParquetQueuePublisher(queue2), ckpt2)
     q3.awaitTermination(60000)
     assert(!spark.read.parquet(queue2).columns.contains("full_document_before_change"))
+  }
+
+  test("pre/post images: a poison line and a keyless row are dropped, the valid rows flow") {
+    val (src, queue, ckpt) = (tempDir("src"), tempDir("queue") + "/q", tempDir("ckpt"))
+    writeEvents(src, "good.json", 0 until 10)
+    Files.write(Paths.get(src, "bad.json"), notEventLines.mkString("\n").getBytes)
+    ChangeStreamJob.startStream(spark, JsonDirSource(src),
+      ParquetQueuePublisher(queue), ckpt, preAndPostImages = true).awaitTermination(60000)
+    assert(queueIds(queue).sorted === (0L until 10L))
   }
 
   test("before-images: a DELETE clears the key's image instead of killing the stream") {

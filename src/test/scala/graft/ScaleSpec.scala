@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Skew
-import graft.streaming.WindowedCounts
+import graft.streaming.{JsonDirSource, WindowedCounts}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ class ScaleSpec extends SparkSpec {
       line(3, t0 + 3 * min, "view", 4.0),
       line(4, t0 + 60 * min, "click", 8.0) // advances watermark far past window 1
     ).mkString("\n").getBytes)
-    val q = WindowedCounts.start(spark, src, out, ckpt)
+    val q = WindowedCounts.start(spark, JsonDirSource(src), out, ckpt)
     q.awaitTermination(120000)
     val rows = spark.read.parquet(out).collect()
     // the first 5-minute window is finalized (watermark = t0+60min - 10min)

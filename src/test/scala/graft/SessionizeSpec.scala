@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Sessionize
+import graft.streaming.{JsonDirSource, Sessionize}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -21,7 +21,7 @@ class SessionizeSpec extends SparkSpec {
       line(10, 2, t0, 8.0), line(11, 2, t0 + 5L * 1000000, 16.0)
     ).mkString("\n").getBytes)
 
-    val q = Sessionize.start(spark, src, out, ckpt)
+    val q = Sessionize.start(spark, JsonDirSource(src), out, ckpt)
     q.awaitTermination(120000)
     // the gap-closed session for user 1 must be emitted
     val closed = spark.read.parquet(out).collect()
@@ -38,19 +38,33 @@ class SessionizeSpec extends SparkSpec {
     assert(closed.count(_.getAs[Long]("user_id") == 2L) === 0)
     Files.write(Paths.get(src, "b.json"),
       line(12, 2, t0 + 10L * 1000000, 32.0).getBytes)
-    val q2 = Sessionize.start(spark, src, out, ckpt)
+    val q2 = Sessionize.start(spark, JsonDirSource(src), out, ckpt)
     q2.awaitTermination(120000)
     // still open (no gap yet) — but state carried 3 events; force the close
     // with a far-future event
     Files.write(Paths.get(src, "c.json"),
       line(13, 2, t0 + 3 * gap, 64.0).getBytes)
-    val q3 = Sessionize.start(spark, src, out, ckpt)
+    val q3 = Sessionize.start(spark, JsonDirSource(src), out, ckpt)
     q3.awaitTermination(120000)
     val u2 = spark.read.parquet(out).filter(r => r.getAs[Long]("user_id") == 2L)
       .collect()
     assert(u2.length === 1, "exactly one closed session for user 2")
     assert(u2.head.getAs[Long]("n_events") === 3L, "state survived the restart")
     assert(u2.head.getAs[Double]("sum_value") === 56.0)
+  }
+
+  test("drain: a poison line and a keyless row are dropped, valid sessions still close") {
+    val (src, out, ckpt) = (tempDir("sp_src"), tempDir("sp_out") + "/s", tempDir("sp_ckpt"))
+    val t0 = 1704067200000000L
+    def line(id: Long, tsUs: Long) =
+      s"""{"event_id":$id,"ts_us":$tsUs,"user_id":1,"event_type":"click","value":1.0,"props":"{}"}"""
+    val far = t0 + 2 * Sessionize.GapSeconds * 1000000L
+    Files.write(Paths.get(src, "a.json"),
+      (Seq(line(1, t0), line(2, far)) ++ notEventLines).mkString("\n").getBytes)
+    Sessionize.start(spark, JsonDirSource(src), out, ckpt).awaitTermination(120000)
+    val closed = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("first_event"), r.getAs[Long]("n_events")))
+    assert(closed.toSeq === Seq((1L, 1L, 1L)))
   }
 
   test("continuous mode: an idle user's open session closes by timeout and frees state") {
@@ -122,11 +136,11 @@ class SessionizeSpec extends SparkSpec {
       .map { case (u, i) => (1000000L + i, u, tFar, 0.0) }
     // three drained runs: mid-session boundaries + a flush that closes all
     Files.write(Paths.get(src, "a.json"), half1.map(line).mkString("\n").getBytes)
-    Sessionize.start(spark, src, out, ckpt).awaitTermination(120000)
+    Sessionize.start(spark, JsonDirSource(src), out, ckpt).awaitTermination(120000)
     Files.write(Paths.get(src, "b.json"), half2.map(line).mkString("\n").getBytes)
-    Sessionize.start(spark, src, out, ckpt).awaitTermination(120000)
+    Sessionize.start(spark, JsonDirSource(src), out, ckpt).awaitTermination(120000)
     Files.write(Paths.get(src, "c.json"), flush.map(line).mkString("\n").getBytes)
-    Sessionize.start(spark, src, out, ckpt).awaitTermination(120000)
+    Sessionize.start(spark, JsonDirSource(src), out, ckpt).awaitTermination(120000)
     val streamed = spark.read.parquet(out).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("first_event"),
         r.getAs[Long]("last_event"), r.getAs[Long]("n_events"),

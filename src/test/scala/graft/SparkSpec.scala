@@ -20,11 +20,18 @@ object SparkSpec {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Two feed lines that are not events: one that does not parse, and one
+    * with an `event_id` but no `user_id`.
+    */
+  val notEventLines: Seq[String] = Seq("poison",
+    """{"event_id":999,"ts_us":1704067200000000,"event_type":"click","value":1.5,"props":"{}"}""")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sf0001: String = SparkSpec.sf0001
+  def notEventLines: Seq[String] = SparkSpec.notEventLines
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

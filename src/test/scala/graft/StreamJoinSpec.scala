@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamJoin
+import graft.streaming.{JsonDirSource, StreamJoin}
 
 import java.nio.file.{Files, Paths}
 
@@ -27,7 +27,7 @@ class StreamJoinSpec extends SparkSpec {
       line(7, 9, t0 + 9 * min, "purchase", 40.0)   // different user than click 6
     ).mkString("\n").getBytes)
 
-    val q = StreamJoin.start(spark, src, out, ckpt)
+    val q = StreamJoin.start(spark, JsonDirSource(src), out, ckpt)
     q.awaitTermination(120000)
     val rows = spark.read.parquet(out).collect()
     assert(rows.length === 1, s"exactly one (click, purchase) pair must match, got ${rows.length}")
@@ -47,7 +47,7 @@ class StreamJoinSpec extends SparkSpec {
       line(2, 1, t0 + 2 * min, "purchase", 10.0),
       line(3, 2, t0 + 1 * min, "click", 2.0)
     ).mkString("\n").getBytes)
-    val q1 = StreamJoin.start(spark, src, out, ckpt, outer = true)
+    val q1 = StreamJoin.start(spark, JsonDirSource(src), out, ckpt, outer = true)
     q1.awaitTermination(120000)
     // click 3's window [t0+1min, t0+11min] is not past the watermark yet —
     // it must NOT be emitted as abandoned prematurely
@@ -64,7 +64,7 @@ class StreamJoinSpec extends SparkSpec {
       line(8, 98, t0 + 60 * min, "click", 0.0),
       line(9, 99, t0 + 60 * min, "purchase", 0.0)
     ).mkString("\n").getBytes)
-    val q2 = StreamJoin.start(spark, src, out, ckpt, outer = true)
+    val q2 = StreamJoin.start(spark, JsonDirSource(src), out, ckpt, outer = true)
     q2.awaitTermination(120000)
     // outer-join nulls are evicted one micro-batch AFTER the watermark
     // advances (state cleanup runs against the new watermark on the next
@@ -73,7 +73,7 @@ class StreamJoinSpec extends SparkSpec {
       line(10, 98, t0 + 61 * min, "click", 0.0),
       line(11, 99, t0 + 61 * min, "purchase", 0.0)
     ).mkString("\n").getBytes)
-    val q3 = StreamJoin.start(spark, src, out, ckpt, outer = true)
+    val q3 = StreamJoin.start(spark, JsonDirSource(src), out, ckpt, outer = true)
     q3.awaitTermination(120000)
     val rows = spark.read.parquet(out).collect()
     val matched = rows.filter(r => r.getAs[Long]("click_id") == 1L)
@@ -149,7 +149,7 @@ class StreamJoinSpec extends SparkSpec {
     // batch 1: only the click — nothing can match yet
     Files.write(Paths.get(src, "a.json"),
       line(1, 7, t0, "click", 1.0).getBytes)
-    val q1 = StreamJoin.start(spark, src, out, ckpt)
+    val q1 = StreamJoin.start(spark, JsonDirSource(src), out, ckpt)
     q1.awaitTermination(120000)
     assert(!Files.exists(Paths.get(out)) ||
       spark.read.parquet(out).count() === 0, "no pair can exist before the purchase arrives")
@@ -157,7 +157,7 @@ class StreamJoinSpec extends SparkSpec {
     // must still be buffered in the join state
     Files.write(Paths.get(src, "b.json"),
       line(2, 7, t0 + 3 * min, "purchase", 50.0).getBytes)
-    val q2 = StreamJoin.start(spark, src, out, ckpt)
+    val q2 = StreamJoin.start(spark, JsonDirSource(src), out, ckpt)
     q2.awaitTermination(120000)
     val rows = spark.read.parquet(out).collect()
     assert(rows.length === 1, "the cross-batch pair must be emitted exactly once")

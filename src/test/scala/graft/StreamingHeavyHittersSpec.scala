@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{GraftQueryListener, MetricsRegistry, StreamingHeavyHitters}
+import graft.streaming.{GraftQueryListener, JsonDirSource, MetricsRegistry, StreamingHeavyHitters}
 import graft.streaming.StreamingHeavyHitters.HHState
 
 import java.nio.file.{Files, Paths}
@@ -63,7 +63,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     Files.write(Paths.get(src, "a.json"), scala.util.Random.shuffle(lines).mkString("\n").getBytes)
 
     val k = 8
-    val q = StreamingHeavyHitters.start(spark, src, out, ckpt, k = k, nShards = 4)
+    val q = StreamingHeavyHitters.start(spark, JsonDirSource(src), out, ckpt, k = k, nShards = 4)
     q.awaitTermination(120000)
 
     val latest = StreamingHeavyHitters.latestSummaries(spark, out)
@@ -90,7 +90,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     def next = { id += 1; id }
     Files.write(Paths.get(src, "a.json"),
       (1 to 10).map(_ => line(next, 7, "click")).mkString("\n").getBytes)
-    val q1 = StreamingHeavyHitters.start(spark, src, out, ckpt, k = 4, nShards = 2)
+    val q1 = StreamingHeavyHitters.start(spark, JsonDirSource(src), out, ckpt, k = 4, nShards = 2)
     q1.awaitTermination(120000)
     val t1 = StreamingHeavyHitters.latestSummaries(spark, out)
       .where(org.apache.spark.sql.functions.col("user_id") === 7L)
@@ -99,12 +99,30 @@ class StreamingHeavyHittersSpec extends SparkSpec {
 
     Files.write(Paths.get(src, "b.json"),
       (1 to 5).map(_ => line(next, 7, "click")).mkString("\n").getBytes)
-    val q2 = StreamingHeavyHitters.start(spark, src, out, ckpt, k = 4, nShards = 2)
+    val q2 = StreamingHeavyHitters.start(spark, JsonDirSource(src), out, ckpt, k = 4, nShards = 2)
     q2.awaitTermination(120000)
     val t2 = StreamingHeavyHitters.latestSummaries(spark, out)
       .where(org.apache.spark.sql.functions.col("user_id") === 7L)
       .collect().map(_.getAs[Long]("count_min")).max
     assert(t2 === 15L, "the second run must continue from state, not restart the count")
+  }
+
+  test("a poison line and a keyless row are dropped; the sketch counts the events only") {
+    val (src, out, ckpt) = (tempDir("hhp_src"), tempDir("hhp_out") + "/s", tempDir("hhp_ckpt"))
+    Files.write(Paths.get(src, "a.json"),
+      ((1L to 5L).map(i => line(i, 7, "click")) ++ notEventLines).mkString("\n").getBytes)
+    StreamingHeavyHitters.start(spark, JsonDirSource(src), out, ckpt, k = 4, nShards = 2)
+      .awaitTermination(120000)
+    val latest = StreamingHeavyHitters.latestSummaries(spark, out).collect()
+      .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("user_id"), r.getAs[Long]("shard_total")))
+    assert(latest.toSeq === Seq(("click", 7L, 5L)))
+  }
+
+  test("latestSummaries of a drain that emitted no rows is empty") {
+    val (src, out, ckpt) = (tempDir("hhe_src"), tempDir("hhe_out") + "/s", tempDir("hhe_ckpt"))
+    StreamingHeavyHitters.start(spark, JsonDirSource(src), out, ckpt).awaitTermination(120000)
+    assert(!new java.io.File(out).exists, "an empty drain creates no output dir")
+    assert(StreamingHeavyHitters.latestSummaries(spark, out).count() === 0L)
   }
 
   test("supervised: a failed sketch query is classified, restarted from checkpoint, and metered") {
@@ -120,7 +138,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     Files.write(Paths.get(outBase, "queue_hh"), "poison".getBytes)
 
     val metrics = new MetricsRegistry
-    val sup = StreamingHeavyHitters.supervised(spark, metrics, src, out, ckpt,
+    val sup = StreamingHeavyHitters.supervised(spark, metrics, JsonDirSource(src), out, ckpt,
       k = 4, nShards = 2)
     sup.startAll()
     assert(metrics.value(MetricsRegistry.TasksStarted) === 1)
@@ -159,7 +177,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     val listener = new GraftQueryListener(metrics)
     spark.streams.addListener(listener)
     try {
-      val sup = StreamingHeavyHitters.supervised(spark, metrics, src, out, ckpt, k = 4, nShards = 2)
+      val sup = StreamingHeavyHitters.supervised(spark, metrics, JsonDirSource(src), out, ckpt, k = 4, nShards = 2)
       sup.startAll()
       sup.awaitAll(120000)
       org.apache.spark.sql.graft.GraftSqlBridge.waitUntilEmpty(spark.sparkContext)

@@ -72,6 +72,7 @@ class WireContractPropertySpec extends SparkSpec {
     val node = mapper.createObjectNode()
     node.put("event_id", id)
     node.put("user_id", id % 97)
+    node.put("ts_us", id % 1000000007L)
     node.put("event_type", etype)
     node.put("value", (id % 1000) / 10.0)
     node.put("props", props)
@@ -300,6 +301,7 @@ class WireContractPropertySpec extends SparkSpec {
       val d = mapper.readTree(doc)
       assert(r.getAs[String]("event_type") === d.path("event_type").textValue())
       assert(r.getAs[Long]("user_id") === d.path("user_id").longValue())
+      assert(r.getAs[Long]("ts_us") === d.path("ts_us").longValue())
       assert(r.getAs[Double]("value") === d.path("value").doubleValue())
       assert(r.getAs[String]("props") === d.path("props").textValue())
     }
