@@ -14,14 +14,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Session conf, warmup, and the cold-sample recipe live in BenchHarness,
-    // shared with tools.Profile so single-query timings stay comparable.
-    val spark = BenchHarness.envSession(32)
-    BenchHarness.warmup(spark, sfDir)
+    // every knob is read before the session starts, so a bad value fails
+    // at once, naming its key
+    BenchHarness.requireDir("SPARK_GRAFT_SF_DIR", sfDir)
     // 3 samples: this host shows occasional external multi-second stalls
     // (measured: an untouched query jumping 0.2 s → 3.2 s between full
     // bench runs) long enough to poison BOTH samples of a 2-sample min.
     val reps = BenchHarness.envCount("SPARK_GRAFT_BENCH_REPS", 3)
+    var anchorOn = BenchHarness.envFlag("SPARK_GRAFT_ANCHOR", default = true)
+    // Session conf, warmup, and the cold-sample recipe live in BenchHarness,
+    // shared with tools.Profile so single-query timings stay comparable.
+    val spark = BenchHarness.envSession(32)
+    BenchHarness.warmup(spark, sfDir)
     // benchExtras (ann_ivf_build/ann_ivf_probe) are timed but reported under
     // a separate "extras" field (ADVICE r7: tooling that joins bench keys
     // against oracle output must see exactly the oracle-comparable set in
@@ -40,7 +44,6 @@ object Bench {
     // measuring stick, not an engine dependency: if python3/duckdb is
     // absent the bench degrades to Spark numbers only.
     val duckBest = scala.collection.mutable.Map.empty[String, Double]
-    var anchorOn = sys.env.getOrElse("SPARK_GRAFT_ANCHOR", "1") == "1"
     // oracle-SQL handoff file: only written when the anchor runs; cleaned up
     // on exit so repeated benches don't litter /tmp
     lazy val sqlPath = {

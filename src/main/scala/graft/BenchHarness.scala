@@ -53,6 +53,25 @@ object BenchHarness {
     env.get(key).fold(default)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
       throw new IllegalArgumentException(s"$key must be a positive integer, got '$v'")))
 
+  /** An on/off knob: the environment variable `key`, `default` when unset.
+    * Only `0` and `1` are values; anything else fails naming `key`.
+    * `SPARK_GRAFT_ANCHOR` turns [[Bench]]'s DuckDB anchor pass on or off.
+    */
+  def envFlag(key: String, default: Boolean, env: Map[String, String] = sys.env): Boolean =
+    env.get(key).fold(default)(v => v.trim match {
+      case "1" => true
+      case "0" => false
+      case _ => throw new IllegalArgumentException(s"$key must be 0 or 1, got '$v'")
+    })
+
+  /** A directory knob's value `dir`, read from the environment variable
+    * `key`: it must name an existing directory, else this fails naming
+    * `key`. `SPARK_GRAFT_SF_DIR` is [[Bench]]'s dataset.
+    */
+  def requireDir(key: String, dir: String): Unit =
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)),
+      s"$key must name an existing directory, got '$dir'")
+
   /** [[session]] as wide as `SPARK_GRAFT_CPUS`, `defaultCpus` when unset. */
   def envSession(defaultCpus: Int): SparkSession =
     session(envCount("SPARK_GRAFT_CPUS", defaultCpus).toString)

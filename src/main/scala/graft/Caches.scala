@@ -22,7 +22,9 @@ import org.apache.spark.storage.StorageLevel
   * several corpus scans share a single pass.
   *
   * What [[clear]] leaves alone: memos of METADATA or of deterministic
-  * results rather than data blocks. `Tables`' resolution memo (one
+  * results rather than data blocks. (Versioned-table and ANN-index
+  * metadata needs no call here: every operation reads it from the
+  * table's manifests and the index's sidecars.) `Tables`' resolution memo (one
   * inferred schema, file fingerprint and spread decision per table
   * version) is checked against the scan's own file listing on every load,
   * so it can never hand a query stale data, and dropping it would only
@@ -38,14 +40,13 @@ object Caches {
     * relations AND bare persistent RDDs (localCheckpoint blocks from the
     * iterative connected-components path are not owned by the cache
     * manager, so `spark.catalog.clearCache` alone would leave them
-    * resident). Also drops the driver-side IVF centroid matrices cached
-    * per index dir (KB-sized, but a cleared session should hold nothing).
+    * resident). It drops only Spark's blocks: graft keeps no other data
+    * cache, and the metadata memos it keeps are checked against the files
+    * they describe (see the object doc).
     */
   def clear(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    graft.ops.Similarity.invalidateCentroidCache()
-    graft.ops.Versioned.invalidateEpochCache()
     // Tables' resolution memo and QualityModel's weight memo deliberately
     // survive (see the object doc). QualityModel.invalidateWeightCache
     // (public) exists only to force a re-train cost measurement (bench's

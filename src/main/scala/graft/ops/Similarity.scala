@@ -388,24 +388,12 @@ object Similarity {
     *    whole directories at plan time — the probe scans the nprobe/C
     *    fraction of the index it needs and nothing else.
     */
-  /** Centroid matrix per indexDir: probing is the high-QPS half of the
-    * lifecycle and the matrix is immutable-per-build KBs — re-collecting it
-    * from parquet on every probe call was a driver round-trip per query
-    * batch (VERDICT r7 nit #4). buildIvfIndex writes through the cache; a
-    * fresh JVM's first probe faults it in from the parquet once. Released
-    * by [[graft.Caches.clear]] like the block-manager caches.
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
-  private[graft] def invalidateCentroidCache(): Unit = {
-    centroidCache.clear()
-    pqBooksCache.clear()
-  }
-
   /** Serialize/parse the KB-sized centroid sidecar. `Double.toString` emits
     * the shortest representation that round-trips through `parseDouble`
-    * exactly, so the matrix survives the file unchanged bit-for-bit.
+    * exactly, so the matrix survives the file unchanged bit-for-bit. Every
+    * probe and [[ivfIndexAppend]] reads the sidecar afresh — a local read
+    * of a few KB, with no driver memo that an index rebuilt in place (by
+    * this process or another) could leave stale.
     */
   private def writeCentroids(indexDir: String, centroids: Array[Array[Double]]): Unit = {
     val p = java.nio.file.Paths.get(indexDir, "centroids.csv")
@@ -448,8 +436,6 @@ object Similarity {
       emb.select(col("vec_id"), nearestCell(col("embedding"), centroids).as("cell"))
         .repartition(cells, col("cell"))
         .write.partitionBy("cell").mode("overwrite").parquet(s"$indexDir/assignments")
-      // write-through: probes against this indexDir skip the parquet fetch
-      centroidCache.put(indexDir, centroids)
     }
   }
 
@@ -489,8 +475,7 @@ object Similarity {
                                       queries: Seq[(Long, Seq[Float])],
                                       k: Int, nprobe: Int = 4): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val centroids: Array[Array[Double]] =
-      centroidCache.computeIfAbsent(indexDir, d => readCentroids(d))
+    val centroids = readCentroids(indexDir)
     // The cell fan-out is evaluated DRIVER-side on the same ProbeCellIds
     // expression the distributed plan would run (bit-identical choice), so
     // the probe side becomes a LocalRelation: no second corpus scan in the
@@ -520,7 +505,7 @@ object Similarity {
 
   /** PQ codebook sidecar: header "m k sub", then m·k comma-joined lines in
     * (subspace-major, code-minor) order. Shortest-repr doubles round-trip
-    * exactly, like the centroid sidecar.
+    * exactly, and every reader reads it afresh, like the centroid sidecar.
     */
   private def writePqBooks(indexDir: String, books: Array[Array[Array[Double]]]): Unit = {
     val p = java.nio.file.Paths.get(indexDir, "pqbooks.csv")
@@ -539,10 +524,6 @@ object Similarity {
     require(flat.length == m * k, s"pqbooks.csv: expected ${m * k} rows, got ${flat.length}")
     Array.tabulate(m, k)((j, c) => flat(j * k + c))
   }
-
-  /** Probe-side codebook cache, same lifecycle as [[centroidCache]]. */
-  private val pqBooksCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
 
   /** Build + persist the IVF-PQ index: the centroid sidecar, the PQ
     * codebook sidecar, and ONE corpus-sized artifact — (vec_id, pq_code,
@@ -598,14 +579,12 @@ object Similarity {
           nearestCell(col("embedding"), centroids).as("cell"))
         .repartition(cells, col("cell"))
         .write.partitionBy("cell").mode("overwrite").parquet(s"$indexDir/assignments")
-      centroidCache.put(indexDir, centroids)
-      pqBooksCache.put(indexDir, books)
     }
   }
 
   /** B5h (r18) — incremental index maintenance, the append half: encode a
     * NEW batch of vectors against the index's FROZEN centroids + codebooks
-    * (read through the probe caches — the k-means never re-runs) and
+    * (read from the index's sidecars — the k-means never re-runs) and
     * append its (vec_id, pq_code, recon_cos, cell) rows into the
     * cell-partitioned assignments table. At 100 TB this is the production
     * ingest shape — a daily embedding batch is one scan-speed projection
@@ -618,8 +597,8 @@ object Similarity {
     */
   def ivfIndexAppend(newEmb: DataFrame, indexDir: String,
                      dim: Int = 64): Unit = {
-    val centroids = centroidCache.computeIfAbsent(indexDir, d => readCentroids(d))
-    val books = pqBooksCache.computeIfAbsent(indexDir, d => readPqBooks(d))
+    val centroids = readCentroids(indexDir)
+    val books = readPqBooks(indexDir)
     newEmb.select(col("vec_id"),
         Embeddings.pqCode(col("embedding"), books, dim).as("pq_code"),
         Embeddings.pqReconCos(col("embedding"), books, dim).as("recon_cos"),
@@ -647,7 +626,7 @@ object Similarity {
 
   /** B5g — probe a persisted IVF-PQ index by asymmetric distance (ADC),
     * then exact-rerank: per query the driver builds the m·k dot-product
-    * lookup table against the cached codebooks (128 doubles at the
+    * lookup table against the codebook sidecar (128 doubles at the
     * defaults — the bounded-collect class) and picks the nprobe cells;
     * the scan reads ONLY those cells' (vec_id, pq_code) rows — partition
     * pruning as in B5d, but over 4-byte codes instead of 256-byte vectors
@@ -674,8 +653,8 @@ object Similarity {
                                         k: Int, nprobe: Int = 4,
                                         rerank: Int = 50): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val centroids = centroidCache.computeIfAbsent(indexDir, d => readCentroids(d))
-    val books = pqBooksCache.computeIfAbsent(indexDir, d => readPqBooks(d))
+    val centroids = readCentroids(indexDir)
+    val books = readPqBooks(indexDir)
     val m = books.length
     val kCode = books(0).length
     val sub = books(0)(0).length

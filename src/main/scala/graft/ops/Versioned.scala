@@ -1,12 +1,21 @@
 package graft.ops
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.{Caches, LocalFiles, PartFiles}
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, StandardCopyOption}
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
 
 /** D22 — snapshot-versioned parquet table ("Delta-lite"): commits publish an
   * immutable MANIFEST naming exactly the data files of one snapshot, and the
@@ -31,6 +40,17 @@ import java.nio.file.{Files, StandardCopyOption}
   * Layout: `dir/data/v<N>-<token>-<i>.parquet` (files never mutated after
   * commit; names are OPAQUE — only the manifest's reference list defines a
   * snapshot), `dir/manifest-v<N>.json` (version, file names, file count).
+  *
+  * Metadata is read from the table's files and nowhere else: one private
+  * [[snapshot]] opens and parses a manifest into a typed value (files, dv
+  * pointers, per-file stats, epoch, carried max epoch, op, ts), and each
+  * operation resolves the head once and passes that snapshot down. No
+  * driver memo sits beside the files, so a table another process rewrote,
+  * or one deleted and recreated under the same path, is read as it now
+  * is. A commit carries the stats of the files it keeps from the snapshot
+  * they came from; only newly staged files get a footer read. The epoch
+  * replay guard ([[epochGuarded]]) reads the head's `max_epoch` fresh and
+  * hands that same snapshot to the commit or merge it guards.
   *
   * Concurrency (the Delta protocol in miniature): version `N` belongs to
   * whoever PUBLISHES `manifest-v<N>.json` first — publication is an atomic
@@ -99,142 +119,108 @@ object Versioned {
       }.sorted.toSeq
   }
 
-  private def manifestNode(spark: SparkSession, dir: String,
-                           v: Long): com.fasterxml.jackson.databind.JsonNode = {
-    val fs = fsOf(spark, new Path(dir))
-    val in = fs.open(manifestPath(dir, v))
+  /** Per-column min/max of one data file: column → (type, min, max), the
+    * type `l` (long), `d` (double) or `s` (string).
+    */
+  private[graft] type ColStats = Map[String, (String, Any, Any)]
+
+  /** One version's manifest, parsed: what [[snapshot]] hands every
+    * operation. `stats` (D22f) holds only the files with usable stats;
+    * `maxEpoch` is None on a manifest written before `max_epoch` existed,
+    * `ts` on one written before the operation log (D22i).
+    */
+  private final case class Snapshot(version: Long, files: Seq[String],
+                                    dvs: Map[String, String], stats: Map[String, ColStats],
+                                    epoch: Long, maxEpoch: Option[Long], op: String,
+                                    ts: Option[Long])
+
+  /** Open and parse `manifest-v<v>.json`: the one read of a manifest.
+    * Nothing is memoized beside the files, so an operation always sees the
+    * table as its files now are, also after another process rewrote or
+    * recreated it.
+    */
+  private def snapshot(spark: SparkSession, dir: String, v: Long): Snapshot = {
+    val in = fsOf(spark, new Path(dir)).open(manifestPath(dir, v))
     val node = try mapper.readTree(in) finally in.close()
-    harvestStats(dir, node)
-    node
+    def fields[T](n: JsonNode)(f: JsonNode => T): Map[String, T] =
+      VectorMap.from(n.properties().iterator.asScala.map(e => e.getKey -> f(e.getValue)))
+    def long(key: String) = Option(node.get(key)).map(_.asLong())
+    Snapshot(v, node.path("files").asScala.map(_.asText()).toVector,
+      fields(node.path("dvs"))(_.asText()),
+      fields(node.path("stats"))(fields(_) { c =>
+        val t = c.get("t").asText()
+        t match {
+          case "l" => (t, c.get("min").asLong(), c.get("max").asLong())
+          case "d" => (t, c.get("min").asDouble(), c.get("max").asDouble())
+          case _ => (t, c.get("min").asText(), c.get("max").asText())
+        }
+      }),
+      node.path("epoch").asLong(-1L), long("max_epoch"),
+      Option(node.get("op")).fold("commit")(_.asText()), long("ts"))
+  }
+
+  /** The latest snapshot, None for an empty or absent table. */
+  private def head(spark: SparkSession, dir: String): Option[Snapshot] =
+    versions(spark, dir).lastOption.map(snapshot(spark, dir, _))
+
+  /** Snapshot `version`, or the latest when ≤ 0; it must exist. */
+  private def resolve(spark: SparkSession, dir: String, version: Long): Snapshot = {
+    val vs = versions(spark, dir)
+    require(vs.nonEmpty, s"no committed versions under $dir")
+    val v = if (version > 0) version else vs.last
+    require(vs.contains(v), s"version $v not present under $dir (have $vs)")
+    snapshot(spark, dir, v)
   }
 
   // ---- D22f: per-file column min/max (data skipping) ----------------------
 
-  /** Per-file column stats are IMMUTABLE (file names are never reused), so
-    * one driver cache serves every manifest: seeded by every manifest read
-    * ([[manifestNode]] harvests), filled from parquet FOOTERS (metadata-
-    * only, no row reads) for files no manifest has described yet — newly
-    * staged commits, or a legacy/foreign manifest without a stats block.
+  /** Min/max per top-level primitive column of one data file, read from the
+    * parquet footer on the driver (metadata only, no row reads). A column
+    * qualifies only when every row group recorded usable stats (an
+    * all-null group contributes nothing and is fine; a group with stats
+    * MISSING disqualifies — pruning must never guess). Unsupported types
+    * and unreadable files yield no entry — data skipping degrades to
+    * reading the file, never to wrong answers. A commit reads the footers
+    * of the files its basis snapshot has no stats for: its newly staged
+    * files, or every file under a manifest without a stats block.
     */
-  private val fileStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, com.fasterxml.jackson.databind.JsonNode]()
-
-  private def harvestStats(dir: String,
-                           node: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    val st = node.path("stats")
-    if (st.isObject) {
-      val it = st.fields()
-      while (it.hasNext) {
-        val e = it.next()
-        fileStatsCache.putIfAbsent(s"$dir#${e.getKey}", e.getValue)
+  private def footerStats(spark: SparkSession, dir: String, name: String): Option[ColStats] =
+    try {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(dir, s"data/$name"), spark.sparkContext.hadoopConfiguration))
+      val chunks = try reader.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala).filter(_.getPath.size == 1)
+        finally reader.close()
+      val cols = chunks.map(_.getPath.toDotString).distinct.flatMap { c =>
+        val own = chunks.filter(_.getPath.toDotString == c)
+        val bounds =
+          if (own.exists(cc => cc.getStatistics == null || cc.getStatistics.isEmpty)) Seq(None)
+          else own.filter(_.getStatistics.hasNonNullValue).map(chunkBounds)
+        Option.when(bounds.nonEmpty && bounds.forall(_.nonEmpty))(c -> bounds.flatten.reduce(widen))
       }
+      Option.when(cols.nonEmpty)(VectorMap.from(cols))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** One row group's bounds for a column chunk; None for a type pruning
+    * does not support.
+    */
+  private def chunkBounds(cc: ColumnChunkMetaData): Option[(String, Any, Any)] = {
+    val st = cc.getStatistics
+    def bounds(t: String, f: Any => Any) = Some((t, f(st.genericGetMin), f(st.genericGetMax)))
+    cc.getPrimitiveType.getPrimitiveTypeName match {
+      case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 => bounds("l", toL)
+      case PrimitiveTypeName.DOUBLE | PrimitiveTypeName.FLOAT => bounds("d", toD)
+      case PrimitiveTypeName.BINARY
+        if cc.getPrimitiveType.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType() =>
+        bounds("s", _.asInstanceOf[Binary].toStringUsingUTF8)
+      case _ => None
     }
   }
 
-  /** Min/max per top-level primitive column of one data file, read from the
-    * parquet footer on the driver: `{col: {"t": "l|d|s", "min": …,
-    * "max": …}}`. A column qualifies only when every row group recorded
-    * usable stats (an all-null group contributes nothing and is fine; a
-    * group with stats MISSING disqualifies — pruning must never guess).
-    * Unsupported types and unreadable files yield no entry — data skipping
-    * degrades to reading the file, never to wrong answers.
-    */
-  private def footerStats(spark: SparkSession, dir: String,
-                          name: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-    try {
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(dir, s"data/$name"), spark.sparkContext.hadoopConfiguration))
-      try {
-        val mins = scala.collection.mutable.LinkedHashMap[String, (String, Any, Any)]()
-        val bad = scala.collection.mutable.Set[String]()
-        reader.getFooter.getBlocks.forEach { block =>
-          block.getColumns.forEach { cc =>
-            if (cc.getPath.size == 1) {
-              val colName = cc.getPath.toDotString
-              val st = cc.getStatistics
-              if (st == null || st.isEmpty) { bad += colName; () }
-              else if (!st.hasNonNullValue) () // all-null group: bounds unchanged
-              else {
-                val tpe = cc.getPrimitiveType.getPrimitiveTypeName
-                val parsed: Option[(String, Any, Any)] = tpe match {
-                  case PrimitiveTypeName.INT64 => Some(("l",
-                    st.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-                    st.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-                  case PrimitiveTypeName.INT32 => Some(("l",
-                    st.genericGetMin.asInstanceOf[java.lang.Integer].longValue(),
-                    st.genericGetMax.asInstanceOf[java.lang.Integer].longValue()))
-                  case PrimitiveTypeName.DOUBLE => Some(("d",
-                    st.genericGetMin.asInstanceOf[java.lang.Double].doubleValue(),
-                    st.genericGetMax.asInstanceOf[java.lang.Double].doubleValue()))
-                  case PrimitiveTypeName.FLOAT => Some(("d",
-                    st.genericGetMin.asInstanceOf[java.lang.Float].doubleValue(),
-                    st.genericGetMax.asInstanceOf[java.lang.Float].doubleValue()))
-                  case PrimitiveTypeName.BINARY
-                    if cc.getPrimitiveType.getLogicalTypeAnnotation ==
-                      org.apache.parquet.schema.LogicalTypeAnnotation.stringType() =>
-                    Some(("s",
-                      st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8,
-                      st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8))
-                  case _ => None
-                }
-                parsed match {
-                  case None => bad += colName; ()
-                  case Some((t, mn, mx)) =>
-                    val merged = mins.get(colName) match {
-                      case Some((t0, m0, x0)) if t0 == t =>
-                        val lo = (t, m0, mn) match {
-                          case ("l", a: Long, b: Long) => math.min(a, b): Any
-                          case ("d", a: Double, b: Double) => math.min(a, b): Any
-                          case (_, a: String, b: String) => (if (a <= b) a else b): Any
-                          case _ => m0
-                        }
-                        val hiV = (t, x0, mx) match {
-                          case ("l", a: Long, b: Long) => math.max(a, b): Any
-                          case ("d", a: Double, b: Double) => math.max(a, b): Any
-                          case (_, a: String, b: String) => (if (a >= b) a else b): Any
-                          case _ => x0
-                        }
-                        (t, lo, hiV)
-                      case _ => (t, mn, mx)
-                    }
-                    mins.put(colName, merged); ()
-                }
-              }
-            }
-          }
-        }
-        bad.foreach(mins.remove)
-        if (mins.isEmpty) None
-        else {
-          val obj = mapper.createObjectNode()
-          mins.foreach { case (c, (t, mn, mx)) =>
-            val cn = obj.putObject(c)
-            cn.put("t", t)
-            (t, mn, mx) match {
-              case ("l", a: Long, b: Long) => cn.put("min", a); cn.put("max", b); ()
-              case ("d", a: Double, b: Double) => cn.put("min", a); cn.put("max", b); ()
-              case (_, a: String, b: String) => cn.put("min", a); cn.put("max", b); ()
-              case _ => ()
-            }
-          }
-          Some(obj)
-        }
-      } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Resolve stats for `name`: the immutable cache, else one footer read.
-    * None (and no cache entry) when the file has no usable stats.
-    */
-  private def resolveStats(spark: SparkSession, dir: String,
-                           name: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val k = s"$dir#$name"
-    Option(fileStatsCache.get(k)).orElse {
-      val computed = footerStats(spark, dir, name)
-      computed.foreach(fileStatsCache.put(k, _))
-      computed
-    }
+  private def widen(a: (String, Any, Any), b: (String, Any, Any)): (String, Any, Any) = a._1 match {
+    case "l" => ("l", math.min(toL(a._2), toL(b._2)), math.max(toL(a._3), toL(b._3)))
+    case "d" => ("d", math.min(toD(a._2), toD(b._2)), math.max(toD(a._3), toD(b._3)))
+    case t => (t, Seq(a._2, b._2).map(_.toString).min, Seq(a._3, b._3).map(_.toString).max)
   }
 
   /** The committed stats block of one version: file name → column →
@@ -243,51 +229,14 @@ object Versioned {
     * external planners; [[prunedRead]] and [[merge]] consume it internally.
     */
   def fileStats(spark: SparkSession, dir: String,
-                version: Long = -1L): Map[String, Map[String, (String, Any, Any)]] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    val v = if (version > 0) version else vs.last
-    val node = manifestNode(spark, dir, v)
-    val st = node.path("stats")
-    if (!st.isObject) return Map.empty
-    val out = scala.collection.mutable.Map[String, Map[String, (String, Any, Any)]]()
-    st.fields().forEachRemaining { e =>
-      val cols = scala.collection.mutable.Map[String, (String, Any, Any)]()
-      e.getValue.fields().forEachRemaining { ce =>
-        val t = ce.getValue.get("t").asText()
-        val (mn, mx): (Any, Any) = t match {
-          case "l" => (ce.getValue.get("min").asLong(), ce.getValue.get("max").asLong())
-          case "d" => (ce.getValue.get("min").asDouble(), ce.getValue.get("max").asDouble())
-          case _ => (ce.getValue.get("min").asText(), ce.getValue.get("max").asText())
-        }
-        cols.put(ce.getKey, (t, mn, mx)); ()
-      }
-      out.put(e.getKey, cols.toMap); ()
-    }
-    out.toMap
-  }
-
-  private def filesOf(node: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
-    val files = node.path("files")
-    (0 until files.size()).map(files.get(_).asText())
-  }
-
-  private def readManifest(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    filesOf(manifestNode(spark, dir, v))
+                version: Long = -1L): Map[String, Map[String, (String, Any, Any)]] =
+    resolve(spark, dir, version).stats
 
   /** D28 — the snapshot's deletion-vector pointers: data file name → dv
     * sidecar name. Empty for dv-free snapshots and pre-D28 manifests.
     */
-  def dvsOf(spark: SparkSession, dir: String, v: Long): Map[String, String] = {
-    val node = manifestNode(spark, dir, v).path("dvs")
-    if (node.isMissingNode) Map.empty
-    else {
-      val it = node.fields()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue.asText()) }
-      b.result()
-    }
-  }
+  def dvsOf(spark: SparkSession, dir: String, v: Long): Map[String, String] =
+    snapshot(spark, dir, v).dvs
 
   /** The LIVE deletion-vector rows (file, pos) masking `restrict`'s files:
     * each dv sidecar is read once and filtered to the rows whose data file
@@ -369,32 +318,29 @@ object Versioned {
   private def lockFor(dir: String): Object =
     dirLocks.computeIfAbsent(dir, _ => new Object)
 
-  /** The max streaming epoch carried by manifest `head` — a FRESH read of
-    * that manifest (never the driver cache, which a concurrent writer in
-    * another process can leave stale-low). Manifests written before the
-    * `max_epoch` field existed fall back to one scan across the retained
-    * manifests' own `epoch` fields — the pre-r13 guard — so existing tables
-    * keep their replay protection. −1 for an empty log.
+  /** The max streaming epoch carried by snapshot `head`, −1 for an empty
+    * log: its `max_epoch`, read with the snapshot. Manifests written before
+    * the field existed fall back to one scan across the retained manifests'
+    * own `epoch` fields — the pre-r13 guard — so existing tables keep their
+    * replay protection.
     */
-  private def carriedMaxEpoch(spark: SparkSession, dir: String, head: Option[Long]): Long =
-    head.fold(-1L) { v =>
-      val node = manifestNode(spark, dir, v)
-      if (node.has("max_epoch")) node.get("max_epoch").asLong(-1L)
-      else versions(spark, dir).map(epochOf(spark, dir, _)).foldLeft(-1L)(math.max)
-    }
+  private def carriedMax(spark: SparkSession, dir: String, head: Option[Snapshot]): Long =
+    head.fold(-1L)(_.maxEpoch.getOrElse(
+      versions(spark, dir).map(snapshot(spark, dir, _).epoch).foldLeft(-1L)(math.max)))
 
   /** Atomically publish `manifest-v<v>.json`, claiming version `v`
     * ([[createIfAbsent]]). Returns false when some other committer already
     * owns `v`. The epoch carry (see [[maxEpoch]]) derives from `prevMax`,
-    * the PRIOR manifest read fresh, so a concurrent writer's higher epoch
-    * is never laundered away by a stale driver cache.
+    * the PRIOR manifest's, so a concurrent writer's higher epoch is never
+    * laundered away. `known` holds the stats of the files carried from the
+    * snapshot they came from.
     */
   private[graft] def publishManifest(spark: SparkSession, dir: String, v: Long,
                                      files: Seq[String], epoch: Long,
                                      prevMax: Long,
                                      dvs: Map[String, String] = Map.empty,
-                                     op: String = "commit"): Boolean = {
-    val carried = math.max(epoch, prevMax)
+                                     op: String = "commit",
+                                     known: Map[String, ColStats] = Map.empty): Boolean = {
     val node = mapper.createObjectNode()
     node.put("version", v)
     // D22i: the operation log — which kind of commit produced this version
@@ -402,7 +348,7 @@ object Versioned {
     node.put("op", op)
     node.put("ts", System.currentTimeMillis())
     node.put("epoch", epoch)
-    node.put("max_epoch", carried)
+    node.put("max_epoch", math.max(epoch, prevMax))
     node.put("n_files", files.size)
     val arr = node.putArray("files")
     files.foreach(arr.add)
@@ -413,25 +359,29 @@ object Versioned {
       val dvNode = node.putObject("dvs")
       dvs.toSeq.sortBy(_._1).foreach { case (f, d) => dvNode.put(f, d) }
     }
-    // D22f: per-file column min/max for data skipping. Old files resolve
-    // from the immutable cache (seeded by the manifest reads every commit
-    // path already performs); only newly staged files pay a footer read —
-    // metadata-only, driver-side, manifest-cardinality bounded. A file
+    // D22f: per-file column min/max for data skipping. Carried files keep
+    // their stats; the rest pay a footer read ([[footerStats]]). A file
     // with no usable stats is simply absent: readers then cannot prune it,
     // never misread it.
     val statsNode = node.putObject("stats")
     files.foreach { n =>
-      resolveStats(spark, dir, n).foreach { s =>
-        statsNode.set[com.fasterxml.jackson.databind.JsonNode](n, s); ()
+      known.get(n).orElse(footerStats(spark, dir, n)).foreach { cols =>
+        val fileNode = statsNode.putObject(n)
+        cols.foreach { case (c, (t, mn, mx)) =>
+          val cn = fileNode.putObject(c).put("t", t)
+          (mn, mx) match {
+            case (a: Long, b: Long) => cn.put("min", a).put("max", b)
+            case (a: Double, b: Double) => cn.put("min", a).put("max", b)
+            case (a, b) => cn.put("min", a.toString).put("max", b.toString)
+          }
+        }
       }
     }
     // create-if-absent from a temp: the manifest appears atomically or not
     // at all — a crash mid-commit leaves data files with NO manifest, which
     // vacuum reclaims and readers never see
-    val won = createIfAbsent(spark, dir, s"_manifest-v$v",
+    createIfAbsent(spark, dir, s"_manifest-v$v",
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node), manifestPath(dir, v))
-    if (won) maxEpochCache.put(dir, java.lang.Long.valueOf(carried))
-    won
   }
 
   /** Write `bytes` to a token-unique temp `dir/<prefix>-<token>.json.tmp`;
@@ -481,50 +431,31 @@ object Versioned {
     won
   }
 
-  /** Driver-side running max epoch per table dir — saves even the one
-    * small manifest read per skipped replay batch. Write-through from
-    * [[publishManifest]]; a fresh JVM faults it in from the latest
-    * manifest. Soundness of [[epochGuarded]]'s replay guard rests on ONE
-    * streaming query per table dir owning its epochs (the epochWriter
-    * contract): that query's own commits write through, so the cache
-    * always holds the true max of the epochs that matter for its guard.
-    * It does NOT rest on staleness being conservative — a foreign writer
-    * leaving the cache stale-LOW would make `epoch > cachedMax` pass MORE
-    * often, weakening the guard — which is why the COMMIT path never
-    * trusts the cache (the epoch carry reads the prior manifest fresh,
-    * [[carriedMaxEpoch]]), and why foreign batch commits carry epoch −1
-    * (they can never lower the carried max).
-    */
-  private val maxEpochCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def invalidateEpochCache(): Unit = maxEpochCache.clear()
-
   /** The max streaming epoch ever committed to the table, −1 if none:
-    * the latest manifest's carried-forward `max_epoch` ([[carriedMaxEpoch]]).
+    * the latest manifest's carried-forward `max_epoch` ([[carriedMax]]).
     */
   def maxEpoch(spark: SparkSession, dir: String): Long =
-    Option(maxEpochCache.get(dir)).map(_.longValue).getOrElse {
-      val m = carriedMaxEpoch(spark, dir, versions(spark, dir).lastOption)
-      maxEpochCache.put(dir, java.lang.Long.valueOf(m))
-      m
-    }
+    carriedMax(spark, dir, head(spark, dir))
 
   /** The streaming epoch recorded in version `v`'s manifest (-1 for plain
     * batch commits).
     */
   def epochOf(spark: SparkSession, dir: String, v: Long): Long =
-    manifestNode(spark, dir, v).path("epoch").asLong(-1L)
+    snapshot(spark, dir, v).epoch
 
   /** Attempts a rebase publish or an epoch makes before it gives up. */
   private val commitAttempts = 50
 
   /** The one epoch guard, behind [[epochWriter]] and [[epochMergeWriter]]:
     * `write` runs only for an epoch above the table's MAX epoch, so a
-    * crash-replayed epoch is a no-op. A [[ConcurrentWriteException]] means
-    * a batch committer won the publish race mid-epoch: the guard
-    * re-resolves (re-reading the fresh max) and retries, so the retry is
-    * idempotent; the lost attempt's staged files are vacuum debris.
+    * crash-replayed epoch is a no-op. Each attempt reads the head snapshot
+    * from the table's files and hands `write` that same snapshot as its
+    * basis, so the guard and the commit it guards see one head, and a
+    * table deleted and recreated under the same path starts from no
+    * epochs. A [[ConcurrentWriteException]] means a batch committer won
+    * the publish race mid-epoch: the guard re-reads the head and retries,
+    * so the retry is idempotent; the lost attempt's staged files are
+    * vacuum debris.
     *
     * It guards on the MAX epoch, not the latest manifest's own epoch: a
     * rollback() or plain batch commit() interleaved with the streaming
@@ -532,17 +463,19 @@ object Versioned {
     * a latest-only read of `epoch` would reset the guard — letting a
     * crash-replayed epoch re-commit (double-publish) despite the
     * idempotence contract (ADVICE r11). Since every manifest carries the
-    * max forward (`max_epoch`), the read is O(1) — the driver cache, or one
-    * field of one manifest on a fresh JVM — and vacuum cannot erase it
-    * (ADVICE r12).
+    * max forward (`max_epoch`), the read is one field of the head manifest
+    * the commit reads anyway, and vacuum cannot erase it (ADVICE r12).
     */
   private def epochGuarded(dir: String, what: String)
-                          (write: (SparkSession, DataFrame, Long) => Long): (DataFrame, Long) => Unit =
+                          (write: (SparkSession, DataFrame, Long, Option[Snapshot]) => Long)
+      : (DataFrame, Long) => Unit =
     (df, epoch) => {
       val s = df.sparkSession
       val done = Iterator.continually {
-        epoch <= maxEpoch(s, dir) ||
-          (try { write(s, df, epoch); true } catch { case _: ConcurrentWriteException => false })
+        val basis = head(s, dir)
+        epoch <= carriedMax(s, dir, basis) ||
+          (try { write(s, df, epoch, basis); true }
+           catch { case _: ConcurrentWriteException => false })
       }.take(commitAttempts).exists(identity)
       if (!done) sys.error(
         s"epoch $epoch $what could not publish to $dir after $commitAttempts attempts " +
@@ -565,7 +498,7 @@ object Versioned {
     * the streaming query no longer dies on an interleaved batch write.
     */
   def epochWriter(dir: String): (DataFrame, Long) => Unit =
-    epochGuarded(dir, "commit")(commit(_, _, dir, _))
+    epochGuarded(dir, "commit")((s, df, epoch, basis) => commitAt(s, df, dir, epoch, basis))
 
   /** A5d×D22 (r15) — streaming CDC MERGE sink: a `foreachBatch` writer that
     * applies each micro-batch of change events to a Versioned table as ONE
@@ -588,10 +521,11 @@ object Versioned {
   def epochMergeWriter(dir: String, keyCol: String, orderCol: String,
                        opCol: String = "operation_type",
                        deleteOp: String = "delete"): (DataFrame, Long) => Unit =
-    epochGuarded(dir, "merge") { (s, df, epoch) =>
-      if (versions(s, dir).nonEmpty) merge(s, df, dir, keyCol, orderCol, opCol, deleteOp, epoch)
-      else commit(s, lastOpPerKey(df, keyCol, orderCol).where(col(opCol) =!= deleteOp)
-        .drop(opCol), dir, epoch)
+    epochGuarded(dir, "merge") { (s, df, epoch, basis) =>
+      basis.fold(commitAt(s, lastOpPerKey(df, keyCol, orderCol).where(col(opCol) =!= deleteOp)
+        .drop(opCol), dir, epoch, None)) {
+        mergeOnto(s, df, dir, _, keyCol, orderCol, opCol, deleteOp, epoch, mergeSchema = false)
+      }
     }
 
   /** One net action per key: the change with the highest `orderCol` wins
@@ -632,40 +566,48 @@ object Versioned {
     named
   }
 
+  /** The version a commit on `basis` publishes. */
+  private def nextVersion(basis: Option[Snapshot]): Long = basis.fold(1L)(_.version + 1)
+
   /** The one REPLACE publish: under the dir's monitor, publish `files` as
-    * version basis+1 only while `basis` is still the head and that version
-    * is still unclaimed; otherwise throw [[ConcurrentWriteException]]
-    * naming the operation — the caller re-derives from the new head (see
-    * the object doc). Returns the published version.
+    * the version after `basis` only while `basis` is still the head and
+    * that version is still unclaimed; otherwise throw
+    * [[ConcurrentWriteException]] naming the operation — the caller
+    * re-derives from the new head (see the object doc). Files carried from
+    * `basis` keep its stats. Returns the published version.
     */
-  private def publishReplace(spark: SparkSession, dir: String, basis: Option[Long],
+  private def publishReplace(spark: SparkSession, dir: String, basis: Option[Snapshot],
                              files: Seq[String], epoch: Long,
                              dvs: Map[String, String], op: String): Long =
     lockFor(dir).synchronized {
-      val v = basis.getOrElse(0L) + 1
-      if (versions(spark, dir).lastOption != basis || !publishManifest(spark, dir, v, files,
-            epoch, carriedMaxEpoch(spark, dir, basis), dvs, op))
+      val v = nextVersion(basis)
+      if (versions(spark, dir).lastOption != basis.map(_.version) ||
+          !publishManifest(spark, dir, v, files, epoch, carriedMax(spark, dir, basis), dvs, op,
+            basis.fold(Map.empty[String, ColStats])(_.stats)))
         throw new ConcurrentWriteException(
-          s"$op of $dir based on v${basis.getOrElse(0L)} lost to a concurrent commit (head " +
+          s"$op of $dir based on v${v - 1} lost to a concurrent commit (head " +
             s"is now v${versions(spark, dir).lastOption.getOrElse(0L)}); its staged files " +
             "are unreferenced and vacuumable — retry: derive again from the new head")
       v
     }
 
-  /** The one REBASE publish: publish `content(head)` — (files, dvs)
-    * derived from the CURRENT head — at the head's next version, re-reading
+  /** The one REBASE publish: publish `base(head)`'s files, dv pointers and
+    * stats plus the `added` files at the head's next version, re-reading
     * the head and republishing whenever another process claims that
     * version first. For commits whose intent commutes with any concurrent
-    * commit ([[append]], [[rollback]]). Returns the published version.
+    * commit: [[append]] rebases onto the head itself, [[rollback]] onto an
+    * old snapshot. Returns the published version.
     */
-  private def publishRebased(spark: SparkSession, dir: String, epoch: Long, op: String)
-                            (content: Option[Long] => (Seq[String], Map[String, String])): Long =
+  private def publishRebased(spark: SparkSession, dir: String, epoch: Long, op: String,
+                             added: Seq[String] = Nil)
+                            (base: Option[Snapshot] => Option[Snapshot]): Long =
     Iterator.continually(lockFor(dir).synchronized {
-      val head = versions(spark, dir).lastOption
-      val v = head.getOrElse(0L) + 1
-      val (files, dvs) = content(head)
-      Some(v).filter(_ => publishManifest(spark, dir, v, files, epoch,
-        carriedMaxEpoch(spark, dir, head), dvs, op))
+      val h = head(spark, dir)
+      val v = nextVersion(h)
+      val b = base(h)
+      Some(v).filter(_ => publishManifest(spark, dir, v, b.fold(Seq.empty[String])(_.files) ++ added,
+        epoch, carriedMax(spark, dir, h), b.fold(Map.empty[String, String])(_.dvs), op,
+        b.fold(Map.empty[String, ColStats])(_.stats)))
     }).take(commitAttempts).collectFirst { case Some(v) => v }.getOrElse(sys.error(
       s"$op to $dir could not publish after $commitAttempts attempts " +
         "(pathological cross-process contention)"))
@@ -683,7 +625,7 @@ object Versioned {
     * unreferenced debris that [[vacuum]] reclaims; the winner is untouched.
     */
   def commit(spark: SparkSession, df: DataFrame, dir: String, epoch: Long = -1L): Long =
-    commitAt(spark, df, dir, epoch, versions(spark, dir).lastOption)
+    commitAt(spark, df, dir, epoch, head(spark, dir))
 
   /** [[commit]] against an EXPLICIT observed basis — the seam
     * [[commitWithRetry]] needs: its `derive` reads the snapshot BEFORE the
@@ -694,8 +636,8 @@ object Versioned {
     * `checks` before it publishes ([[commitChecked]]).
     */
   private def commitAt(spark: SparkSession, df: DataFrame, dir: String, epoch: Long,
-                       basis: Option[Long], checks: Seq[Contracts.Check] = Nil): Long = {
-    val named = stage(spark, df, dir, basis.getOrElse(0L) + 1)
+                       basis: Option[Snapshot], checks: Seq[Contracts.Check] = Nil): Long = {
+    val named = stage(spark, df, dir, nextVersion(basis))
     auditOrAbort(spark, dir, named, checks, "replace")
     publishReplace(spark, dir, basis, named, epoch, Map.empty, "replace")
   }
@@ -725,10 +667,7 @@ object Versioned {
                             checks: Seq[Contracts.Check], epoch: Long): Long = {
     val named = stage(spark, df, dir, versions(spark, dir).lastOption.getOrElse(0L) + 1)
     auditOrAbort(spark, dir, named, checks, "append")
-    publishRebased(spark, dir, epoch, "append") { head =>
-      (head.fold(Seq.empty[String])(readManifest(spark, dir, _)) ++ named,
-        head.fold(Map.empty[String, String])(dvsOf(spark, dir, _)))
-    }
+    publishRebased(spark, dir, epoch, "append", named)(identity)
   }
 
   /** A data-quality contract rejected a staged write; nothing was
@@ -762,7 +701,7 @@ object Versioned {
     */
   def commitChecked(spark: SparkSession, df: DataFrame, dir: String,
                     checks: Seq[Contracts.Check], epoch: Long = -1L): Long =
-    commitAt(spark, df, dir, epoch, versions(spark, dir).lastOption, checks)
+    commitAt(spark, df, dir, epoch, head(spark, dir), checks)
 
   /** Audit staged files; on any failing check delete them and throw. No
     * checks, no audit.
@@ -795,20 +734,19 @@ object Versioned {
     */
   def newFiles(spark: SparkSession, dir: String,
                since: Long, to: Long): Option[Seq[String]] = {
-    val toF = readManifest(spark, dir, to)
+    val toS = snapshot(spark, dir, to)
     // since ≤ 0 is a pure LISTING of `to`'s files (callers use it as file
     // identity, not as rows) — dv masking doesn't change what files exist
-    if (since <= 0) return Some(toF.map(n => s"$dir/data/$n"))
-    val toDvs = dvsOf(spark, dir, to)
-    val sinceF = readManifest(spark, dir, since).toSet
-    if (!sinceF.subsetOf(toF.toSet)) return None
+    if (since <= 0) return Some(toS.files.map(n => s"$dir/data/$n"))
+    val sinceS = snapshot(spark, dir, since)
+    val sinceF = sinceS.files.toSet
+    if (!sinceF.subsetOf(toS.files.toSet)) return None
     // a deleteWhere in the span keeps the file set identical but changes
     // ROWS — surviving files must keep their dv pointer unchanged, and the
     // added files must be unmasked, for the file-level delta to be exact
-    val sinceDvs = dvsOf(spark, dir, since)
-    val added = toF.filterNot(sinceF)
-    if (sinceF.exists(f => sinceDvs.get(f) != toDvs.get(f)) ||
-        added.exists(toDvs.contains)) None
+    val added = toS.files.filterNot(sinceF)
+    if (sinceF.exists(f => sinceS.dvs.get(f) != toS.dvs.get(f)) ||
+        added.exists(toS.dvs.contains)) None
     else Some(added.map(n => s"$dir/data/$n"))
   }
 
@@ -846,11 +784,11 @@ object Versioned {
     require(vs.contains(to), s"version $to not present under $dir (have $vs)")
     require(from <= 0 || vs.contains(from),
       s"version $from not present under $dir (have $vs)")
-    val toF = readManifest(spark, dir, to)
-    val fromF = if (from <= 0) Seq.empty[String] else readManifest(spark, dir, from)
-    val toDvs = dvsOf(spark, dir, to)
-    val fromDvs =
-      if (from <= 0) Map.empty[String, String] else dvsOf(spark, dir, from)
+    val toS = snapshot(spark, dir, to)
+    val fromS = Option.when(from > 0)(snapshot(spark, dir, from))
+    val (toF, toDvs) = (toS.files, toS.dvs)
+    val fromF = fromS.fold(Seq.empty[String])(_.files)
+    val fromDvs = fromS.fold(Map.empty[String, String])(_.dvs)
     // a file both manifests share but whose dv POINTER moved changed rows
     // without changing name ([[deleteWhere]]) — read it on both sides,
     // each under its own mask; the diff below nets exactly the masked rows
@@ -867,7 +805,7 @@ object Versioned {
     val fields = {
       val changedSides = (aOpt.toSeq ++ rOpt.toSeq).flatMap(_.schema.fields)
       val fs = if (changedSides.nonEmpty) changedSides
-               else read(spark, dir, to).schema.fields.toSeq // identical manifests
+               else readApplied(spark, dir, toF, toDvs).schema.fields.toSeq // identical manifests
       fs.foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
         (acc, f) => if (acc.exists(_.name == f.name)) acc else acc :+ f
       }
@@ -922,12 +860,8 @@ object Versioned {
     */
   def read(spark: SparkSession, dir: String, version: Long = -1L,
            mergeSchema: Boolean = false): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    val v = if (version > 0) version else vs.last
-    require(vs.contains(v), s"version $v not present under $dir (have $vs)")
-    readApplied(spark, dir, readManifest(spark, dir, v), dvsOf(spark, dir, v),
-      mergeSchema)
+    val snap = resolve(spark, dir, version)
+    readApplied(spark, dir, snap.files, snap.dvs, mergeSchema)
   }
 
   /** D22f — stats-pruned range read: rows of a snapshot where `colName` ∈
@@ -942,18 +876,14 @@ object Versioned {
     */
   def prunedRead(spark: SparkSession, dir: String, colName: String,
                  lo: Any, hi: Any, version: Long = -1L): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    val v = if (version > 0) version else vs.last
-    val stats = fileStats(spark, dir, v)
+    val snap = resolve(spark, dir, version)
     def overlaps(t: String, mn: Any, mx: Any): Boolean = t match {
       case "l" => toL(mx) >= toL(lo) && toL(mn) <= toL(hi)
       case "d" => toD(mx) >= toD(lo) && toD(mn) <= toD(hi)
       case _ => mx.toString >= lo.toString && mn.toString <= hi.toString
     }
-    val files = readManifest(spark, dir, v)
-    val keep = files.filter { n =>
-      stats.get(n).flatMap(_.get(colName)) match {
+    val keep = snap.files.filter { n =>
+      snap.stats.get(n).flatMap(_.get(colName)) match {
         case Some((t, mn, mx)) => overlaps(t, mn, mx)
         case None => true
       }
@@ -962,8 +892,9 @@ object Versioned {
     // dv note: committed min/max may describe rows a dv has since masked —
     // a SUPERSET bound, so pruning can read an all-dead file but never
     // skips a live row; the dv-applied read below restores exactness.
-    if (keep.isEmpty) read(spark, dir, v).where(pred).limit(0)
-    else readApplied(spark, dir, keep, dvsOf(spark, dir, v)).where(pred)
+    val rows = readApplied(spark, dir, if (keep.isEmpty) snap.files else keep, snap.dvs)
+      .where(pred)
+    if (keep.isEmpty) rows.limit(0) else rows
   }
 
   private def toL(a: Any): Long = a match {
@@ -980,15 +911,14 @@ object Versioned {
     * bad intermediate versions stay readable until vacuumed.
     */
   def rollback(spark: SparkSession, dir: String, to: Long): Long = {
-    val files = readManifest(spark, dir, to) // throws if `to` was never committed
-    val dvs = dvsOf(spark, dir, to)
+    val target = snapshot(spark, dir, to) // throws if `to` was never committed
     // propagate the rolled-to snapshot's epoch so the rollback manifest
     // never weakens epochWriter's replay guard (belt to the carried
     // max_epoch suspenders — and vacuum can drop old manifests).
     // Concurrency: metadata-only and intent-preserving ("make the latest
     // snapshot be `to`'s"), so a lost publish race rebases at the next
     // version — last-writer-wins serialization, like append.
-    publishRebased(spark, dir, epochOf(spark, dir, to), "rollback")(_ => (files, dvs))
+    publishRebased(spark, dir, target.epoch, "rollback")(_ => Some(target))
   }
 
   /** D28 — deletion-vector DELETE (merge-on-read): mask every current row
@@ -1026,17 +956,16 @@ object Versioned {
     * sidecar is vacuum debris).
     */
   def deleteWhere(spark: SparkSession, dir: String, predicate: Column): Long = {
-    val basis = versions(spark, dir).lastOption
+    val basis = head(spark, dir)
     require(basis.nonEmpty, s"deleteWhere requires an existing table under $dir")
-    val files = readManifest(spark, dir, basis.get)
-    val dvs = dvsOf(spark, dir, basis.get)
+    val (files, dvs) = (basis.get.files, basis.get.dvs)
     // two consumers: affected-file discovery + sidecar write
     Caches.persisted(liveWithPos(spark, dir, files, dvs)
         .where(predicate)
         .select(col("_gdv_f").as("file"), col("_gdv_p").as("pos"))) { matches =>
       val affected = matches.select("file").distinct()
         .collect().map(_.getString(0)).toSeq // manifest-cardinality bound
-      if (affected.isEmpty) basis.get
+      if (affected.isEmpty) basis.get.version
       else {
         // fresh sidecar = new positions ∪ the affected files' LIVE old
         // positions (their pointers move here; unaffected files keep theirs)
@@ -1045,7 +974,7 @@ object Versioned {
         // them whole
         val carried = dvRowsFor(spark, dir, dvs, affected)
         val dvName = stage(spark, matches.unionByName(carried).coalesce(1), dir,
-          basis.get + 1, kind = "dv-v").head
+          nextVersion(basis), kind = "dv-v").head
         publishReplace(spark, dir, basis, files, -1L, dvs ++ affected.map(_ -> dvName), "delete")
       }
     }
@@ -1093,8 +1022,18 @@ object Versioned {
             deleteOp: String = "delete",
             epoch: Long = -1L,
             mergeSchema: Boolean = false): Long = {
-    val basis = versions(spark, dir).lastOption
+    val basis = head(spark, dir)
     require(basis.nonEmpty, s"merge requires an existing table under $dir")
+    mergeOnto(spark, changes, dir, basis.get, keyCol, orderCol, opCol, deleteOp, epoch, mergeSchema)
+  }
+
+  /** [[merge]] onto the snapshot `basis`, which the publish checks is
+    * still the head — the seam [[epochMergeWriter]] hands its guard's
+    * snapshot through.
+    */
+  private def mergeOnto(spark: SparkSession, changes: DataFrame, dir: String, basis: Snapshot,
+                        keyCol: String, orderCol: String, opCol: String, deleteOp: String,
+                        epoch: Long, mergeSchema: Boolean): Long = {
     // The authoritative table schema is ALWAYS the mergeSchema-reconciled
     // union across the snapshot's files: a prior evolved commit leaves the
     // table heterogeneous, and inferring from an arbitrary file (parquet's
@@ -1103,7 +1042,7 @@ object Versioned {
     // permanent data loss once vacuum reclaims the prior version. The
     // caller's `mergeSchema` flag authorizes widening from the CHANGE SET
     // only; it never weakens how the table's own schema is resolved.
-    val snap = read(spark, dir, basis.get, mergeSchema = true)
+    val snap = readApplied(spark, dir, basis.files, basis.dvs, mergeSchema = true)
     val cols = snap.schema.fieldNames.toSeq
     require(!cols.contains(opCol),
       s"table schema already has '$opCol' — pass a distinct opCol")
@@ -1150,13 +1089,11 @@ object Versioned {
       // change key never enter the touched-file scan — on a range-clustered
       // layout the (file, key) pass reads a handful of files instead of the
       // snapshot. Files without long-typed key stats stay candidates.
-      val basisFiles = readManifest(spark, dir, basis.get)
-      val stats = fileStats(spark, dir, basis.get)
+      val (basisFiles, dvs) = (basis.files, basis.dvs)
       val bounded = basisFiles.flatMap(n =>
-        stats.get(n).flatMap(_.get(keyCol)).collect {
+        basis.stats.get(n).flatMap(_.get(keyCol)).collect {
           case ("l", mn: Long, mx: Long) => (n, mn, mx)
         })
-      val dvs = dvsOf(spark, dir, basis.get)
       val candidateNames: Seq[String] =
         if (bounded.isEmpty) basisFiles
         else {
@@ -1200,9 +1137,9 @@ object Versioned {
             if (have(c)) col(c) else lit(null).cast(fillType(c)).as(c)
           }: _*)
         }
-      val staged = stage(spark, survivors.unionByName(upserts), dir, basis.get + 1)
-      publishReplace(spark, dir, basis, basisFiles.filterNot(touchedNames) ++ staged, epoch,
-        dvs -- touchedNames, "merge")
+      val staged = stage(spark, survivors.unionByName(upserts), dir, basis.version + 1)
+      publishReplace(spark, dir, Some(basis), basisFiles.filterNot(touchedNames) ++ staged,
+        epoch, dvs -- touchedNames, "merge")
     }
   }
 
@@ -1232,14 +1169,13 @@ object Versioned {
   def optimize(spark: SparkSession, dir: String,
                targetBytes: Long = 128L * 1024 * 1024,
                clusterBy: Seq[String] = Nil): Long = {
-    val basis = versions(spark, dir).lastOption
+    val basis = head(spark, dir)
     require(basis.nonEmpty, s"optimize requires an existing table under $dir")
     val fs = fsOf(spark, new Path(dir))
-    val prevFiles = readManifest(spark, dir, basis.get)
-    val sized = prevFiles.map { n =>
+    val sized = basis.get.files.map { n =>
       n -> fs.getFileStatus(new Path(dir, s"data/$n")).getLen
     }
-    val dvs = dvsOf(spark, dir, basis.get)
+    val dvs = basis.get.dvs
     // clustered OPTIMIZE (OPTIMIZE ... CLUSTER BY): rewrite the WHOLE
     // snapshot range-sorted on the cluster keys, so every file owns a
     // narrow key slice and the manifest's per-file min/max (D22f) turns
@@ -1253,7 +1189,7 @@ object Versioned {
     // carries a deletion vector (the rewrite MATERIALIZES it — dv chains
     // don't accumulate forever; [[deleteWhere]]'s maintenance contract)
     if (clusterBy.isEmpty && small.size < 2 && !small.exists(p => dvs.contains(p._1)))
-      return basis.get
+      return basis.get.version
     val nOut = math.max(1L, (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
     val rows = readApplied(spark, dir, small.map(_._1), dvs, mergeSchema = true)
     val rewritten =
@@ -1261,7 +1197,7 @@ object Versioned {
       else rows.repartitionByRange(nOut, clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
     val kept = big.map(_._1)
-    val staged = stage(spark, rewritten, dir, basis.get + 1)
+    val staged = stage(spark, rewritten, dir, nextVersion(basis))
     publishReplace(spark, dir, basis, kept ++ staged, -1L, dvs.filter(kv => kept.contains(kv._1)),
       "optimize")
   }
@@ -1286,8 +1222,8 @@ object Versioned {
       // conflict check anchor to the same observed head (commitAt), so a
       // foreign commit landing anywhere between read and publish is
       // detected and re-derived, never silently overwritten
-      val basis = versions(spark, dir).lastOption
-      val current = basis.map(v => read(spark, dir, v))
+      val basis = head(spark, dir)
+      val current = basis.map(b => readApplied(spark, dir, b.files, b.dvs))
       try return commitAt(spark, derive(current), dir, -1L, basis)
       catch {
         case e: ConcurrentWriteException =>
@@ -1331,8 +1267,10 @@ object Versioned {
     val drop = drop0.filterNot(pinned)
     // dv sidecars are references too: a retained manifest pointing at a
     // sidecar keeps it alive exactly like a data file
-    val live = keep.flatMap(v =>
-      readManifest(spark, dir, v) ++ dvsOf(spark, dir, v).values).toSet
+    val live = keep.flatMap { v =>
+      val snap = snapshot(spark, dir, v)
+      snap.files ++ snap.dvs.values
+    }.toSet
     val cutoff = System.currentTimeMillis() - graceMs
     // data/ may not exist yet: vacuum on a table with no commits (or one
     // whose every commit crashed pre-rename) is a legal no-op, not a
@@ -1374,15 +1312,9 @@ object Versioned {
   def history(spark: SparkSession, dir: String): Seq[(Long, String, Long, Long, Int)] = {
     val fs = fsOf(spark, new Path(dir))
     versions(spark, dir).map { v =>
-      val node = manifestNode(spark, dir, v)
-      val ts =
-        if (node.has("ts")) node.get("ts").asLong()
-        else fs.getFileStatus(manifestPath(dir, v)).getModificationTime
-      (v,
-        if (node.has("op")) node.get("op").asText() else "commit",
-        ts,
-        node.path("epoch").asLong(-1L),
-        node.path("n_files").asInt(0))
+      val snap = snapshot(spark, dir, v)
+      (v, snap.op, snap.ts.getOrElse(fs.getFileStatus(manifestPath(dir, v)).getModificationTime),
+        snap.epoch, snap.files.size)
     }
   }
 

@@ -51,7 +51,7 @@ object NearDupIngest {
 
   val docSchema: StructType = DedupIngest.docSchema
 
-  private def sigSchema(numHashes: Int) = StructType(Seq(
+  private val sigSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("sig", ArrayType(LongType, containsNull = false)),
     StructField("batch_id", LongType)))
@@ -61,9 +61,8 @@ object NearDupIngest {
     StructField("doc_id", LongType), StructField("batch_id", LongType)))
 
   /** Epoch-excluding index reads with explicit schemas ([[Epochs.history]]). */
-  def readSigIndex(spark: SparkSession, dir: String, excludeEpoch: Long,
-                   numHashes: Int = 64): DataFrame =
-    Epochs.history(spark, dir, sigSchema(numHashes), excludeEpoch, "batch_id")
+  def readSigIndex(spark: SparkSession, dir: String, excludeEpoch: Long): DataFrame =
+    Epochs.history(spark, dir, sigSchema, excludeEpoch, "batch_id")
 
   def readBandIndex(spark: SparkSession, dir: String, excludeEpoch: Long): DataFrame =
     Epochs.history(spark, dir, bandSchema, excludeEpoch, "batch_id")
@@ -143,7 +142,7 @@ object NearDupIngest {
       Caches.persisted(textedSignatures(batch, numHashes, shingleK)) { signed =>
         val survivors = dedupSigned(batch, signed,
           readBandIndex(s, bandDir, epochId),
-          readSigIndex(s, sigDir, epochId, numHashes),
+          readSigIndex(s, sigDir, epochId),
           numHashes, bands, threshold)
         Caches.persisted(survivors) { fresh =>
           Epochs.overwrite(fresh.drop("sig"), epochId, outDir, "batch_id")

@@ -93,12 +93,21 @@ object Sessionize {
 
   // -------------------------------------------------------------- streaming
 
+  /** One feed row. The feed contract guarantees only the key fields
+    * ([[EventSource.isEvent]]), so `value` is optional.
+    */
   case class Event(event_id: Long, ts_us: Long, user_id: Long,
-                   event_type: String, value: Double, props: String)
+                   event_type: String, value: Option[Double], props: String)
   case class SessionState(firstEvent: Long, lastEvent: Long, lastTsUs: Long,
-                          nEvents: Long, sumValue: Double)
+                          nEvents: Long, sumValue: Option[Double])
   case class SessionOut(user_id: Long, first_event: Long, last_event: Long,
-                        n_events: Long, sum_value: Double, closed_by: String)
+                        n_events: Long, sum_value: Option[Double], closed_by: String)
+
+  /** SQL `sum`'s null rule, as the batch [[sessions]] applies it: a null
+    * value adds nothing, and the sum is null only when every value is.
+    */
+  private def plus(a: Option[Double], b: Option[Double]): Option[Double] =
+    (a ++ b).reduceOption(_ + _)
 
   /** Per-user state machine: extend the open session while events arrive
     * within the gap; emit the closed session when a gap or timeout ends it.
@@ -113,7 +122,8 @@ object Sessionize {
     *    session without regressing lastTsUs/lastEvent — the old code set
     *    lastTsUs to the late event's older timestamp, which made the next
     *    on-time event read as a giant gap and spuriously close the
-    *    session.
+    *    session;
+    *  - `sum_value` follows SQL `sum` over nullable values ([[plus]]).
     */
   def updateSession(gapUs: Long, idleTimeout: Option[String] = None)
                    (userId: Long, events: Iterator[Event],
@@ -126,7 +136,7 @@ object Sessionize {
         case Some(s) if e.ts_us / 1000000L - s.lastTsUs / 1000000L <= gapS =>
           cur = Some(SessionState(math.min(s.firstEvent, e.event_id),
             math.max(s.lastEvent, e.event_id), math.max(s.lastTsUs, e.ts_us),
-            s.nEvents + 1, s.sumValue + e.value))
+            s.nEvents + 1, plus(s.sumValue, e.value)))
         case Some(s) =>
           out ::= SessionOut(userId, s.firstEvent, s.lastEvent, s.nEvents, s.sumValue, "gap")
           cur = Some(SessionState(e.event_id, e.event_id, e.ts_us, 1, e.value))

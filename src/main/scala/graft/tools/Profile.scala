@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.{BenchHarness, Jsons, OwnJobs, SparkEntry, Tables}
 import graft.BenchHarness.{noop, query, sample}
-import graft.ops.Skew
+import graft.ops.{Skew, Versioned}
 import graft.streaming.Epochs
 import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
@@ -149,6 +149,10 @@ object Profile {
     *                    local dir (the connector's per-epoch sink write:
     *                    four parquet writers under one broadcast job conf,
     *                    then one rename of the epoch's staging dir)
+    *   merge_epoch      one 2,000-row Versioned.epochMergeWriter epoch (an
+    *                    upsert of every key) into a temp table that already
+    *                    holds 20 versions: the connector's materialize step,
+    *                    manifest reads and publish included
     * as one JSON line {"floor_probe":{...}} — numbers recorded in SURVEY
     * §6's floor note.
     */
@@ -165,6 +169,12 @@ object Profile {
     val epochDir = java.nio.file.Files.createTempDirectory("graft-epoch-probe")
     val epochBatch = spark.range(0, 2000, 1, 4)
       .select(col("id"), sha2(col("id").cast("string"), 256).as("doc"))
+    val merge = Versioned.epochMergeWriter(s"$epochDir/merged", "id", "seq")
+    val epochs = Iterator.from(0).map(_.toLong)
+    def mergeEpoch(): Unit = {
+      val e = epochs.next()
+      merge(epochBatch.withColumn("seq", lit(e)).withColumn("operation_type", lit("upsert")), e)
+    }
     val out = try Seq(
       probe("plan_only") {
         // force full analysis+optimization+physical planning, no execution;
@@ -182,7 +192,10 @@ object Profile {
       withConf(spark, "spark.sql.shuffle.partitions" -> "8")(
         probe("scan_groupby_p8")(noop(groupbyDf))),
       // every sample after the first replays epoch 0, as a restart would
-      probe("epoch_write")(Epochs.overwrite(epochBatch, 0L, s"$epochDir/out")))
+      probe("epoch_write")(Epochs.overwrite(epochBatch, 0L, s"$epochDir/out")), {
+        (1 to 20).foreach(_ => mergeEpoch())
+        probe("merge_epoch")(mergeEpoch())
+      })
     finally FileUtil.fullyDelete(epochDir.toFile)
     Seq(s"""{"floor_probe":${Jsons.nums(out)},"sf":${Jsons.quote(dir)},"reps":$reps}""")
   }

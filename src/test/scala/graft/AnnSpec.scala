@@ -194,7 +194,6 @@ class AnnSpec extends SparkSpec {
     }
     // a second build+probe into the same dir is bit-identical (fixed
     // k-means seeds, shortest-repr sidecars, total tie orders)
-    Similarity.invalidateCentroidCache()
     Similarity.buildIvfPqIndex(spark, sf0001, idx)
     val probed = Similarity.ivfPqProbePersisted(spark, sf0001, idx)
     val again = probed.collect()
@@ -207,6 +206,21 @@ class AnnSpec extends SparkSpec {
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("cell"),
       s"expected a partition filter on cell in:\n$plan")
+  }
+
+  test("IVF-PQ probe reads the index's current sidecars after another build replaced its files") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_swap_").toString
+    val (x, y) = (s"$tmp/x", s"$tmp/y")
+    Similarity.buildIvfPqIndex(spark, sf0001, x, cells = 16)
+    Similarity.ivfPqProbePersisted(spark, sf0001, x).collect()
+    // another process rebuilds the index at x with other cells: y stands
+    // in for its build, copied over x's files
+    Similarity.buildIvfPqIndex(spark, sf0001, y, cells = 8)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(x))
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(y), new java.io.File(x))
+    def probe(idx: String) =
+      Similarity.ivfPqProbePersisted(spark, sf0001, idx).collect().map(_.toSeq).toSeq
+    assert(probe(x) === probe(y))
   }
 
   test("incremental IVF-PQ maintenance (B5h): append is probe-visible, census reconciles, fidelity column is real") {
@@ -236,7 +250,6 @@ class AnnSpec extends SparkSpec {
     assert(neigh.exists(_ % 2 == 0), "snapshot (even) vectors must still be retrievable")
     // the lifecycle is deterministic end to end (frozen sidecars, fixed
     // seeds): a fresh-JVM-equivalent replay reproduces the census bit-for-bit
-    Similarity.invalidateCentroidCache()
     Similarity.buildIvfPqIndexOf(evens, idx)
     Similarity.ivfIndexAppend(odds, idx)
     val s2 = Similarity.ivfIndexStatus(spark, idx).collect()

@@ -82,6 +82,19 @@ class ProfileSpec extends SparkSpec {
         BenchHarness.envCount("SPARK_GRAFT_CPUS", 4, Map("SPARK_GRAFT_CPUS" -> bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
+    assert(BenchHarness.envFlag("SPARK_GRAFT_ANCHOR", default = true, Map.empty))
+    assert(!BenchHarness.envFlag("SPARK_GRAFT_ANCHOR", default = true, Map("SPARK_GRAFT_ANCHOR" -> "0")))
+    for (bad <- Seq("2", "yes", "", "true")) {
+      val e = intercept[IllegalArgumentException](
+        BenchHarness.envFlag("SPARK_GRAFT_ANCHOR", default = true, Map("SPARK_GRAFT_ANCHOR" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_ANCHOR") && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    BenchHarness.requireDir("SPARK_GRAFT_SF_DIR", sf0001)
+    val file = java.nio.file.Files.createTempFile("no_sf", ".parquet").toString
+    for (bad <- Seq(tempDir("no_sf") + "/absent", file)) {
+      val e = intercept[IllegalArgumentException](BenchHarness.requireDir("SPARK_GRAFT_SF_DIR", bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_SF_DIR") && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 
   test("floor: the AQE and shuffle-partition flips leave the session's conf as it was") {
@@ -89,8 +102,9 @@ class ProfileSpec extends SparkSpec {
     val before = keys.map(spark.conf.get)
     val line = Profile.floor(spark, Seq(sf0001, "1")).head
     val probe = json.readTree(line).path("floor_probe")
-    assert(probe.size() === 9 && probe.path("scan_groupby_p8").asDouble(-1) > 0 &&
-      probe.path("table_load").asDouble(-1) > 0 && probe.path("epoch_write").asDouble(-1) > 0, line)
+    assert(probe.size() === 10 && probe.path("scan_groupby_p8").asDouble(-1) > 0 &&
+      probe.path("table_load").asDouble(-1) > 0 && probe.path("epoch_write").asDouble(-1) > 0 &&
+      probe.path("merge_epoch").asDouble(-1) > 0, line)
     assert(keys.map(spark.conf.get) === before)
   }
 }

@@ -67,6 +67,26 @@ class SessionizeSpec extends SparkSpec {
     assert(closed.toSeq === Seq((1L, 1L, 1L)))
   }
 
+  test("drain: events with no value close sessions whose sum_value follows SQL sum") {
+    val (src, out, ckpt) = (tempDir("sv_src"), tempDir("sv_out") + "/s", tempDir("sv_ckpt"))
+    val t0 = 1704067200000000L
+    def line(id: Long, user: Long, tsUs: Long, v: Option[Double]) =
+      s"""{"event_id":$id,"ts_us":$tsUs,"user_id":$user,"event_type":"click"""" +
+        v.fold("")(x => s""","value":$x""") + "}"
+    val far = t0 + 2 * Sessionize.GapSeconds * 1000000L
+    // user 1: one null and one valued event; user 2: only null values;
+    // the far events close both sessions
+    Files.write(Paths.get(src, "a.json"), Seq(
+      line(1, 1, t0, None), line(2, 1, t0 + 1000000L, Some(2.5)), line(3, 1, far, None),
+      line(10, 2, t0, None), line(11, 2, t0 + 1000000L, None), line(12, 2, far, Some(1.0))
+    ).mkString("\n").getBytes)
+    Sessionize.start(spark, JsonDirSource(src), out, ckpt).awaitTermination(120000)
+    val closed = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
+        Option(r.getAs[java.lang.Double]("sum_value")).map(_.doubleValue)))
+    assert(closed.sortBy(_._1).toSeq === Seq((1L, 2L, Some(2.5)), (2L, 2L, None)))
+  }
+
   test("continuous mode: an idle user's open session closes by timeout and frees state") {
     val (src, out, ckpt) = (tempDir("ct_src"), tempDir("ct_out") + "/s", tempDir("ct_ckpt"))
     val t0 = 1704067200000000L
@@ -168,7 +188,7 @@ class SessionizeSpec extends SparkSpec {
     val sec = 1000000L
     val gapUs = Sessionize.GapSeconds * sec
     def ev(id: Long, tsUs: Long) =
-      Sessionize.Event(id, tsUs, 7L, "click", 1.0, "{}")
+      Sessionize.Event(id, tsUs, 7L, "click", Some(1.0), "{}")
     val st = TestGroupState.create[Sessionize.SessionState](
       org.apache.spark.api.java.Optional.empty[Sessionize.SessionState](), GroupStateTimeout.NoTimeout, 0L,
       org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
@@ -192,7 +212,7 @@ class SessionizeSpec extends SparkSpec {
   test("gap boundary uses the batch path's whole-second truncation") {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     val t0 = 1704067200000000L
-    def ev(id: Long, tsUs: Long) = Sessionize.Event(id, tsUs, 9L, "click", 1.0, "{}")
+    def ev(id: Long, tsUs: Long) = Sessionize.Event(id, tsUs, 9L, "click", Some(1.0), "{}")
     val gapUs = Sessionize.GapSeconds * 1000000L
     val st = TestGroupState.create[Sessionize.SessionState](
       org.apache.spark.api.java.Optional.empty[Sessionize.SessionState](), GroupStateTimeout.NoTimeout, 0L,

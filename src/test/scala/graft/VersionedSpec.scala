@@ -108,14 +108,46 @@ class VersionedSpec extends SparkSpec {
     Versioned.commit(spark, rows(900, 7), dir)
     Versioned.vacuum(spark, dir, keepLast = 1)
     assert(Versioned.versions(spark, dir) === Seq(3L), "only the epoch=-1 manifest remains")
-    // fresh-JVM simulation: drop the driver-side running max
-    Versioned.invalidateEpochCache()
     w(rows(100, 20), 5L) // crash-replay of epoch 5
     assert(Versioned.versions(spark, dir) === Seq(3L),
       "replayed epoch must not re-commit after vacuum dropped its manifest")
     // progress still resumes past the carried max
     w(rows(500, 5), 6L)
     assert(Versioned.read(spark, dir).count() === 5)
+  }
+
+  test("epochWriter on a deleted and recreated table dir commits its epochs again") {
+    val dir = tempDir("versioned-epoch-recreate") + "/table"
+    val w = Versioned.epochWriter(dir)
+    (0 to 5).foreach(e => w(rows(e * 100, 10), e.toLong))
+    assert(Versioned.versions(spark, dir) === (1L to 6L))
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+    // a new materialization at the same path restarts its epochs at 0: the
+    // guard reads the recreated table's files, not what the old one held
+    val again = Versioned.epochWriter(dir)
+    (0 to 2).foreach(e => again(rows(e * 100, 10 + e), e.toLong))
+    assert(Versioned.versions(spark, dir) === Seq(1L, 2L, 3L))
+    assert(Versioned.maxEpoch(spark, dir) === 2L)
+    assert(Versioned.read(spark, dir).count() === 12)
+  }
+
+  test("epochMergeWriter on a deleted and recreated table dir bootstraps and merges again") {
+    val s = spark
+    import s.implicits._
+    val dir = tempDir("versioned-merge-recreate") + "/table"
+    def changes(ids: Seq[Long], seq: Long) =
+      ids.map(i => (i, s"p$i-$seq", "upsert", seq)).toDF("id", "payload", "operation_type", "seq")
+    val w = Versioned.epochMergeWriter(dir, "id", "seq")
+    (0L to 3L).foreach(e => w(changes(Seq(e, e + 1), e), e))
+    assert(Versioned.versions(spark, dir) === (1L to 4L))
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+    val again = Versioned.epochMergeWriter(dir, "id", "seq")
+    again(changes(Seq(10L, 11L), 0L), 0L) // bootstrap commit
+    again(changes(Seq(11L, 12L), 1L), 1L) // keyed merge
+    assert(Versioned.versions(spark, dir) === Seq(1L, 2L))
+    assert(Versioned.history(spark, dir).map(_._2) === Seq("replace", "merge"))
+    assert(Versioned.read(spark, dir).as[(Long, String, Long)].collect().sortBy(_._1).toSeq ===
+      Seq((10L, "p10-0", 0L), (11L, "p11-1", 1L), (12L, "p12-1", 1L)))
   }
 
   test("vacuum on a commit-less table is a no-op and reclaims manifest temps") {
